@@ -36,8 +36,7 @@ def test_latest_by_key(spark):
 
 
 def test_latest_by_key_version_ties_are_deterministic(spark):
-    # same url re-appended in the SAME round (the crash-recovery
-    # duplicate plans/state.py produces): struct ordering breaks the tie
+    # same url twice in the SAME round: struct ordering breaks the tie
     # by the remaining columns -> max html string wins, every run
     dup = spark.createDataFrame(
         [("u", 1, "aaa"), ("u", 1, "zzz"), ("u", 0, "old")],

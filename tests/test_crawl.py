@@ -4,7 +4,8 @@ The golden-test style of the reference (/root/reference/test/test_warcit.py
 — run the whole pipeline on a fixture, assert exact outputs) applied to the
 engine's own spec: URL-seen set equality, total crawl-order equality,
 record-count parity (resources + revisits), byte-identical extracted text,
-and exact resume-after-kill semantics.
+and exact resume-after-kill semantics.  Every crawl runs the production
+seen layout (url-bucketed, merge-pinned anti-join) at a small bucket count.
 """
 
 from __future__ import annotations
@@ -14,7 +15,7 @@ from pyspark.sql import functions as F
 
 from tests import oracle as seq
 from warcit_spark.plans.crawl import CrawlConfig, run_crawl
-from warcit_spark.plans.state import CrawlState
+from warcit_spark.plans.state import SEEN_COLS, CrawlState
 from warcit_spark.sources.fixture import (
     extract_text_expr,
     generate_pages,
@@ -24,6 +25,7 @@ from warcit_spark.sources.fixture import (
 
 N_PAGES = 200
 CFG = CrawlConfig(host_budget=12, max_rounds=6, n_salt=4, n_lineage_partitions=8)
+SEEN_BUCKETS = 8
 
 
 @pytest.fixture(scope="module")
@@ -52,7 +54,9 @@ def oracle_result(spark, fixture_dfs):
 @pytest.fixture(scope="module")
 def engine_result(spark, fixture_dfs, tmp_path_factory):
     pages, seeds, robots = fixture_dfs
-    state = CrawlState(str(tmp_path_factory.mktemp("crawl_state")))
+    state = CrawlState(
+        str(tmp_path_factory.mktemp("crawl_state")), seen_buckets=SEEN_BUCKETS
+    )
     summaries = run_crawl(spark, state, pages, seeds, robots, CFG)
     return state, summaries
 
@@ -61,8 +65,8 @@ def test_seen_set_matches_oracle(spark, engine_result, oracle_result):
     state, _ = engine_result
     seen = state.read_table(spark, "seen")
     got = {
-        (r.url, r.round, r.reason)
-        for r in seen.select("url", "round", "reason").collect()
+        (r.url, r.round_seen, r.reason)
+        for r in seen.select("url", "round_seen", "reason").collect()
     }
     want = {(u, rnd, reason) for u, (rnd, reason) in oracle_result.seen.items()}
     assert got == want
@@ -166,12 +170,12 @@ def test_resume_exactly(spark, fixture_dfs, tmp_path_factory, engine_result):
     root = str(tmp_path_factory.mktemp("crawl_resume"))
 
     partial_cfg = CrawlConfig(**{**CFG.__dict__, "max_rounds": 2})
-    state2 = CrawlState(root)
+    state2 = CrawlState(root, seen_buckets=SEEN_BUCKETS)
     run_crawl(spark, state2, pages, seeds, robots, partial_cfg)
     assert state2.committed_round() == 1
 
     # resume with a fresh state object (new "driver process")
-    state3 = CrawlState(root)
+    state3 = CrawlState(root, seen_buckets=SEEN_BUCKETS)
     run_crawl(spark, state3, pages, seeds, robots, CFG)
 
     state_full, _ = engine_result
@@ -183,41 +187,53 @@ def test_resume_exactly(spark, fixture_dfs, tmp_path_factory, engine_result):
         assert b.exceptAll(a).count() == 0
 
 
-def test_bucketed_seen_parity_and_plan(spark, fixture_dfs, engine_result, tmp_path_factory):
-    """seen_buckets>0 (Hive-bucketed seen, the Iceberg bucket(N,url)
-    analog): identical crawl results, and the per-round anti-join scans
-    seen co-partitioned — Bucketed: true, no Exchange on the seen side."""
+def _seen_rows(spark, state):
+    return sorted(
+        tuple(r) for r in state.read_table(spark, "seen").select(*SEEN_COLS).collect()
+    )
+
+
+def test_replay_after_crash_before_commit(
+    spark, fixture_dfs, tmp_path_factory, engine_result
+):
+    """A round that dies after its seen append but before its commit
+    marker leaves no trace once the crawl resumes: the seen table equals a
+    one-shot run's, row for row — also after the catalog entry is dropped
+    and the table re-registered from its files, as after a restart."""
     pages, seeds, robots = fixture_dfs
-    root = str(tmp_path_factory.mktemp("crawl_state_bucketed"))
-    state_b = CrawlState(root, seen_buckets=8)
-    run_crawl(spark, state_b, pages, seeds, robots, CFG)
+    root = str(tmp_path_factory.mktemp("crawl_replay"))
 
-    state_ref, _ = engine_result
-    ref_seen = {
-        (r.url, r.round, r.reason)
-        for r in state_ref.read_table(spark, "seen")
-        .select("url", "round", "reason").collect()
-    }
-    got_seen = {
-        (r.url, r.round_seen, r.reason)
-        for r in state_b.read_table(spark, "seen")
-        .select("url", "round_seen", "reason").collect()
-    }
-    assert got_seen == ref_seen
+    class CrashBeforeCommit(CrawlState):
+        def commit_round(self, round_id, summary):
+            if round_id == 2:
+                raise RuntimeError("simulated crash before commit")
+            super().commit_round(round_id, summary)
 
-    ref_order = [
-        (r.round, r.host, r.rank_in_host, r.url)
-        for r in state_ref.read_table(spark, "fetched")
-        .where(F.col("record_type") == "resource")
-        .orderBy("round", "host", "rank_in_host").collect()
-    ]
-    got_order = [
-        (r.round, r.host, r.rank_in_host, r.url)
-        for r in state_b.read_table(spark, "fetched")
-        .where(F.col("record_type") == "resource")
-        .orderBy("round", "host", "rank_in_host").collect()
-    ]
-    assert got_order == ref_order
+    crashing = CrashBeforeCommit(root, seen_buckets=SEEN_BUCKETS)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        run_crawl(spark, crashing, pages, seeds, robots, CFG)
+    assert crashing.committed_round() == 1
+
+    state = CrawlState(root, seen_buckets=SEEN_BUCKETS)
+    run_crawl(spark, state, pages, seeds, robots, CFG)
+
+    want = _seen_rows(spark, engine_result[0])
+    got = _seen_rows(spark, state)
+    assert len(got) == len(want)
+    assert set(got) == set(want)
+
+    # restart: the table is external, so dropping it keeps the files
+    spark.sql(f"DROP TABLE {state._seen_table_name()}")
+    restarted = CrawlState(root, seen_buckets=SEEN_BUCKETS)
+    assert _seen_rows(spark, restarted) == want
+
+
+def test_bucketed_seen_parity_and_plan(spark, engine_result):
+    """The per-round anti-join scans the url-bucketed seen table (the
+    Iceberg bucket(N,url) analog) co-partitioned: Bucketed: true, no
+    Exchange on the seen side, and the round filter prunes partitions.
+    Result parity of this layout is the oracle tests above."""
+    state_b, _ = engine_result
 
     # plan audit: anti-join against the bucketed seen table has the seen
     # scan Bucketed: true with no Exchange between the scan and the join.
@@ -234,12 +250,17 @@ def test_bucketed_seen_parity_and_plan(spark, fixture_dfs, engine_result, tmp_pa
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
     assert "Bucketed: true" in plan
-    seen_scan_section = plan[plan.index("LeftAnti"):]
-    # the seen (right) side of the SMJ must go Sort->Filter->FileScan with
-    # no Exchange; the candidate side may exchange freely
-    import re as _re
-    right_side = seen_scan_section[_re.search(r"FileScan parquet [^\n]*seen_b", seen_scan_section).start()-400:]
-    assert "Exchange hashpartitioning(url" not in right_side
+    assert "PartitionFilters: [isnotnull(round_seen" in plan
+    # the seen (right) child of the SMJ — every line from its "+-" marker
+    # under the join — must scan with no Exchange; the candidate (left)
+    # side may exchange freely
+    lines = plan.splitlines()
+    i = next(k for k, ln in enumerate(lines) if "LeftAnti" in ln)
+    col = lines[i].index("SortMergeJoin")
+    j = next(k for k in range(i + 1, len(lines)) if lines[k][col : col + 2] == "+-")
+    seen_side = "\n".join(lines[j:])
+    assert "FileScan parquet spark_catalog.default.seen_b_" in seen_side
+    assert "Exchange" not in seen_side
 
 
 def test_politeness_annotate_matches_single_window_twin(spark):
@@ -365,7 +386,9 @@ def test_pagerank_scores_drive_crawl_order(spark, fixture_dfs, tmp_path_factory)
 
     # every known page seeded with its pagerank as priority
     seeds = pr.select(F.col("node").alias("url"), F.col("rank").alias("priority"))
-    state = CrawlState(str(tmp_path_factory.mktemp("pr_crawl")))
+    state = CrawlState(
+        str(tmp_path_factory.mktemp("pr_crawl")), seen_buckets=SEEN_BUCKETS
+    )
     cfg = CrawlConfig(max_rounds=1, host_budget=5)
     run_crawl(spark, state, pages, seeds, robots, cfg)
 

@@ -75,8 +75,7 @@ else:
     pages.count()
 md = _mime_dim(spark).persist(); md.count()
 robots = generate_robots(spark)
-cfg = CrawlConfig(host_budget={budget}, max_rounds={rounds}, n_salt=16,
-                  broadcast_fetch=False)
+cfg = CrawlConfig(host_budget={budget}, max_rounds={rounds}, n_salt=16)
 
 # JIT/codegen/HEAP warmup OUTSIDE the measurement: a throwaway 2-round
 # crawl at FULL seed size compiles both plan shapes (round 0: no seen

@@ -13,7 +13,7 @@ Layout
 - ``operators/``  relational operators: filters, joins, record derivation,
                   dedup, similarity, text analysis, multimodal plumbing
 - ``plans/``      multi-operator pipelines: the crawl round/loop, politeness,
-                  bloom prefilter, state catalog
+                  state catalog
 - ``streaming/``  Structured Streaming ingest variants
 """
 

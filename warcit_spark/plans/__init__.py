@@ -1,1 +1,1 @@
-"""Multi-operator pipelines: crawl rounds, politeness, state, bloom."""
+"""Multi-operator pipelines: crawl rounds, politeness, state."""

@@ -5,12 +5,14 @@ One round r (SURVEY.md §3.1 restated for the new engine):
     frontier_r -> robots (broadcast, in-row longest-prefix)
                -> politeness (two flagged frames: salted pre-rank over the
                   full frontier, exact rank over the bounded survivors)
-               -> fetch = left-join semantics vs pages ON url (J4; pages
-                  side pre-bucketed/cached so only the selection shuffles)
+               -> fetch = left-join semantics vs pages ON url (J4, pinned
+                  sort-merge; pages side pre-bucketed/cached so only the
+                  selection shuffles)
                -> record derivation (resource + index-revisit rows, D1/A4)
                -> link extraction (JVM regex, D4) -> canonicalize
                -> within-round dedup (groupBy max-priority)
-               -> ONE anti-join vs (seen UNION deferred)  (J5)
+               -> anti-join vs (seen delta UNION deferred), then a
+                  merge-pinned anti-join vs the url-bucketed seen table (J5)
                -> frontier_{r+1} = deferred UNION new
     writes: seen delta, fetched delta, frontier_{r+1}, lineage; then the
     atomic round-commit marker (plans/state.py).
@@ -28,7 +30,7 @@ comparable lineage for the scaling-efficiency evidence.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -53,22 +55,13 @@ class CrawlConfig:
     n_salt: int = 16               # politeness pre-rank salt slots
     n_lineage_partitions: int = 32
     index_suffixes: tuple[str, ...] = DEFAULT_INDEX_SUFFIXES
-    # fetch-join strategy.  False (default): sort-merge join against the
-    # pages oracle — the scale path when pages are provided url-bucketed/
-    # pre-partitioned (bucketize or ``repartition(N, 'url').persist()``
-    # them once; then only the selection shuffles per round).  Measured
-    # faster than broadcasting at bench scale (BENCH/ANALYSIS.md remedy 3).
-    # True: flip to pages RIGHT OUTER broadcast(selected) — the
-    # small-corpus / un-bucketed-pages mode; a round's selection must fit
-    # in executor memory.
+    # the fetch join is always sort-merge; kept only because existing
+    # callers pass broadcast_fetch=False, so True is rejected
     broadcast_fetch: bool = False
-    # Bloom-prefilter the seen anti-join (plans/bloom.py): definitely-new
-    # candidates bypass the join; correctness unchanged (no false
-    # negatives — asserted by tests).  Pays one extra action per round to
-    # build the broadcast bitset, so it is off below ~10^7-row seen sets.
-    use_bloom: bool = False
-    bloom_bits: int = 1 << 24
-    extra: dict = field(default_factory=dict)
+
+    def __post_init__(self) -> None:
+        if self.broadcast_fetch:
+            raise ValueError("broadcast_fetch=True is not supported")
 
 
 def canonical_seed_frontier(seeds: DataFrame) -> DataFrame:
@@ -272,28 +265,27 @@ def crawl_round(
     )
 
     # ---- fetch: J4 against the pages oracle --------------------------------
-    # left-join semantics (every selected URL yields a row) with the SMALL
-    # side broadcast: pages RIGHT OUTER broadcast(selected).  The wide pages
-    # relation is streamed in place — never shuffled, never broadcast.
-    # column-prune the pages side to what the round consumes (url for the
-    # join, warc_ts for dates, html for digests/links): text/lang would
-    # ride the join, the persist, and every downstream scan for nothing —
-    # at 4M+ cached pages that is gigabytes of memory bandwidth per round
-    pages_r = pages.select("url", "warc_ts", "html").withColumnRenamed(
-        "url", "_purl"
+    # left-join semantics (every selected URL yields a row): pages RIGHT
+    # OUTER selected.  Column-prune the pages side to what the round
+    # consumes (url for the join, warc_ts for dates, html for digests/
+    # links): text/lang would ride the join, the persist, and every
+    # downstream scan for nothing — at 4M+ cached pages that is gigabytes
+    # of memory bandwidth per round.
+    #
+    # Pin the fetch join to sort-merge: the pages side must NEVER be the
+    # broadcast build side.  Parquet/Iceberg-backed corpora report
+    # COMPRESSED size to the planner — a 3.2-GiB (decompressed) corpus
+    # whose zstd files read 57 MB slips under autoBroadcastJoinThreshold
+    # and the planner builds a multi-GiB single-threaded hash relation per
+    # round (measured: a parallelism-independent ~180 s stall at every
+    # level of the table-corpus scaling pair).  At the design point
+    # (100-TB pages table) broadcasting the corpus is never the plan; the
+    # hint makes small-file stats incapable of flipping it.
+    pages_r = (
+        pages.select("url", "warc_ts", "html")
+        .withColumnRenamed("url", "_purl")
+        .hint("merge")
     )
-    if not cfg.broadcast_fetch:
-        # Pin the fetch join to sort-merge: the pages side must NEVER be
-        # the broadcast build side.  Parquet/Iceberg-backed corpora report
-        # COMPRESSED size to the planner — a 3.2-GiB (decompressed) corpus
-        # whose zstd files read 57 MB slips under autoBroadcastJoinThreshold
-        # and the planner builds a multi-GiB single-threaded hash relation
-        # per round (measured: a parallelism-independent ~180 s stall at
-        # every level of the table-corpus scaling pair).  At the design
-        # point (100-TB pages table) broadcasting the corpus is never the
-        # plan; the hint makes small-file stats incapable of flipping it.
-        pages_r = pages_r.hint("merge")
-    sel_side = F.broadcast(selected) if cfg.broadcast_fetch else selected
     # digest + size + raw hrefs are fused into THIS projection so the 8 KiB
     # html body is consumed exactly once, streaming out of the join, and is
     # never persisted: the cached round frame carries the 20-byte digest and
@@ -305,7 +297,7 @@ def crawl_round(
         r"\.[A-Za-z0-9]+$"
     )
     fetched = (
-        pages_r.join(sel_side, F.col("_purl") == selected["url"], "right_outer")
+        pages_r.join(selected, F.col("_purl") == selected["url"], "right_outer")
         .drop("_purl")
         .select(
             F.lit(round_id).alias("round"),
@@ -377,49 +369,27 @@ def crawl_round(
         )
         .withColumn("round_seen", F.lit(round_id))
     )
-    seen_all = (
-        seen_prev.select("url").unionByName(seen_delta.select("url"))
-        if seen_prev is not None
-        else seen_delta.select("url")
-    )
-    if state.seen_buckets > 0 and not cfg.use_bloom:
-        # bucketed-seen layout: keep the big seen table OUT of the union
-        # (a union would destroy its bucketing) and anti-join it
-        # separately — the seen scan is co-partitioned (Bucketed: true,
-        # zero Exchange on the seen side); only round-sized frames
-        # (candidates, this round's delta, deferred) ever shuffle, at
-        # O(delta), never O(|seen|).  This is what survives 10^10 URLs.
-        round_sized = seen_delta.select("url").unionByName(deferred.select("url"))
-        survivors = deduped.join(round_sized, on="url", how="left_anti")
-        if seen_prev is not None:
-            # merge-pin: the seen side must NEVER be the broadcast build
-            # side — the same compressed-stats hazard as the fetch join
-            # (parquet FileScans report zstd/snappy bytes, so a
-            # multi-hundred-MB decompressed seen set slips under
-            # autoBroadcastJoinThreshold and every round pays an
-            # O(|seen|) single-threaded broadcast build that only grows).
-            # Pinned to sort-merge the join uses the bucketed layout
-            # (Bucketed: true, zero Exchange on the seen side) and was
-            # ALSO measured faster locally at 2.4M seen rows (1.3s vs
-            # 1.9s broadcast).
-            survivors = survivors.join(
-                seen_prev.select("url").hint("merge"), on="url", how="left_anti"
-            )
-    else:
-        # one anti-join against (seen ∪ deferred) instead of two passes
-        not_new = seen_all.unionByName(deferred.select("url"))
-        if cfg.use_bloom:
-            from warcit_spark.plans.bloom import (
-                bloom_prefiltered_anti_join,
-                build_bloom,
-            )
-
-            bloom = build_bloom(not_new, "url", n_bits=cfg.bloom_bits)
-            survivors = bloom_prefiltered_anti_join(
-                deduped, not_new, bloom.tobytes(), key="url", n_bits=cfg.bloom_bits
-            )
-        else:
-            survivors = deduped.join(not_new, on="url", how="left_anti")
+    # keep the big seen table OUT of any union (a union would destroy its
+    # bucketing) and anti-join it separately — the seen scan is
+    # co-partitioned (Bucketed: true, zero Exchange on the seen side);
+    # only round-sized frames (candidates, this round's delta, deferred)
+    # ever shuffle, at O(delta), never O(|seen|).  This is what survives
+    # 10^10 URLs.
+    round_sized = seen_delta.select("url").unionByName(deferred.select("url"))
+    survivors = deduped.join(round_sized, on="url", how="left_anti")
+    if seen_prev is not None:
+        # merge-pin: the seen side must NEVER be the broadcast build side
+        # — the same compressed-stats hazard as the fetch join (parquet
+        # FileScans report zstd/snappy bytes, so a multi-hundred-MB
+        # decompressed seen set slips under autoBroadcastJoinThreshold and
+        # every round pays an O(|seen|) single-threaded broadcast build
+        # that only grows).  Pinned to sort-merge the join uses the
+        # bucketed layout (Bucketed: true, zero Exchange on the seen side)
+        # and was ALSO measured faster locally at 2.4M seen rows (1.3s vs
+        # 1.9s broadcast).
+        survivors = survivors.join(
+            seen_prev.select("url").hint("merge"), on="url", how="left_anti"
+        )
     new_urls = (
         survivors
         .select(

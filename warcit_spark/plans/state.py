@@ -15,10 +15,14 @@ marker, preserving every semantic the engine relies on:
   without a marker is invisible and is simply re-run on resume.
 - **partition pruning**: ``round`` is a physical partition column, so
   ``read_table(upto_round=k)`` prunes files without touching newer data.
+- **seen layout**: the seen table is Hive-bucketed by url (the no-Iceberg
+  analog of ``bucket(N, url)``) and partitioned by ``round_seen``, so the
+  per-round anti-join scans it co-partitioned (zero seen-side exchange)
+  and crash debris is one partition directory, dropped like any other.
 - **lineage**: per-(round, partition) counters are a table like any other;
   the lineage delta doubles as the round's audit record.
 
-On a real cluster, swap ``_write_delta``/``read_table`` for
+On a real cluster, swap ``write_delta``/``read_table`` for
 ``df.writeTo(...).append()`` / ``spark.read.table(...)`` — call sites do not
 change.
 """
@@ -34,31 +38,30 @@ import time
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+from warcit_spark.sinks.bucketed import write_bucketed_table
 
 TABLES = ("frontier", "seen", "fetched", "lineage")
 
 SEEN_COLS = ("url", "host", "reason", "round_seen")
 
+# State deltas are engine-internal and re-read within the same crawl, so
+# they favor write+read CPU over ratio (published parquet keeps zstd).
+STATE_CODEC = "snappy"
+
 
 @dataclass
 class CrawlState:
     root: str
-    # >0: the seen table is written url-hash-bucketed (Hive-style bucketed
-    # parquet, the no-Iceberg analog of ``bucket(N, url)``), so the
-    # per-round anti-join scans seen co-partitioned — ZERO exchange on the
-    # seen side; only the O(round-delta) candidate side shuffles.  This is
-    # the 10^10-URL layout: without it every round re-shuffles the full
-    # seen set.  0 = plain round-delta parquet (fixture scale).
-    seen_buckets: int = 0
-    # Codec for the state tables.  These are engine-internal round deltas
-    # re-read within the same crawl, not user-facing outputs, so the
-    # default favors write+read CPU over ratio (snappy) instead of the
-    # session-wide zstd used for published parquet.  Parameterised for
-    # clusters where state lives on slow/remote storage and ratio wins:
-    # SPARK_GRAFT_STATE_CODEC=zstd.
-    delta_codec: str = os.environ.get("SPARK_GRAFT_STATE_CODEC", "snappy")
+    # url-hash buckets of the seen table: the per-round anti-join scans
+    # seen co-partitioned, so only the O(round-delta) candidate side
+    # shuffles, never the full seen set (the 10^10-URL layout)
+    seen_buckets: int = 64
 
     def __post_init__(self) -> None:
+        if self.seen_buckets <= 0:
+            raise ValueError(f"seen_buckets must be > 0, got {self.seen_buckets}")
         os.makedirs(self.root, exist_ok=True)
 
     # ---------------------------------------------------------------- commits
@@ -101,7 +104,8 @@ class CrawlState:
 
     def _ensure_seen_table(self, spark: SparkSession) -> str:
         """Register the bucketed seen table in this session's catalog
-        (idempotent; re-registers over existing files after a restart)."""
+        (idempotent; re-registers over existing files after a restart —
+        the catalog tracks partitions, so they are recovered from disk)."""
         name = self._seen_table_name()
         if not spark.catalog.tableExists(name) and os.path.isdir(
             self._seen_location()
@@ -109,21 +113,23 @@ class CrawlState:
             spark.sql(
                 f"CREATE TABLE {name} "
                 "(url STRING, host STRING, reason STRING, round_seen INT) "
-                "USING PARQUET CLUSTERED BY (url) SORTED BY (url) "
+                "USING PARQUET PARTITIONED BY (round_seen) "
+                "CLUSTERED BY (url) SORTED BY (url) "
                 f"INTO {self.seen_buckets} BUCKETS "
                 f"LOCATION '{self._seen_location()}'"
             )
+            spark.catalog.recoverPartitions(name)
         return name
 
     def _write_seen_bucketed(
-        self, df: DataFrame, round_id: int, refresh: bool = True
+        self, df: DataFrame, refresh: bool = True
     ) -> None:
-        """Append one round's seen delta, bucketed by url.
+        """Append one round's seen delta, bucketed by url, into its
+        ``round_seen=<k>`` partition.
 
-        Append-only + duplicate-tolerant: the anti-join treats seen as a
-        set, and reads filter ``round_seen <= committed``, so a crashed
-        (uncommitted) append needs no cleanup — re-running the round just
-        appends the same rows again, invisibly.
+        Reads filter ``round_seen <= committed`` and :meth:`drop_uncommitted`
+        deletes partitions newer than the marker, so a crashed append is
+        invisible before the replay and gone after it.
 
         ``refresh=False`` defers the catalog refresh to
         :meth:`refresh_seen` — REQUIRED when other jobs whose plans
@@ -138,29 +144,21 @@ class CrawlState:
         """
         spark = df.sparkSession
         name = self._ensure_seen_table(spark)
-        (
-            # repartition on url with N partitions aligns tasks to buckets
-            # (same murmur3 hash both places): one file per bucket per
-            # round instead of tasks x buckets small files
-            df.select(*SEEN_COLS)
-            .repartition(self.seen_buckets, "url")
-            .write.format("parquet")
-            .bucketBy(self.seen_buckets, "url")
-            .sortBy("url")
-            .option("path", self._seen_location())
-            .option("compression", self.delta_codec)
-            .mode("append")
-            .saveAsTable(name)
+        write_bucketed_table(
+            df.select(*SEEN_COLS),
+            name,
+            self._seen_location(),
+            buckets=self.seen_buckets,
+            mode="append",
+            partition_col="round_seen",
+            compression=STATE_CODEC,
         )
         if refresh:
             spark.catalog.refreshTable(name)
 
     def refresh_seen(self, spark: SparkSession) -> None:
-        """Publish a deferred bucketed-seen append to this session's
-        catalog (no-op for the unbucketed layout)."""
-        if self.seen_buckets > 0 and spark.catalog.tableExists(
-            self._seen_table_name()
-        ):
+        """Publish a deferred seen append to this session's catalog."""
+        if spark.catalog.tableExists(self._seen_table_name()):
             spark.catalog.refreshTable(self._seen_table_name())
 
     def write_delta(
@@ -171,17 +169,18 @@ class CrawlState:
 
         The ``round`` column, if present, is carried by the partition
         directory name (``round=<k>``) and re-inferred at read time, so it
-        is stripped from the physical files.  ``refresh`` is forwarded to
-        the bucketed-seen append (see :meth:`_write_seen_bucketed`).
+        is stripped from the physical files.  Seen rows carry their own
+        ``round_seen``; ``refresh`` is forwarded to the seen append (see
+        :meth:`_write_seen_bucketed`).
         """
-        if table == "seen" and self.seen_buckets > 0:
-            self._write_seen_bucketed(df, round_id, refresh=refresh)
+        if table == "seen":
+            self._write_seen_bucketed(df, refresh=refresh)
             return
         if "round" in df.columns:
             df = df.drop("round")
-        df.write.mode("overwrite").option(
-            "compression", self.delta_codec
-        ).parquet(self.delta_path(table, round_id))
+        df.write.mode("overwrite").option("compression", STATE_CODEC).parquet(
+            self.delta_path(table, round_id)
+        )
 
     def read_round_delta(
         self, spark: SparkSession, table: str, round_id: int
@@ -207,12 +206,10 @@ class CrawlState:
             upto_round = self.committed_round()
         if upto_round < 0:
             return None
-        if table == "seen" and self.seen_buckets > 0:
+        if table == "seen":
             if not os.path.isdir(self._seen_location()):
                 return None
             name = self._ensure_seen_table(spark)
-            from pyspark.sql import functions as F
-
             return spark.table(name).where(F.col("round_seen") <= upto_round)
         base = os.path.join(self.root, table)
         if not os.path.isdir(base):
@@ -237,11 +234,14 @@ class CrawlState:
             # round r legitimately *produces* the frontier delta for r+1,
             # so the frontier table keeps one delta beyond the marker
             keep_upto = committed + 1 if table == "frontier" else committed
-            base = os.path.join(self.root, table)
+            if table == "seen":
+                base, key = self._seen_location(), "round_seen="
+            else:
+                base, key = os.path.join(self.root, table), "round="
             if not os.path.isdir(base):
                 continue
             for name in os.listdir(base):
-                if not name.startswith("round="):
+                if not name.startswith(key):
                     continue
                 r = int(name.split("=", 1)[1])
                 if r > keep_upto:

@@ -33,20 +33,26 @@ def write_bucketed_table(
     bucket_col: str = "url",
     buckets: int = 64,
     mode: str = "overwrite",
+    partition_col: str | None = None,
+    compression: str | None = None,
 ) -> DataFrame:
     """Write ``df`` as a Hive-bucketed, bucket-sorted parquet table at
     ``path`` registered as ``name``; returns the registered table.
 
     The ``repartition(buckets, col)`` before the write aligns tasks to
     buckets (same murmur3 both places): one file per bucket instead of
-    tasks × buckets small files — the same trick as the seen table
-    (plans/state.py:_write_seen_bucketed).
+    tasks × buckets small files.  ``partition_col`` adds a directory
+    partition above the buckets (the crawl's seen table partitions by
+    round, plans/state.py); ``compression`` overrides the session codec.
     """
     spark = df.sparkSession
+    writer = df.repartition(buckets, bucket_col).write.format("parquet")
+    if partition_col is not None:
+        writer = writer.partitionBy(partition_col)
+    if compression is not None:
+        writer = writer.option("compression", compression)
     (
-        df.repartition(buckets, bucket_col)
-        .write.format("parquet")
-        .bucketBy(buckets, bucket_col)
+        writer.bucketBy(buckets, bucket_col)
         .sortBy(bucket_col)
         .option("path", path)
         .mode(mode)
@@ -65,9 +71,8 @@ def latest_by_key(
     fields — so version ties break deterministically by the other
     columns' values (``max_by`` would compare only the version and pick
     whichever row a partial aggregate met first, giving rerun-dependent
-    output on the re-appended-round duplicates plans/state.py's
-    crash-recovery story produces).  A single map-side-combined
-    aggregation — no window, no global sort."""
+    output when one key appears twice with the same version).  A single
+    map-side-combined aggregation — no window, no global sort."""
     rest = [c for c in df.columns if c not in (key_col, version_col)]
     packed = F.struct(F.col(version_col), *[F.col(c) for c in rest])
     agg = df.groupBy(key_col).agg(F.max(packed).alias("_r"))
