@@ -109,38 +109,6 @@ def _pages_from_documents(docs: DataFrame) -> DataFrame:
 # =========================================================================
 # queries  (each: (spark, sf_dir) -> DataFrame)
 # =========================================================================
-def _spread(df: DataFrame, *keys: str) -> DataFrame:
-    """Redistribute a low-parallelism scan across the cluster before
-    expression-heavy work (guide §2.5 "input skew: one huge unsplittable
-    file ... repartition immediately after the read").
-
-    The fixture tables are single-row-group parquet files, so a scan — and
-    every projection/partial-aggregate above it — runs as ONE task no
-    matter how many byte-range splits Spark makes.  An explicit
-    ``repartition(defaultParallelism, keys)`` both spreads that work and,
-    because the partition count is user-specified, is exempt from AQE
-    partition coalescing (which would otherwise merge these small shuffles
-    back to one partition).  Scale-adaptive by construction: when the scan
-    already has >= defaultParallelism partitions (any real multi-file
-    table) this returns the input unchanged, so no shuffle is ever added
-    at cluster scale.
-    """
-    sc = df.sparkSession.sparkContext
-    n = sc.defaultParallelism
-    if df.rdd.getNumPartitions() >= n:
-        return df
-    # size gate: when the (column-pruned, compressed) input estimate is
-    # under ~1 MiB the exchange round-trip costs more than the parallelism
-    # buys — measured f6 at sf0.1 (0.6 MiB pruned estimate): 0.40s unspread
-    # vs 0.66s spread, while at sf1.0 (4.7 MiB estimate) spreading took the
-    # same query 1.84s -> 1.28s.  Stats come from the optimized plan
-    # (driver-side, no job).
-    size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    if size < 1024 * 1024:
-        return df
-    return df.repartition(n, *[F.col(k) for k in keys]) if keys else df.repartition(n)
-
-
 def _exact_money_sum(x, s: int):
     """Order-independent exact sum of a money-valued double at scale ``s``,
     equal bit-for-bit to ``round(cast(sum(cast(x as decimal(18,s))) as
@@ -249,10 +217,7 @@ def f1_include_exclude(spark, sf_dir):
 def f2_url_synthesis(spark, sf_dir):
     from warcit_spark.functions.urls import synth_url_expr
 
-    p = _spread(
-        _t(spark, sf_dir, "part").select("p_partkey", "p_brand", "p_name"),
-        "p_partkey",
-    )
+    p = _t(spark, sf_dir, "part").select("p_partkey", "p_brand", "p_name")
     relpath = F.concat(F.col("p_brand"), F.lit("/"), F.col("p_name"), F.lit(".html"))
     return p.select(
         "p_partkey", synth_url_expr("http://parts.test/", relpath).alias("url")
@@ -291,7 +256,7 @@ def f3_mime_chain(spark, sf_dir):
 def f6_ts_normalize(spark, sf_dir):
     from warcit_spark.functions.timestamps import normalize_ts14_expr
 
-    e = _spread(_t(spark, sf_dir, "events").select("event_id", "ts"), "event_id")
+    e = _t(spark, sf_dir, "events").select("event_id", "ts")
     raw = (
         F.when(F.col("event_id") % 4 == 0, F.date_format("ts", "yyyyMMddHHmmss"))
         .when(F.col("event_id") % 4 == 1, F.date_format("ts", "yyyy-MM"))
@@ -319,7 +284,7 @@ def f7_json_extract(spark, sf_dir):
 def crawl_canonicalize(spark, sf_dir):
     from warcit_spark.functions.urls import canonicalize_url_expr
 
-    d = _spread(_t(spark, sf_dir, "documents").select("doc_id"), "doc_id")
+    d = _t(spark, sf_dir, "documents").select("doc_id")
     messy = F.concat(
         F.lit("HTTP://Docs"),
         F.col("doc_id") % 7,
@@ -348,7 +313,7 @@ def crawl_host_counts(spark, sf_dir):
 
 
 def j1_suffix_join(spark, sf_dir):
-    p = _spread(_t(spark, sf_dir, "part").select("p_type"), "p_type")
+    p = _t(spark, sf_dir, "part").select("p_type")
     suffixes = spark.createDataFrame(
         [("ECONOMY",), ("MEDIUM",), ("SMALL",), ("PROMO",), ("LARGE",), ("STANDARD",)],
         ["suffix"],
@@ -433,10 +398,7 @@ def d1_revisit_derivation(spark, sf_dir):
 
 
 def a2_reverse_index(spark, sf_dir):
-    o = _spread(
-        _t(spark, sf_dir, "orders").select("o_custkey", "o_orderkey"),
-        "o_custkey",
-    )
+    o = _t(spark, sf_dir, "orders").select("o_custkey", "o_orderkey")
     return (
         o.groupBy("o_custkey")
         .agg(
@@ -513,10 +475,7 @@ def w1_politeness_topk(spark, sf_dir):
     # Ordering equivalence: struct(-value, event_id) ascending == (value
     # desc, event_id asc) for the non-negative fixture values; event_id is
     # unique, so the total order (and thus row_number) is deterministic.
-    e = _spread(
-        _t(spark, sf_dir, "events").select("user_id", "event_id", "value"),
-        "user_id",
-    )
+    e = _t(spark, sf_dir, "events").select("user_id", "event_id", "value")
     top3 = F.slice(
         F.array_sort(
             F.collect_list(F.struct((-F.col("value")).alias("nv"), "event_id"))
@@ -576,7 +535,7 @@ def w3_tumbling_window(spark, sf_dir):
 def t1_token_count(spark, sf_dir):
     from warcit_spark.functions.text import token_count_expr
 
-    d = _spread(_t(spark, sf_dir, "documents").select("doc_id", "text"), "doc_id")
+    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
     return d.select("doc_id", token_count_expr(F.col("text")).alias("n_tokens"))
 
 
@@ -611,10 +570,6 @@ def t3_lang_id(spark, sf_dir):
 def t4_exact_dedup(spark, sf_dir):
     from warcit_spark.operators.dedup import exact_dedup
 
-    # no _spread here: shuffling the text payload out of the single-row-group
-    # scan costs more than the 32-way fingerprinting saves (measured 0.96s ->
-    # 1.22s); the map-side partial agg already shrinks the only exchange to
-    # (_fp, partials)
     d = _t(spark, sf_dir, "documents").select("doc_id", "text")
     # no output orderBy: order-insensitive gate (guide §2.4)
     return exact_dedup(d)

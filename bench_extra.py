@@ -1,14 +1,19 @@
-"""Round-6 optimization measurement harness (bench.py stays frozen).
+"""Measurement harness beside the frozen bench.py.
 
 Times individual headline queries with the noop sink (guide §1.4), with
 the same median-of-interleaved-passes discipline as bench.py, and dumps
-``explain("formatted")`` for each query to plans/r06/.
+``explain("formatted")`` for each query to plans/r06/.  ``--crawl`` runs
+bench.py's crawl benchmarks instead, so crawl_round changes can be
+iterated without paying for the query suite.
 
 Usage:
   python bench_extra.py [--sf-dir DIR] [--reps N] [--plans SUFFIX] [q ...]
+  python bench_extra.py --crawl {light,cc,both}
 
 With ``--plans before`` it writes plans/r06/<query>_before.txt for each
-selected query (no timing).  Without it, prints one JSON line of medians.
+selected query (no timing).  Otherwise it prints one JSON line: query
+medians, or with ``--crawl`` each crawl benchmark's round walls and
+urls/sec (light corpus, CC-weight corpus, or both).
 """
 
 from __future__ import annotations
@@ -21,15 +26,30 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from bench import HEADLINE, _force, _median  # noqa: E402
+from bench import HEADLINE, _force, _median, bench_crawl  # noqa: E402
+
+
+def crawl(spark, which: str) -> dict:
+    out = {}
+    if which in ("light", "both"):
+        out["light"] = bench_crawl(spark)
+    if which in ("cc", "both"):
+        out["cc"] = bench_crawl(
+            spark,
+            n_pages=400_000, n_hosts=256, n_seeds=200_000, n_rounds=3,
+            body_kb=8, extra_links=20, warmup_rounds=1,
+        )
+    return out
 
 
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("names", nargs="*", default=None)
-    ap.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf1.0"))
+    ap.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     ap.add_argument("--reps", type=int, default=3)
     ap.add_argument("--plans", default=None, help="write plans/r06/<q>_<SUFFIX>.txt instead of timing")
+    ap.add_argument("--crawl", choices=("light", "cc", "both"), default=None,
+                    help="run bench.py's crawl benchmarks instead of queries")
     args = ap.parse_args()
 
     import __spark_entry__ as entrymod
@@ -38,6 +58,11 @@ def main() -> None:
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     spark = get_spark("warcit-spark-bench-extra", master=f"local[{cpus}]")
     spark.sparkContext.setLogLevel("ERROR")
+
+    if args.crawl:
+        print(json.dumps(crawl(spark, args.crawl)))
+        spark.stop()
+        return
 
     qs = entrymod.queries()
     names = args.names or HEADLINE

@@ -13,8 +13,6 @@ from warcit_spark.operators.joins import (
     conversions_join,
     mapfile_suffix_join,
     seen_anti_join,
-    strict_check_of,
-    verify_mapfile_uniqueness,
 )
 from warcit_spark.operators.records import transclusion_metadata_records
 from warcit_spark.functions.mime import (
@@ -87,21 +85,18 @@ def test_mapfile_suffix_join_first_match_wins(spark):
         ],
         ["file", "URL", "timestamp", "Content-Type"],
     ).coalesce(1)
-    joined = mapfile_suffix_join(files, mapfile)
-    # happy path is a SINGLE job: the strict check rides the caller's
-    # action as observe() metrics — no job has run before this collect
-    tracker = spark.sparkContext.statusTracker()
-    jobs_before = len(tracker.getJobIdsForGroup() or [])
-    out = {r.filename: r.map_url for r in joined.collect()}
-    jobs_after = len(tracker.getJobIdsForGroup() or [])
-    assert jobs_after - jobs_before <= 1
-    verify_mapfile_uniqueness(strict_check_of(joined))  # metrics ready, no job
+    out = {
+        r.filename: (r.map_url, r.map_timestamp, r.map_ct)
+        for r in mapfile_suffix_join(files, mapfile).collect()
+    }
     # '/data/a/page.html' matches both rows; the FIRST mapfile row wins
-    assert out["/data/a/page.html"] == "http://x/a"
-    assert out["/data/b/other.html"] is None
+    assert out["/data/a/page.html"] == ("http://x/a", "2017", "text/html")
+    assert out["/data/b/other.html"] == (None, None, None)
 
 
 def test_mapfile_row_matching_twice_fails_job(spark):
+    """A mapfile row matching a second file raises from the join itself,
+    before the caller runs any action (warcit.py:335-337)."""
     files = spark.createDataFrame(
         [("/d/1/page.html",), ("/d/2/page.html",)], ["filename"]
     )
@@ -109,30 +104,39 @@ def test_mapfile_row_matching_twice_fails_job(spark):
         [("page.html", "http://x", "2017", "text/html")],
         ["file", "URL", "timestamp", "Content-Type"],
     )
-    joined = mapfile_suffix_join(files, mapfile)
-    joined.collect()
-    with pytest.raises(MapfileUniquenessError):
-        verify_mapfile_uniqueness(strict_check_of(joined))
+    with pytest.raises(MapfileUniquenessError, match=r"page\.html \(x2\)"):
+        mapfile_suffix_join(files, mapfile)
 
 
 def test_mapfile_strict_verify_runs_own_action_if_needed(spark):
-    """verify without a prior caller action: the noop fallback scan still
-    detects the duplicate (and reads only the filename column)."""
+    """No caller action has run: the join runs its own uniqueness job, and
+    that job both passes a clean mapfile and catches a duplicate match."""
+    tracker = spark.sparkContext.statusTracker()
     files = spark.createDataFrame(
         [("/d/1/page.html",), ("/d/2/page.html",)], ["filename"]
     )
-    mapfile = spark.createDataFrame(
+    clean = spark.createDataFrame(
+        [("1/page.html", "http://x/1", "2017", "text/html")],
+        ["file", "URL", "timestamp", "Content-Type"],
+    )
+    jobs_before = len(tracker.getJobIdsForGroup() or [])
+    joined = mapfile_suffix_join(files, clean)
+    assert len(tracker.getJobIdsForGroup() or []) > jobs_before
+    assert {r.filename: r.map_url for r in joined.collect()} == {
+        "/d/1/page.html": "http://x/1",
+        "/d/2/page.html": None,
+    }
+
+    dup = spark.createDataFrame(
         [("page.html", "http://x", "2017", "text/html")],
         ["file", "URL", "timestamp", "Content-Type"],
     )
-    joined = mapfile_suffix_join(files, mapfile)
     with pytest.raises(MapfileUniquenessError):
-        verify_mapfile_uniqueness(strict_check_of(joined))
+        mapfile_suffix_join(files, dup)
 
 
 def test_mapfile_empty_returns_null_columns(spark):
-    """0-row mapfile: NULL map_* columns, like the broadcast-join era (the
-    literal plan would build array<void> and fail field extraction)."""
+    """0-row mapfile: every file kept, NULL map_* columns."""
     files = spark.createDataFrame([("/d/a.html",)], ["filename"])
     mapfile = spark.createDataFrame(
         [], "file string, URL string, timestamp string, `Content-Type` string"
@@ -141,50 +145,6 @@ def test_mapfile_empty_returns_null_columns(spark):
     assert len(out) == 1
     r = out[0]
     assert r.map_url is None and r.map_timestamp is None and r.map_ct is None
-
-
-def test_mapfile_broadcast_fallback_matches_literal(spark, monkeypatch):
-    """Above MAPFILE_LITERAL_MAX_ROWS the broadcast theta-join fallback must
-    produce the identical first-match result set."""
-    from warcit_spark.operators import joins as joins_mod
-
-    files = spark.createDataFrame(
-        [("/data/a/page.html",), ("/data/b/other.html",), ("/q/none.bin",)],
-        ["filename"],
-    )
-    mapfile = spark.createDataFrame(
-        [
-            ("a/page.html", "http://x/a", "2017", "text/html"),
-            ("page.html", "http://x/generic", "2018", "text/plain"),
-            ("b/other.html", "http://x/b", None, None),
-        ],
-        ["file", "URL", "timestamp", "Content-Type"],
-    ).coalesce(1)
-
-    def snapshot(df):
-        return sorted(
-            (r.filename, r.map_url, r.map_timestamp, r.map_ct)
-            for r in df.collect()
-        )
-
-    lit = snapshot(mapfile_suffix_join(files, mapfile))
-    monkeypatch.setattr(joins_mod, "MAPFILE_LITERAL_MAX_ROWS", 2)
-    fb = snapshot(joins_mod.mapfile_suffix_join(files, mapfile))
-    assert fb == lit
-    assert lit[0] == ("/data/a/page.html", "http://x/a", "2017", "text/html")
-
-    # strict uniqueness still enforced on the fallback path
-    dup_files = spark.createDataFrame(
-        [("/d/1/page.html",), ("/d/2/page.html",)], ["filename"]
-    )
-    one_row = spark.createDataFrame(
-        [("page.html", "http://x", "2017", "text/html"),
-         ("zz1.html", None, None, None),
-         ("zz2.html", None, None, None)],
-        ["file", "URL", "timestamp", "Content-Type"],
-    ).coalesce(1)
-    with pytest.raises(MapfileUniquenessError):
-        joins_mod.mapfile_suffix_join(dup_files, one_row)
 
 
 # ------------------------------------------------------------------ J2 + anti

@@ -9,6 +9,8 @@ overrides URL/date/type; warcinfo excluded from record counts.
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -90,11 +92,9 @@ def test_mapfile_overrides_url_date_type(spark, site):
 
 
 def test_full_run_multipart_with_clean_mapfile(spark, site, tmp_path):
-    """Regression: the default multi-part path (repartitionByRange) runs a
-    range-sampling pass that executes the observed subtree twice, doubling
-    the additive matches metric while the bitmap distinct stays put.  A
-    CLEAN unique-suffix mapfile run must NOT raise — the metric mismatch
-    is a trigger for the exact dupes recheck, not proof of duplicates."""
+    """A CLEAN unique-suffix mapfile on the default multi-part path
+    (repartitionByRange, whose range-sampling pass runs the records
+    subtree twice) must NOT raise."""
     mapfile = spark.createDataFrame(
         [("sub/page.html", "http://mapped.test/p", "2011-02", "application/x-map")],
         ["file", "URL", "timestamp", "Content-Type"],
@@ -107,9 +107,9 @@ def test_full_run_multipart_with_clean_mapfile(spark, site, tmp_path):
 
 
 def test_full_run_multipart_dup_mapfile_still_fails(spark, site, tmp_path):
-    """The exact recheck still catches REAL duplicates on the multi-part
-    path: 'index.html' suffix-matches both index files -> job fails with a
-    non-empty duplicate listing (warcit.py:335-337)."""
+    """REAL duplicates fail on the multi-part path: 'index.html'
+    suffix-matches both index files -> job fails with a non-empty
+    duplicate listing (warcit.py:335-337)."""
     from warcit_spark.operators.joins import MapfileUniquenessError
 
     mapfile = spark.createDataFrame(
@@ -121,6 +121,31 @@ def test_full_run_multipart_dup_mapfile_still_fails(spark, site, tmp_path):
         warcit_run(
             spark, site, PREFIX, out, charset=None, num_parts=4, mapfile=mapfile
         )
+
+
+@pytest.mark.parametrize("mode", ["ab", "wb"])
+def test_failed_mapfile_run_writes_nothing(spark, site, tmp_path, mode):
+    """A duplicate-mapfile run fails before the sink runs, so neither an
+    append nor an overwrite touches the previous good output."""
+    from warcit_spark.operators.joins import MapfileUniquenessError
+
+    out = str(tmp_path / f"warc_{mode}")
+    warcit_run(spark, site, PREFIX, out, charset=None, num_parts=2)
+
+    def snapshot():
+        return {p.name: p.read_bytes() for p in sorted(Path(out).iterdir())}
+
+    before = snapshot()
+    mapfile = spark.createDataFrame(
+        [("index.html", "http://mapped.test/i", "2011", "text/html")],
+        ["file", "URL", "timestamp", "Content-Type"],
+    )
+    with pytest.raises(MapfileUniquenessError, match="index.html"):
+        warcit_run(
+            spark, site, PREFIX, out, mode=mode, charset=None, num_parts=2,
+            mapfile=mapfile,
+        )
+    assert snapshot() == before
 
 
 def test_full_run_to_warc_file(spark, site, tmp_path):

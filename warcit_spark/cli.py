@@ -244,11 +244,11 @@ def main(argv: list[str] | None = None) -> int:
     with tempfile.TemporaryDirectory(prefix="warcit-spark-") as tmp:
         if valid_inputs:
             try:
-                # records built ONCE (eager strict: a duplicate-mapfile
-                # run fails here, before any output is written — the
-                # reference's abort) and shared by the write and the
-                # --log sidecar; persisted when both consume it so the
-                # site is scanned once
+                # records built ONCE (a duplicate-mapfile run fails
+                # here, before any output is written — the reference's
+                # abort) and shared by the write and the --log sidecar;
+                # persisted when both consume it so the site is scanned
+                # once
                 records = files_to_warc_records(
                     spark, valid_inputs, r.url_prefix, **kwargs
                 )

@@ -35,12 +35,6 @@ def token_count_expr(text: Column) -> Column:
     return F.when(t == "", F.lit(0)).otherwise(F.size(F.split(t, r"\s+")))
 
 
-def stopword_count_expr(text: Column) -> Column:
-    return F.size(
-        F.filter(words_expr(text), lambda w: w.isin(*EN_STOPWORDS))
-    )
-
-
 def stopword_ratio_expr(text: Column) -> Column:
     words = words_expr(text)
     n = F.size(words)

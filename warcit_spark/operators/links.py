@@ -1,49 +1,57 @@
 """Link extraction + resolution (SURVEY.md §2.5 D4 — new-engine operator).
 
 The reference never extracts links (its inputs are enumerated files); the
-frontier engine discovers URLs from fetched HTML.  Two implementations:
+frontier engine discovers URLs from fetched HTML with
+``regexp_extract_all`` on the JVM (whole-stage codegen, zero Python)
+followed by ``explode``: :func:`extract_links` for outlinks,
+:func:`anchor_text_agg` for per-target anchor text.
 
-- :func:`extract_links` — the hot path: ``regexp_extract_all`` on the JVM
-  (whole-stage codegen, zero Python) followed by ``explode``.
-- :func:`extract_links_batch` — the pandas/Arrow variant demanded by the
-  north-star for full HTML parsing: lxml per Arrow record batch when lxml
-  is installed, else a vectorized ``pandas.str.extractall`` fallback
-  (still batch-at-a-time C code, never per-row Python).  Used via
-  ``mapInPandas``; schema-compatible with the expression path.
-
-Resolution handles absolute http(s), root-relative, and directory-relative
-hrefs; other schemes (mailto:, javascript:, data:) and intra-page fragments
-resolve to NULL and are filtered.
+Both resolve through one private pair: :func:`_parent_parts` parses the
+parent URL once per page, before the explode, and :func:`_resolve_href`
+resolves each exploded href against those columns.  Resolution handles
+absolute http(s), root-relative, and directory-relative hrefs; other
+schemes (mailto:, javascript:, data:) and intra-page fragments resolve
+to NULL and are filtered.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 HREF_PATTERN = r'<a\s[^>]*href="([^"]*)"'
 
 
-def resolve_link_expr(parent_url: Column, href: Column) -> Column:
-    """Resolve an href against its parent URL; NULL for non-crawlable."""
+def _parent_parts(parent_url: Column) -> list[Column]:
+    """``_base`` (scheme://authority) and ``_dir`` (path up to its last
+    '/') of the parent URL.  Select these ONCE PER PAGE *before* the
+    explode: resolving per exploded link would re-parse the same parent
+    ~links-per-page times (three try_parse_url calls each — at CC weight
+    that was ~75 redundant URI parses per page, the majority of the link
+    phase; guide §1.2 per-task work)."""
     scheme = F.try_parse_url(parent_url, F.lit("PROTOCOL"))
     auth = F.try_parse_url(parent_url, F.lit("AUTHORITY"))
-    base = F.concat(scheme, F.lit("://"), auth)
     parent_dir = F.regexp_replace(
         F.coalesce(F.try_parse_url(parent_url, F.lit("PATH")), F.lit("/")),
         "[^/]*$",
         "",
     )
+    return [
+        F.concat(scheme, F.lit("://"), auth).alias("_base"),
+        parent_dir.alias("_dir"),
+    ]
+
+
+def _resolve_href(href: Column) -> Column:
+    """Resolve an href against the ``_base``/``_dir`` columns of
+    :func:`_parent_parts`; NULL for non-crawlable."""
     h = F.trim(href)
     return (
         F.when(h.rlike("^https?://"), h)
         .when(h.rlike("^[A-Za-z][A-Za-z0-9+.-]*:"), F.lit(None))  # other schemes
         .when((h == "") | h.startswith("#"), F.lit(None))
-        .when(h.startswith("/"), F.concat(base, h))
-        .otherwise(F.concat(base, parent_dir, h))
+        .when(h.startswith("/"), F.concat(F.col("_base"), h))
+        .otherwise(F.concat(F.col("_base"), F.col("_dir"), h))
     )
 
 
@@ -65,38 +73,16 @@ def resolve_hrefs(
     carry: tuple[str, ...] = ("priority",),
 ) -> DataFrame:
     """(url, *carry, link) from a PRE-computed ``array<string>`` hrefs
-    column (see :func:`hrefs_expr`) — explode + resolve, pure JVM.
-
-    The parent URL's scheme/authority/directory are computed ONCE PER PAGE
-    *before* the explode: resolving them per exploded link would re-parse
-    the same parent ~links-per-page times (three try_parse_url calls each
-    — at CC weight that was ~75 redundant URI parses per page, the
-    majority of the link phase; guide §1.2 per-task work).
-    """
-    scheme = F.try_parse_url(F.col(url_col), F.lit("PROTOCOL"))
-    auth = F.try_parse_url(F.col(url_col), F.lit("AUTHORITY"))
-    parent_dir = F.regexp_replace(
-        F.coalesce(F.try_parse_url(F.col(url_col), F.lit("PATH")), F.lit("/")),
-        "[^/]*$",
-        "",
-    )
+    column (see :func:`hrefs_expr`) — explode + resolve, pure JVM, the
+    parent parsed once per page (:func:`_parent_parts`)."""
     exploded = pages.select(
         F.col(url_col).alias("url"),
         *[F.col(c) for c in carry],
-        F.concat(scheme, F.lit("://"), auth).alias("_base"),
-        parent_dir.alias("_dir"),
+        *_parent_parts(F.col(url_col)),
         F.explode(F.col(hrefs_col)).alias("_href"),
     )
-    h = F.trim(F.col("_href"))
-    link = (
-        F.when(h.rlike("^https?://"), h)
-        .when(h.rlike("^[A-Za-z][A-Za-z0-9+.-]*:"), F.lit(None))  # other schemes
-        .when((h == "") | h.startswith("#"), F.lit(None))
-        .when(h.startswith("/"), F.concat(F.col("_base"), h))
-        .otherwise(F.concat(F.col("_base"), F.col("_dir"), h))
-    )
     return exploded.select(
-        "url", *carry, link.alias("link")
+        "url", *carry, _resolve_href(F.col("_href")).alias("link")
     ).where(F.col("link").isNotNull())
 
 
@@ -115,81 +101,10 @@ def extract_links(
     return resolve_hrefs(with_hrefs, carry=carry)
 
 
-def _extract_hrefs_lxml(html_bytes: pd.Series) -> pd.Series:
-    """lxml path: list of raw hrefs per document (batched, C-side)."""
-    from lxml import html as lhtml  # noqa: import-gated; absent in sandbox
-
-    def one(b):
-        if b is None or len(b) == 0:
-            return []
-        try:
-            tree = lhtml.fromstring(b)
-        except Exception:
-            return []
-        return [
-            link
-            for el, attr, link, _pos in tree.iterlinks()
-            if attr == "href" and el.tag == "a"
-        ]
-
-    return html_bytes.map(one)
-
-
-def _extract_hrefs_regex(html_bytes: pd.Series) -> pd.Series:
-    """Vectorized fallback: pandas str.extractall (C regex engine)."""
-    s = html_bytes.map(
-        lambda b: b.decode("utf-8", "replace") if b is not None else ""
-    )
-    matches = s.str.extractall(HREF_PATTERN)[0]
-    grouped = matches.groupby(level=0).agg(list)
-    return grouped.reindex(s.index, fill_value=None).map(
-        lambda v: v if isinstance(v, list) else []
-    )
-
-
-def extract_links_batch(
-    pages: DataFrame,
-    html_col: str = "html",
-    url_col: str = "url",
-    carry: tuple[str, ...] = ("priority",),
-) -> DataFrame:
-    """mapInPandas variant: lxml per Arrow batch if available, else the
-    vectorized regex fallback.  Same output schema as extract_links."""
-    try:
-        import lxml  # noqa: F401
-
-        extractor = _extract_hrefs_lxml
-    except ImportError:
-        extractor = _extract_hrefs_regex
-
-    carry_fields = ", ".join(
-        f"{c} {pages.schema[c].dataType.simpleString()}" for c in carry
-    )
-    out_schema = f"url string, {carry_fields}, _href string" if carry else "url string, _href string"
-
-    cols = [url_col, html_col, *carry]
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            hrefs = extractor(pdf[html_col])
-            out = pdf[[url_col, *carry]].rename(columns={url_col: "url"})
-            out = out.assign(_href=hrefs).explode("_href")
-            out = out[out["_href"].notna()]
-            yield out
-
-    exploded = pages.select(*cols).mapInPandas(fn, out_schema)
-    link = resolve_link_expr(F.col("url"), F.col("_href"))
-    return exploded.select("url", *carry, link.alias("link")).where(
-        F.col("link").isNotNull()
-    )
-
-
 # ------------------------------------------------------------- anchor text
 # anchor pattern: href + the a-element's DIRECT text ('[^<]*</a>' demands
-# text-only content, so anchors wrapping nested markup are skipped by this
-# regex hot path entirely — the full-fidelity parse is the lxml batch twin
-# `extract_links_batch`; directly-empty anchors DO match and count as
-# textless inlinks)
+# text-only content, so anchors wrapping nested markup are skipped
+# entirely; directly-empty anchors DO match and count as textless inlinks)
 ANCHOR_PATTERN = r'<a\s[^>]*href="([^"]*)"[^>]*>([^<]*)</a>'
 
 
@@ -209,12 +124,12 @@ def anchor_text_agg(
 
     Scale shape: extraction is TWO ``regexp_extract_all`` over the SAME
     pattern (groups 1/2 — indexes align by construction) fused in one
-    row-local projection, ``arrays_zip`` + one explode; resolution and
-    canonicalization are the frontier's own exprs (links stay joinable
-    against the URL-seen set); then a (target, text) groupBy feeding a
-    target groupBy — both map-side combined, no window over the full
-    explode.  Anchor dedup-per-page is NOT applied (repeat anchors are
-    signal), matching WAT semantics.
+    row-local projection with the parent parsed once per page, then
+    ``arrays_zip`` + one explode; resolution and canonicalization are the
+    frontier's own exprs (links stay joinable against the URL-seen set);
+    then a (target, text) groupBy feeding a target groupBy — both map-side
+    combined, no window over the full explode.  Anchor dedup-per-page is
+    NOT applied (repeat anchors are signal), matching WAT semantics.
     """
     from warcit_spark.functions.urls import canonicalize_url_expr
 
@@ -224,20 +139,17 @@ def anchor_text_agg(
         F.regexp_extract_all(html_txt, F.lit(ANCHOR_PATTERN), 2).alias("text"),
     )
     exploded = pages.select(
-        F.col(url_col).alias("url"), F.explode(pairs).alias("_p")
+        *_parent_parts(F.col(url_col)), F.explode(pairs).alias("_p")
     ).select(
-        "url",
-        F.col("_p")["href"].alias("_href"),
+        canonicalize_url_expr(_resolve_href(F.col("_p")["href"])).alias(
+            "target_url"
+        ),
         F.trim(
             F.regexp_replace(F.col("_p")["text"], r"\s+", " ")
         ).alias("anchor"),
     )
-    target = canonicalize_url_expr(
-        resolve_link_expr(F.col("url"), F.col("_href"))
-    )
     per_text = (
-        exploded.select(target.alias("target_url"), "anchor")
-        .where(F.col("target_url").isNotNull())
+        exploded.where(F.col("target_url").isNotNull())
         .groupBy("target_url", "anchor")
         .agg(F.count(F.lit(1)).alias("_c"))
     )

@@ -40,12 +40,7 @@ from warcit_spark.functions.timestamps import iso8601z_expr, normalize_ts14_expr
 from warcit_spark.operators.charset import detect_charsets_batch
 from warcit_spark.functions.mime import charset_suffix_expr
 from warcit_spark.operators.filters import apply_include_exclude
-from warcit_spark.operators.joins import (
-    STRICT_CHECKED,
-    mapfile_suffix_join,
-    strict_check_of,
-    verify_mapfile_uniqueness,
-)
+from warcit_spark.operators.joins import mapfile_suffix_join
 from warcit_spark.operators.records import (
     json_metadata_batch,
     transclusion_metadata_records,
@@ -121,7 +116,6 @@ def files_to_warc_records(
     transclusions: DataFrame | None = None,
     mime_method: str = "filename",
     tika_results: DataFrame | None = None,
-    strict_mapfile: str = "eager",
 ) -> DataFrame:
     """One DataFrame of WARC records: (url, record_type, warc_date,
     content_type, payload, payload_digest, source_uri, size, refer-back
@@ -158,19 +152,10 @@ def files_to_warc_records(
     # F1 — before any mime/mapfile work (predicate pushdown, warcit.py:466-475)
     files = apply_include_exclude(files, "filename", include, exclude)
 
-    # J1 — mapfile lookup; unmatched rows keep NULLs.  Strictness:
-    # "eager" (default — safe for ANY direct caller) verifies uniqueness
-    # NOW via the observation's column-pruned fallback scan (one
-    # filename-only job, far cheaper than the old full-materialize
-    # check); "deferred" attaches the check to the records frame so
-    # warcit_run can let it ride the write job (zero extra actions).
-    strict_check = None
+    # J1 — mapfile lookup; unmatched rows keep NULLs.  A mapfile row
+    # matching two files raises here, before anything is written.
     if mapfile is not None:
         files = mapfile_suffix_join(files, mapfile)
-        strict_check = strict_check_of(files)
-        if strict_mapfile == "eager" and strict_check is not None:
-            verify_mapfile_uniqueness(strict_check)
-            strict_check = STRICT_CHECKED
     else:
         files = (
             files.withColumn("map_url", F.lit(None).cast("string"))
@@ -430,7 +415,6 @@ def files_to_warc_records(
             rid_udf(F.col("record_type"), F.col("url"), F.col("warc_date")),
         ),
     )
-    out._mapfile_strict_check = strict_check
     return out
 
 
@@ -463,22 +447,7 @@ def warcit_run(
     fidelity mode matching the reference CLI.  Returns the write manifest.
     """
     if records is None:
-        # deferred strict check: it rides the write job below (zero extra
-        # actions in the happy path)
-        records = files_to_warc_records(
-            spark, input_dir, url_prefix, strict_mapfile="deferred", **kwargs
-        )
-        if kwargs.get("mapfile") is not None and strict_check_of(records) is None:
-            # The strict payload rides as a Python attribute (it does not
-            # survive DataFrame transformations); eager-checked paths set
-            # the STRICT_CHECKED sentinel, so a bare None here means the
-            # deferred check was silently lost — fail LOUD rather than
-            # skip the reference's uniqueness guarantee (warcit.py:335-337).
-            raise AssertionError(
-                "mapfile strict check payload missing on the records frame "
-                "built with strict_mapfile='deferred' — a pipeline edit "
-                "dropped the attribute; re-attach it on the FINAL frame"
-            )
+        records = files_to_warc_records(spark, input_dir, url_prefix, **kwargs)
     sort_cols = [
         F.col("_sort_uri").asc(), F.col("_class").asc(), F.col("_seq").asc()
     ]
@@ -493,23 +462,11 @@ def warcit_run(
     # warcinfo cmdline: the CLI-equivalent invocation (warcit.py:454)
     if cmdline is None:
         cmdline = f"warcit-spark {url_prefix} {input_dir}"
-    strict_check = strict_check_of(records)
-    if mode == "wb" and strict_check is not None:
-        # destructive overwrite: verify BEFORE touching out_dir (one
-        # filename-only scan) so a doomed strict-mapfile run cannot
-        # clobber a previous good output; xb/ab keep the zero-extra-job
-        # ride-the-write path (xb writes into an empty dir, ab appends
-        # new generations — nothing pre-existing is destroyed either way)
-        verify_mapfile_uniqueness(strict_check)
-        strict_check = None
     manifest = write_warc_files(
         ordered, out_dir, gzip_records=gzip_records, mode=mode, cmdline=cmdline,
         warcinfo=warcinfo, warcinfo_filename=warcinfo_filename,
     )
-    # run the write HERE so the mapfile strict check (observe metrics
-    # riding the write job — zero extra actions in the happy path) can
-    # raise before the manifest is handed back; the returned frame is a
-    # local relation, so callers' .collect() is free
+    # run the write HERE; the returned frame is a local relation, so
+    # callers' .collect() is free
     rows = manifest.collect()
-    verify_mapfile_uniqueness(strict_check)
     return spark.createDataFrame(rows, manifest.schema)
