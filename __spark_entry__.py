@@ -38,7 +38,7 @@ def entry(spark: SparkSession) -> DataFrame:
         derive_fetch_records,
         _mime_dim,
     )
-    from warcit_spark.plans.politeness import politeness_select
+    from warcit_spark.plans.politeness import politeness_prerank, politeness_rank
     from warcit_spark.operators.robots import apply_robots
 
     sf_dir = "/root/testdata/sf0.001"
@@ -59,7 +59,9 @@ def entry(spark: SparkSession) -> DataFrame:
     frontier = canonical_seed_frontier(seeds)
     with_rules = apply_robots(frontier, robots)
     allowed = with_rules.where(F.col("allowed"))
-    selected = politeness_select(allowed, host_budget=50, n_salt=4)
+    pre = politeness_prerank(allowed, host_budget=50, n_salt=4)
+    ranked = politeness_rank(pre.where(F.col("_pre_ok")), host_budget=50)
+    selected = ranked.where(F.col("selected"))
     fetched = (
         selected.join(
             pages.withColumnRenamed("url", "_purl"),
@@ -118,12 +120,15 @@ def _exact_money_sum(x, s: int):
 
     Equivalence argument, verified output-identical vs the decimal form on
     every fixture sf (0.001/0.01/0.1/1.0):
-    - per row, ``floor(x*10^s + 0.5)`` = the decimal cast's HALF_UP at scale
-      s for non-negative x whose exact value is a 10^-s-grid rational (all
-      fixture money columns are exact 2-decimals; products of 2-decimal
-      factors are exact 4-/6-decimal rationals), because the double-multiply
-      error (~1e-11 relative) never moves the product across a .5 boundary
-      that sits >= 1e-5 away from the grid.
+    - per row, ``sign(x) * floor(|x|*10^s + 0.5)`` = the decimal cast's
+      HALF_UP (half away from zero) at scale s for x whose exact value is a
+      10^-s-grid rational (all fixture money columns are exact 2-decimals;
+      products of 2-decimal factors are exact 4-/6-decimal rationals),
+      because the double-multiply error (~1e-11 relative) never moves the
+      product across a .5 boundary that sits >= 1e-5 away from the grid.
+      Rounding |x| and restoring the sign keeps negative values exact: a
+      plain ``cast(x*10^s + 0.5 as long)`` truncates toward zero and
+      renders -1.00 as -0.99.
     - the long sum is exact (capacity 9.2e18 >= micro-units up to ~sf30;
       beyond that switch the cast back to decimal — the sums themselves,
       not this rendering, overflow decimal(18,s) rows far earlier).
@@ -131,7 +136,8 @@ def _exact_money_sum(x, s: int):
       double the oracle's pandas path sees is the same nearest-double of
       S/10^s that the decimal-sum form produced.
     """
-    units = (x * F.lit(float(10**s)) + F.lit(0.5)).cast("long")
+    half_up = (F.abs(x) * F.lit(float(10**s)) + F.lit(0.5)).cast("long")
+    units = F.when(x < 0, -half_up).otherwise(half_up)
     total = F.sum(units).cast("decimal(38,0)") / F.lit(10**s)
     return F.round(total.cast("double"), s)
 

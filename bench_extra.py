@@ -2,18 +2,20 @@
 
 Times individual headline queries with the noop sink (guide §1.4), with
 the same median-of-interleaved-passes discipline as bench.py, and dumps
-``explain("formatted")`` for each query to plans/r06/.  ``--crawl`` runs
-bench.py's crawl benchmarks instead, so crawl_round changes can be
-iterated without paying for the query suite.
+``explain("formatted")`` for each query to plans/r06/, flagging plan
+smells.  ``--crawl`` runs bench.py's crawl benchmarks instead, so
+crawl_round changes can be iterated without paying for the query suite.
 
 Usage:
   python bench_extra.py [--sf-dir DIR] [--reps N] [--plans SUFFIX] [q ...]
   python bench_extra.py --crawl {light,cc,both}
 
 With ``--plans before`` it writes plans/r06/<query>_before.txt for each
-selected query (no timing).  Otherwise it prints one JSON line: query
-medians, or with ``--crawl`` each crawl benchmark's round walls and
-urls/sec (light corpus, CC-weight corpus, or both).
+selected query (no timing) and prints a ``SMELL:`` line for each plan
+holding a cartesian product or a row-at-a-time Python UDF.  Otherwise it
+prints one JSON line: query medians, or with ``--crawl`` each crawl
+benchmark's round walls and urls/sec (light corpus, CC-weight corpus, or
+both).
 """
 
 from __future__ import annotations
@@ -27,6 +29,11 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from bench import HEADLINE, _force, _median, bench_crawl  # noqa: E402
+
+SMELLS = [
+    ("CartesianProduct", "cartesian product"),
+    ("BatchEvalPython", "row-at-a-time Python UDF"),
+]
 
 
 def crawl(spark, which: str) -> dict:
@@ -79,6 +86,9 @@ def main() -> None:
             with open(path, "w") as f:
                 f.write(plan)
             print(f"wrote {path}")
+            for marker, desc in SMELLS:
+                if marker in plan:
+                    print(f"SMELL: {name}: {desc}")
         spark.stop()
         return
 

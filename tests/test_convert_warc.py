@@ -7,8 +7,8 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from warcit_spark.operators.charset import content_type_with_charset, with_detected_charset
 from warcit_spark.operators.convert import dispatch_conversions, run_conversions
+from warcit_spark.plans.warcit_pipeline import files_to_warc_records
 from warcit_spark.sinks.warc import read_warc_records, write_warc_files
 
 FILE_TYPES = [
@@ -194,37 +194,34 @@ def test_charset_detector_import_gate(monkeypatch):
     assert out == ["KOI8-R", None, None, None, None]
     assert calls == [b"hello", b"empty", b"noenc"]
 
-    # gate closed -> heuristic vocabulary
+    # gate closed -> heuristic vocabulary; no payload -> no charset
     monkeypatch.delitem(sys.modules, "cchardet")
     out = mod.detect_charsets_batch(
-        pd.Series([b"hello", "héllo".encode("utf-8"), b"\xff\xfe"])
+        pd.Series([b"hello", "héllo".encode("utf-8"), b"\xff\xfe", None, b""])
     ).tolist()
-    assert out == ["ascii", "UTF-8", "WINDOWS-1252"]
+    assert out == ["ascii", "UTF-8", "WINDOWS-1252", None, None]
 
 
-def test_charset_detection_pipeline(spark):
-    rows = [
-        ("text/html", "ascii only".encode()),
-        ("text/html", "café utf8".encode("utf-8")),
-        ("text/html", b"caf\xe9 latin1"),
-        ("image/png", "café".encode("utf-8")),  # non-text: never detected
-    ]
-    df = spark.createDataFrame(rows, "mime string, content binary")
-    out = [r.content_type for r in content_type_with_charset(df).collect()]
-    assert out == [
-        "text/html",                       # ascii suppressed (warcit.py:683-684)
-        "text/html; charset=UTF-8",
-        "text/html; charset=WINDOWS-1252",
-        "image/png",
-    ]
-
-
-def test_detect_charset_column(spark):
-    df = spark.createDataFrame(
-        [(b"plain",), (None,), (b"",)], "content binary"
-    )
-    got = [r.detected_charset for r in with_detected_charset(df).collect()]
-    assert got == ["ascii", None, None]
+def test_charset_detection_pipeline(spark, tmp_path):
+    """F5 on the files->WARC path: detection runs for text/* resources
+    only, then the suppression rules build the Content-Type."""
+    site = tmp_path / "csite"
+    site.mkdir()
+    (site / "ascii.html").write_bytes("ascii only".encode())
+    (site / "utf8.html").write_bytes("café utf8".encode("utf-8"))
+    (site / "latin1.html").write_bytes(b"caf\xe9 latin1")
+    (site / "pic.png").write_bytes("café".encode("utf-8"))  # non-text: never detected
+    u = "http://c.test/"
+    got = {
+        r.url: r.content_type
+        for r in files_to_warc_records(spark, str(site), u).collect()
+    }
+    assert got == {
+        u + "ascii.html": "text/html",  # ascii suppressed (warcit.py:683-684)
+        u + "utf8.html": "text/html; charset=UTF-8",
+        u + "latin1.html": "text/html; charset=WINDOWS-1252",
+        u + "pic.png": "image/png",
+    }
 
 
 def test_warc_digest_base32_like_warcio(spark, tmp_path):

@@ -263,11 +263,12 @@ def test_bucketed_seen_parity_and_plan(spark, engine_result):
     assert "Exchange" not in seen_side
 
 
-def test_politeness_annotate_matches_single_window_twin(spark):
-    """Spark politeness_annotate == the pure-Python single-window spec twin
+def test_politeness_two_stage_matches_single_window_twin(spark):
+    """Spark politeness_prerank + politeness_rank, chained the way
+    crawl_round chains them, == the pure-Python single-window spec twin
     (tests/test_properties.py proves twin == two-stage for arbitrary salts;
-    this parity transfers those properties to the Spark operator)."""
-    from warcit_spark.plans.politeness import politeness_annotate
+    this parity transfers those properties to the Spark operators)."""
+    from warcit_spark.plans.politeness import politeness_prerank, politeness_rank
     from tests.test_properties import _pol_single_window
 
     rows = []
@@ -282,12 +283,11 @@ def test_politeness_annotate_matches_single_window_twin(spark):
     frontier = spark.createDataFrame(
         rows, "host string, url string, priority double, crawl_delay double, allowed boolean"
     )
+    pre = politeness_prerank(frontier, host_budget=5, n_salt=4, allowed_col="allowed")
+    ranked = politeness_rank(pre.where(F.col("_pre_ok")), host_budget=5)
     got = {
         r.url: r.rank_in_host
-        for r in politeness_annotate(
-            frontier, host_budget=5, n_salt=4, allowed_col="allowed"
-        ).collect()
-        if r.selected
+        for r in ranked.where(F.col("selected")).collect()
     }
     twin_rows = [
         {"host": h, "url": u, "priority": p, "delay": d, "allowed": a}

@@ -21,7 +21,8 @@ def test_exact_money_sum_matches_decimal_form(spark):
         0.005, 12.345, 99999.995,          # off-grid / half-boundary inputs
         33.33, 66.67, 0.1, 0.2, 0.3,       # classic binary-representation cases
     ]
-    rows = [(i % 3, v) for i, v in enumerate(vals * 997)]  # ~16k rows, 3 groups
+    vals += [-v for v in vals if v]       # HALF_UP rounds half away from zero
+    rows = [(i % 3, v) for i, v in enumerate(vals * 997)]  # ~31k rows, 3 groups
     df = spark.createDataFrame(rows, "g int, v double")
     for s in (2, 4, 6):
         got = (

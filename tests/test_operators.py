@@ -8,12 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from warcit_spark.operators.filters import apply_include_exclude, include_exclude_expr
-from warcit_spark.operators.joins import (
-    MapfileUniquenessError,
-    conversions_join,
-    mapfile_suffix_join,
-    seen_anti_join,
-)
+from warcit_spark.operators.joins import MapfileUniquenessError, mapfile_suffix_join
 from warcit_spark.operators.records import transclusion_metadata_records
 from warcit_spark.functions.mime import (
     charset_suffix_expr,
@@ -145,31 +140,6 @@ def test_mapfile_empty_returns_null_columns(spark):
     assert len(out) == 1
     r = out[0]
     assert r.map_url is None and r.map_timestamp is None and r.map_ct is None
-
-
-# ------------------------------------------------------------------ J2 + anti
-def test_conversions_join_skips_unsuccessful(spark):
-    doc = {
-        "conversions": {
-            "http://x/v.flv": [
-                {"url": "http://x/v.mp4", "output": "/o/v.mp4", "success": True,
-                 "metadata": {"name": "mp4", "ext": "mp4", "command": None,
-                              "mime": "video/mp4", "skip_as_source": None}},
-                {"url": "http://x/v.webm", "output": "/o/v.webm", "success": False,
-                 "metadata": None},
-            ]
-        }
-    }
-    conv = conversions_from_dict(spark, doc)
-    records = spark.createDataFrame([("http://x/v.flv", "r1")], ["url", "rid"])
-    out = conversions_join(records, conv).collect()
-    assert len(out) == 1 and out[0]["url"] == "http://x/v.flv"
-
-
-def test_seen_anti_join(spark):
-    cand = spark.createDataFrame([("a",), ("b",), ("c",)], ["url"])
-    seen = spark.createDataFrame([("b",)], ["url"])
-    assert {r.url for r in seen_anti_join(cand, seen).collect()} == {"a", "c"}
 
 
 # --------------------------------------------------------- D3 + A2 golden JSON
@@ -308,41 +278,6 @@ def test_charset_tika_default_8bit_suppression(spark):
     )
     got = [r.s for r in df.select(suffix.alias("s")).collect()]
     assert got == ["", "; charset=windows-1252"]
-
-
-def test_conversion_records_refer_back(spark):
-    """D2: derived conversion records carry the refer-back headers
-    (warcit.py:569-576)."""
-    from warcit_spark.operators.records import conversion_records
-
-    conv = conversions_from_dict(spark, {
-        "conversions": {
-            "http://m/v.flv": [
-                {"url": "http://m/v.mp4", "output": "/o/v.mp4", "success": True,
-                 "metadata": {"name": "mp4", "ext": "mp4", "mime": "video/mp4"}},
-                {"url": "http://m/v.webm", "output": "/o/v.webm", "success": False},
-            ]
-        }
-    })
-    resources = spark.createDataFrame(
-        [("http://m/v.flv", "<urn:uuid:abc>", "2017-03-04T12:34:56Z")],
-        ["url", "record_id", "warc_date"],
-    )
-    out = conversion_records(resources, conv).collect()
-    assert len(out) == 1  # unsuccessful conversion skipped
-    r = out[0]
-    assert r.url == "http://m/v.mp4"
-    assert r.record_type == "conversion"
-    assert r.refers_to == "<urn:uuid:abc>"
-    assert r.refers_to_target_uri == "http://m/v.flv"
-    assert r.refers_to_target_date == "2017-03-04T12:34:56Z"
-    assert '"mime":"video/mp4"' in r.json_metadata.replace(" ", "")
-    assert r.source_path == "/o/v.mp4"
-    # byte fidelity vs the reference's json.dumps(metadata)
-    # (warcit.py:576): ': ' separator, None keys omitted
-    assert r.json_metadata == json.dumps(
-        {"name": "mp4", "ext": "mp4", "mime": "video/mp4"}
-    )
 
 
 def test_transclusion_formats_order_deterministic(spark):

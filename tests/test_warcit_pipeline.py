@@ -9,6 +9,9 @@ overrides URL/date/type; warcinfo excluded from record counts.
 
 from __future__ import annotations
 
+import base64
+import hashlib
+import json
 from pathlib import Path
 
 import pytest
@@ -173,6 +176,26 @@ def test_full_run_to_warc_file(spark, site, tmp_path):
     assert page["payload"].decode() == SITE_FILES["sub/page.html"]
 
 
+def test_colon_in_file_name(spark, tmp_path):
+    """A file name holding ':' is scanned and written like any other: its
+    URL percent-encodes the ':' and its digest is the file's sha1."""
+    site = tmp_path / "colon_site"
+    site.mkdir()
+    body = b"<html><body>colon</body></html>"
+    (site / "a:b.html").write_bytes(body)
+    out = str(tmp_path / "colon_warc")
+    manifest = warcit_run(
+        spark, str(site), PREFIX, out, charset=None, one_file=True
+    ).collect()
+    recs = read_warc_records(manifest[0].path)
+    assert [r["headers"].get("WARC-Target-URI") for r in recs[1:]] == [
+        f"{PREFIX}a%3ab.html"
+    ]
+    digest = base64.b32encode(hashlib.sha1(body).digest()).decode()
+    assert recs[1]["headers"]["WARC-Payload-Digest"] == f"sha1:{digest}"
+    assert recs[1]["payload"] == body
+
+
 def test_conversion_workflow_golden_ordering(spark, tmp_path):
     """Composed --conversions/--transclusions run reproduces the reference's
     record sequence (test/test_warcit.py:257-265, 290-299): warcinfo,
@@ -232,6 +255,13 @@ def test_conversion_workflow_golden_ordering(spark, tmp_path):
         assert r["headers"]["WARC-Refers-To-Target-URI"] == flv
         assert r["headers"]["WARC-Refers-To-Target-Date"] == recs[1]["headers"]["WARC-Date"]
         assert "WARC-JSON-Metadata" in r["headers"]
+    # byte fidelity vs the reference's json.dumps(metadata) (warcit.py:576):
+    # ': ' separator, None keys omitted; the payload is the output file
+    png = recs[2]
+    assert png["headers"]["WARC-JSON-Metadata"] == json.dumps(
+        {"name": "png", "ext": "png", "mime": "image/png"}
+    )
+    assert png["payload"] == (outdir / "v.png").read_bytes()
     # embeds record carries no refer-back headers (reference sets none)
     assert "WARC-Refers-To-Target-URI" not in recs[5]["headers"]
     # embeds timestamp came from the transclusion entry

@@ -11,20 +11,16 @@ output vocabulary (``ascii`` / ``UTF-8`` / ``WINDOWS-1252``):
 2. valid UTF-8 -> ``UTF-8``;
 3. anything else -> ``WINDOWS-1252`` (every byte string decodes).
 
-The *rules* layered on top (functions/mime.charset_suffix_expr) are the
-reference contract; the detector is a pluggable batch function — swap in
-cchardet per Arrow batch on a real deployment without touching the plan.
+This module is the detector only.  The *rules* layered on top
+(functions/mime.charset_suffix_expr) are the reference contract, applied
+to text/* resources in plans/warcit_pipeline.files_to_warc_records; the
+detector is a pluggable batch function — cchardet or chardet run per
+Arrow batch when importable, without touching the plan.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import pandas as pd
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
-
-from warcit_spark.functions.mime import charset_suffix_expr
 
 
 def _real_detector():
@@ -74,33 +70,3 @@ def detect_charsets_batch(payloads: pd.Series) -> pd.Series:
             return "WINDOWS-1252"
 
     return payloads.map(one)
-
-
-def with_detected_charset(
-    df: DataFrame, payload_col: str = "content", out_col: str = "detected_charset"
-) -> DataFrame:
-    """Annotate rows with the detected charset (pandas UDF, Arrow batches)."""
-    udf = F.pandas_udf(detect_charsets_batch, "string")
-    return df.withColumn(out_col, udf(F.col(payload_col)))
-
-
-def content_type_with_charset(
-    df: DataFrame,
-    mime_col: str = "mime",
-    payload_col: str = "content",
-    mapfile_ct_col: str | None = None,
-) -> DataFrame:
-    """Full F5 pipeline: detect only where the rules could use the result
-    (text/* rows — column pruning keeps payloads of other rows unread),
-    then apply the suppression rules and build the final Content-Type."""
-    mapfile_ct = (
-        F.col(mapfile_ct_col) if mapfile_ct_col else F.lit(None).cast("string")
-    )
-    udf = F.pandas_udf(detect_charsets_batch, "string")
-    detected = F.when(
-        F.col(mime_col).startswith("text/"), udf(F.col(payload_col))
-    )
-    suffix = charset_suffix_expr(F.col(mime_col), mapfile_ct, detected)
-    return df.withColumn(
-        "content_type", F.concat(F.col(mime_col), suffix)
-    )

@@ -101,6 +101,10 @@ def minhash_lsh_dedup(
 
     rows-per-band = n_hashes / bands; the usual S-curve: with 32 hashes and
     8 bands (4 rows/band) the 0.8-Jaccard detection probability is ~0.97.
+
+    Precondition: ``id_col`` is unique.  The verify side joins candidate
+    ids back to every input row, so a duplicate id whose text is NULL
+    attaches a NULL shingle array and its pair drops silently.
     """
     assert n_hashes % bands == 0
     rows_per_band = n_hashes // bands
@@ -319,6 +323,10 @@ def ngram_jaccard_pairs(
     returned DataFrame carries a ``_dfcap_observation``
     (:class:`~pyspark.sql.Observation`) whose ``excluded_shingles`` metric
     is computed during the caller's action — recall loss is never silent.
+
+    Precondition: ``id_col`` is unique.  The verify sides join candidate
+    ids back to every input row, so a duplicate id whose text is NULL
+    attaches a NULL shingle array and its pair drops silently.
     """
     docs_raw = df.select(
         F.col(id_col).alias("id"),

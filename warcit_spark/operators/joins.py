@@ -1,19 +1,17 @@
-"""Lookup joins J1, J2 and J5 (SURVEY.md §2.3) — broadcast joins with the
-reference's match semantics.
+"""Lookup join J1 (SURVEY.md §2.3): the mapfile suffix-match join
+(warcit/warcit.py:332-342).  Each file is probed against the mapfile rows
+by ``filename.endswith(row['file'])``; the FIRST row (mapfile order) wins
+for a file; a mapfile row matching a SECOND file is a hard failure
+(``sys.exit(1)`` in the reference).
 
-- J1 mapfile suffix-match join (warcit/warcit.py:332-342): probe each file
-  against mapfile rows by ``filename.endswith(row['file'])``; the FIRST row
-  (mapfile order) wins for a file; a mapfile row matching a SECOND file is a
-  hard job failure (``sys.exit(1)`` in the reference).
-- J2 conversions equi-join (converter.py:205-216): inner join on source
-  url, keep only ``success`` rows (unsuccessful are warn+skip).
-- J5 seen anti-join: drop candidates already in the seen set.
+Physical shape: one broadcast theta join over the distinct filenames (the
+mapfile side is small by construction — the reference materializes it
+fully in RAM, warcit/warcit.py:303-304), checked for row uniqueness
+before it returns, then broadcast-joined back to the files.
 
-Physical shapes: J1 is one broadcast theta join over the distinct
-filenames (the mapfile side is small by construction — the reference
-materializes it fully in RAM, warcit/warcit.py:303-304), checked for
-row uniqueness before it returns, then broadcast-joined back to the
-files.  J2 is a broadcast hash equi-join.
+The other SURVEY.md §2.3 joins live with their one caller: J2 (the
+conversions equi-join) in plans/warcit_pipeline.files_to_warc_records, J5
+(the seen anti-join) in plans/crawl.crawl_round.
 """
 
 from __future__ import annotations
@@ -108,17 +106,3 @@ def _eager_uniqueness_check(out: DataFrame) -> None:
             "mapfile rows matched multiple files: "
             + ", ".join(f"{r['_mf_file']} (x{r['count']})" for r in dupes)
         )
-
-
-def conversions_join(records: DataFrame, conversions: DataFrame) -> DataFrame:
-    """J2: per source url, successful conversion results (broadcast inner
-    equi-join; ``success=false`` rows are skipped, converter.py:209-211)."""
-    conv = conversions.where(F.col("success"))
-    return records.join(
-        F.broadcast(conv.withColumnRenamed("source_url", "url")), on="url", how="inner"
-    )
-
-
-def seen_anti_join(candidates: DataFrame, seen: DataFrame, key: str = "url") -> DataFrame:
-    """J5: drop candidates already in the seen set (left_anti)."""
-    return candidates.join(seen.select(key), on=key, how="left_anti")

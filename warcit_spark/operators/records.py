@@ -1,10 +1,11 @@
 """Derived-record generators D1-D3 and the A2 reverse-index aggregation
 (SURVEY.md §2.4-2.5).
 
-- D1 index-revisit derivation lives in plans/crawl.py (derive_fetch_records).
-- D2 conversion fan-out (warcit/warcit.py:568-578): per successful
-  conversion of a written resource, a ``conversion`` record carrying
-  refer-back headers to the original.
+- D1 index-revisit derivation lives in plans/crawl.py (derive_fetch_records)
+  and plans/warcit_pipeline.py.
+- D2 conversion fan-out (warcit/warcit.py:568-578) is composed inline in
+  plans/warcit_pipeline.files_to_warc_records; this module supplies its
+  byte-exact ``WARC-JSON-Metadata`` serializer (:func:`json_metadata_batch`).
 - D3 + A2 transclusion metadata (warcit/warcit.py:580-618,
   converter.py:240-277): per transclusion of a media url, a ``resource``
   record at ``urn:embeds:<contain_url>`` whose payload is the formats
@@ -68,37 +69,6 @@ def json_metadata_batch(md):
     return pd.Series(out, dtype="object")
 
 
-def conversion_records(resources: DataFrame, conversions: DataFrame) -> DataFrame:
-    """D2: one derived record per successful conversion of a resource.
-
-    ``resources`` needs (url, record_id, warc_date); output carries the
-    refer-back headers of warcit/warcit.py:569-576.
-    """
-    rec_type = (
-        F.col("rec_type") if "rec_type" in conversions.columns else F.lit(None)
-    )
-    seq = F.col("seq") if "seq" in conversions.columns else F.lit(0)
-    conv = conversions.where(F.col("success")).select(
-        F.col("source_url").alias("url"),
-        F.col("url").alias("conv_url"),
-        F.col("output").alias("conv_output"),
-        F.col("metadata").alias("conv_metadata"),
-        F.coalesce(rec_type, F.lit("conversion")).alias("_rec_type"),
-        seq.cast("int").alias("seq"),
-    )
-    joined = resources.join(F.broadcast(conv), on="url", how="inner")
-    return joined.select(
-        F.col("conv_url").alias("url"),
-        F.col("_rec_type").alias("record_type"),
-        F.col("record_id").alias("refers_to"),
-        F.col("url").alias("refers_to_target_uri"),
-        F.col("warc_date").alias("refers_to_target_date"),
-        pandas_udf(json_metadata_batch, "string")(F.col("conv_metadata")).alias("json_metadata"),
-        F.col("conv_output").alias("source_path"),
-        F.col("seq"),
-    )
-
-
 def _formats_json_batch(
     contain_url: pd.Series,
     contain_ts: pd.Series,
@@ -157,19 +127,16 @@ def transclusion_metadata_records(
 ) -> DataFrame:
     """D3+A2: one ``metadata`` record per transclusion entry.
 
-    ``transclusions``: (media_url, contain_url, contain_ts, selector) [+
-    optionally a resolved ``orig_mime`` column].  ``conversions`` feeds the
+    ``transclusions``: TRANSCLUSIONS_SCHEMA rows (media_url, contain_url,
+    contain_ts, selector, seq, metadata_file) [+ optionally a resolved
+    ``orig_mime`` column].  ``conversions`` feeds the
     formats list (A3 grouping, converter.py:257-267).
     """
     tr = transclusions.where(F.col("contain_url").isNotNull())
 
     if conversions is not None:
-        conv_seq = (
-            F.col("seq") if "seq" in conversions.columns else F.lit(0)
-        ).cast("int")
         conv_lists = (
-            conversions.withColumn("seq", conv_seq)
-            .where(F.col("success"))
+            conversions.where(F.col("success"))
             .groupBy(F.col("source_url").alias("media_url"))
             .agg(
                 # collect_list order is nondeterministic after shuffles, and
@@ -205,11 +172,6 @@ def transclusion_metadata_records(
     )
     # pandas_udf is built lazily (needs an active session at wrap time)
     _formats_json_udf = pandas_udf(_formats_json_batch, "string")
-    metadata_file = (
-        F.col("metadata_file")
-        if "metadata_file" in tr.columns
-        else F.lit(None).cast("string")
-    )
     payload = _formats_json_udf(
         F.col("contain_url"),
         F.col("contain_ts"),
@@ -217,9 +179,8 @@ def transclusion_metadata_records(
         F.col("media_url"),
         orig_mime,
         F.col("_formats"),
-        metadata_file,
+        F.col("metadata_file"),
     )
-    seq = F.col("seq") if "seq" in tr.columns else F.lit(0)
     # WARC-Type is 'resource' like the reference's embeds record
     # (warcit.py:601 create_warc_record(..., 'resource')); 'metadata' only
     # appears in the reference's CSV logfile.
@@ -231,7 +192,7 @@ def transclusion_metadata_records(
         payload.alias("payload_json"),
         F.col("media_url").alias("refers_to_target_uri"),
         F.col("media_url"),
-        seq.cast("int").alias("seq"),
+        F.col("seq").cast("int").alias("seq"),
     )
 
 

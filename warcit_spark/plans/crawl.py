@@ -43,7 +43,6 @@ from warcit_spark.operators.robots import apply_robots
 from warcit_spark.plans.politeness import politeness_prerank, politeness_rank
 from warcit_spark.plans.state import CrawlState
 
-FRONTIER_SCHEMA = "url string, host string, priority double, round_added int"
 DEFAULT_INDEX_SUFFIXES = ("/index.html", "/index.htm")
 
 

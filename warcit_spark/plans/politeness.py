@@ -29,8 +29,7 @@ stages over two frames:
    never sorted in one task.
 
 Deferred rows = stage-1 losers UNION stage-2 overflow — set algebra on the
-two frames, no anti-join.  :func:`politeness_annotate` wraps both into one
-grain-preserving frame for small-scale callers and tests.
+two frames, no anti-join.
 """
 
 from __future__ import annotations
@@ -97,42 +96,3 @@ def politeness_rank(
         selected.alias("selected"),
         F.when(selected, F.col("_rk")).alias("rank_in_host"),
     )
-
-
-def politeness_annotate(
-    frontier: DataFrame,
-    host_budget: int,
-    n_salt: int = 16,
-    allowed_col: str | None = None,
-    **kw,
-) -> DataFrame:
-    """One grain-preserving frame: every row flagged selected/rank.
-
-    Convenience wrapper (stage-1 window evaluates once per output branch);
-    the crawl plan uses the two frames directly and persists stage 1.
-    """
-    pre = politeness_prerank(
-        frontier, host_budget, n_salt, allowed_col=allowed_col, **kw
-    )
-    ranked = politeness_rank(pre.where(F.col("_pre_ok")), host_budget, **kw)
-    losers = pre.where(~F.col("_pre_ok")).select(
-        *pre.columns,
-        F.lit(False).alias("selected"),
-        F.lit(None).cast("int").alias("rank_in_host"),
-    )
-    return ranked.unionByName(losers).drop("_pre_ok")
-
-
-def politeness_select(
-    frontier: DataFrame,
-    host_budget: int,
-    n_salt: int = 16,
-    **kw,
-) -> DataFrame:
-    """Selected rows only (rank_in_host <= budget)."""
-    pre = politeness_prerank(frontier, host_budget, n_salt, **kw)
-    ranked = politeness_rank(
-        pre.where(F.col("_pre_ok")), host_budget,
-        **{k: v for k, v in kw.items() if k != "allowed_col"},
-    )
-    return ranked.where(F.col("selected")).drop("selected", "_pre_ok")

@@ -22,11 +22,11 @@ its revisit) — SURVEY.md §7.3 #1.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from warcit_spark.functions.mime import (
-    DEFAULT_MIME,
+    charset_suffix_expr,
     guess_mime_expr,
     mime_override_expr,
     mimetypes_table,
@@ -38,29 +38,25 @@ from warcit_spark.functions.mime import (
 )
 from warcit_spark.functions.timestamps import iso8601z_expr, normalize_ts14_expr
 from warcit_spark.operators.charset import detect_charsets_batch
-from warcit_spark.functions.mime import charset_suffix_expr
 from warcit_spark.operators.filters import apply_include_exclude
 from warcit_spark.operators.joins import mapfile_suffix_join
 from warcit_spark.operators.records import (
     json_metadata_batch,
     transclusion_metadata_records,
 )
-from warcit_spark.sinks.warc import write_warc_files
+from warcit_spark.sinks.warc import record_id_for, write_warc_files
 from warcit_spark.sources.binary_files import scan_input, union_scans
 
 DEFAULT_INDEX_FILES = ("index.html", "index.htm")
 
 
-def _record_ids_batch(record_type, url, warc_date):
+def _resource_ids_batch(url, warc_date):
+    """The WARC-Record-ID the sink writes for a resource record — what a
+    conversion record's WARC-Refers-To names."""
     import pandas as pd
 
-    from warcit_spark.sinks.warc import record_id_for
-
     return pd.Series(
-        [
-            record_id_for(t, u, d) if u is not None else None
-            for t, u, d in zip(record_type, url, warc_date)
-        ]
+        [record_id_for("resource", u, d) for u, d in zip(url, warc_date)]
     )
 
 
@@ -95,7 +91,7 @@ def _read_fileinfo_batch(paths):
 _REC_COLS = [
     "url", "record_type", "warc_date", "content_type", "payload",
     "payload_digest", "source_uri", "size", "refers_to_target_uri",
-    "refers_to_target_date", "record_id", "refers_to", "json_metadata",
+    "refers_to_target_date", "refers_to", "json_metadata",
     "_sort_uri", "_class", "_seq",
 ]
 
@@ -119,7 +115,8 @@ def files_to_warc_records(
 ) -> DataFrame:
     """One DataFrame of WARC records: (url, record_type, warc_date,
     content_type, payload, payload_digest, source_uri, size, refer-back
-    headers, record_id) plus hidden (_sort_uri, _class, _seq) ordering keys.
+    headers, json_metadata) plus hidden (_sort_uri, _class, _seq) ordering
+    keys.  Record ids are the sink's to assign (write_warc_files).
 
     ``conversions``/``transclusions`` (sidecar DataFrames, sources/
     sidecars.py) compose the reference's --conversions/--transclusions
@@ -163,37 +160,47 @@ def files_to_warc_records(
             .withColumn("map_ct", F.lit(None).cast("string"))
         )
 
-    # F3 — mime precedence: mapfile ≻ overrides ≻ method guess ≻ default.
-    # The method slot is 'filename' (extension table) or 'magic' (content
-    # sniff) — the sniff *replaces* the extension guess, like _guess_type.
+    null_s = F.lit(None).cast("string")
     mime_dim = spark.createDataFrame(mimetypes_table(), "_ext string, _mime string")
-    files = (
-        files.withColumn("_ext", url_extension_expr(F.col("url")))
-        .join(F.broadcast(mime_dim), on="_ext", how="left")
-        .drop("_ext")
-    )
-    override = (
-        mime_override_expr(F.col("url"), mime_overrides)
-        if mime_overrides
-        else F.lit(None).cast("string")
-    )
-    if tika_results is not None:
-        # external tika metadata joins in by url (broadcast — tika output
-        # is a sidecar, small relative to the corpus); unmatched files keep
-        # a NULL struct, which every tika expr maps to "no answer"
-        files = files.join(
-            F.broadcast(tika_results.select("url", "tika_results")),
-            on="url",
-            how="left",
+
+    def with_mime(
+        df: DataFrame, url_col: str, content: Column, mapfile_ct: Column
+    ) -> DataFrame:
+        """F3 — adds ``mime``: mapfile ≻ overrides ≻ method guess ≻
+        default.  The method slot is 'filename' (extension table),
+        'magic' (content sniff) or 'tika' — the guess *replaces* the
+        extension lookup, like _guess_type.  Resources and conversion
+        outputs both resolve here, each keyed by its own url."""
+        url = F.col(url_col)
+        df = (
+            df.withColumn("_ext", url_extension_expr(url))
+            .join(F.broadcast(mime_dim), on="_ext", how="left")
+            .drop("_ext")
         )
-    if mime_method == "magic":
-        guessed = sniff_mime_expr(F.col("content"))
-    elif mime_method == "tika":
-        guessed = tika_mime_expr(F.col("tika_results"))
-    else:
-        guessed = F.col("_mime")
-    mime = guess_mime_expr(F.col("map_ct"), override, guessed, no_xhtml=no_xhtml)
-    files = files.withColumn("mime", mime).drop("_mime")
+        if tika_results is not None:
+            # external tika metadata joins in by url (broadcast — tika output
+            # is a sidecar, small relative to the corpus); unmatched rows keep
+            # a NULL struct, which every tika expr maps to "no answer"
+            df = df.join(
+                F.broadcast(
+                    tika_results.select(F.col("url").alias(url_col), "tika_results")
+                ),
+                on=url_col,
+                how="left",
+            )
+        if mime_method == "magic":
+            guessed = sniff_mime_expr(content)
+        elif mime_method == "tika":
+            guessed = tika_mime_expr(F.col("tika_results"))
+        else:
+            guessed = F.col("_mime")
+        override = (
+            mime_override_expr(url, mime_overrides) if mime_overrides else null_s
+        )
+        mime = guess_mime_expr(mapfile_ct, override, guessed, no_xhtml=no_xhtml)
+        return df.withColumn("mime", mime).drop("_mime")
+
+    files = with_mime(files, "url", F.col("content"), F.col("map_ct"))
 
     # F5 — charset: detect only for text/* when enabled; suppression rules
     if charset == "auto":
@@ -227,14 +234,12 @@ def files_to_warc_records(
     fixed = (
         normalize_ts14_expr(F.lit(fixed_dt))  # pad-down like _set_fixed_dt
         if fixed_dt is not None
-        else F.lit(None).cast("string")
+        else null_s
     )
     warc_date = F.coalesce(
         normalize_ts14_expr(F.col("map_timestamp")), fixed,
         iso8601z_expr(F.col("warc_ts")),
     )
-    rid_udf = F.pandas_udf(_record_ids_batch, "string")
-    null_s = F.lit(None).cast("string")
     resources = files.select(
         url.alias("url"),
         F.lit("resource").alias("record_type"),
@@ -248,8 +253,6 @@ def files_to_warc_records(
         null_s.alias("refers_to_target_date"),
         null_s.alias("refers_to"),
         null_s.alias("json_metadata"),
-    ).withColumn(
-        "record_id", rid_udf(F.col("record_type"), F.col("url"), F.col("warc_date"))
     ).withColumn("_sort_uri", F.col("source_uri")) \
      .withColumn("_class", F.lit(0)).withColumn("_seq", F.lit(0))
 
@@ -273,7 +276,6 @@ def files_to_warc_records(
         F.col("warc_date").alias("refers_to_target_date"),
         null_s.alias("refers_to"),
         null_s.alias("json_metadata"),
-        null_s.alias("record_id"),
         F.col("_sort_uri"),
         F.lit(1).alias("_class"),
         F.lit(0).alias("_seq"),
@@ -288,24 +290,16 @@ def files_to_warc_records(
     if conversions is not None:
         src = resources.select(
             F.col("url").alias("source_url"),
-            F.col("record_id").alias("_src_rid"),
             F.col("warc_date").alias("_src_date"),
             F.col("_sort_uri").alias("_src_sort"),
         )
-        rec_type = (
-            F.col("rec_type") if "rec_type" in conversions.columns
-            else F.lit(None).cast("string")
-        )
-        seq = (
-            F.col("seq") if "seq" in conversions.columns else F.lit(0)
-        ).cast("int")
         conv = conversions.where(F.col("success")).select(
             "source_url",
             F.col("url").alias("_conv_url"),
             F.col("output").alias("_output"),
             F.col("metadata").alias("_md"),
-            F.coalesce(rec_type, F.lit("conversion")).alias("_rec_type"),
-            seq.alias("_cseq"),
+            F.coalesce(F.col("rec_type"), F.lit("conversion")).alias("_rec_type"),
+            F.col("seq").cast("int").alias("_cseq"),
         )
         fileinfo_udf = F.pandas_udf(
             _read_fileinfo_batch, "content binary, mtime_iso string"
@@ -316,49 +310,24 @@ def files_to_warc_records(
             # unreadable output file -> the record is skipped, like the
             # reference skipping a FileInfo it cannot stat/open
             .where(F.col("_fi.content").isNotNull())
-            .withColumn("_ext", url_extension_expr(F.col("_conv_url")))
-            .join(F.broadcast(mime_dim), on="_ext", how="left")
         )
-        conv_override = (
-            mime_override_expr(F.col("_conv_url"), mime_overrides)
-            if mime_overrides
-            else null_s
-        )
-        if mime_method == "magic":
-            conv_guessed = sniff_mime_expr(F.col("_fi.content"))
-        elif mime_method == "tika":
-            # converted outputs get their own tika row, keyed by the
-            # conversion url (the reference runs _guess_type over the
-            # converted FileInfo, which carries its own tika_results)
-            cj = cj.join(
-                F.broadcast(
-                    tika_results.select(
-                        F.col("url").alias("_conv_url"),
-                        F.col("tika_results").alias("_conv_tika"),
-                    )
-                ),
-                on="_conv_url",
-                how="left",
-            )
-            conv_guessed = tika_mime_expr(F.col("_conv_tika"))
-        else:
-            conv_guessed = F.col("_mime")
-        conv_mime = guess_mime_expr(null_s, conv_override, conv_guessed,
-                                    no_xhtml=no_xhtml)
+        # the reference runs _guess_type over the converted FileInfo, so
+        # an output gets its own guess from its own url (and tika row)
+        cj = with_mime(cj, "_conv_url", F.col("_fi.content"), null_s)
         conv_date = F.coalesce(fixed, F.col("_fi.mtime_iso"))
+        rid_udf = F.pandas_udf(_resource_ids_batch, "string")
         conv_records = cj.select(
             F.col("_conv_url").alias("url"),
             F.col("_rec_type").alias("record_type"),
             conv_date.alias("warc_date"),
-            conv_mime.alias("content_type"),
+            F.col("mime").alias("content_type"),
             F.col("_fi.content").alias("payload"),
             F.sha1(F.col("_fi.content")).alias("payload_digest"),
             F.concat(F.lit("file://"), F.col("_output")).alias("source_uri"),
             F.coalesce(F.length(F.col("_fi.content")), F.lit(0)).cast("long").alias("size"),
             F.col("source_url").alias("refers_to_target_uri"),
             F.col("_src_date").alias("refers_to_target_date"),
-            null_s.alias("record_id"),
-            F.col("_src_rid").alias("refers_to"),
+            rid_udf(F.col("source_url"), F.col("_src_date")).alias("refers_to"),
             F.pandas_udf(json_metadata_batch, "string")(F.col("_md")).alias("json_metadata"),
             F.col("_src_sort").alias("_sort_uri"),
             F.lit(2).alias("_class"),
@@ -397,7 +366,6 @@ def files_to_warc_records(
             F.length(emb_payload).cast("long").alias("size"),
             null_s.alias("refers_to_target_uri"),
             null_s.alias("refers_to_target_date"),
-            null_s.alias("record_id"),
             null_s.alias("refers_to"),
             null_s.alias("json_metadata"),
             F.col("_media_sort").alias("_sort_uri"),
@@ -406,15 +374,8 @@ def files_to_warc_records(
         )
         out = out.unionByName(emb_records.select(*_REC_COLS))
 
-    # every record gets the sink's deterministic id plan-side, so derived
-    # records' refer-back ids and written ids always agree
-    out = out.withColumn(
-        "record_id",
-        F.coalesce(
-            F.col("record_id"),
-            rid_udf(F.col("record_type"), F.col("url"), F.col("warc_date")),
-        ),
-    )
+    # no record-id column: the sink assigns every WARC-Record-ID with
+    # sinks/warc.record_id_for, the function conversions' refers_to names
     return out
 
 

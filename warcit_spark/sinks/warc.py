@@ -43,7 +43,6 @@ def record_id_for(record_type: str, url: str, warc_date: str) -> str:
     rid = uuid.uuid5(_NAMESPACE, f"{record_type}:{url}:{warc_date}")
     return f"<urn:uuid:{rid}>"
 
-REQUIRED_COLS = ("url", "record_type", "warc_date", "content_type", "payload")
 
 _HEX40 = frozenset("0123456789abcdef")
 
@@ -89,11 +88,10 @@ def _warcinfo_bytes(
     if partition_id is not None:
         fields += f"partition: {partition_id}\r\n"
     fields = fields.encode()
-    rid = uuid.uuid5(_NAMESPACE, f"warcinfo:{filename}:{cmdline or ''}")
     return _record_bytes(
         "warcinfo",
         [
-            ("WARC-Record-ID", f"<urn:uuid:{rid}>"),
+            ("WARC-Record-ID", record_id_for("warcinfo", filename, cmdline or "")),
             ("WARC-Filename", filename),
             ("Content-Type", "application/warc-fields"),
         ],
@@ -113,10 +111,12 @@ def write_warc_files(
     """Write records to ``out_dir/part-<pid>.warc[.gz]``.
 
     ``records`` needs columns (url, record_type, warc_date, content_type,
-    payload binary) and optionally payload_digest / refers_to_target_uri.
-    Record-IDs are deterministic (uuid5 of type+url+date) so re-runs are
-    byte-identical — the engine's reproducible-output stance (SURVEY.md
-    §4.2 'deterministic output').
+    payload binary) and optionally payload_digest, refers_to,
+    refers_to_target_uri, refers_to_target_date and json_metadata; an
+    absent or NULL optional column writes no header.  The sink assigns
+    every WARC-Record-ID (:func:`record_id_for`, uuid5 of type+url+date)
+    so re-runs are byte-identical — the engine's reproducible-output
+    stance (SURVEY.md §4.2 'deterministic output').
 
     ``warcinfo_filename``: single-file fidelity mode — the warcinfo
     record names the FINAL file the caller will assemble (WARC-Filename,
@@ -137,12 +137,6 @@ def write_warc_files(
                     os.unlink(os.path.join(out_dir, name))
     os.makedirs(out_dir, exist_ok=True)
 
-    has_digest = "payload_digest" in records.columns
-    has_refers = "refers_to_target_uri" in records.columns
-    has_refers_date = "refers_to_target_date" in records.columns
-    has_record_id = "record_id" in records.columns
-    has_refers_to = "refers_to" in records.columns
-    has_json_meta = "json_metadata" in records.columns
     suffix = ".warc.gz" if gzip_records else ".warc"
     # append runs get a deterministic generation tag derived from the
     # directory state (not a random uuid — reproducible re-runs).  The tag
@@ -189,34 +183,30 @@ def write_warc_files(
                                 cmdline,
                             ))
                     payload = bytes(r.payload) if r.payload is not None else b""
-                    if has_record_id and getattr(r, "record_id", None):
-                        rid_header = r.record_id
-                    else:
-                        rid = uuid.uuid5(
-                            _NAMESPACE, f"{r.record_type}:{r.url}:{r.warc_date}"
-                        )
-                        rid_header = f"<urn:uuid:{rid}>"
                     headers = [
                         ("WARC-Target-URI", r.url),
                         ("WARC-Date", r.warc_date),
-                        ("WARC-Record-ID", rid_header),
+                        (
+                            "WARC-Record-ID",
+                            record_id_for(r.record_type, r.url, r.warc_date),
+                        ),
                         ("Content-Type", r.content_type),
                     ]
-                    if has_digest and getattr(r, "payload_digest", None):
+                    if getattr(r, "payload_digest", None):
                         headers.append(
                             ("WARC-Payload-Digest", _digest_header(r.payload_digest))
                         )
-                    if has_refers_to and getattr(r, "refers_to", None):
+                    if getattr(r, "refers_to", None):
                         headers.append(("WARC-Refers-To", r.refers_to))
-                    if has_refers and getattr(r, "refers_to_target_uri", None):
+                    if getattr(r, "refers_to_target_uri", None):
                         headers.append(
                             ("WARC-Refers-To-Target-URI", r.refers_to_target_uri)
                         )
-                    if has_refers_date and getattr(r, "refers_to_target_date", None):
+                    if getattr(r, "refers_to_target_date", None):
                         headers.append(
                             ("WARC-Refers-To-Target-Date", r.refers_to_target_date)
                         )
-                    if has_json_meta and getattr(r, "json_metadata", None):
+                    if getattr(r, "json_metadata", None):
                         headers.append(("WARC-JSON-Metadata", r.json_metadata))
                     emit(_record_bytes(r.record_type, headers, payload))
                     n += 1
@@ -229,8 +219,7 @@ def write_warc_files(
             {"path": [path], "n_records": [n], "bytes": [os.path.getsize(path)]}
         )
 
-    cols = [c for c in records.columns]
-    return records.select(*cols).mapInPandas(
+    return records.mapInPandas(
         fn, "path string, n_records long, bytes long"
     )
 

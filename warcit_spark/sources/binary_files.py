@@ -24,6 +24,23 @@ from pyspark.sql import functions as F
 from warcit_spark.functions.urls import synth_url_expr
 
 
+def _binary_reader(spark: SparkSession):
+    """A ``binaryFile`` reader over the raw local filesystem.
+
+    Hadoop's default ``file:`` filesystem is the checksum one, which builds
+    a ``.<name>.crc`` sibling path per file; for a name holding ``:`` (e.g.
+    ``a:b.html``) that path is not a valid URI and the scan fails.  The raw
+    filesystem reads the file itself.  Reader options reach only this
+    scan's Hadoop conf; the uncached instance keeps the session's shared
+    ``file:`` filesystem untouched.
+    """
+    return (
+        spark.read.format("binaryFile")
+        .option("fs.file.impl", "org.apache.hadoop.fs.RawLocalFileSystem")
+        .option("fs.file.impl.disable.cache", "true")
+    )
+
+
 def scan_files(
     spark: SparkSession, path: str, url_prefix: str, glob: str | None = None
 ) -> DataFrame:
@@ -32,9 +49,7 @@ def scan_files(
     Filters/projections layered on top push down to the scan
     (PushedFilters on path; content is lazily read per matched file).
     """
-    reader = (
-        spark.read.format("binaryFile").option("recursiveFileLookup", "true")
-    )
+    reader = _binary_reader(spark).option("recursiveFileLookup", "true")
     if glob:
         reader = reader.option("pathGlobFilter", glob)
     df = reader.load(path)
@@ -59,7 +74,7 @@ def scan_zip(
     """S3-S5: zip member scan; directory entries skipped, optional in-zip
     prefix stripped from URLs and pruned from the scan
     (/root/reference/warcit/base.py:53-61, 115-136)."""
-    raw = spark.read.format("binaryFile").load(zip_path)
+    raw = _binary_reader(spark).load(zip_path)
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
