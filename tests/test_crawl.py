@@ -10,6 +10,8 @@ seen layout (url-bucketed, merge-pinned anti-join) at a small bucket count.
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -226,6 +228,85 @@ def test_replay_after_crash_before_commit(
     spark.sql(f"DROP TABLE {state._seen_table_name()}")
     restarted = CrawlState(root, seen_buckets=SEEN_BUCKETS)
     assert _seen_rows(spark, restarted) == want
+
+
+def _shift_urls_in(rows):
+    # one url moved between partitions: the round total still balances
+    rows[0]["urls_in"] += 1
+    rows[1]["urls_in"] -= 1
+
+
+def _excess_new_urls(rows):
+    rows[0]["new_urls"] = rows[0]["links_found"] + 1
+
+
+@pytest.mark.parametrize("corrupt", [_shift_urls_in, _excess_new_urls])
+def test_lineage_law_violation_writes_nothing(
+    spark, fixture_dfs, tmp_path_factory, monkeypatch, corrupt
+):
+    """A lineage row that breaks a conservation law stops the round before
+    its first delta write: no round-0 delta and no commit marker."""
+    from warcit_spark.plans import crawl
+
+    real = crawl._lineage_single_pass
+
+    def corrupted(*args):
+        df = real(*args)
+        rows = [r.asDict() for r in df.orderBy("partition_id").collect()]
+        corrupt(rows)
+        return spark.createDataFrame(rows, df.schema)
+
+    monkeypatch.setattr(crawl, "_lineage_single_pass", corrupted)
+    pages, seeds, robots = fixture_dfs
+    state = CrawlState(
+        str(tmp_path_factory.mktemp("crawl_law")), seen_buckets=SEEN_BUCKETS
+    )
+    with pytest.raises(RuntimeError, match="lineage law violated"):
+        run_crawl(spark, state, pages, seeds, robots, CFG)
+    assert state.committed_round() == -1
+    assert not os.path.exists(state._marker_path(0))
+    for table in ("fetched", "lineage"):
+        assert not os.path.exists(state.delta_path(table, 0))
+    assert not os.path.exists(state.delta_path("frontier", 1))
+    assert not os.path.exists(
+        os.path.join(state._seen_location(), "round_seen=0")
+    )
+
+
+def test_deferred_seen_refresh_rejected(spark, tmp_path):
+    """The seen append always refreshes the catalog; ``refresh`` survives
+    only as a signature that rejects False."""
+    state = CrawlState(str(tmp_path), seen_buckets=SEEN_BUCKETS)
+    with pytest.raises(ValueError, match="refresh=False"):
+        state.write_delta(spark.range(1), "seen", 0, refresh=False)
+    assert not os.path.exists(state._seen_location())
+
+
+def test_crawl_round_runs_on_callers_thread(
+    spark, fixture_dfs, tmp_path_factory
+):
+    """Every Spark job of a round inherits the caller's job group, so no
+    round job runs from a thread outside it (a thread pool would leave its
+    jobs with no group).  Two rounds: the second scans the seen table."""
+    pages, seeds, robots = fixture_dfs
+    state = CrawlState(
+        str(tmp_path_factory.mktemp("crawl_thread")), seen_buckets=SEEN_BUCKETS
+    )
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("crawl-thread-test", "crawl-thread-test")
+    try:
+        run_crawl(
+            spark, state, pages, seeds, robots,
+            CrawlConfig(**{**CFG.__dict__, "max_rounds": 2}),
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert state.committed_round() == 1
+    assert tracker.getJobIdsForGroup("crawl-thread-test")
+    assert set(tracker.getJobIdsForGroup(None)) - ungrouped == set()
 
 
 def test_bucketed_seen_parity_and_plan(spark, engine_result):

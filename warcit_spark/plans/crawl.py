@@ -14,8 +14,10 @@ One round r (SURVEY.md §3.1 restated for the new engine):
                -> anti-join vs (seen delta UNION deferred), then a
                   merge-pinned anti-join vs the url-bucketed seen table (J5)
                -> frontier_{r+1} = deferred UNION new
-    writes: seen delta, fetched delta, frontier_{r+1}, lineage; then the
-    atomic round-commit marker (plans/state.py).
+    lineage: one action, its conservation laws checked before any write;
+    writes, in order on the caller's thread: fetched delta, frontier_{r+1},
+    lineage, seen delta; then the atomic round-commit marker
+    (plans/state.py).
 
 Crawl-order contract (SURVEY.md §7.3 #1): the engine *defines* the total
 order as (round, host ASC, rank_in_host) with rank ordered by (priority
@@ -213,6 +215,20 @@ def _lineage_single_pass(
     )
 
 
+def _check_lineage_laws(rows: list) -> None:
+    """Raise on any lineage partition row that breaks a conservation law:
+    every frontier url is denied, emitted or deferred, and a partition
+    cannot gain more new urls than it found links."""
+    bad = [
+        r.asDict()
+        for r in rows
+        if r["urls_in"] != r["robots_denied"] + r["urls_emitted"] + r["deferred"]
+        or r["new_urls"] > r["links_found"]
+    ]
+    if bad:
+        raise RuntimeError(f"lineage law violated: {bad}")
+
+
 def crawl_round(
     spark: SparkSession,
     state: CrawlState,
@@ -407,64 +423,31 @@ def crawl_round(
         pre, ranked, candidates, new_urls, round_id, cfg.n_lineage_partitions
     )
 
-    # ---- writes + lineage action, OVERLAPPED (deltas first, marker last) ---
-    # Phase 1: the lineage collect runs CONCURRENTLY with the seen and
-    # fetched delta writes — three driver jobs whose heavy subtrees
-    # (fetch join, link extraction, dedup anti-joins) overlap instead of
-    # stacking the lineage action in front of the write IO (the r4 2->8
-    # scaling diagnosis: small rounds are stage-latency-bound at higher
-    # parallelism; the BlockManager's per-block compute lock shares the
-    # persisted intermediates across the racing jobs).
-    #
-    # The FRONTIER write deliberately waits for the lineage action: it is
-    # the only other consumer of new_urls, whose plan contains the
-    # bucketed-seen CATALOG TABLE scan, and two concurrent jobs racing to
-    # first-evaluate that cached subtree were observed to intermittently
-    # evaluate it EMPTY (an AQE/cache interaction; sequential evaluation
-    # in either order is always correct).  After lin_future.result() the
-    # new_urls cache is materialized, so the phase-2 frontier write is a
-    # pure cache read — still overlapped with the lineage delta write and
-    # any seen/fetched IO tail.  The bucketed-seen catalog refresh is
-    # ALSO deferred below the barrier: refreshTable invalidates every
-    # cached plan referencing the table, which would yank new_urls' cache
-    # out from under the in-flight jobs (state.py:_write_seen_bucketed).
-    from concurrent.futures import ThreadPoolExecutor
+    # ---- lineage action, law check, then writes in order (marker last) ---
+    lin_rows = lineage.collect()
+    _check_lineage_laws(lin_rows)
 
-    with ThreadPoolExecutor(max_workers=4) as pool:
-        lin_future = pool.submit(lineage.collect)
-        futures = [
-            pool.submit(
-                state.write_delta, seen_delta, "seen", round_id, refresh=False
-            ),
-            pool.submit(state.write_delta, records, "fetched", round_id),
-        ]
-        lin_rows = lin_future.result()
+    def _sum(col: str) -> int:
+        return int(sum(r[col] for r in lin_rows))
 
-        def _sum(col: str) -> int:
-            return int(sum(r[col] for r in lin_rows))
-
-        n_links, n_new = _sum("links_found"), _sum("new_urls")
-        summary = {
-            "urls_in": _sum("urls_in"),
-            "robots_denied": _sum("robots_denied"),
-            "urls_emitted": _sum("urls_emitted"),
-            "links_found": n_links,
-            "new_urls": n_new,
-            "dupes_dropped": n_links - n_new,
-            "frontier_next": _sum("deferred") + n_new,
-        }
-        lineage_out = spark.createDataFrame(lin_rows, lineage.schema).withColumn(
-            "dupes_dropped", F.lit(n_links - n_new).cast("long")
-        )
-        futures += [
-            pool.submit(
-                state.write_delta, next_frontier, "frontier", round_id + 1
-            ),
-            pool.submit(state.write_delta, lineage_out, "lineage", round_id),
-        ]
-        for f in futures:
-            f.result()  # re-raise any write failure before committing
-    state.refresh_seen(spark)  # publish the deferred bucketed-seen append
+    n_links, n_new = _sum("links_found"), _sum("new_urls")
+    summary = {
+        "urls_in": _sum("urls_in"),
+        "robots_denied": _sum("robots_denied"),
+        "urls_emitted": _sum("urls_emitted"),
+        "links_found": n_links,
+        "new_urls": n_new,
+        "dupes_dropped": n_links - n_new,
+        "frontier_next": _sum("deferred") + n_new,
+    }
+    lineage_out = spark.createDataFrame(lin_rows, lineage.schema).withColumn(
+        "dupes_dropped", F.lit(n_links - n_new).cast("long")
+    )
+    state.write_delta(records, "fetched", round_id)
+    state.write_delta(next_frontier, "frontier", round_id + 1)
+    state.write_delta(lineage_out, "lineage", round_id)
+    # seen last: its catalog refresh drops new_urls' cache (its plan scans seen)
+    state.write_delta(seen_delta, "seen", round_id)
     state.commit_round(round_id, summary)
 
     for df in (frontier, pre, ranked, fetched, candidates, new_urls):

@@ -121,26 +121,15 @@ class CrawlState:
             spark.catalog.recoverPartitions(name)
         return name
 
-    def _write_seen_bucketed(
-        self, df: DataFrame, refresh: bool = True
-    ) -> None:
+    def _write_seen_bucketed(self, df: DataFrame) -> None:
         """Append one round's seen delta, bucketed by url, into its
-        ``round_seen=<k>`` partition.
+        ``round_seen=<k>`` partition, then refresh the catalog table.
 
         Reads filter ``round_seen <= committed`` and :meth:`drop_uncommitted`
         deletes partitions newer than the marker, so a crashed append is
-        invisible before the replay and gone after it.
-
-        ``refresh=False`` defers the catalog refresh to
-        :meth:`refresh_seen` — REQUIRED when other jobs whose plans
-        reference the seen table run concurrently with this append:
-        ``refreshTable`` invalidates every cached plan containing the
-        table (Spark's recacheByPlan), and an in-flight job whose
-        InMemoryTableScan gets invalidated under it can silently lose the
-        cached subtree's rows (observed: new_urls evaluating empty in the
-        overlapped round writes).  With the refresh deferred, every
-        in-round job keeps the ROUND-START table snapshot — which is also
-        the correct read semantics for the round.
+        invisible before the replay and gone after it.  The refresh
+        invalidates every cached plan that scans the table, so a round
+        appends seen after its other writes have consumed those caches.
         """
         spark = df.sparkSession
         name = self._ensure_seen_table(spark)
@@ -153,13 +142,7 @@ class CrawlState:
             partition_col="round_seen",
             compression=STATE_CODEC,
         )
-        if refresh:
-            spark.catalog.refreshTable(name)
-
-    def refresh_seen(self, spark: SparkSession) -> None:
-        """Publish a deferred seen append to this session's catalog."""
-        if spark.catalog.tableExists(self._seen_table_name()):
-            spark.catalog.refreshTable(self._seen_table_name())
+        spark.catalog.refreshTable(name)
 
     def write_delta(
         self, df: DataFrame, table: str, round_id: int, refresh: bool = True
@@ -170,11 +153,15 @@ class CrawlState:
         The ``round`` column, if present, is carried by the partition
         directory name (``round=<k>``) and re-inferred at read time, so it
         is stripped from the physical files.  Seen rows carry their own
-        ``round_seen``; ``refresh`` is forwarded to the seen append (see
-        :meth:`_write_seen_bucketed`).
+        ``round_seen``, and the seen append always refreshes the catalog
+        (see :meth:`_write_seen_bucketed`).  ``refresh`` is kept only
+        because existing callers pass ``refresh=True``, so False is
+        rejected.
         """
+        if not refresh:
+            raise ValueError("refresh=False is not supported")
         if table == "seen":
-            self._write_seen_bucketed(df, refresh=refresh)
+            self._write_seen_bucketed(df)
             return
         if "round" in df.columns:
             df = df.drop("round")
