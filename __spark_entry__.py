@@ -478,17 +478,20 @@ def w1_politeness_topk(spark, sf_dir):
     # in-row array sort + slice(3): same shuffle bytes, but the big
     # per-partition Sort + WindowExec pass becomes tiny per-user array
     # sorts inside one HashAggregate (guide §2.4: share one exchange).
-    # Ordering equivalence: struct(-value, event_id) ascending == (value
-    # desc, event_id asc) for the non-negative fixture values; event_id is
-    # unique, so the total order (and thus row_number) is deterministic.
+    # Ordering equivalence: the ascending struct below is the oracle's
+    # ORDER BY value DESC, event_id ASC in DuckDB's orderings, which put
+    # a NULL value last and NaN above every number (so first); -value
+    # orders negative values too.  event_id is unique, so the total order
+    # (and thus row_number) is deterministic.
     e = _t(spark, sf_dir, "events").select("user_id", "event_id", "value")
-    top3 = F.slice(
-        F.array_sort(
-            F.collect_list(F.struct((-F.col("value")).alias("nv"), "event_id"))
-        ),
-        1,
-        3,
+    value = F.col("value")
+    key = F.struct(
+        value.isNull().alias("is_null"),
+        (~F.isnan(value)).alias("not_nan"),
+        (-value).alias("nv"),
+        "event_id",
     )
+    top3 = F.slice(F.array_sort(F.collect_list(key)), 1, 3)
     # no output orderBy: order-insensitive gate (guide §2.4)
     return (
         e.groupBy("user_id")

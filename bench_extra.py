@@ -12,7 +12,10 @@ Usage:
 
 With ``--plans before`` it writes plans/r06/<query>_before.txt for each
 selected query (no timing) and prints a ``SMELL:`` line for each plan
-holding a cartesian product or a row-at-a-time Python UDF.  Otherwise it
+holding a cartesian product or a row-at-a-time Python UDF.  It also writes
+plans/r06/warcit_run_before.txt, the write plan of a default multi-part
+``warcit_run`` over a small seeded site, and flags it when more than one
+binaryFile scan reads file content.  Otherwise it
 prints one JSON line: query medians, or with ``--crawl`` each crawl
 benchmark's round walls and urls/sec (light corpus, CC-weight corpus, or
 both).
@@ -23,7 +26,9 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import re
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
@@ -34,6 +39,38 @@ SMELLS = [
     ("CartesianProduct", "cartesian product"),
     ("BatchEvalPython", "row-at-a-time Python UDF"),
 ]
+
+
+def explain(df) -> str:
+    jvm = df.sparkSession._jvm
+    return df._jdf.queryExecution().explainString(
+        jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    )
+
+
+def warcit_run_plan(spark) -> str:
+    """The formatted plan of the write a default multi-part ``warcit_run``
+    launches, over a 40-file seeded site (built, planned, not run)."""
+    from perfbench.inputs import make_site
+    from warcit_spark.plans.warcit_pipeline import files_to_warc_records, order_records
+    from warcit_spark.sinks.warc import write_warc_files
+
+    with tempfile.TemporaryDirectory(prefix="warcit-plan-") as tmp:
+        site = os.path.join(tmp, "site")
+        make_site(site, 1, 40, 1024)
+        records = files_to_warc_records(spark, site, "http://example.com/")
+        return explain(write_warc_files(
+            order_records(spark, records), os.path.join(tmp, "out")
+        ))
+
+
+def content_scans(plan: str) -> int:
+    """binaryFile scans in a formatted plan that read the file content."""
+    return sum(
+        re.match(r"\(\d+\) Scan binaryFile", block.lstrip()) is not None
+        and "content:binary" in block
+        for block in plan.split("\n\n")
+    )
 
 
 def crawl(spark, which: str) -> dict:
@@ -77,11 +114,8 @@ def main() -> None:
     if args.plans:
         outdir = os.path.join(os.path.dirname(os.path.abspath(__file__)), "plans", "r06")
         os.makedirs(outdir, exist_ok=True)
-        for name in names:
-            df = qs[name](spark, args.sf_dir)
-            plan = df._jdf.queryExecution().explainString(
-                spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-            )
+
+        def dump(name: str, plan: str) -> None:
             path = os.path.join(outdir, f"{name}_{args.plans}.txt")
             with open(path, "w") as f:
                 f.write(plan)
@@ -89,6 +123,12 @@ def main() -> None:
             for marker, desc in SMELLS:
                 if marker in plan:
                     print(f"SMELL: {name}: {desc}")
+            if content_scans(plan) > 1:
+                print(f"SMELL: {name}: {content_scans(plan)} binaryFile scans read content")
+
+        for name in names:
+            dump(name, explain(qs[name](spark, args.sf_dir)))
+        dump("warcit_run", warcit_run_plan(spark))
         spark.stop()
         return
 

@@ -131,6 +131,8 @@ def test_cli_log_csv(spark, site, in_tmp_cwd, tmp_path):
     ]
     assert len(rows) == EXPECTED_RECORDS
     assert (rows["Record-Type"] == "revisit").sum() == 2
+    # the file column names the source file on disk, not a file: URI
+    assert all(os.path.isfile(f) for f in rows["file"]), list(rows["file"])
 
 
 def test_cli_tika_unavailable_exits_one(spark, site, in_tmp_cwd, caplog):

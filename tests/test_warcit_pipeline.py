@@ -95,9 +95,8 @@ def test_mapfile_overrides_url_date_type(spark, site):
 
 
 def test_full_run_multipart_with_clean_mapfile(spark, site, tmp_path):
-    """A CLEAN unique-suffix mapfile on the default multi-part path
-    (repartitionByRange, whose range-sampling pass runs the records
-    subtree twice) must NOT raise."""
+    """A CLEAN unique-suffix mapfile on the default multi-part path must
+    NOT raise."""
     mapfile = spark.createDataFrame(
         [("sub/page.html", "http://mapped.test/p", "2011-02", "application/x-map")],
         ["file", "URL", "timestamp", "Content-Type"],
@@ -389,6 +388,19 @@ def test_mime_and_charset_method_tika(spark, tmp_path):
         files_to_warc_records(spark, str(site), u, mime_method="tika")
 
 
+def _record_listing(paths):
+    """(WARC-Type, WARC-Target-URI) of every non-warcinfo record, reading
+    the part files in name order."""
+    out = []
+    for p in sorted(paths):
+        for r in read_warc_records(p):
+            if r["headers"]["WARC-Type"] != "warcinfo":
+                out.append(
+                    (r["headers"]["WARC-Type"], r["headers"].get("WARC-Target-URI"))
+                )
+    return out
+
+
 def test_multipart_default_is_globally_ordered(spark, site, tmp_path):
     """Default multi-part output: part N holds a contiguous slice of the
     total order (range partitioning), so concatenating parts in filename
@@ -402,22 +414,77 @@ def test_multipart_default_is_globally_ordered(spark, site, tmp_path):
     m1 = warcit_run(spark, site, PREFIX, multi, charset=None, num_parts=4).collect()
     m2 = warcit_run(spark, site, PREFIX, multi2, charset=None, num_parts=4).collect()
 
-    def listing(paths):
-        out = []
-        for p in sorted(paths):
-            for r in read_warc_records(p):
-                if r["headers"]["WARC-Type"] != "warcinfo":
-                    out.append(
-                        (r["headers"]["WARC-Type"],
-                         r["headers"].get("WARC-Target-URI"))
-                    )
-        return out
-
     import glob
 
-    single = listing(glob.glob(f"{one}/part-*"))
-    parts1 = listing([r.path for r in m1])
-    parts2 = listing([r.path for r in m2])
+    single = _record_listing(glob.glob(f"{one}/part-*"))
+    parts1 = _record_listing([r.path for r in m1])
+    parts2 = _record_listing([r.path for r in m2])
     assert parts1 == single  # same global order across part files
     assert parts1 == parts2  # deterministic across runs
     assert len(m1) > 1  # actually split
+
+
+def test_default_run_reads_content_in_one_stage(spark, site, tmp_path):
+    """A default multi-part run is 3 Spark jobs: the extension table's
+    broadcast, the one stage that reads the content (and shuffles it),
+    and the write.  No range sample re-reads the records, and the
+    returned manifest is a local relation: collecting it runs no job."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    try:
+        sc.setJobGroup("warcit-run-once", "warcit_run")
+        manifest = warcit_run(spark, site, PREFIX, str(tmp_path / "out"), num_parts=4)
+        run_jobs = len(tracker.getJobIdsForGroup("warcit-run-once"))
+        sc.setJobGroup("warcit-run-once-collect", "manifest collect")
+        rows = manifest.collect()
+        collect_jobs = len(tracker.getJobIdsForGroup("warcit-run-once-collect"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sum(r.n_records for r in rows) == 10
+    assert run_jobs == 3
+    assert collect_jobs == 0
+
+
+def test_multipart_bounds_from_listing_fill_every_part(spark, tmp_path):
+    """The range bounds come from the file listing, whose URIs are encoded
+    (file:///a%20b) where the sort key holds the Hadoop path (file:/a b);
+    keyed right, 48 files over 4 parts give 4 parts of 12 records."""
+    d = tmp_path / "wide_site"
+    for i in range(48):
+        p = d / f"d{i % 5}" / f"page {i:02d}#x.html"
+        p.parent.mkdir(parents=True, exist_ok=True)
+        p.write_text(f"<html><body>page {i}</body></html>")
+    manifest = warcit_run(
+        spark, str(d), PREFIX, str(tmp_path / "out"), charset=None, num_parts=4
+    ).collect()
+    assert sorted(r.n_records for r in manifest) == [12, 12, 12, 12]
+    one = warcit_run(
+        spark, str(d), PREFIX, str(tmp_path / "one"), charset=None, one_file=True
+    ).collect()
+    assert _record_listing([r.path for r in manifest]) == _record_listing(
+        [r.path for r in one]
+    )
+
+
+def test_multipart_order_with_zip_input(spark, site, tmp_path):
+    """A zip input is listed as the zip, not its members, so its members'
+    keys fall anywhere between the listing's bounds; the multi-part record
+    order of a directory + zip run still equals the one_file order."""
+    import os
+    import zipfile
+
+    zpath = tmp_path / "site.zip"
+    with zipfile.ZipFile(zpath, "w") as zf:
+        for rel in sorted(SITE_FILES):
+            zf.write(os.path.join(site, rel), rel)
+    inputs = [site, str(zpath)]
+    multi = warcit_run(
+        spark, inputs, PREFIX, str(tmp_path / "multi"), charset=None, num_parts=4
+    ).collect()
+    one = warcit_run(
+        spark, inputs, PREFIX, str(tmp_path / "one"), charset=None, one_file=True
+    ).collect()
+    listing = _record_listing([r.path for r in multi])
+    assert len(listing) == 20  # 2 x (8 resources + 2 revisits)
+    assert listing == _record_listing([r.path for r in one])

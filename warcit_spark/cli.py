@@ -122,10 +122,14 @@ def _write_cli_log(records_df, logfile: str) -> None:
     distributed analog is the crawl lineage CSV sink (plans/crawl.py)."""
     from pyspark.sql import functions as F
 
+    # source_uri is "file://" + the scan's path, and a directory scan's
+    # path is itself a file: URI (file:/abs/x); the column is the OS path
     rows = (
         records_df.orderBy("_sort_uri", "_class", "_seq")
         .select(
-            F.regexp_replace(F.coalesce("source_uri", F.lit("")), "^file://", "").alias("file"),
+            F.regexp_replace(
+                F.coalesce("source_uri", F.lit("")), "^file://(file:)?", ""
+            ).alias("file"),
             F.col("record_type").alias("Record-Type"),
             F.col("url").alias("URL"),
             F.col("warc_date").alias("timestamp"),

@@ -21,7 +21,7 @@ from __future__ import annotations
 import fnmatch
 import mimetypes
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 DEFAULT_MIME = "text/html"
@@ -37,6 +37,21 @@ def mimetypes_table() -> list[tuple[str, str]]:
     table.update(mimetypes.common_types)
     table[".ico"] = "image/x-icon"
     return sorted(table.items())
+
+
+def mimetypes_frame(spark: SparkSession) -> DataFrame:
+    """:func:`mimetypes_table` as an (``_ext``, ``_mime``) DataFrame.
+
+    Built from pandas, so it is a JVM local relation: collecting it runs
+    no Spark job and no Python worker ever serves it (a list would go
+    through a Python RDD).  Its broadcast is one small JVM-only job.
+    """
+    import pandas as pd
+
+    return spark.createDataFrame(
+        pd.DataFrame(mimetypes_table(), columns=["_ext", "_mime"]),
+        "_ext string, _mime string",
+    )
 
 
 def url_extension_expr(url: Column) -> Column:

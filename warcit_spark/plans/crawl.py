@@ -37,7 +37,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from warcit_spark.functions.mime import DEFAULT_MIME, mimetypes_table, url_extension_expr
+from warcit_spark.functions.mime import DEFAULT_MIME, mimetypes_frame, url_extension_expr
 from warcit_spark.functions.timestamps import iso8601z_expr
 from warcit_spark.functions.urls import canonicalize_with_host_expr
 from warcit_spark.operators.links import hrefs_expr, resolve_hrefs
@@ -81,7 +81,7 @@ def canonical_seed_frontier(seeds: DataFrame) -> DataFrame:
 
 
 def _mime_dim(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(mimetypes_table(), "_ext string, _mime string")
+    return mimetypes_frame(spark)
 
 
 def derive_fetch_records(

@@ -6,8 +6,14 @@ WARC file (warcit/warcit.py:395-448 restated as one DataFrame DAG).
       -> mapfile suffix join (J1, broadcast) operators/joins.py
       -> MIME chain (F3/F4) + charset (F5)   functions/mime.py, operators/charset.py
       -> field resolution (F7, coalesce)     here
-      -> index-revisit derivation (D1)       here
+      -> index revisit (D1, same projection) here
+      -> order: listing-bound ranges         here (order_records)
       -> WARC sink (K1/K2)                   sinks/warc.py
+
+Each input file is read once per run: its resource record and, for an
+index file, its revisit come out of one projection (an explode, not a
+union of two scans), and the multi-part range bounds come from the file
+listing, not from a sample pass over the records.
 
 A user of the reference runs ``warcit http://example.com/ ./site/``; the
 Spark user calls :func:`warcit_run` with the same inputs and gets the same
@@ -22,6 +28,8 @@ its revisit) — SURVEY.md §7.3 #1.
 
 from __future__ import annotations
 
+from urllib.parse import unquote, urlsplit
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -29,7 +37,7 @@ from warcit_spark.functions.mime import (
     charset_suffix_expr,
     guess_mime_expr,
     mime_override_expr,
-    mimetypes_table,
+    mimetypes_frame,
     sniff_mime_expr,
     tika_charset_detect_expr,
     tika_has_hint_expr,
@@ -161,7 +169,7 @@ def files_to_warc_records(
         )
 
     null_s = F.lit(None).cast("string")
-    mime_dim = spark.createDataFrame(mimetypes_table(), "_ext string, _mime string")
+    mime_dim = mimetypes_frame(spark)
 
     def with_mime(
         df: DataFrame, url_col: str, content: Column, mapfile_ct: Column
@@ -260,10 +268,13 @@ def files_to_warc_records(
     # revisit refers back to the index record it deduplicates
     # (make_index_revisit, warcit/warcit.py:546-556: Refers-To-Target-URI
     # is the original index.html url, Refers-To-Target-Date its date).
+    # It comes out of the same row as its resource — an explode over a
+    # one- or two-record array — so the content is read once for both.
     index_match = F.lit(False)
     for name in index_files:
         index_match = index_match | F.lower(F.col("url")).endswith("/" + name)
-    revisits = resources.where(index_match).select(
+    resource = F.struct(*[F.col(c) for c in _REC_COLS])
+    revisit = F.struct(
         F.regexp_replace(F.col("url"), "[^/]+$", "").alias("url"),
         F.lit("revisit").alias("record_type"),
         "warc_date",
@@ -280,8 +291,12 @@ def files_to_warc_records(
         F.lit(1).alias("_class"),
         F.lit(0).alias("_seq"),
     )
-
-    out = resources.select(*_REC_COLS).unionByName(revisits.select(*_REC_COLS))
+    out = resources.select(
+        F.explode(
+            F.when(index_match, F.array(resource, revisit))
+            .otherwise(F.array(resource))
+        ).alias("_rec")
+    ).select("_rec.*")
 
     # D2 — conversion records, composed (make_conversions, warcit.py:568-578):
     # per successful conversion of a *written* resource, a full record over
@@ -405,21 +420,16 @@ def warcit_run(
     Default output is range-partitioned multi-part (part file N holds a
     contiguous slice of the total order, so ``cat part-*`` is the ordered
     whole) — the shape that scales; ``one_file=True`` is the single-file
-    fidelity mode matching the reference CLI.  Returns the write manifest.
+    fidelity mode matching the reference CLI.  The range bounds come from
+    the input file listing (:func:`_listing_bounds`), not from a sample
+    of the records, so the content is read in one stage: the write.
+
+    Returns the write manifest as a local relation: the write runs here,
+    and a caller's ``.collect()`` on the manifest runs no Spark job.
     """
     if records is None:
         records = files_to_warc_records(spark, input_dir, url_prefix, **kwargs)
-    sort_cols = [
-        F.col("_sort_uri").asc(), F.col("_class").asc(), F.col("_seq").asc()
-    ]
-    if one_file:
-        ordered = records.coalesce(1).sortWithinPartitions(*sort_cols)
-    else:
-        n = num_parts or spark.sparkContext.defaultParallelism
-        ordered = records.repartitionByRange(n, *sort_cols).sortWithinPartitions(
-            *sort_cols
-        )
-    ordered = ordered.drop("_sort_uri", "_class", "_seq")
+    ordered = order_records(spark, records, one_file=one_file, num_parts=num_parts)
     # warcinfo cmdline: the CLI-equivalent invocation (warcit.py:454)
     if cmdline is None:
         cmdline = f"warcit-spark {url_prefix} {input_dir}"
@@ -427,7 +437,62 @@ def warcit_run(
         ordered, out_dir, gzip_records=gzip_records, mode=mode, cmdline=cmdline,
         warcinfo=warcinfo, warcinfo_filename=warcinfo_filename,
     )
-    # run the write HERE; the returned frame is a local relation, so
-    # callers' .collect() is free
-    rows = manifest.collect()
-    return spark.createDataFrame(rows, manifest.schema)
+    return spark.createDataFrame(manifest.toPandas(), manifest.schema)
+
+
+def order_records(
+    spark: SparkSession,
+    records: DataFrame,
+    one_file: bool = False,
+    num_parts: int | None = None,
+) -> DataFrame:
+    """``records`` in the engine's total order, laid out for the sink: one
+    partition (``one_file``) or ``num_parts`` contiguous ranges of the
+    order (default: the default parallelism), hidden keys dropped."""
+    if one_file:
+        ordered = records.coalesce(1)
+    else:
+        n = num_parts or spark.sparkContext.defaultParallelism
+        pid = _range_partition_id(F.col("_sort_uri"), _listing_bounds(records, n))
+        ordered = records.repartitionById(n, pid)
+    return ordered.sortWithinPartitions(
+        F.col("_sort_uri").asc(), F.col("_class").asc(), F.col("_seq").asc()
+    ).drop("_sort_uri", "_class", "_seq")
+
+
+def _listing_key(uri: str) -> str:
+    """A listed input file's ``_sort_uri``.
+
+    ``inputFiles()`` gives encoded URIs (``file:///a%20b``); binaryFile's
+    ``path`` column, which ``_sort_uri`` prefixes with ``file://``, is the
+    Hadoop path string (``file:/a b``).  Compared raw, every key sorts
+    after every bound and the run silently writes one part.
+    """
+    u = urlsplit(uri)
+    authority = f"//{u.netloc}" if u.netloc else ""
+    return f"file://{u.scheme}:{authority}{unquote(u.path)}"
+
+
+def _listing_bounds(records: DataFrame, n: int) -> list[str]:
+    """``n-1`` (or fewer) ascending ``_sort_uri`` range bounds that split
+    the input files into ``n`` equal runs.
+
+    ``inputFiles()`` reads the listing the scan already made and runs no
+    job.  The bounds only steer balance: a zip input lists the zip, not
+    its members, and a sidecar file is listed too, yet the order of the
+    output holds for any bounds.
+    """
+    keys = sorted({_listing_key(f) for f in records.inputFiles()})
+    m = len(keys)
+    return sorted({keys[(i * m) // n - 1] for i in range(1, n) if (i * m) // n})
+
+
+def _range_partition_id(key: Column, bounds: list[str]) -> Column:
+    """Partition id of ``key`` under ascending ``bounds``: partition ``i``
+    holds the keys in ``(bounds[i-1], bounds[i]]``.  The id never
+    decreases as the key grows, and a NULL key, which sorts first, goes
+    to partition 0, so concatenating the parts keeps the total order."""
+    pid = F.when(key.isNull(), F.lit(0))
+    for i, bound in enumerate(bounds):
+        pid = pid.when(key <= F.lit(bound), F.lit(i))
+    return pid.otherwise(F.lit(len(bounds)))
