@@ -1,8 +1,10 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
-``entry(spark)`` runs the flagship crawl slice (canonicalize -> robots ->
-politeness -> fetch-oracle join -> record derivation) over a pages table
-synthesized deterministically from sf0.001 ``documents``.
+``entry(spark)`` runs one committed round of the production crawl
+(``run_crawl``: canonicalize -> robots -> politeness -> fetch-oracle join
+-> record derivation -> links -> seen anti-join -> writes and commit) in
+a temporary crawl state, over a pages table synthesized deterministically
+from sf0.001 ``documents``, and returns the round's ``fetched`` records.
 
 ``queries()`` exposes each implemented operator from SURVEY.md §2 (plus the
 training-data-pipeline operators) as a named DataFrame query over the
@@ -29,17 +31,17 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 # =========================================================================
-# entry: flagship crawl slice on sf0.001
+# entry: one production crawl round on sf0.001
 # =========================================================================
 def entry(spark: SparkSession) -> DataFrame:
-    from warcit_spark.plans.crawl import (
-        CrawlConfig,
-        canonical_seed_frontier,
-        derive_fetch_records,
-        _mime_dim,
-    )
-    from warcit_spark.plans.politeness import politeness_prerank, politeness_rank
-    from warcit_spark.operators.robots import apply_robots
+    """One committed production crawl round (``run_crawl``,
+    ``max_rounds=1``) into a temporary crawl state; returns the round's
+    ``fetched`` records as a local relation, so the state can go."""
+    import shutil
+    import tempfile
+
+    from warcit_spark.plans.crawl import CrawlConfig, run_crawl
+    from warcit_spark.plans.state import CrawlState
 
     sf_dir = "/root/testdata/sf0.001"
     docs = _t(spark, sf_dir, "documents")
@@ -56,34 +58,21 @@ def entry(spark: SparkSession) -> DataFrame:
         "host string, path_prefix string, allow boolean, crawl_delay double",
     )
 
-    frontier = canonical_seed_frontier(seeds)
-    with_rules = apply_robots(frontier, robots)
-    allowed = with_rules.where(F.col("allowed"))
-    pre = politeness_prerank(allowed, host_budget=50, n_salt=4)
-    ranked = politeness_rank(pre.where(F.col("_pre_ok")), host_budget=50)
-    selected = ranked.where(F.col("selected"))
-    fetched = (
-        selected.join(
-            pages.withColumnRenamed("url", "_purl"),
-            selected["url"] == F.col("_purl"),
-            "left",
+    state = CrawlState(tempfile.mkdtemp(prefix="warcit_entry_"), seen_buckets=4)
+    try:
+        run_crawl(
+            spark, state, pages, seeds, robots,
+            CrawlConfig(max_rounds=1, n_salt=4, n_lineage_partitions=4),
         )
-        .drop("_purl")
-        .select(
-            F.lit(0).alias("round"),
-            "url",
-            "host",
-            "priority",
-            "rank_in_host",
-            "warc_ts",
-            "html",
-            F.col("warc_ts").isNotNull().alias("fetched"),
-            F.when(F.col("warc_ts").isNotNull(), F.lit("fetched"))
-            .otherwise(F.lit("missing"))
-            .alias("reason"),
+        fetched = state.read_table(spark, "fetched")
+        # ``round`` comes back as the partition column, last; put it first
+        fetched = fetched.select(
+            "round", *[c for c in fetched.columns if c != "round"]
         )
-    )
-    return derive_fetch_records(fetched, _mime_dim(spark), ("/index.html",))
+        return spark.createDataFrame(fetched.toPandas(), fetched.schema)
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {state._seen_table_name()}")
+        shutil.rmtree(state.root, ignore_errors=True)
 
 
 def _pages_from_documents(docs: DataFrame) -> DataFrame:
@@ -383,6 +372,8 @@ def j5b_semi_join(spark, sf_dir):
 
 
 def d1_revisit_derivation(spark, sf_dir):
+    from warcit_spark.operators.records import with_index_revisits
+
     d = _t(spark, sf_dir, "documents")
     dirno = (F.col("doc_id") / 10).cast("long")
     url = F.when(
@@ -394,13 +385,7 @@ def d1_revisit_derivation(spark, sf_dir):
     resources = d.select(
         url.alias("url"), F.lit("resource").alias("record_type")
     )
-    revisits = resources.where(
-        F.lower(F.col("url")).endswith("/index.html")
-    ).select(
-        F.regexp_replace(F.col("url"), "[^/]+$", "").alias("url"),
-        F.lit("revisit").alias("record_type"),
-    )
-    return resources.unionByName(revisits)
+    return with_index_revisits(resources, ("index.html",))
 
 
 def a2_reverse_index(spark, sf_dir):

@@ -113,7 +113,7 @@ def crawl(
     host_budget: int = 50,
     max_rounds: int = 20,
     link_decay: float = 0.8,
-    index_suffixes: tuple[str, ...] = ("/index.html", "/index.htm"),
+    index_files: tuple[str, ...] = ("index.html", "index.htm"),
 ) -> OracleResult:
     """pages: canonical url -> {warc_ts, html(bytes), text, lang}."""
     res = OracleResult()
@@ -190,7 +190,7 @@ def crawl(
             )
             if not fetched:
                 continue
-            if any(u.lower().endswith(s) for s in index_suffixes):
+            if any(u.lower().endswith("/" + f.lower()) for f in index_files):
                 res.records.append(
                     {
                         "round": rnd,

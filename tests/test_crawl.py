@@ -11,6 +11,7 @@ seen layout (url-bucketed, merge-pinned anti-join) at a small bucket count.
 from __future__ import annotations
 
 import os
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
@@ -342,6 +343,90 @@ def test_bucketed_seen_parity_and_plan(spark, engine_result):
     seen_side = "\n".join(lines[j:])
     assert "FileScan parquet spark_catalog.default.seen_b_" in seen_side
     assert "Exchange" not in seen_side
+
+
+def _one_round(spark, fixture_dfs, tmp_path_factory, name, **cfg):
+    pages, seeds, robots = fixture_dfs
+    state = CrawlState(
+        str(tmp_path_factory.mktemp(name)), seen_buckets=SEEN_BUCKETS
+    )
+    run_crawl(
+        spark, state, pages, seeds, robots,
+        CrawlConfig(**{**CFG.__dict__, "max_rounds": 1, **cfg}),
+    )
+    return state, state.read_table(spark, "fetched")
+
+
+def test_crawl_without_index_files_writes_resources_only(
+    spark, fixture_dfs, tmp_path_factory, oracle_result
+):
+    """``index_files=()`` turns D1 off: round 0 writes exactly the
+    oracle's round-0 resources and no revisit."""
+    _, fetched = _one_round(
+        spark, fixture_dfs, tmp_path_factory, "no_index", index_files=()
+    )
+    want = {
+        (rec["url"], rec["record_type"])
+        for rec in oracle_result.records
+        if rec["round"] == 0
+    }
+    assert "revisit" in {t for _, t in want}  # D1 fires in round 0
+    got = {(r.url, r.record_type) for r in fetched.collect()}
+    assert got == {(u, t) for u, t in want if t == "resource"}
+
+
+def test_round_records_scan_cached_fetched_once(
+    spark, fixture_dfs, tmp_path_factory, monkeypatch
+):
+    """A round's ``fetched`` write derives resources and index revisits
+    from one scan of the cached fetch frame (one explode), not a union of
+    two scans of it."""
+    plans = {}
+    write = CrawlState.write_delta
+
+    def capture(self, df, table, round_id, refresh=True):
+        plans[table] = df._jdf.queryExecution().executedPlan().toString()
+        write(self, df, table, round_id, refresh)
+
+    monkeypatch.setattr(CrawlState, "write_delta", capture)
+    _, fetched = _one_round(spark, fixture_dfs, tmp_path_factory, "one_scan")
+    assert fetched.where(F.col("record_type") == "revisit").count() > 0
+    # the cached fetch frame is the only cached frame with a digest column
+    scans = [
+        ln for ln in plans["fetched"].splitlines()
+        if "InMemoryTableScan" in ln and "payload_digest" in ln
+    ]
+    assert len(scans) == 1, scans
+
+
+def test_entry_runs_one_committed_round(spark, monkeypatch):
+    """The driver smoke run ``entry(spark)`` is one committed production
+    round in a state it deletes: of the 7 seeds, docs3.test is
+    robots-denied, docs0.test's index page is fetched (its resource plus
+    the directory revisit) and the other 5 are missing from the pages
+    table."""
+    import __spark_entry__
+
+    commits = []
+    commit = CrawlState.commit_round
+
+    def spy(self, round_id, summary):
+        commits.append((self.root, round_id))
+        commit(self, round_id, summary)
+
+    monkeypatch.setattr(CrawlState, "commit_round", spy)
+    rows = __spark_entry__.entry(spark).collect()
+    assert [r for _, r in commits] == [0]
+    assert not os.path.exists(commits[0][0])
+    assert Counter((r.record_type, r.reason) for r in rows) == {
+        ("resource", "fetched"): 1,
+        ("revisit", "revisit"): 1,
+        ("resource", "missing"): 5,
+    }
+    assert not any(r.host == "docs3.test" for r in rows)
+    (revisit,) = [r for r in rows if r.record_type == "revisit"]
+    assert revisit.url == "http://docs0.test/dir0/"
+    assert revisit.refers_to_target_uri == "http://docs0.test/dir0/index.html"
 
 
 def test_politeness_two_stage_matches_single_window_twin(spark):

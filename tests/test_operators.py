@@ -265,19 +265,26 @@ def test_charset_suppression_rules(spark):
 
 
 def test_charset_tika_default_8bit_suppression(spark):
+    """``charset='tika'``: a default-assigned 8-bit charset is dropped
+    unless hinted, and a literal ``ascii`` is kept (no cchardet rule)."""
     df = spark.createDataFrame(
-        [("text/html", "windows-1252", False), ("text/html", "windows-1252", True)],
+        [
+            ("text/html", "windows-1252", False),
+            ("text/html", "windows-1252", True),
+            ("text/html", "ISO-8859-1", False),
+            ("text/html", "ascii", False),
+        ],
         ["mime", "detected", "hinted"],
     )
     suffix = charset_suffix_expr(
         F.col("mime"),
         F.lit(None),
         F.col("detected"),
-        suppress_default_8bit=True,
+        charset="tika",
         has_hint=F.col("hinted"),
     )
     got = [r.s for r in df.select(suffix.alias("s")).collect()]
-    assert got == ["", "; charset=windows-1252"]
+    assert got == ["", "; charset=windows-1252", "", "; charset=ascii"]
 
 
 def test_transclusion_formats_order_deterministic(spark):

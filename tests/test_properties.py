@@ -8,8 +8,10 @@ proved here transfer to the expression path.
 
 from __future__ import annotations
 
+import re
+
 import pandas as pd
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from warcit_spark.functions.urls import canonicalize_urls_pandas
@@ -189,13 +191,22 @@ from warcit_spark.functions.urls import surt_py
 
 @settings(max_examples=300, deadline=None)
 @given(urls())
+# a host that is only ``www``, ends in ``www`` or repeats it keeps a
+# ``www`` label: the rule strips exactly one leading ``www\d*.`` label
+@example("http://www")
+@example("http://a.www")
+@example("http://www.www.com")
 def test_surt_shape_and_rules(u):
     s = surt_py(u)
     if s is None:
         return
     assert "#" not in s and ")" in s
     key, rest = s.split(")", 1)
-    assert key == key.lower() and not key.startswith("www")
+    assert key == key.lower()
+    host = ".".join(reversed(key.split(":", 1)[0].split(",")))
+    given_host = re.split(r"[:/?#]", u.split("://", 1)[1], maxsplit=1)[0].lower()
+    www = re.match(r"www\d*\.", given_host)
+    assert host == (given_host[www.end():] if www else given_host)
     # default ports never survive; non-default ones do
     assert not (u.lower().startswith("http://") and key.endswith(":80"))
     if "?" in rest:

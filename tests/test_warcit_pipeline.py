@@ -67,6 +67,17 @@ def test_no_index_files_no_revisits(spark, site):
     assert recs.where(F.col("record_type") == "revisit").count() == 0
 
 
+def test_index_files_match_case_insensitively(spark, site):
+    """--index-files names are lowercased like the reference's
+    (warcit/warcit.py:212-215): ``INDEX.HTML`` names both index.html
+    files."""
+    recs = files_to_warc_records(spark, site, PREFIX, index_files=("INDEX.HTML",))
+    got = sorted(
+        r.url for r in recs.where(F.col("record_type") == "revisit").collect()
+    )
+    assert got == [PREFIX, PREFIX + "sub/"]
+
+
 def test_record_fields_and_url_encoding(spark, site):
     recs = {r.url: r for r in files_to_warc_records(spark, site, PREFIX).collect()}
     # F2: space percent-encoded lowercase-hex

@@ -16,7 +16,7 @@ from warcit_spark.functions.urls import (
     url_hash64_expr,
 )
 from warcit_spark.functions.timestamps import normalize_ts14_expr, iso8601z_expr
-from warcit_spark.functions.mime import guess_mime_expr, resolve_content_type_expr
+from warcit_spark.functions.mime import guess_mime_expr
 
 __all__ = [
     "canonicalize_url_expr",
@@ -29,5 +29,4 @@ __all__ = [
     "normalize_ts14_expr",
     "iso8601z_expr",
     "guess_mime_expr",
-    "resolve_content_type_expr",
 ]

@@ -54,6 +54,17 @@ def mimetypes_frame(spark: SparkSession) -> DataFrame:
     )
 
 
+def with_extension_mime(df: DataFrame, url: Column, mime_dim: DataFrame) -> DataFrame:
+    """``df`` plus ``_mime``: the MIME type ``mime_dim``
+    (:func:`mimetypes_frame`) gives ``url``'s extension, NULL when it has
+    none — the filename guess of F3, as a broadcast equi-join."""
+    return (
+        df.withColumn("_ext", url_extension_expr(url))
+        .join(F.broadcast(mime_dim), on="_ext", how="left")
+        .drop("_ext")
+    )
+
+
 def url_extension_expr(url: Column) -> Column:
     """Lowercased final extension of the URL path, query stripped first
     (reference guesses on ``url.split('?', 1)[0]``, warcit/warcit.py:634)."""
@@ -195,8 +206,8 @@ def tika_charset_detect_expr(tika_results: Column) -> Column:
     """The ``--charset tika`` detector value (warcit/warcit.py:686-703):
     first Content-Encoding entry; missing -> NULL (reference: '').  The
     windows-1252/ISO-8859-1 default-assignment suppression is applied by
-    :func:`charset_suffix_expr` via ``suppress_default_8bit`` +
-    ``has_hint`` so all suppression rules live in one place."""
+    :func:`charset_suffix_expr` (``charset='tika'`` + ``has_hint``) so all
+    suppression rules live in one place."""
     return F.try_element_at(tika_results["content_encoding"], F.lit(1))
 
 
@@ -226,18 +237,17 @@ def charset_suffix_expr(
     mime: Column,
     mapfile_ct: Column,
     detected_charset: Column,
-    *,
-    enabled: bool = True,
-    fixed_charset: str | None = None,
-    suppress_ascii: bool = True,
-    suppress_default_8bit: bool = False,
+    charset: str | None = "auto",
     has_hint: Column | None = None,
 ) -> Column:
     """``'; charset=X'`` or ``''`` per the F5 suppression rules.
 
-    ``detected_charset`` is whatever detector ran (a vectorized pandas UDF
-    in this engine — see operators/charset.py); the *rules* below are the
-    reference contract and are pure expressions.
+    ``charset`` is the ``--charset`` mode: None (no charset), 'auto'
+    (``detected_charset`` from the cchardet-analog detector, a vectorized
+    pandas UDF — see operators/charset.py — with ``ascii`` suppressed),
+    'tika' (``detected_charset`` from tika, default-assigned 8-bit
+    charsets suppressed unless ``has_hint``) or a charset name applied as
+    given.  The *rules* are the reference contract, as pure expressions.
     """
     # mapfile Content-Type containing ';' wins outright (warcit.py:663-666)
     mapfile_suffix = F.when(
@@ -245,23 +255,21 @@ def charset_suffix_expr(
         F.concat(F.lit(";"), F.substring_index(mapfile_ct, ";", -1)),
     )
 
-    if not enabled:
+    cs = F.coalesce(detected_charset, F.lit(""))
+    if charset is None:
         body = F.lit("")
-    elif fixed_charset is not None:
-        body = F.lit(fixed_charset)
+    elif charset == "auto":
+        # ascii suppression — cchardet path only (warcit.py:683-684)
+        body = F.when(F.lower(cs) == "ascii", F.lit("")).otherwise(cs)
+    elif charset == "tika":
+        # tika keeps a literal 'ascii' but suppresses its default 8-bit
+        # assignment unless hinted (warcit.py:697-703)
+        hinted = has_hint if has_hint is not None else F.lit(False)
+        body = F.when(
+            cs.isin("windows-1252", "ISO-8859-1") & ~hinted, F.lit("")
+        ).otherwise(cs)
     else:
-        cs = F.coalesce(detected_charset, F.lit(""))
-        if suppress_ascii:
-            # ascii suppression — cchardet path only (warcit.py:683-684);
-            # the tika path keeps a literal 'ascii'
-            cs = F.when(F.lower(cs) == "ascii", F.lit("")).otherwise(cs)
-        if suppress_default_8bit:
-            # tika's default 8-bit assignment suppression (warcit.py:697-703)
-            hinted = has_hint if has_hint is not None else F.lit(False)
-            cs = F.when(
-                cs.isin("windows-1252", "ISO-8859-1") & ~hinted, F.lit("")
-            ).otherwise(cs)
-        body = cs
+        body = F.lit(charset)
 
     suffix = F.when(body != "", F.concat(F.lit("; charset="), body)).otherwise(
         F.lit("")
@@ -269,8 +277,3 @@ def charset_suffix_expr(
     # charset only ever applies to text/* (warcit.py:668-669)
     text_only = F.when(mime.startswith("text/"), suffix).otherwise(F.lit(""))
     return F.coalesce(mapfile_suffix, text_only)
-
-
-def resolve_content_type_expr(mime: Column, charset_suffix: Column) -> Column:
-    """``warc_content_type = mime + encoding`` (warcit/warcit.py:487)."""
-    return F.concat(mime, charset_suffix)

@@ -271,7 +271,6 @@ def salted_host_expr(host: Column, url: Column, n_salt: int = 16) -> Column:
 # Spark's parse_url can replay the byte-identical parse; patterns are in
 # the Java-regex/RE2 common subset (functions/html.py stance).
 _HOST_RE = r"^[a-zA-Z][a-zA-Z0-9+.-]*://([^/?#]+)"
-_PATH_RE = r"^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*([^?#]*)"
 _QUERY_RE = r"\?([^#]*)"
 
 

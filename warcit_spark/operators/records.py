@@ -1,8 +1,10 @@
 """Derived-record generators D1-D3 and the A2 reverse-index aggregation
 (SURVEY.md §2.4-2.5).
 
-- D1 index-revisit derivation lives in plans/crawl.py (derive_fetch_records)
-  and plans/warcit_pipeline.py.
+- D1 index revisit (warcit/warcit.py:212-215, 546-556):
+  :func:`with_index_revisits`, the one builder both the crawl
+  (plans/crawl.derive_fetch_records) and files->WARC
+  (plans/warcit_pipeline.files_to_warc_records) emit records through.
 - D2 conversion fan-out (warcit/warcit.py:568-578) is composed inline in
   plans/warcit_pipeline.files_to_warc_records; this module supplies its
   byte-exact ``WARC-JSON-Metadata`` serializer (:func:`json_metadata_batch`).
@@ -23,16 +25,64 @@ computation (SURVEY.md §2.4 A2).
 from __future__ import annotations
 
 import json
+from functools import reduce
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from warcit_spark.functions.timestamps import normalize_ts14_expr
 
 TRANSCLUSION_CONTENT_TYPE = "application/vnd.youtube-dl_formats+json"
+
+DEFAULT_INDEX_FILES = ("index.html", "index.htm")
+
+
+def with_index_revisits(
+    resources: DataFrame,
+    index_files: tuple[str, ...],
+    eligible: Column | None = None,
+    **revisit_overrides: Column,
+) -> DataFrame:
+    """D1: every ``resources`` row, then, for a row whose lowercased url
+    ends with ``/<index file>`` (names lowercased like the reference's
+    ``--index-files``, warcit/warcit.py:212-215) and ``eligible`` holds,
+    its ``revisit`` for the directory url (make_index_revisit,
+    warcit/warcit.py:546-556).
+
+    The revisit carries the resource's columns with size 0 and refer-back
+    headers to the index record, then ``revisit_overrides`` (column name ->
+    value).  Both records come out of one ``explode`` over the row, so the
+    input is read once for the pair.
+    """
+    if not index_files:
+        return resources
+    url = F.lower(F.col("url"))
+    is_index = reduce(
+        lambda a, b: a | b, [url.endswith("/" + n.lower()) for n in index_files]
+    )
+    if eligible is not None:
+        is_index = eligible & is_index
+    derived = {
+        "url": F.regexp_replace(F.col("url"), "[^/]+$", ""),
+        "record_type": F.lit("revisit"),
+        "size": F.lit(0).cast("long"),
+        "refers_to_target_uri": F.col("url"),
+        "refers_to_target_date": F.col("warc_date"),
+        **revisit_overrides,
+    }
+    resource = F.struct(*resources.columns)
+    revisit = F.struct(
+        *[derived.get(c, F.col(c)).alias(c) for c in resources.columns]
+    )
+    return resources.select(
+        F.explode(
+            F.when(is_index, F.array(resource, revisit))
+            .otherwise(F.array(resource))
+        ).alias("_rec")
+    ).select("_rec.*")
 
 
 def json_metadata_batch(md):

@@ -8,7 +8,8 @@ One round r (SURVEY.md §3.1 restated for the new engine):
                -> fetch = left-join semantics vs pages ON url (J4, pinned
                   sort-merge; pages side pre-bucketed/cached so only the
                   selection shuffles)
-               -> record derivation (resource + index-revisit rows, D1/A4)
+               -> record derivation (resource + index-revisit rows from one
+                  pass, D1/A4 — the builder files->WARC shares)
                -> link extraction (JVM regex, D4) -> canonicalize
                -> within-round dedup (groupBy max-priority)
                -> anti-join vs (seen delta UNION deferred), then a
@@ -37,15 +38,18 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from warcit_spark.functions.mime import DEFAULT_MIME, mimetypes_frame, url_extension_expr
+from warcit_spark.functions.mime import (
+    DEFAULT_MIME,
+    mimetypes_frame,
+    with_extension_mime,
+)
 from warcit_spark.functions.timestamps import iso8601z_expr
 from warcit_spark.functions.urls import canonicalize_with_host_expr
 from warcit_spark.operators.links import hrefs_expr, resolve_hrefs
+from warcit_spark.operators.records import DEFAULT_INDEX_FILES, with_index_revisits
 from warcit_spark.operators.robots import apply_robots
 from warcit_spark.plans.politeness import politeness_prerank, politeness_rank
 from warcit_spark.plans.state import CrawlState
-
-DEFAULT_INDEX_SUFFIXES = ("/index.html", "/index.htm")
 
 
 @dataclass
@@ -55,7 +59,7 @@ class CrawlConfig:
     link_decay: float = 0.8        # child priority = parent priority * decay
     n_salt: int = 16               # politeness pre-rank salt slots
     n_lineage_partitions: int = 32
-    index_suffixes: tuple[str, ...] = DEFAULT_INDEX_SUFFIXES
+    index_files: tuple[str, ...] = DEFAULT_INDEX_FILES
     # the fetch join is always sort-merge; kept only because existing
     # callers pass broadcast_fetch=False, so True is rejected
     broadcast_fetch: bool = False
@@ -85,35 +89,20 @@ def _mime_dim(spark: SparkSession) -> DataFrame:
 
 
 def derive_fetch_records(
-    fetched: DataFrame, mime_dim: DataFrame, index_suffixes: tuple[str, ...]
+    fetched: DataFrame, mime_dim: DataFrame, index_files: tuple[str, ...]
 ) -> DataFrame:
     """Fetched pages -> WARC-analog record rows (reference make_record +
     make_index_revisit semantics, warcit/warcit.py:464-566).
 
     - content_type: extension guess ≻ default text/html (F3 tail of the
-      precedence chain; mapfile/override stages live in operators/records.py
-      and apply when those side-inputs exist).
-    - payload digest: sha1 over the payload (warcit.py:544 analog, A4).
-    - D1: fetched urls (lowercased) ending in an index suffix emit an extra
-      ``revisit`` row for the directory URL carrying the same digest/date.
-
-    Accepts either a raw ``html`` binary column (digest/size computed here)
-    or pre-computed ``payload_digest``/``size`` columns — crawl_round fuses
-    those into the fetch-join projection so the 8 KiB body never needs to
-    be cached (only the ~40 B digest rides the persisted round frame).
+      precedence chain; mapfile/override stages apply in files->WARC,
+      where those side-inputs exist).
+    - payload digest and size: fused upstream into the fetch-join
+      projection (A4), so the body is never cached.
+    - D1: a fetched url that is an index file also emits its ``revisit``
+      row, from the same pass (operators/records.with_index_revisits).
     """
-    if "payload_digest" in fetched.columns:
-        digest_col = F.col("payload_digest")
-        size_col = F.col("size")
-    else:
-        digest_col = F.when(F.col("fetched"), F.sha1(F.col("html")))
-        size_col = F.coalesce(F.length(F.col("html")), F.lit(0)).cast("long")
-    with_mime = (
-        fetched.withColumn("_ext", url_extension_expr(F.col("url")))
-        .join(F.broadcast(mime_dim), on="_ext", how="left")
-        .drop("_ext")
-    )
-    resources = with_mime.select(
+    resources = with_extension_mime(fetched, F.col("url"), mime_dim).select(
         "round",
         "url",
         "host",
@@ -122,35 +111,16 @@ def derive_fetch_records(
         F.lit("resource").alias("record_type"),
         F.coalesce(F.col("_mime"), F.lit(DEFAULT_MIME)).alias("content_type"),
         iso8601z_expr(F.col("warc_ts")).alias("warc_date"),
-        digest_col.alias("payload_digest"),
-        size_col.alias("size"),
+        "payload_digest",
+        "size",
         "fetched",
         "reason",
         F.lit(None).cast("string").alias("refers_to_target_uri"),
         F.lit(None).cast("string").alias("refers_to_target_date"),
     )
-    index_match = F.lower(F.col("url")).endswith(index_suffixes[0])
-    for suf in index_suffixes[1:]:
-        index_match = index_match | F.lower(F.col("url")).endswith(suf)
-    # revisit refers back to its original (make_index_revisit,
-    # warcit/warcit.py:546-556 sets Refers-To-Target-URI/-Date)
-    revisits = resources.where(F.col("fetched") & index_match).select(
-        "round",
-        F.regexp_replace(F.col("url"), "[^/]+$", "").alias("url"),
-        "host",
-        "priority",
-        "rank_in_host",
-        F.lit("revisit").alias("record_type"),
-        "content_type",
-        "warc_date",
-        "payload_digest",
-        F.lit(0).cast("long").alias("size"),
-        "fetched",
-        F.lit("revisit").alias("reason"),
-        F.col("url").alias("refers_to_target_uri"),
-        F.col("warc_date").alias("refers_to_target_date"),
+    return with_index_revisits(
+        resources, index_files, eligible=F.col("fetched"), reason=F.lit("revisit")
     )
-    return resources.unionByName(revisits)
 
 
 _LINEAGE_COUNTERS = (
@@ -337,7 +307,7 @@ def crawl_round(
     )
 
     records = derive_fetch_records(
-        fetched.drop("_hrefs"), mime_dim, cfg.index_suffixes
+        fetched.drop("_hrefs"), mime_dim, cfg.index_files
     )
 
     # ---- link extraction + canonicalization (D4) ---------------------------

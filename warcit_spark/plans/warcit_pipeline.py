@@ -6,7 +6,7 @@ WARC file (warcit/warcit.py:395-448 restated as one DataFrame DAG).
       -> mapfile suffix join (J1, broadcast) operators/joins.py
       -> MIME chain (F3/F4) + charset (F5)   functions/mime.py, operators/charset.py
       -> field resolution (F7, coalesce)     here
-      -> index revisit (D1, same projection) here
+      -> index revisit (D1, same projection) operators/records.py
       -> order: listing-bound ranges         here (order_records)
       -> WARC sink (K1/K2)                   sinks/warc.py
 
@@ -42,20 +42,20 @@ from warcit_spark.functions.mime import (
     tika_charset_detect_expr,
     tika_has_hint_expr,
     tika_mime_expr,
-    url_extension_expr,
+    with_extension_mime,
 )
 from warcit_spark.functions.timestamps import iso8601z_expr, normalize_ts14_expr
 from warcit_spark.operators.charset import detect_charsets_batch
 from warcit_spark.operators.filters import apply_include_exclude
 from warcit_spark.operators.joins import mapfile_suffix_join
 from warcit_spark.operators.records import (
+    DEFAULT_INDEX_FILES,
     json_metadata_batch,
     transclusion_metadata_records,
+    with_index_revisits,
 )
 from warcit_spark.sinks.warc import record_id_for, write_warc_files
 from warcit_spark.sources.binary_files import scan_input, union_scans
-
-DEFAULT_INDEX_FILES = ("index.html", "index.htm")
 
 
 def _resource_ids_batch(url, warc_date):
@@ -180,11 +180,7 @@ def files_to_warc_records(
         extension lookup, like _guess_type.  Resources and conversion
         outputs both resolve here, each keyed by its own url."""
         url = F.col(url_col)
-        df = (
-            df.withColumn("_ext", url_extension_expr(url))
-            .join(F.broadcast(mime_dim), on="_ext", how="left")
-            .drop("_ext")
-        )
+        df = with_extension_mime(df, url, mime_dim)
         if tika_results is not None:
             # external tika metadata joins in by url (broadcast — tika output
             # is a sidecar, small relative to the corpus); unmatched rows keep
@@ -222,13 +218,7 @@ def files_to_warc_records(
         F.col("mime"),
         F.col("map_ct"),
         detected,
-        enabled=charset is not None,
-        fixed_charset=charset if charset not in (None, "auto", "tika") else None,
-        # tika keeps a literal 'ascii' (no cchardet ascii rule) but
-        # suppresses default-assigned 8-bit charsets unless hinted
-        # (warcit.py:683-684 vs :697-703)
-        suppress_ascii=(charset != "tika"),
-        suppress_default_8bit=(charset == "tika"),
+        charset,
         has_hint=(
             tika_has_hint_expr(F.col("tika_results"))
             if charset == "tika"
@@ -264,39 +254,15 @@ def files_to_warc_records(
     ).withColumn("_sort_uri", F.col("source_uri")) \
      .withColumn("_class", F.lit(0)).withColumn("_seq", F.lit(0))
 
-    # D1 — index revisit: lowercased url ends with /<index file>.  The
-    # revisit refers back to the index record it deduplicates
-    # (make_index_revisit, warcit/warcit.py:546-556: Refers-To-Target-URI
-    # is the original index.html url, Refers-To-Target-Date its date).
-    # It comes out of the same row as its resource — an explode over a
-    # one- or two-record array — so the content is read once for both.
-    index_match = F.lit(False)
-    for name in index_files:
-        index_match = index_match | F.lower(F.col("url")).endswith("/" + name)
-    resource = F.struct(*[F.col(c) for c in _REC_COLS])
-    revisit = F.struct(
-        F.regexp_replace(F.col("url"), "[^/]+$", "").alias("url"),
-        F.lit("revisit").alias("record_type"),
-        "warc_date",
-        "content_type",
-        F.lit(None).cast("binary").alias("payload"),
-        "payload_digest",
-        "source_uri",
-        F.lit(0).cast("long").alias("size"),
-        F.col("url").alias("refers_to_target_uri"),
-        F.col("warc_date").alias("refers_to_target_date"),
-        null_s.alias("refers_to"),
-        null_s.alias("json_metadata"),
-        F.col("_sort_uri"),
-        F.lit(1).alias("_class"),
-        F.lit(0).alias("_seq"),
+    # D1 — index revisit (make_index_revisit, warcit/warcit.py:546-556):
+    # from the same row as its resource, so the content is read once for
+    # both; the revisit carries no payload and sorts after its resource
+    out = with_index_revisits(
+        resources,
+        index_files,
+        payload=F.lit(None).cast("binary"),
+        _class=F.lit(1),
     )
-    out = resources.select(
-        F.explode(
-            F.when(index_match, F.array(resource, revisit))
-            .otherwise(F.array(resource))
-        ).alias("_rec")
-    ).select("_rec.*")
 
     # D2 — conversion records, composed (make_conversions, warcit.py:568-578):
     # per successful conversion of a *written* resource, a full record over
