@@ -37,7 +37,6 @@ def entry(spark: SparkSession) -> DataFrame:
     """One committed production crawl round (``run_crawl``,
     ``max_rounds=1``) into a temporary crawl state; returns the round's
     ``fetched`` records as a local relation, so the state can go."""
-    import shutil
     import tempfile
 
     from warcit_spark.plans.crawl import CrawlConfig, run_crawl
@@ -71,8 +70,7 @@ def entry(spark: SparkSession) -> DataFrame:
         )
         return spark.createDataFrame(fetched.toPandas(), fetched.schema)
     finally:
-        spark.sql(f"DROP TABLE IF EXISTS {state._seen_table_name()}")
-        shutil.rmtree(state.root, ignore_errors=True)
+        state.drop(spark)
 
 
 def _pages_from_documents(docs: DataFrame) -> DataFrame:
@@ -1474,6 +1472,28 @@ def a8_host_quality(spark, sf_dir):
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {
+        "mix1_token_budget": mix1_token_budget,
+        "g1_pagerank": g1_pagerank,
+        "g2_degree_stats": g2_degree_stats,
+        "g3_hits": g3_hits,
+        "f8_url_spam": f8_url_spam,
+        "f9_surt": f9_surt,
+        "pp1_preprocess_pipeline": pp1_preprocess_pipeline,
+        "t9_tfidf_topk": t9_tfidf_topk,
+        "smp1_stratified_sample": smp1_stratified_sample,
+        "x4_asof_join": x4_asof_join,
+        "x5_range_join": x5_range_join,
+        "q5_local_supplier": q5_local_supplier,
+        "set1_intersect": set1_intersect,
+        "set2_except": set2_except,
+        "w4_running_total": w4_running_total,
+        "t6_levenshtein": t6_levenshtein,
+        "a6_median": a6_median,
+        "a7_anchor_text": a7_anchor_text,
+        "a8_host_quality": a8_host_quality,
+        "t18_blocklist": t18_blocklist,
+        "cr1_recrawl_schedule": cr1_recrawl_schedule,
+        "t19_bpe_merges": t19_bpe_merges,
         "q1_pricing_summary": q1_pricing_summary,
         "q3_top_revenue_orders": q3_top_revenue_orders,
         "f1_include_exclude": f1_include_exclude,
@@ -1524,28 +1544,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "t16_lm_ppl_buckets": t16_lm_ppl_buckets,
         "t17_html_text": t17_html_text,
         "smp2_dsir_topk": smp2_dsir_topk,
-        "mix1_token_budget": mix1_token_budget,
-        "g1_pagerank": g1_pagerank,
-        "f8_url_spam": f8_url_spam,
-        "pp1_preprocess_pipeline": pp1_preprocess_pipeline,
-        "t9_tfidf_topk": t9_tfidf_topk,
-        "smp1_stratified_sample": smp1_stratified_sample,
-        "x4_asof_join": x4_asof_join,
-        "x5_range_join": x5_range_join,
-        "q5_local_supplier": q5_local_supplier,
-        "set1_intersect": set1_intersect,
-        "set2_except": set2_except,
-        "w4_running_total": w4_running_total,
-        "t6_levenshtein": t6_levenshtein,
-        "a6_median": a6_median,
-        "f9_surt": f9_surt,
-        "g2_degree_stats": g2_degree_stats,
-        "g3_hits": g3_hits,
-        "t18_blocklist": t18_blocklist,
-        "cr1_recrawl_schedule": cr1_recrawl_schedule,
-        "a7_anchor_text": a7_anchor_text,
-        "t19_bpe_merges": t19_bpe_merges,
-        "a8_host_quality": a8_host_quality,
     }
 
 

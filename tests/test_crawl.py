@@ -11,6 +11,7 @@ seen layout (url-bucketed, merge-pinned anti-join) at a small bucket count.
 from __future__ import annotations
 
 import os
+import shutil
 from collections import Counter
 
 import pytest
@@ -229,6 +230,34 @@ def test_replay_after_crash_before_commit(
     spark.sql(f"DROP TABLE {state._seen_table_name()}")
     restarted = CrawlState(root, seen_buckets=SEEN_BUCKETS)
     assert _seen_rows(spark, restarted) == want
+
+
+def test_state_root_reused_after_delete(spark, fixture_dfs, tmp_path_factory):
+    """A state root deleted and reused in one session with another seen
+    bucket count crawls afresh: the first state's catalog entry, whose
+    files are gone, is dropped instead of appended to.  ``drop`` removes
+    the entry and the root."""
+    pages, seeds, robots = fixture_dfs
+    root = str(tmp_path_factory.mktemp("crawl_reuse"))
+    one_round = CrawlConfig(**{**CFG.__dict__, "max_rounds": 1})
+    first = CrawlState(root, seen_buckets=4)
+    run_crawl(spark, first, pages, seeds, robots, one_round)
+    want = _seen_rows(spark, first)
+    shutil.rmtree(root)
+
+    second = CrawlState(root, seen_buckets=8)
+    run_crawl(spark, second, pages, seeds, robots, one_round)
+    assert _seen_rows(spark, second) == want
+    name = second._seen_table_name()
+    described = {
+        r.col_name: r.data_type
+        for r in spark.sql(f"DESCRIBE TABLE EXTENDED {name}").collect()
+    }
+    assert described["Num Buckets"] == "8"
+
+    second.drop(spark)
+    assert not os.path.exists(root)
+    assert not spark.catalog.tableExists(name)
 
 
 def _shift_urls_in(rows):

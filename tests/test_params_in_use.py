@@ -1,0 +1,155 @@
+"""Guard: every defaulted parameter of the package's public API is set somewhere.
+
+A defaulted parameter that no caller passes is a setting with one value in
+use; it belongs in the code as a constant, not in the signature. The rule:
+
+- in scope: a defaulted parameter of a public function or method under
+  ``warcit_spark/`` (a module-level function, or a method of a module-level
+  class; neither name starts with ``_``; ``__init__`` is called as the class);
+- it is in use when some call in the repository (``warcit_spark/``,
+  ``__spark_entry__.py``, ``tests/``, ``tools/``, ``jobs/``, ``bench*.py``,
+  ``perfbench/``) passes it, by keyword or by position;
+- a call that only forwards an unused parameter of its own enclosing
+  function does not count; the pass repeats until nothing changes;
+- out of scope: functions passed as values (pandas-UDF and ``mapInPandas``
+  bodies, callbacks), which the engine calls, not the repository.
+
+Calls are matched by the callee's last name (``f(...)``, ``x.f(...)``), so a
+name shared by two definitions is in use if either is called with it; a
+``*args`` or ``**kwargs`` spread counts as passing everything it could reach.
+
+Run as a script to print the inventory: ``python tests/test_params_in_use.py``.
+"""
+
+from __future__ import annotations
+
+import ast
+import functools
+import sys
+from pathlib import Path
+
+ROOT = Path(__file__).resolve().parent.parent
+PACKAGE = ROOT / "warcit_spark"
+FUNCS = (ast.FunctionDef, ast.AsyncFunctionDef)
+
+
+def _caller_files() -> list[Path]:
+    files = sorted(PACKAGE.rglob("*.py")) + [ROOT / "__spark_entry__.py"]
+    for d in ("tests", "tools", "jobs", "perfbench"):
+        files += sorted((ROOT / d).rglob("*.py"))
+    return files + sorted(ROOT.glob("bench*.py"))
+
+
+@functools.lru_cache(maxsize=None)
+def _parse(path: Path) -> ast.Module:
+    return ast.parse(path.read_text(), filename=str(path))
+
+
+def _is_static(fn) -> bool:
+    return any(isinstance(d, ast.Name) and d.id == "staticmethod"
+               for d in fn.decorator_list)
+
+
+def _defs():
+    """(where, call name, def node, 1 if a call binds the first parameter)
+    for every public function and method."""
+    for path in sorted(PACKAGE.rglob("*.py")):
+        mod = path.relative_to(ROOT)
+        for node in _parse(path).body:
+            if isinstance(node, FUNCS) and not node.name.startswith("_"):
+                yield f"{mod}:{node.name}", node.name, node, 0
+            elif isinstance(node, ast.ClassDef) and not node.name.startswith("_"):
+                for m in node.body:
+                    if not isinstance(m, FUNCS):
+                        continue
+                    call = node.name if m.name == "__init__" else m.name
+                    if not call.startswith("_"):
+                        yield (f"{mod}:{node.name}.{m.name}", call, m,
+                               0 if _is_static(m) else 1)
+
+
+def _defaulted(fn) -> list[str]:
+    a = fn.args
+    positional = a.posonlyargs + a.args
+    out = [p.arg for p in positional[len(positional) - len(a.defaults):]]
+    return out + [k.arg for k, d in zip(a.kwonlyargs, a.kw_defaults)
+                  if d is not None]
+
+
+def _calls():
+    """(callee last name, call node, innermost enclosing def) for every call,
+    and the names passed as values to some call."""
+    calls, values = [], set()
+
+    def visit(node, enclosing):
+        if isinstance(node, FUNCS + (ast.Lambda,)):
+            enclosing = node
+        if isinstance(node, ast.Call):
+            f = node.func
+            if isinstance(f, (ast.Name, ast.Attribute)):
+                calls.append((getattr(f, "id", None) or f.attr, node, enclosing))
+            for arg in node.args + [kw.value for kw in node.keywords]:
+                if isinstance(arg, (ast.Name, ast.Attribute)):
+                    values.add(getattr(arg, "id", None) or arg.attr)
+        for child in ast.iter_child_nodes(node):
+            visit(child, enclosing)
+
+    for path in _caller_files():
+        visit(_parse(path), None)
+    return calls, values
+
+
+def unused_params() -> list[str]:
+    """Every in-scope defaulted parameter that no call passes, as
+    ``file:function(param)``, once the forwarding passes settle."""
+    calls, values = _calls()
+    # Functions used as values are called by the engine, not the repository.
+    defs = [d for d in _defs() if _defaulted(d[2])
+            and (d[3] or d[1] not in values)]
+    by_name: dict[str, list] = {}
+    for d in defs:
+        by_name.setdefault(d[1], []).append(d)
+
+    removed: set = set()
+    while True:
+        passed = set()
+        for name, call, enclosing in calls:
+            def counts(arg):
+                return not (isinstance(arg, ast.Name) and enclosing is not None
+                            and (id(enclosing), arg.id) in removed)
+
+            for _, _, fn, bound in by_name.get(name, []):
+                a = fn.args
+                params = [p.arg for p in a.posonlyargs + a.args][bound:]
+                for i, arg in enumerate(call.args):
+                    if isinstance(arg, ast.Starred):
+                        passed.update((id(fn), p) for p in params[i:])
+                        break
+                    if i < len(params) and counts(arg):
+                        passed.add((id(fn), params[i]))
+                for kw in call.keywords:
+                    if kw.arg is None:
+                        passed.update((id(fn), p) for p in _defaulted(fn))
+                    elif counts(kw.value):
+                        passed.add((id(fn), kw.arg))
+        unused = [(where, fn, p) for where, _, fn, _ in defs
+                  for p in _defaulted(fn) if (id(fn), p) not in passed]
+        now = {(id(fn), p) for _, fn, p in unused}
+        if now == removed:
+            return [f"{where}({p})" for where, _, p in unused]
+        removed = now
+
+
+def test_every_defaulted_parameter_is_set_by_some_caller():
+    unused = unused_params()
+    assert not unused, (
+        f"{len(unused)} defaulted parameter(s) that no call passes; make "
+        "each a constant at its default:\n  " + "\n  ".join(unused))
+
+
+if __name__ == "__main__":
+    found = unused_params()
+    print("\n".join(found))
+    print(f"{len(found)} unused in {len({f.split('(')[0] for f in found})} "
+          f"functions, {len({f.split(':')[0] for f in found})} files",
+          file=sys.stderr)

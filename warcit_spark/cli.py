@@ -29,6 +29,7 @@ import tempfile
 from argparse import ArgumentParser
 
 from warcit_spark import __version__  # single version constant (warcinfo software field uses it too)
+from warcit_spark.operators.records import DEFAULT_INDEX_FILES
 
 logger = logging.getLogger("warcit_spark.cli")
 
@@ -73,7 +74,7 @@ def build_parser() -> ArgumentParser:
                         help="Charset for text/* types; cchardet/tika to detect")
     parser.add_argument("-q", "--quiet", action="store_true")
     parser.add_argument("-v", "--verbose", action="store_true")
-    parser.add_argument("--index-files", default="index.html,index.htm",
+    parser.add_argument("--index-files", default=",".join(DEFAULT_INDEX_FILES),
                         metavar="<FILENAME>[,...]",
                         help="Filenames treated as directory indexes (revisit records)")
     parser.add_argument("--mapfile", metavar="<FILENAME>",

@@ -26,6 +26,8 @@ from pyspark.sql import functions as F
 
 DEFAULT_MIME = "text/html"
 XHTML = "application/xhtml+xml"
+# bytes the magic sniff reads, as the reference does (warcit/warcit.py:28)
+SNIFF_BYTES = 2048
 
 
 def mimetypes_table() -> list[tuple[str, str]]:
@@ -126,8 +128,8 @@ def _utf8_boundary_trim(head: Column, full_len: int) -> Column:
     ).otherwise(head)
 
 
-def sniff_mime_expr(content: Column, buff_size: int = 2048) -> Column:
-    """Content-sniff MIME guess over the first ``buff_size`` bytes — the
+def sniff_mime_expr(content: Column) -> Column:
+    """Content-sniff MIME guess over the first ``SNIFF_BYTES`` bytes — the
     ``--use-magic magic`` method slot (warcit/warcit.py:28, 638-640).
 
     libmagic is not in this container, so this is a documented stand-in
@@ -136,7 +138,7 @@ def sniff_mime_expr(content: Column, buff_size: int = 2048) -> Column:
     guess when the method is 'magic') exactly mirror _guess_type.
     Pure expressions — the sniff happens JVM-side on the binary column.
     """
-    head = F.substring(content, 1, buff_size)
+    head = F.substring(content, 1, SNIFF_BYTES)
     head8 = F.substring(content, 1, 8)
     # binary->string cast wraps bytes without validating; try_validate_utf8
     # then yields NULL for non-UTF-8 heads instead of the ANSI
@@ -150,7 +152,7 @@ def sniff_mime_expr(content: Column, buff_size: int = 2048) -> Column:
         )
     )
     head_text = F.try_validate_utf8(
-        _utf8_boundary_trim(head, buff_size).cast("string")
+        _utf8_boundary_trim(head, SNIFF_BYTES).cast("string")
     )
     return (
         F.when(F.startswith(head8, F.lit(b"\x89PNG\r\n\x1a\n")), "image/png")

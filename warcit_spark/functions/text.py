@@ -48,9 +48,9 @@ def punct_ratio_expr(text: Column) -> Column:
     return F.when(n > 0, (n - stripped).cast("double") / n).otherwise(F.lit(0.0))
 
 
-def lang_id_expr(text: Column, threshold: float = 0.08) -> Column:
-    """Heuristic language ID: English-stopword density >= threshold -> 'en'."""
-    return F.when(stopword_ratio_expr(text) >= threshold, F.lit("en")).otherwise(
+def lang_id_expr(text: Column) -> Column:
+    """Heuristic language ID: English-stopword density >= 0.08 -> 'en'."""
+    return F.when(stopword_ratio_expr(text) >= 0.08, F.lit("en")).otherwise(
         F.lit("unknown")
     )
 
@@ -75,7 +75,7 @@ def fingerprint_expr(text: Column, nchars: int = 16) -> Column:
     return F.substring(F.md5(F.encode(normalized, "UTF-8")), 1, nchars)
 
 
-def xxhash64_py(data: bytes, seed: int = 42) -> int:
+def xxhash64_py(data: bytes) -> int:
     """Pure-Python XXH64, bit-for-bit equal to Spark's ``F.xxhash64`` on a
     string column (Spark hashes the UTF-8 bytes with seed 42 —
     catalyst XxHash64 / XXH64.hashUnsafeBytes).  Exists so external oracles
@@ -90,6 +90,7 @@ def xxhash64_py(data: bytes, seed: int = 42) -> int:
     P4 = 0x85EBCA77C2B2AE63
     P5 = 0x27D4EB2F165667C5
     M = (1 << 64) - 1
+    seed = 42
 
     def rotl(x: int, r: int) -> int:
         return ((x << r) | (x >> (64 - r))) & M
@@ -184,8 +185,6 @@ def repetition_ratio_expr(text: Column) -> Column:
 def tfidf_topk_terms(
     docs,
     k: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ):
     """Top-k most characteristic terms per document by tf·(N/df).
 
@@ -206,27 +205,27 @@ def tfidf_topk_terms(
     from pyspark.sql import DataFrame, Window  # local: keep module import-light
 
     terms = docs.select(
-        F.col(id_col), F.explode(words_expr(F.col(text_col))).alias("term")
+        F.col("doc_id"), F.explode(words_expr(F.col("text"))).alias("term")
     )
-    tf = terms.groupBy(id_col, "term").agg(F.count("*").alias("tf"))
+    tf = terms.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
     df_counts = (
-        terms.select(id_col, "term")
+        terms.select("doc_id", "term")
         .distinct()
         .groupBy("term")
         .agg(F.count("*").alias("df"))
     )
-    n_docs = docs.select(id_col).distinct().count()
+    n_docs = docs.select("doc_id").distinct().count()
     scored = tf.join(F.broadcast(df_counts), on="term").withColumn(
         "score",
         (F.col("tf") * F.lit(float(n_docs))) / F.col("df"),
     )
-    w = Window.partitionBy(id_col).orderBy(
+    w = Window.partitionBy("doc_id").orderBy(
         F.col("score").desc(), F.col("term").asc()
     )
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
-        .select(id_col, "rank", "term", F.round("score", 6).alias("score"))
+        .select("doc_id", "rank", "term", F.round("score", 6).alias("score"))
     )
 
 

@@ -11,9 +11,8 @@ Two implementations, one semantics:
   (time, right-first tiebreak).  One shuffle on (key), no row explosion,
   scales to arbitrarily many right rows per key.
 - :func:`asof_join_pandas`: grouped ``applyInPandas`` with
-  ``pandas.merge_asof`` per key group — the Arrow-vectorized fallback for
-  semantics the window form can't express (tolerance windows, nearest
-  rather than backward).
+  ``pandas.merge_asof`` per key group — the Arrow-vectorized twin of the
+  same backward semantics.
 
 Range join: :func:`range_join` buckets the range key so the theta join
 becomes an equi-join on (key, bucket) + a residual filter — the standard
@@ -32,16 +31,13 @@ def asof_join(
     on: str,
     by: str,
     right_cols: list[str] | None = None,
-    direction: str = "backward",
 ) -> DataFrame:
     """For each left row, attach the most recent right row with
-    ``right.on <= left.on`` (direction='backward') within the same ``by``
-    key.  Left rows with no prior right row get NULLs.
+    ``right.on <= left.on`` (backward as-of) within the same ``by`` key.
+    Left rows with no prior right row get NULLs.
 
     Output: all left columns + the requested right columns (NULL-filled).
     """
-    if direction != "backward":
-        raise NotImplementedError("only backward as-of is implemented")
     right_cols = right_cols or [c for c in right.columns if c not in (on, by)]
 
     l_tag = left.select(
@@ -84,7 +80,6 @@ def asof_join_pandas(
     on: str,
     by: str,
     right_cols: list[str] | None = None,
-    tolerance=None,
 ) -> DataFrame:
     """merge_asof per key group via applyInPandas (Arrow batches)."""
     import pandas as pd
@@ -118,7 +113,6 @@ def asof_join_pandas(
             rpdf.drop(columns=[by]),
             on=on,
             direction="backward",
-            tolerance=tolerance,
             suffixes=("", "_r"),
         )
         return merged[l_cols + right_cols]

@@ -33,9 +33,9 @@ from pyspark.sql import functions as F
 END_OF_WORD = "</w>"
 
 
-def _word_counts(docs: DataFrame, text_col: str) -> DataFrame:
+def _word_counts(docs: DataFrame) -> DataFrame:
     words = F.filter(
-        F.split(F.lower(F.col(text_col)), "[^a-z]+"), lambda w: w != F.lit("")
+        F.split(F.lower(F.col("text")), "[^a-z]+"), lambda w: w != F.lit("")
     )
     return (
         docs.select(F.explode(words).alias("word"))
@@ -72,7 +72,7 @@ def _fuse_expr() -> F.Column:
 
 
 def bpe_train_merges(
-    docs: DataFrame, text_col: str = "text", n_merges: int = 8
+    docs: DataFrame, n_merges: int = 8
 ) -> DataFrame:
     """Learn ``n_merges`` BPE merges; returns one row per merge:
     ``(step, sym_left, sym_right, pair_count)`` with ``step`` starting
@@ -87,7 +87,7 @@ def bpe_train_merges(
     if n_merges < 1:
         raise ValueError("n_merges must be >= 1")
     vocab = (
-        _word_counts(docs, text_col)
+        _word_counts(docs)
         .select("word", "cnt", _initial_symbols().alias("syms"))
         .localCheckpoint(eager=True)
     )
@@ -194,11 +194,10 @@ def bpe_encode(
     docs: DataFrame,
     merges: DataFrame,
     text_col: str = "text",
-    out_col: str = "bpe_tokens",
 ) -> DataFrame:
     """Apply learned merges (the ``bpe_train_merges`` output) to encode
     each document into BPE tokens — train AND apply, the full tokenizer
-    loop.  Adds ``out_col: array<string>``; grain preserved.
+    loop.  Adds ``bpe_tokens: array<string>``; grain preserved.
 
     Scale shape: the merge table is a TOKENIZER ARTIFACT (10^4-10^5
     rows), collected once onto the driver and shipped inside the
@@ -224,7 +223,7 @@ def bpe_encode(
     import re as _re
 
     fields = docs.schema.fieldNames()
-    out_schema = docs.schema.simpleString()[7:-1] + f",{out_col}:array<string>"
+    out_schema = docs.schema.simpleString()[7:-1] + ",bpe_tokens:array<string>"
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         memo: dict = {}
@@ -242,7 +241,7 @@ def bpe_encode(
 
         for pdf in batches:
             pdf = pdf.copy()
-            pdf[out_col] = pdf[text_col].map(enc)
+            pdf["bpe_tokens"] = pdf[text_col].map(enc)
             yield pdf
 
     return docs.mapInPandas(fn, out_schema)

@@ -27,9 +27,8 @@ def _real_detector():
     """Import-gated reference-grade detector (cchardet, else chardet —
     both expose ``detect(bytes) -> {'encoding': ...}``).  Returns None in
     environments without either, in which case the deterministic heuristic
-    below runs — same gate pattern as lxml in operators/links.py, so a
-    non-sandbox deployment gets warcit.py:670-684 detection without code
-    changes."""
+    below runs, so a deployment with either library installed gets
+    warcit.py:670-684 detection without code changes."""
     try:
         import cchardet  # noqa: import-gated; absent in sandbox
 

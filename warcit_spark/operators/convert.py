@@ -37,8 +37,6 @@ def dispatch_conversions(
     files: DataFrame,
     file_types: list[dict],
     output_dir: str,
-    url_col: str = "url",
-    filename_col: str = "filename",
     root_dir: str = "",
 ) -> DataFrame:
     """Plan one row per (file x applicable rule).
@@ -49,10 +47,10 @@ def dispatch_conversions(
     per_type_rules = []
     for ft in file_types:
         if "ext" in ft:
-            matched = F.col(url_col).endswith(ft["ext"])
+            matched = F.col("url").endswith(ft["ext"])
         elif "regex" in ft:
             # Python re.match anchors at the start; rlike does not
-            matched = F.col(url_col).rlike("^(?:" + ft["regex"] + ")")
+            matched = F.col("url").rlike("^(?:" + ft["regex"] + ")")
         else:
             continue
         rules = [
@@ -83,8 +81,8 @@ def dispatch_conversions(
     # file_types — the reference's iteration order (converter.py:137-151),
     # carried as ``seq`` so downstream record emission is file-ordered
     exploded = files.select(
-        F.col(url_col).alias("url"),
-        F.col(filename_col).alias("filename"),
+        "url",
+        "filename",
         F.posexplode(all_rules).alias("seq", "rule"),
     )
 

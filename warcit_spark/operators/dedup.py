@@ -27,18 +27,23 @@ from pyspark.sql import functions as F
 
 from warcit_spark.functions.text import fingerprint_expr
 
+# banded MinHash LSH: 32 murmur3 seeds over word 3-shingles, 16 bands of 2
+MINHASH_N_HASHES = 32
+MINHASH_BANDS = 16
+MINHASH_SHINGLE_K = 3
+
 
 # ---------------------------------------------------------------- exact dedup
 def exact_dedup(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
+    df: DataFrame
 ) -> DataFrame:
     """Keep the lowest-id representative per normalized-content fingerprint."""
-    fp = fingerprint_expr(F.col(text_col), 32)
+    fp = fingerprint_expr(F.col("text"), 32)
     return (
         df.withColumn("_fp", fp)
         .groupBy("_fp")
         .agg(
-            F.min(id_col).alias(id_col),
+            F.min("doc_id").alias("doc_id"),
             F.count("*").alias("dup_count"),
         )
         .drop("_fp")
@@ -62,7 +67,7 @@ def jaccard_expr(a: Column, b: Column) -> Column:
 
 
 # -------------------------------------------------------------------- minhash
-def minhash_signature_expr(shingles: Column, n_hashes: int = 32) -> Column:
+def minhash_signature_expr(shingles: Column) -> Column:
     """MinHash signature: per seed i, min over shingles of murmur3(shingle, i).
 
     ``F.hash(col, lit(i))`` is Spark's murmur3_x86_32 with the extra column
@@ -74,7 +79,7 @@ def minhash_signature_expr(shingles: Column, n_hashes: int = 32) -> Column:
     seed would silently become the array index.
     """
 
-    # NB: keep the n_hashes subtrees unrolled — the tree-compact
+    # NB: keep the MINHASH_N_HASHES subtrees unrolled — the tree-compact
     # transform(sequence(0,n-1), i -> array_min(transform(shingles, s ->
     # hash(s, i)))) form produces identical values but the NESTED lambda
     # drops the whole projection out of codegen into interpreted eval
@@ -83,35 +88,34 @@ def minhash_signature_expr(shingles: Column, n_hashes: int = 32) -> Column:
         return lambda s: F.hash(s, F.lit(i))
 
     return F.array(
-        *[F.array_min(F.transform(shingles, seeded(i))) for i in range(n_hashes)]
+        *[
+            F.array_min(F.transform(shingles, seeded(i)))
+            for i in range(MINHASH_N_HASHES)
+        ]
     )
 
 
 def minhash_lsh_dedup(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_hashes: int = 32,
-    bands: int = 16,
-    shingle_k: int = 3,
     jaccard_threshold: float = 0.8,
 ) -> DataFrame:
     """Near-duplicate PAIRS via banded MinHash LSH, verified with exact
     shingle Jaccard.  Returns (doc_id_a, doc_id_b, jaccard) with a < b.
 
-    rows-per-band = n_hashes / bands; the usual S-curve: with 32 hashes and
-    8 bands (4 rows/band) the 0.8-Jaccard detection probability is ~0.97.
+    rows-per-band = MINHASH_N_HASHES / MINHASH_BANDS = 2; on the usual
+    S-curve a 0.8-Jaccard pair becomes a candidate with probability
+    1 - (1 - 0.8**2)**16 > 0.9999.
 
-    Precondition: ``id_col`` is unique.  The verify side joins candidate
+    Precondition: ``doc_id`` is unique.  The verify side joins candidate
     ids back to every input row, so a duplicate id whose text is NULL
     attaches a NULL shingle array and its pair drops silently.
     """
-    assert n_hashes % bands == 0
-    rows_per_band = n_hashes // bands
+    bands = MINHASH_BANDS
+    rows_per_band = MINHASH_N_HASHES // bands
 
     docs_raw = df.select(
-        F.col(id_col).alias("id"),
-        word_shingles_expr(F.col(text_col), shingle_k).alias("shingles"),
+        F.col("doc_id").alias("id"),
+        word_shingles_expr(F.col("text"), MINHASH_SHINGLE_K).alias("shingles"),
     )
     # ``size(shingles) > 0`` is exactly ``text IS NOT NULL``: null text
     # propagates to a null array (filtered), and any non-null text yields
@@ -121,11 +125,11 @@ def minhash_lsh_dedup(
     # predicate.  The verify sides join on candidate ids — all of which
     # passed this filter on the band side — so they read docs_raw and need
     # no filter at all.
-    docs = df.where(F.col(text_col).isNotNull()).select(
-        F.col(id_col).alias("id"),
-        word_shingles_expr(F.col(text_col), shingle_k).alias("shingles"),
+    docs = df.where(F.col("text").isNotNull()).select(
+        F.col("doc_id").alias("id"),
+        word_shingles_expr(F.col("text"), MINHASH_SHINGLE_K).alias("shingles"),
     )
-    sigs = docs.withColumn("sig", minhash_signature_expr(F.col("shingles"), n_hashes))
+    sigs = docs.withColumn("sig", minhash_signature_expr(F.col("shingles")))
 
     # Band entries carry ONLY (id, band_idx, band_hash): the candidate
     # shuffle moves 3 fixed-width columns, never the shingle arrays (which
@@ -216,15 +220,15 @@ def _simhash_batch(hash_arrays: pd.Series, nbits: int = 64) -> pd.Series:
     return pd.Series(out)
 
 
-def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def simhash(df: DataFrame) -> DataFrame:
     """(id, simhash) — token hashing on the JVM (xxhash64 inside a
     higher-order transform), bit-voting vectorized in numpy per batch."""
     words = F.filter(
-        F.split(F.lower(F.col(text_col)), "[^a-z0-9]+"), lambda w: w != F.lit("")
+        F.split(F.lower(F.col("text")), "[^a-z0-9]+"), lambda w: w != F.lit("")
     )
     token_hashes = F.transform(words, lambda w: F.xxhash64(w))
     hashed = df.select(
-        F.col(id_col).alias("id"), token_hashes.alias("_th")
+        F.col("doc_id").alias("id"), token_hashes.alias("_th")
     )
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -238,8 +242,6 @@ def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> Da
 
 def simhash_near_dups(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     max_hamming: int = 3,
 ) -> DataFrame:
     """Near-dup pairs by SimHash Hamming distance <= max_hamming.
@@ -248,7 +250,7 @@ def simhash_near_dups(
     Hamming<=3 of 64 bits shares at least one exact 16-bit quarter), join
     per block, verify with popcount — never O(n^2).
     """
-    sh = simhash(df, text_col, id_col)
+    sh = simhash(df)
     quarters = sh.select(
         "id",
         "simhash",
@@ -292,8 +294,6 @@ def simhash_near_dups(
 # ------------------------------------------------------------- ngram jaccard
 def ngram_jaccard_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     k: int = 3,
     threshold: float = 0.5,
     df_max: int | None = None,
@@ -324,13 +324,13 @@ def ngram_jaccard_pairs(
     (:class:`~pyspark.sql.Observation`) whose ``excluded_shingles`` metric
     is computed during the caller's action — recall loss is never silent.
 
-    Precondition: ``id_col`` is unique.  The verify sides join candidate
+    Precondition: ``doc_id`` is unique.  The verify sides join candidate
     ids back to every input row, so a duplicate id whose text is NULL
     attaches a NULL shingle array and its pair drops silently.
     """
     docs_raw = df.select(
-        F.col(id_col).alias("id"),
-        word_shingles_expr(F.col(text_col), k).alias("shingles"),
+        F.col("doc_id").alias("id"),
+        word_shingles_expr(F.col("text"), k).alias("shingles"),
     )
     # explode drops empty arrays on its own; the verify sides of the
     # df_max path join on candidate ids, so neither needs the emptiness
@@ -479,9 +479,6 @@ def decontaminate(
     train: DataFrame,
     benchmark: DataFrame,
     n: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    broadcast_benchmark: bool = True,
 ) -> DataFrame:
     """(id, contaminated) — benchmark decontamination for training corpora:
     a training document is contaminated iff it shares ANY n-word shingle
@@ -494,31 +491,29 @@ def decontaminate(
     (:func:`word_shingles_expr`, row-local, scan-pushable).  Eval sets are
     tiny next to a 10^9-doc training corpus, so the benchmark shingle set
     broadcasts into a LEFT SEMI join — the train side never shuffles, one
-    scan + hash probe per partition.  ``broadcast_benchmark=False`` flips
-    to a shuffled semi-join on the shingle for oversized eval sets (still
-    one O(|shingles|) exchange, never a pair blowup).  Empty-word shingles
-    are dropped on both sides so blank documents can never contaminate.
+    scan + hash probe per partition.  Empty-word shingles are dropped on
+    both sides so blank documents can never contaminate.
     """
     t_sh = train.select(
-        F.col(id_col),
-        F.explode(word_shingles_expr(F.col(text_col), n)).alias("_sh"),
+        F.col("doc_id"),
+        F.explode(word_shingles_expr(F.col("text"), n)).alias("_sh"),
     ).where(F.col("_sh") != "")
     b_sh = (
         benchmark.select(
-            F.explode(word_shingles_expr(F.col(text_col), n)).alias("_sh")
+            F.explode(word_shingles_expr(F.col("text"), n)).alias("_sh")
         )
         .where(F.col("_sh") != "")
         .distinct()
     )
-    if broadcast_benchmark:
-        b_sh = F.broadcast(b_sh)
     hits = (
-        t_sh.join(b_sh, on="_sh", how="left_semi").select(id_col).distinct()
+        t_sh.join(F.broadcast(b_sh), on="_sh", how="left_semi")
+        .select("doc_id")
+        .distinct()
     )
-    return train.select(id_col).join(
-        hits.withColumn("_hit", F.lit(True)), on=id_col, how="left"
+    return train.select("doc_id").join(
+        hits.withColumn("_hit", F.lit(True)), on="doc_id", how="left"
     ).select(
-        id_col, F.coalesce(F.col("_hit"), F.lit(False)).alias("contaminated")
+        "doc_id", F.coalesce(F.col("_hit"), F.lit(False)).alias("contaminated")
     )
 
 
@@ -526,16 +521,12 @@ def decontaminate(
 def line_dedup(
     docs: DataFrame,
     min_df: int = 2,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    delim: str = "\n",
-    broadcast_dups: bool = False,
 ) -> DataFrame:
     """(id, text_clean, lines_kept, lines_removed) — corpus-wide duplicated-
     line removal, the C4 / RefinedWeb boilerplate rule: a line is dropped
     from EVERY document when its normalized form (``trim``) occurs in at
     least ``min_df`` distinct documents; blank lines are always dropped.
-    Surviving lines are re-joined by ``delim`` in original order.  No
+    Surviving lines are re-joined by newlines in original order.  No
     reference analog (the reference never inspects text,
     /root/reference/warcit/warcit.py) — engine training-data surface.
 
@@ -544,19 +535,15 @@ def line_dedup(
     agg absorbs within-doc repeats of a hot line before the exchange) then
     ``count >= min_df``; (2) one join of lines against that dim (hot
     boilerplate lines are exactly the dim's keys, so AQE skew-split
-    applies; ``broadcast_dups=True`` removes the shuffle when the dim is
-    known small); (3) one groupBy(id) rebuilding each document —
+    applies); (3) one groupBy(id) rebuilding each document —
     ``collect_list`` here is per-DOCUMENT (bounded by document size, the
     same bound a parse already needs), never per-line-key, so no hot-key
     neighborhood ever materializes in one task.
     """
-    import re as _re
-
-    pat = _re.escape(delim)
     lines = (
         docs.select(
-            F.col(id_col),
-            F.posexplode(F.split(F.col(text_col), pat, -1)).alias(
+            F.col("doc_id"),
+            F.posexplode(F.split(F.col("text"), "\n", -1)).alias(
                 "_pos", "_line"
             ),
         )
@@ -564,17 +551,15 @@ def line_dedup(
         .where(F.col("_norm") != "")
     )
     dup = (
-        lines.select("_norm", id_col)
-        .dropDuplicates(["_norm", id_col])
+        lines.select("_norm", "doc_id")
+        .dropDuplicates(["_norm", "doc_id"])
         .groupBy("_norm")
         .count()
         .where(F.col("count") >= min_df)
         .select("_norm", F.lit(True).alias("_dup"))
     )
-    if broadcast_dups:
-        dup = F.broadcast(dup)
     marked = lines.join(dup, on="_norm", how="left")
-    per_doc = marked.groupBy(id_col).agg(
+    per_doc = marked.groupBy("doc_id").agg(
         F.array_join(
             F.transform(
                 F.filter(
@@ -585,13 +570,13 @@ def line_dedup(
                 ),
                 lambda s: s["_line"],
             ),
-            delim,
+            "\n",
         ).alias("_clean"),
         F.sum(F.when(F.col("_dup"), 1).otherwise(0)).alias("_removed"),
         F.count(F.lit(1)).alias("_n"),
     )
-    return docs.select(id_col).join(per_doc, on=id_col, how="left").select(
-        id_col,
+    return docs.select("doc_id").join(per_doc, on="doc_id", how="left").select(
+        "doc_id",
         F.coalesce(F.col("_clean"), F.lit("")).alias("text_clean"),
         (F.coalesce(F.col("_n"), F.lit(0)) - F.coalesce(F.col("_removed"), F.lit(0)))
         .cast("int")
@@ -604,8 +589,6 @@ def exact_substring_spans(
     docs: DataFrame,
     k: int = 8,
     min_count: int = 2,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """ExactSubstr-style duplicated-span detection (Lee et al. 2022,
     "Deduplicating Training Data Makes Language Models Better": drop any
@@ -618,7 +601,7 @@ def exact_substring_spans(
     span; per document, overlapping or adjacent anchors merge into
     maximal spans (gaps-and-islands over a running max of span ends).
 
-    Returns one row per merged span: (id_col, span_start, span_end,
+    Returns one row per merged span: (doc_id, span_start, span_end,
     span_words, n_anchors) with 1-based inclusive word positions.
 
     Scale shape: one shuffle keyed by the shingle string for the
@@ -630,7 +613,7 @@ def exact_substring_spans(
     driver state.
     """
     ws = F.filter(
-        F.split(F.lower(F.col(text_col)), "[^a-z0-9]+"), lambda w: w != F.lit("")
+        F.split(F.lower(F.col("text")), "[^a-z0-9]+"), lambda w: w != F.lit("")
     )
     n = F.size(ws)
     sh = F.when(
@@ -642,8 +625,8 @@ def exact_substring_spans(
             ),
         ),
     ).otherwise(F.array().cast("array<struct<pos:int,s:string>>"))
-    rows = docs.select(F.col(id_col), F.explode(sh).alias("_a")).select(
-        id_col, F.col("_a.pos").alias("pos"), F.col("_a.s").alias("s")
+    rows = docs.select(F.col("doc_id"), F.explode(sh).alias("_a")).select(
+        "doc_id", F.col("_a.pos").alias("pos"), F.col("_a.s").alias("s")
     )
     dup = (
         rows.groupBy("s")
@@ -654,25 +637,25 @@ def exact_substring_spans(
     hits = rows.join(dup, on="s", how="left_semi")
 
     w_prev = (
-        Window.partitionBy(id_col)
+        Window.partitionBy("doc_id")
         .orderBy("pos")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
-    w_run = Window.partitionBy(id_col).orderBy("pos")
+    w_run = Window.partitionBy("doc_id").orderBy("pos")
     prev_end = F.max(F.col("pos") + (k - 1)).over(w_prev)
     new_island = F.when(
         prev_end.isNull() | (F.col("pos") > prev_end + 1), 1
     ).otherwise(0)
     islands = hits.withColumn("_isl", F.sum(new_island).over(w_run))
     return (
-        islands.groupBy(id_col, "_isl")
+        islands.groupBy("doc_id", "_isl")
         .agg(
             F.min("pos").alias("span_start"),
             (F.max("pos") + (k - 1)).alias("span_end"),
             F.count(F.lit(1)).alias("n_anchors"),
         )
         .select(
-            id_col,
+            "doc_id",
             "span_start",
             "span_end",
             (F.col("span_end") - F.col("span_start") + 1).alias("span_words"),

@@ -40,19 +40,17 @@ from warcit_spark.functions.text import words_expr
 def dsir_weights(
     docs: DataFrame,
     is_target: Column,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     n_buckets: int | None = None,
 ) -> DataFrame:
     """Per-document DSIR importance log-ratios.
 
     Returns every document of ``docs`` (target docs score themselves
     too — useful for sanity: they should land high) with
-    (id_col, n_words, dsir_logratio), log-ratio rounded to 6 decimals,
+    (doc_id, n_words, dsir_logratio), log-ratio rounded to 6 decimals,
     documents with zero feature words excluded.
     """
-    feat = F.explode(words_expr(F.col(text_col))).alias("w")
-    rows = docs.select(F.col(id_col), is_target.alias("_t"), feat)
+    feat = F.explode(words_expr(F.col("text"))).alias("w")
+    rows = docs.select(F.col("doc_id"), is_target.alias("_t"), feat)
     if n_buckets is not None:
         rows = rows.withColumn(
             "w", F.pmod(F.xxhash64("w"), F.lit(n_buckets)).cast("string")
@@ -77,7 +75,7 @@ def dsir_weights(
 
     return (
         rows.join(F.broadcast(model), on="w")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).cast("int").alias("n_words"),
             F.round(F.avg("_lr"), 6).alias("dsir_logratio"),
@@ -89,9 +87,6 @@ def dsir_select(
     docs: DataFrame,
     is_target: Column,
     keep_frac: float,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_buckets: int | None = None,
 ) -> DataFrame:
     """Top-``keep_frac`` of the RAW documents by importance weight —
     the deterministic top-k reading of DSIR's resampling step (the
@@ -101,9 +96,9 @@ def dsir_select(
     (swap approx_percentile at 100 TB), then a scan-pushable filter."""
     if not 0.0 < keep_frac <= 1.0:
         raise ValueError(f"keep_frac must be in (0, 1], got {keep_frac}")
-    scored = dsir_weights(docs, is_target, text_col, id_col, n_buckets)
+    scored = dsir_weights(docs, is_target)
     raw = scored.join(
-        docs.where(~is_target).select(id_col), on=id_col, how="left_semi"
+        docs.where(~is_target).select("doc_id"), on="doc_id", how="left_semi"
     )
     thr = raw.agg(
         F.percentile("dsir_logratio", F.lit(1.0 - keep_frac)).alias("_thr")
@@ -111,5 +106,5 @@ def dsir_select(
     return (
         raw.crossJoin(F.broadcast(thr))
         .where(F.col("dsir_logratio") >= F.col("_thr"))
-        .select(id_col, "n_words", "dsir_logratio")
+        .select("doc_id", "n_words", "dsir_logratio")
     )

@@ -31,6 +31,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# large/small-star alternations before connected_components gives up
+CC_MAX_ITER = 20
+
 
 def _large_star(edges: DataFrame) -> DataFrame:
     """One large-star pass: (v, m(u)) for every center u and neighbor
@@ -67,12 +70,7 @@ def _small_star(edges: DataFrame) -> DataFrame:
     )
 
 
-def connected_components(
-    edges: DataFrame,
-    src_col: str = "src",
-    dst_col: str = "dst",
-    max_iter: int = 20,
-) -> DataFrame:
+def connected_components(edges: DataFrame) -> DataFrame:
     """(node, component) for every node in ``edges``; component = the
     minimum node id of its connected component (minimum under the id
     type's natural ordering — longs, strings, and any orderable Spark
@@ -85,7 +83,7 @@ def connected_components(
 
     The loop ends when a further large-star pass is a no-op (the edge set
     is a star graph: every node points at its component minimum).  Raises
-    after ``max_iter`` — convergence is O(log² n) alternations, so a
+    after ``CC_MAX_ITER`` alternations — convergence is O(log² n) alternations, so a
     non-converged graph signals pathological input.
     """
     # ids keep their native type — any orderable type works (the labels
@@ -93,7 +91,7 @@ def connected_components(
     # here would ANSI-crash or NULL-out string doc ids from the dedup
     # operators this feeds
     e = (
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
+        edges.select("src", "dst")
         .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
         .where(F.col("src") != F.col("dst"))
         .distinct()
@@ -105,7 +103,7 @@ def connected_components(
     # analyzing it long before the data is big (the classic iterative-
     # DataFrame pitfall; persist alone does not cut the logical plan)
     e = e.localCheckpoint(eager=True)
-    for _ in range(max_iter):
+    for _ in range(CC_MAX_ITER):
         stepped = _small_star(_large_star(e)).localCheckpoint(eager=True)
         # converged iff the alternation is a no-op (set equality with the
         # previous edge set).  NB a large-star-only probe is NOT enough:
@@ -131,7 +129,7 @@ def connected_components(
             break
     else:
         raise RuntimeError(
-            f"connected_components did not converge in {max_iter} iterations"
+            f"connected_components did not converge in {CC_MAX_ITER} iterations"
         )
 
     # star graph: every edge is node -> component minimum; the minimum
@@ -143,18 +141,12 @@ def connected_components(
     return comps.unionByName(roots).distinct()
 
 
-def dup_clusters(
-    pairs: DataFrame,
-    id_a: str = "doc_id_a",
-    id_b: str = "doc_id_b",
-    max_iter: int = 20,
-) -> DataFrame:
+def dup_clusters(pairs: DataFrame) -> DataFrame:
     """Near-dup pairs -> (doc_id, cluster) with cluster = min doc id of
     the dup group — the keep-one-representative assignment
     (``doc_id == cluster`` rows are the keepers)."""
     cc = connected_components(
-        pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst")),
-        max_iter=max_iter,
+        pairs.select(F.col("doc_id_a").alias("src"), F.col("doc_id_b").alias("dst"))
     )
     return cc.select(
         F.col("node").alias("doc_id"), F.col("component").alias("cluster")
@@ -165,8 +157,6 @@ def pagerank(
     edges: DataFrame,
     iters: int = 3,
     damping: float = 0.85,
-    src_col: str = "src",
-    dst_col: str = "dst",
 ) -> DataFrame:
     """Power-iteration PageRank over a directed edge list — the
     host/page authority score a crawl frontier prioritizes by (the
@@ -193,7 +183,7 @@ def pagerank(
     Returns (node, rank) with rank rounded to 9 decimals.
     """
     e = (
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
+        edges.select("src", "dst")
         .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
         .where(F.col("src") != F.col("dst"))
         .distinct()
@@ -241,7 +231,7 @@ def pagerank(
 
 
 def degree_stats(
-    edges: DataFrame, src_col: str = "src", dst_col: str = "dst"
+    edges: DataFrame
 ) -> DataFrame:
     """First-order link-graph features per node — out-degree, in-degree,
     and link reciprocity — the cheap signals a crawl prioritizer and a
@@ -255,7 +245,7 @@ def degree_stats(
     id, no window, no collect.  Output grain: one row per node.
     """
     e = (
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
+        edges.select("src", "dst")
         .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
         .where(F.col("src") != F.col("dst"))
         .distinct()
@@ -297,8 +287,6 @@ def degree_stats(
 def hits(
     edges: DataFrame,
     iters: int = 2,
-    src_col: str = "src",
-    dst_col: str = "dst",
 ) -> DataFrame:
     """HITS hubs-and-authorities (Kleinberg 1999) over a directed edge
     list — the classic complement to PageRank for crawl seeding: high-hub
@@ -321,7 +309,7 @@ def hits(
     Returns (node, hub, auth) rounded to 9 decimals.
     """
     e = (
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
+        edges.select("src", "dst")
         .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
         .where(F.col("src") != F.col("dst"))
         .distinct()

@@ -28,20 +28,18 @@ from pyspark.sql import functions as F
 
 def host_quality_shrunk(
     docs: DataFrame,
-    host_col: str = "host",
-    score_col: str = "quality",
     prior_weight: float = 25.0,
 ) -> DataFrame:
     """Per-host doc count, raw mean score, and shrunk mean score.
 
-    ``score_col`` must be pre-rounded to <= 6 decimals (every engine
+    ``quality`` must be pre-rounded to <= 6 decimals (every engine
     score expr is — quality_score_expr etc.); it is summed as
     DECIMAL(18,6), so the aggregate is exact and deterministic.
     Returns (host, n_docs, mean_quality, shrunk_quality), the latter two
     rounded to 6 decimals.
     """
-    q = F.col(score_col).cast("decimal(18,6)")
-    per = docs.groupBy(F.col(host_col).alias("host")).agg(
+    q = F.col("quality").cast("decimal(18,6)")
+    per = docs.groupBy("host").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum(q).alias("_sum_q"),
     )

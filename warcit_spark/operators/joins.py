@@ -27,7 +27,6 @@ class MapfileUniquenessError(RuntimeError):
 def mapfile_suffix_join(
     files: DataFrame,
     mapfile: DataFrame,
-    filename_col: str = "filename",
 ) -> DataFrame:
     """J1: left suffix-lookup of files against the mapfile, first match
     (mapfile order) wins.
@@ -59,7 +58,7 @@ def mapfile_suffix_join(
         (F.col("timestamp") if "timestamp" in cols else null_s).cast("string").alias("_mf_ts"),
         (F.col("Content-Type") if "Content-Type" in cols else null_s).cast("string").alias("_mf_ct"),
     )
-    fname = F.col(filename_col)
+    fname = F.col("filename")
     matches = (
         files.select(fname.alias("_fname"))
         .distinct()

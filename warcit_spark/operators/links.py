@@ -68,18 +68,16 @@ def hrefs_expr(html_col: Column) -> Column:
 
 def resolve_hrefs(
     pages: DataFrame,
-    hrefs_col: str = "_hrefs",
-    url_col: str = "url",
     carry: tuple[str, ...] = ("priority",),
 ) -> DataFrame:
     """(url, *carry, link) from a PRE-computed ``array<string>`` hrefs
     column (see :func:`hrefs_expr`) — explode + resolve, pure JVM, the
     parent parsed once per page (:func:`_parent_parts`)."""
     exploded = pages.select(
-        F.col(url_col).alias("url"),
+        "url",
         *[F.col(c) for c in carry],
-        *_parent_parts(F.col(url_col)),
-        F.explode(F.col(hrefs_col)).alias("_href"),
+        *_parent_parts(F.col("url")),
+        F.explode(F.col("_hrefs")).alias("_href"),
     )
     return exploded.select(
         "url", *carry, _resolve_href(F.col("_href")).alias("link")
@@ -88,15 +86,13 @@ def resolve_hrefs(
 
 def extract_links(
     pages: DataFrame,
-    html_col: str = "html",
-    url_col: str = "url",
     carry: tuple[str, ...] = ("priority",),
 ) -> DataFrame:
     """(url, *carry, link) — one row per resolved outlink.  Pure JVM."""
     with_hrefs = pages.select(
-        F.col(url_col).alias("url"),
+        "url",
         *[F.col(c) for c in carry],
-        hrefs_expr(F.col(html_col)).alias("_hrefs"),
+        hrefs_expr(F.col("html")).alias("_hrefs"),
     )
     return resolve_hrefs(with_hrefs, carry=carry)
 
@@ -110,8 +106,6 @@ ANCHOR_PATTERN = r'<a\s[^>]*href="([^"]*)"[^>]*>([^<]*)</a>'
 
 def anchor_text_agg(
     pages: DataFrame,
-    html_col: str = "html",
-    url_col: str = "url",
 ) -> DataFrame:
     """Aggregate anchor text per TARGET url — the WAT-style inlink
     feature search and LLM pipelines mine (anchor text describes the
@@ -133,13 +127,13 @@ def anchor_text_agg(
     """
     from warcit_spark.functions.urls import canonicalize_url_expr
 
-    html_txt = F.decode(F.col(html_col), "UTF-8")
+    html_txt = F.decode(F.col("html"), "UTF-8")
     pairs = F.arrays_zip(
         F.regexp_extract_all(html_txt, F.lit(ANCHOR_PATTERN), 1).alias("href"),
         F.regexp_extract_all(html_txt, F.lit(ANCHOR_PATTERN), 2).alias("text"),
     )
     exploded = pages.select(
-        *_parent_parts(F.col(url_col)), F.explode(pairs).alias("_p")
+        *_parent_parts(F.col("url")), F.explode(pairs).alias("_p")
     ).select(
         canonicalize_url_expr(_resolve_href(F.col("_p")["href"])).alias(
             "target_url"

@@ -33,8 +33,8 @@ from pyspark.sql import Column, DataFrame, functions as F
 
 # A char-bigram model has at most V^2 rows; guard the driver collect the
 # same way similarity.KMEANS_MAX_KDIM guards the codebook.  256^2 covers
-# full Latin-1; anything larger (CJK charsets) should train a hashed
-# model instead (documented alternative, not needed for webtext).
+# full Latin-1; a larger charset (CJK) raises rather than ship a map
+# literal too large for every task's closure.
 LM_MAX_MODEL_ROWS = 65536
 
 
@@ -50,42 +50,34 @@ def char_bigrams_expr(text: Column) -> Column:
     ).otherwise(F.array().cast("array<string>"))
 
 
-def char_bigram_model(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def char_bigram_model(docs: DataFrame) -> DataFrame:
     """Corpus-wide bigram counts: one map-side-combined shuffle over at
     most V^2 keys.  Returns (bg string, c long)."""
     return (
-        docs.select(F.explode(char_bigrams_expr(F.col(text_col))).alias("bg"))
+        docs.select(F.explode(char_bigrams_expr(F.col("text"))).alias("bg"))
         .groupBy("bg")
         .agg(F.count(F.lit(1)).alias("c"))
     )
 
 
-def lm_perplexity(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    model: DataFrame | None = None,
-) -> DataFrame:
-    """Per-document bits-per-bigram perplexity under the (self-)trained
+def lm_perplexity(docs: DataFrame) -> DataFrame:
+    """Per-document bits-per-bigram perplexity under the self-trained
     Laplace-smoothed char-bigram LM:
 
         P(c2 | c1) = (count(c1c2) + 1) / (total(c1) + V)
 
     with V = number of distinct characters participating in any model
-    bigram.  Returns (id_col, n_bigrams, ppl) for documents with at
+    bigram.  Returns (doc_id, n_bigrams, ppl) for documents with at
     least one bigram; ``ppl = 2 ** (-mean log2 P)``, rounded to 6
-    decimals (cross-engine double noise is ~1e-14).
-
-    Unseen bigrams (only possible with an external ``model``) back off
-    to the smoothed unseen mass of their prefix, then to ``1/V``.
+    decimals (cross-engine double noise is ~1e-14).  The model is trained
+    on ``docs`` itself, so every scored bigram is in it.
     """
-    if model is None:
-        model = char_bigram_model(docs, text_col)
-    rows = model.collect()
+    rows = char_bigram_model(docs).collect()
     if len(rows) > LM_MAX_MODEL_ROWS:
         raise ValueError(
             f"bigram model has {len(rows)} rows > LM_MAX_MODEL_ROWS="
-            f"{LM_MAX_MODEL_ROWS}; train a hashed-feature model instead"
+            f"{LM_MAX_MODEL_ROWS}: the corpus uses more than 256 distinct "
+            "characters, which this char-bigram scorer does not support"
         )
     counts = {r["bg"]: r["c"] for r in rows}
     totals: dict[str, int] = {}
@@ -105,8 +97,6 @@ def lm_perplexity(
         nested.setdefault(bg[:1], {})[bg[1:2]] = math.log2(
             (c + 1.0) / (totals[bg[:1]] + v)
         )
-    unseen = {ch: math.log2(1.0 / (tot + v)) for ch, tot in totals.items()}
-
     logp_map = F.create_map(
         *[
             x
@@ -117,26 +107,19 @@ def lm_perplexity(
             )
         ]
     )
-    unseen_map = F.create_map(
-        *[F.lit(x) for kv in unseen.items() for x in kv]
-    )
-    bgs = char_bigrams_expr(F.col(text_col))
+    bgs = char_bigrams_expr(F.col("text"))
     s = F.aggregate(
         bgs,
         F.lit(0.0),
         lambda acc, b: acc
-        + F.coalesce(
-            logp_map[F.substr(b, F.lit(1), F.lit(1))][
-                F.substr(b, F.lit(2), F.lit(1))
-            ],
-            unseen_map[F.substr(b, F.lit(1), F.lit(1))],
-            F.lit(math.log2(1.0 / v)),
-        ),
+        + logp_map[F.substr(b, F.lit(1), F.lit(1))][
+            F.substr(b, F.lit(2), F.lit(1))
+        ],
     )
     n = F.size(bgs)
     return (
         docs.select(
-            F.col(id_col),
+            F.col("doc_id"),
             n.alias("n_bigrams"),
             F.round(F.pow(F.lit(2.0), -s / n), 6).alias("ppl"),
         )
@@ -144,19 +127,14 @@ def lm_perplexity(
     )
 
 
-def lm_quality_buckets(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    model: DataFrame | None = None,
-) -> DataFrame:
+def lm_quality_buckets(docs: DataFrame) -> DataFrame:
     """CCNet head/middle/tail split at the corpus perplexity tertiles
     (low perplexity = head = highest quality).  Thresholds are an exact
     ``percentile`` aggregate (two doubles broadcast back as a 1-row
     cross join — Catalyst folds it to a BroadcastNestedLoopJoin over one
     row); at 100 TB use ``approx_percentile`` with the same expression
     shape."""
-    scored = lm_perplexity(docs, text_col, id_col, model)
+    scored = lm_perplexity(docs)
     thresholds = scored.agg(
         F.percentile("ppl", F.lit(1.0 / 3)).alias("_t1"),
         F.percentile("ppl", F.lit(2.0 / 3)).alias("_t2"),
@@ -164,7 +142,7 @@ def lm_quality_buckets(
     return (
         scored.crossJoin(F.broadcast(thresholds))
         .select(
-            id_col,
+            "doc_id",
             "n_bigrams",
             "ppl",
             F.when(F.col("ppl") <= F.col("_t1"), "head")

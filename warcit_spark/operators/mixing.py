@@ -32,7 +32,7 @@ from warcit_spark.functions.text import token_count_expr
 
 
 def _allocations_from_totals(
-    per_source: DataFrame, budget: int, alpha: float, source_col: str
+    per_source: DataFrame, budget: int, alpha: float
 ) -> DataFrame:
     """(source, tokens_s, weight, alloc_tokens) from per-source token
     totals — the n_sources-row tail of the allocation, shared by
@@ -42,13 +42,13 @@ def _allocations_from_totals(
         F.sum(F.pow(F.col("tokens_s").cast("double"), F.lit(alpha))).alias("_z")
     )
     return per_source.crossJoin(F.broadcast(z)).select(
-        source_col,
+        "source",
         F.col("tokens_s").cast("bigint").alias("tokens_s"),
         F.round(
             F.pow(F.col("tokens_s").cast("double"), F.lit(alpha)) / F.col("_z"), 6
         ).alias("weight"),
     ).select(
-        source_col,
+        "source",
         "tokens_s",
         "weight",
         F.floor(F.lit(float(budget)) * F.col("weight"))
@@ -61,27 +61,22 @@ def source_allocations(
     docs: DataFrame,
     budget: int,
     alpha: float = 0.5,
-    text_col: str = "text",
-    source_col: str = "source",
 ) -> DataFrame:
     """Per-source (tokens_s, weight, alloc_tokens) under the budget."""
-    per_source = docs.groupBy(source_col).agg(
-        F.sum(token_count_expr(F.col(text_col))).alias("tokens_s")
+    per_source = docs.groupBy("source").agg(
+        F.sum(token_count_expr(F.col("text"))).alias("tokens_s")
     )
-    return _allocations_from_totals(per_source, budget, alpha, source_col)
+    return _allocations_from_totals(per_source, budget, alpha)
 
 
 def token_budget_mix(
     docs: DataFrame,
     budget: int,
     alpha: float = 0.5,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    source_col: str = "source",
 ) -> DataFrame:
     """Documents kept by the mixture draw: per source, take docs in
     md5(id) order while the cumulative token count stays within the
-    source's allocation.  Returns (id_col, source_col, n_tokens,
+    source's allocation.  Returns (doc_id, source, n_tokens,
     cum_tokens) for kept docs."""
     # slim per-doc projection (id, source, count, rank — NO text), lazily
     # checkpointed: both consumers below (the cum-sum window and the
@@ -89,13 +84,13 @@ def token_budget_mix(
     # + regex tokenization run exactly once.  ~40 B/doc of block storage
     # (memory-and-disk), not a second multi-TB text pass.
     ranked = docs.select(
-        F.col(id_col),
-        F.col(source_col),
-        token_count_expr(F.col(text_col)).cast("bigint").alias("n_tokens"),
-        F.md5(F.col(id_col).cast("string")).alias("_rk"),
+        F.col("doc_id"),
+        F.col("source"),
+        token_count_expr(F.col("text")).cast("bigint").alias("n_tokens"),
+        F.md5(F.col("doc_id").cast("string")).alias("_rk"),
     ).localCheckpoint(eager=False)
     w = (
-        Window.partitionBy(source_col)
+        Window.partitionBy("source")
         .orderBy("_rk")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
@@ -103,14 +98,14 @@ def token_budget_mix(
     # allocations derive from the SAME ranked projection (sum of its
     # n_tokens), not a second source_allocations(docs) subtree — the
     # corpus is scanned and regex-tokenized exactly once end to end
-    per_source = ranked.groupBy(source_col).agg(
+    per_source = ranked.groupBy("source").agg(
         F.sum("n_tokens").alias("tokens_s")
     )
-    alloc = _allocations_from_totals(per_source, budget, alpha, source_col).select(
-        source_col, "alloc_tokens"
+    alloc = _allocations_from_totals(per_source, budget, alpha).select(
+        "source", "alloc_tokens"
     )
     return (
-        cum.join(F.broadcast(alloc), on=source_col)
+        cum.join(F.broadcast(alloc), on="source")
         .where(F.col("cum_tokens") <= F.col("alloc_tokens"))
-        .select(id_col, source_col, "n_tokens", "cum_tokens")
+        .select("doc_id", "source", "n_tokens", "cum_tokens")
     )

@@ -41,11 +41,11 @@ MEDIA_SCHEMA = (
 FEATURE_SCHEMA = "media_id long, kind string, feature array<float>, feat_dim int"
 
 
-def attach_media_meta(df: DataFrame, payload_col: str = "payload") -> DataFrame:
+def attach_media_meta(df: DataFrame) -> DataFrame:
     """Typed metadata projection over an opaque binary column: size, sha1,
     magic-byte sniff of the container format (first bytes only — the Spark
     analog of the reference sniffing 2048 bytes, warcit/warcit.py:28,640)."""
-    head = F.substring(F.col(payload_col), 1, 8)
+    head = F.substring(F.col("payload"), 1, 8)
     sniffed = (
         F.when(F.startswith(head, F.lit(b"\x89PNG")), "image/png")
         .when(F.startswith(head, F.lit(b"\xff\xd8\xff")), "image/jpeg")
@@ -54,8 +54,8 @@ def attach_media_meta(df: DataFrame, payload_col: str = "payload") -> DataFrame:
         .when(F.startswith(head, F.lit(b"FLV\x01")), "video/x-flv")
         .otherwise("application/octet-stream")
     )
-    return df.withColumn("payload_size", F.length(payload_col).cast("long")) \
-             .withColumn("payload_sha1", F.sha1(F.col(payload_col))) \
+    return df.withColumn("payload_size", F.length("payload").cast("long")) \
+             .withColumn("payload_sha1", F.sha1(F.col("payload"))) \
              .withColumn("sniffed_mime", sniffed)
 
 

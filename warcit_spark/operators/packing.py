@@ -45,16 +45,11 @@ PACK_SCHEMA = (
 )
 
 
-def _with_bucket_tokens(
-    docs: DataFrame, n_buckets: int, id_col: str, text_col: str, tokens_col: str | None
-) -> DataFrame:
-    tokens = (
-        F.col(tokens_col) if tokens_col else token_count_expr(F.col(text_col))
-    ).cast("int")
+def _with_bucket_tokens(docs: DataFrame, n_buckets: int) -> DataFrame:
     return docs.select(
-        F.col(id_col).cast("long").alias("doc_id"),
-        (F.col(id_col) % n_buckets).cast("int").alias("bucket"),
-        tokens.alias("tokens"),
+        F.col("doc_id").cast("long").alias("doc_id"),
+        (F.col("doc_id") % n_buckets).cast("int").alias("bucket"),
+        token_count_expr(F.col("text")).cast("int").alias("tokens"),
     )
 
 
@@ -62,9 +57,6 @@ def chunk_pack(
     docs: DataFrame,
     capacity: int,
     n_buckets: int = 16,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    tokens_col: str | None = None,
 ) -> DataFrame:
     """Concatenate-then-chunk layout.
 
@@ -77,7 +69,7 @@ def chunk_pack(
     """
     if capacity <= 0:
         raise ValueError(f"capacity must be positive, got {capacity}")
-    base = _with_bucket_tokens(docs, n_buckets, id_col, text_col, tokens_col)
+    base = _with_bucket_tokens(docs, n_buckets)
     w = (
         Window.partitionBy("bucket")
         .orderBy("doc_id")
@@ -101,9 +93,6 @@ def greedy_pack(
     docs: DataFrame,
     capacity: int,
     n_buckets: int = 16,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    tokens_col: str | None = None,
 ) -> DataFrame:
     """Greedy next-fit bin packing (documents never straddle windows).
 
@@ -117,7 +106,7 @@ def greedy_pack(
     """
     if capacity <= 0:
         raise ValueError(f"capacity must be positive, got {capacity}")
-    base = _with_bucket_tokens(docs, n_buckets, id_col, text_col, tokens_col)
+    base = _with_bucket_tokens(docs, n_buckets)
 
     def _pack(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("doc_id", kind="mergesort").reset_index(drop=True)

@@ -248,9 +248,6 @@ def transclusion_metadata_records(
 
 def wet_records(
     pages: DataFrame,
-    url_col: str = "url",
-    ts_col: str = "warc_ts",
-    html_col: str = "html",
 ) -> DataFrame:
     """Common-Crawl-style WET sidecar derivation: one ``conversion``
     record per fetched HTML page whose payload is the page's extracted
@@ -267,26 +264,23 @@ def wet_records(
     from warcit_spark.functions.html import html_text_expr
     from warcit_spark.functions.timestamps import iso8601z_expr
 
-    html_str = F.decode(F.col(html_col), "UTF-8")
+    html_str = F.decode(F.col("html"), "UTF-8")
     payload = F.encode(html_text_expr(html_str), "UTF-8")
-    warc_date = iso8601z_expr(F.col(ts_col))
+    warc_date = iso8601z_expr(F.col("warc_ts"))
     return pages.select(
-        F.col(url_col).alias("url"),
+        "url",
         F.lit("conversion").alias("record_type"),
         warc_date.alias("warc_date"),
         F.lit("text/plain").alias("content_type"),
         payload.alias("payload"),
         F.sha1(payload).alias("payload_digest"),
-        F.col(url_col).alias("refers_to_target_uri"),
+        F.col("url").alias("refers_to_target_uri"),
         warc_date.alias("refers_to_target_date"),
     )
 
 
 def wat_records(
     pages: DataFrame,
-    url_col: str = "url",
-    ts_col: str = "warc_ts",
-    html_col: str = "html",
 ) -> DataFrame:
     """Common-Crawl-style WAT sidecar derivation: one ``metadata``
     record per page whose JSON payload carries the page's envelope
@@ -300,21 +294,21 @@ def wat_records(
     from warcit_spark.functions.timestamps import iso8601z_expr
     from warcit_spark.operators.links import hrefs_expr
 
-    html_str = F.decode(F.col(html_col), "UTF-8")
+    html_str = F.decode(F.col("html"), "UTF-8")
     meta = F.struct(
         html_title_expr(html_str).alias("title"),
         F.length(html_text_expr(html_str)).alias("text_chars"),
-        F.size(hrefs_expr(F.col(html_col))).alias("n_links"),
+        F.size(hrefs_expr(F.col("html"))).alias("n_links"),
     )
     payload = F.encode(F.to_json(meta), "UTF-8")
-    warc_date = iso8601z_expr(F.col(ts_col))
+    warc_date = iso8601z_expr(F.col("warc_ts"))
     return pages.select(
-        F.col(url_col).alias("url"),
+        "url",
         F.lit("metadata").alias("record_type"),
         warc_date.alias("warc_date"),
         F.lit("application/json").alias("content_type"),
         payload.alias("payload"),
         F.sha1(payload).alias("payload_digest"),
-        F.col(url_col).alias("refers_to_target_uri"),
+        F.col("url").alias("refers_to_target_uri"),
         warc_date.alias("refers_to_target_date"),
     )

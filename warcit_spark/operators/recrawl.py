@@ -24,9 +24,6 @@ def recrawl_schedule(
     history: DataFrame,
     base_interval_sec: float = 86400.0,
     min_interval_sec: float = 3600.0,
-    url_col: str = "url",
-    ts_col: str = "ts",
-    digest_col: str = "digest",
     order_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """Estimate per-URL change rates and derive a re-crawl schedule.
@@ -45,18 +42,18 @@ def recrawl_schedule(
     exactly; the textbook exponential-decay estimator orders URLs
     identically for a fixed fetch cadence.  Rounded to 6 decimals.
     """
-    w = Window.partitionBy(url_col).orderBy(
-        F.col(ts_col), *[F.col(c) for c in order_cols]
+    w = Window.partitionBy("url").orderBy(
+        F.col("ts"), *[F.col(c) for c in order_cols]
     )
-    prev = F.lag(F.col(digest_col)).over(w)
+    prev = F.lag(F.col("digest")).over(w)
     changed = (
-        prev.isNotNull() & (F.col(digest_col) != prev)
+        prev.isNotNull() & (F.col("digest") != prev)
     ).cast("bigint")
 
     per_url = (
         history.select(
-            F.col(url_col).alias("url"),
-            F.col(ts_col).alias("_ts"),
+            "url",
+            F.col("ts").alias("_ts"),
             changed.alias("_chg"),
         )
         .groupBy("url")

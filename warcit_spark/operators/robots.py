@@ -19,6 +19,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 _RULE_TYPE = "struct<path_prefix:string,allow:boolean,crawl_delay:double>"
+# seconds; a host with no robots rule, or no Crawl-delay line, gets this
+DEFAULT_CRAWL_DELAY = 1.0
 
 
 def _longest_prefix_rule(rules: Column, path: Column) -> Column:
@@ -61,7 +63,9 @@ def apply_robots(frontier: DataFrame, robots: DataFrame) -> DataFrame:
         .select(
             *frontier.columns,
             F.coalesce(F.col("_best")["allow"], F.lit(True)).alias("allowed"),
-            F.coalesce(F.col("_host_delay"), F.lit(1.0)).alias("crawl_delay"),
+            F.coalesce(F.col("_host_delay"), F.lit(DEFAULT_CRAWL_DELAY)).alias(
+                "crawl_delay"
+            ),
         )
     )
 
@@ -74,10 +78,7 @@ _ACC_TYPE = (
 
 def parse_robots_txt(
     robots_bodies: DataFrame,
-    host_col: str = "host",
-    body_col: str = "body",
     agent: str = "*",
-    default_delay: float = 1.0,
 ) -> DataFrame:
     """Parse raw robots.txt bodies into the rules table ``apply_robots``
     consumes — closes the fetch->parse->rules gap in the crawl story
@@ -89,7 +90,7 @@ def parse_robots_txt(
     ``#`` starts a comment; blank lines are insignificant; directive
     keys are case-insensitive; an empty ``Disallow:`` value allows all
     (no rule).  ``Crawl-delay`` (de-facto extension) is host-level: the
-    max over applicable groups, ``default_delay`` otherwise.
+    max over applicable groups, ``DEFAULT_CRAWL_DELAY`` otherwise.
 
     Pattern support matches the engine's politeness model (prefix-only,
     ``apply_robots`` above): a trailing ``*`` is stripped (identical
@@ -161,14 +162,14 @@ def parse_robots_txt(
             ).cast(_ACC_TYPE)
         )
 
-    lines = F.split(F.col(body_col), r"\r?\n")
+    lines = F.split(F.col("body"), r"\r?\n")
     init = F.named_struct(
         F.lit("in_ua"), F.lit(False),
         F.lit("active"), F.lit(False),
         F.lit("rules"), F.array().cast(
             "array<struct<path_prefix:string,allow:boolean>>"
         ),
-        F.lit("delay"), F.lit(float(default_delay)),
+        F.lit("delay"), F.lit(DEFAULT_CRAWL_DELAY),
     ).cast(_ACC_TYPE)
     acc = F.aggregate(lines, init, step)
     # '' allow rule: carries the host delay even with zero path rules and
@@ -181,7 +182,7 @@ def parse_robots_txt(
     )
     return (
         robots_bodies.select(
-            F.col(host_col).alias("host"),
+            "host",
             acc["delay"].alias("crawl_delay"),
             F.explode(all_rules).alias("_r"),
         )

@@ -63,14 +63,13 @@ def stratified_sample(
     key_col: str,
     stratum_col: str,
     rates: dict[str, float],
-    default_rate: float = 0.0,
 ) -> DataFrame:
     """Per-stratum deterministic sampling (e.g. per-host crawl
     rebalancing): each stratum gets its own threshold via a broadcast dim
     join; membership stays a row-local predicate.
 
-    ``rates`` maps stratum value -> rate; strata not listed use
-    ``default_rate``.  NULL keys never sample (see
+    ``rates`` maps stratum value -> rate; strata not listed never sample
+    (rate 0).  NULL keys never sample (see
     :func:`sample_predicate`).  At scale the dim is tiny (one row per domain) and
     the md5 compare runs inside whole-stage codegen.
     """
@@ -79,10 +78,9 @@ def stratified_sample(
         [(k, rate_threshold_hex(v)) for k, v in sorted(rates.items())],
         f"{stratum_col} string, _thresh string",
     )
-    default_thresh = F.lit(rate_threshold_hex(default_rate))
     joined = df.join(F.broadcast(dim), on=stratum_col, how="left")
     keep = F.col(key_col).isNotNull() & (
         F.md5(F.col(key_col).cast("string"))
-        < F.coalesce(F.col("_thresh"), default_thresh)
+        < F.coalesce(F.col("_thresh"), F.lit(rate_threshold_hex(0.0)))
     )
     return joined.where(keep).drop("_thresh")

@@ -33,8 +33,6 @@ def semantic_dedup(
     embeddings: DataFrame,
     centroids: list[list[float]],
     threshold: float = 0.35,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """(id, cluster, keep) — ``keep`` is false iff a same-cluster vector
     with a SMALLER id has ``round(cosine, 6) >= threshold``.
@@ -47,25 +45,25 @@ def semantic_dedup(
     both engines so the threshold test is bit-stable (same convention as
     ann2/x6).
     """
-    vec = F.col(vec_col).cast("array<double>")
+    vec = F.col("embedding").cast("array<double>")
     assigned = embeddings.select(
-        F.col(id_col),
+        F.col("vec_id"),
         vec.alias("_v"),
         _nearest_centroid_expr(vec, centroids).alias("cluster"),
     )
     a = assigned.select(
-        F.col(id_col).alias("_id_a"), F.col("_v").alias("_va"), "cluster"
+        F.col("vec_id").alias("_id_a"), F.col("_v").alias("_va"), "cluster"
     )
     b = assigned.select(
-        F.col(id_col).alias("_id_b"), F.col("_v").alias("_vb"), "cluster"
+        F.col("vec_id").alias("_id_b"), F.col("_v").alias("_vb"), "cluster"
     )
     dup = (
         a.join(b, on="cluster")
         .where(F.col("_id_a") < F.col("_id_b"))
         .where(F.round(cosine_expr(F.col("_va"), F.col("_vb")), 6) >= threshold)
-        .select(F.col("_id_b").alias(id_col))
+        .select(F.col("_id_b").alias("vec_id"))
         .distinct()
     )
     return assigned.join(
-        dup.withColumn("_dropped", F.lit(True)), on=id_col, how="left"
-    ).select(id_col, "cluster", F.col("_dropped").isNull().alias("keep"))
+        dup.withColumn("_dropped", F.lit(True)), on="vec_id", how="left"
+    ).select("vec_id", "cluster", F.col("_dropped").isNull().alias("keep"))

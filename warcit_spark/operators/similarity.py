@@ -47,17 +47,19 @@ def cosine_topk(
     embeddings: DataFrame,
     query_vec: list[float],
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Exact brute-force cosine top-k against a literal query vector."""
     q = _query_lit(query_vec)
-    sim = cosine_expr(F.col(vec_col).cast("array<double>"), q)
+    sim = cosine_expr(F.col("embedding").cast("array<double>"), q)
     return (
-        embeddings.select(F.col(id_col), F.round(sim, 6).alias("cosine"))
-        .orderBy(F.col("cosine").desc(), F.col(id_col).asc())
+        embeddings.select(F.col("vec_id"), F.round(sim, 6).alias("cosine"))
+        .orderBy(F.col("cosine").desc(), F.col("vec_id").asc())
         .limit(k)
     )
+
+
+# sign-random-projection hyperplanes per LSH bucket id (2^4 buckets)
+SRP_N_PLANES = 4
 
 
 def _srp_bits_expr(vec: Column, n_planes: int, dim: int) -> Column:
@@ -96,12 +98,12 @@ def srp_plane_signs(n_planes: int, dim: int) -> list[list[float]]:
     ``F.hash`` in tests.
     """
 
-    def mm3(x: int, seed: int = 42) -> int:
+    def mm3(x: int) -> int:
         c1, c2 = 0xCC9E2D51, 0x1B873593
         k = (x & 0xFFFFFFFF) * c1 & 0xFFFFFFFF
         k = ((k << 15) | (k >> 17)) & 0xFFFFFFFF
         k = k * c2 & 0xFFFFFFFF
-        h = (seed ^ k) & 0xFFFFFFFF
+        h = (42 ^ k) & 0xFFFFFFFF  # Spark's hash seed
         h = ((h << 13) | (h >> 19)) & 0xFFFFFFFF
         h = (h * 5 + 0xE6546B64) & 0xFFFFFFFF
         h ^= 4
@@ -122,28 +124,25 @@ def lsh_bucket_ann(
     embeddings: DataFrame,
     query_vec: list[float],
     k: int = 10,
-    n_planes: int = 4,
     hamming_probe: int = 0,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Approximate top-k: score only vectors in the query's SRP bucket(s).
 
     ``hamming_probe`` enables multi-probe LSH: candidates from every bucket
     within that Hamming distance of the query's bucket are scored, trading
-    scan fraction for recall (probe h of n planes ~ sum_{i<=h} C(n,i)/2^n
-    of the corpus for unrelated vectors).
+    scan fraction for recall (probe h of n = ``SRP_N_PLANES`` planes ~
+    sum_{i<=h} C(n,i)/2^n of the corpus for unrelated vectors).
 
     At 100 TB the bucket id becomes the partition key (bucketed write), so
     a query touches 1 + probed partitions instead of the corpus; here it is
     a filter that Catalyst pushes down onto the scan of the bucketed table.
     """
     dim = len(query_vec)
-    vec = F.col(vec_col).cast("array<double>")
-    bucketed = embeddings.withColumn("_bucket", _srp_bits_expr(vec, n_planes, dim))
+    vec = F.col("embedding").cast("array<double>")
+    bucketed = embeddings.withColumn("_bucket", _srp_bits_expr(vec, SRP_N_PLANES, dim))
 
     # query bucket computed driver-side from the same sign matrix — no job
-    signs = srp_plane_signs(n_planes, dim)
+    signs = srp_plane_signs(SRP_N_PLANES, dim)
     qbucket = 0
     for p, plane in enumerate(signs):
         comp = sum(v * s for v, s in zip(query_vec, plane))
@@ -162,8 +161,8 @@ def lsh_bucket_ann(
     sim = cosine_expr(vec, q)
     return (
         bucketed.where(probe)
-        .select(F.col(id_col), F.round(sim, 6).alias("cosine"))
-        .orderBy(F.col("cosine").desc(), F.col(id_col).asc())
+        .select(F.col("vec_id"), F.round(sim, 6).alias("cosine"))
+        .orderBy(F.col("cosine").desc(), F.col("vec_id").asc())
         .limit(k)
     )
 
@@ -197,8 +196,6 @@ def kmeans_centroids(
     embeddings: DataFrame,
     k: int = 8,
     iters: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> list[list[float]]:
     """Distributed deterministic Lloyd's k-means for the IVF coarse
     quantizer: init = the k lowest-id vectors (deterministic, no RNG);
@@ -224,7 +221,7 @@ def kmeans_centroids(
     with a vectorized pandas_udf argmin, and take means with a plain
     groupBy — same determinism recipe (DECIMAL sums), no driver loop.
     """
-    dim_row = embeddings.select(F.size(F.col(vec_col)).alias("d")).first()
+    dim_row = embeddings.select(F.size(F.col("embedding")).alias("d")).first()
     if dim_row is None:
         raise ValueError("kmeans_centroids: empty embeddings input")
     if k * int(dim_row["d"]) > KMEANS_MAX_KDIM:
@@ -242,9 +239,9 @@ def kmeans_centroids(
         )
     cents = [
         [float(x) for x in r[0]]
-        for r in embeddings.orderBy(id_col).select(vec_col).limit(k).collect()
+        for r in embeddings.orderBy("vec_id").select("embedding").limit(k).collect()
     ]
-    vec = F.col(vec_col).cast("array<double>")
+    vec = F.col("embedding").cast("array<double>")
     for _ in range(iters):
         assign = _nearest_centroid_expr(vec, cents)
         dim = len(cents[0])
@@ -336,8 +333,6 @@ def ivf_topk(
     centroids: list[list[float]],
     k: int = 10,
     nprobe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF approximate top-k: score only vectors assigned to the ``nprobe``
     centroids nearest the query.
@@ -349,7 +344,7 @@ def ivf_topk(
     force).  Here assignment is an in-row argmin expression and the probe
     filter is pushed onto the scan.
     """
-    vec = F.col(vec_col).cast("array<double>")
+    vec = F.col("embedding").cast("array<double>")
     assigned = embeddings.withColumn(
         "_ivf", _nearest_centroid_expr(vec, centroids)
     )
@@ -358,8 +353,8 @@ def ivf_topk(
     sim = cosine_expr(vec, q)
     return (
         assigned.where(F.col("_ivf").isin(*probe))
-        .select(F.col(id_col), F.round(sim, 6).alias("cosine"))
-        .orderBy(F.col("cosine").desc(), F.col(id_col).asc())
+        .select(F.col("vec_id"), F.round(sim, 6).alias("cosine"))
+        .orderBy(F.col("cosine").desc(), F.col("vec_id").asc())
         .limit(k)
     )
 
@@ -380,8 +375,6 @@ def ivf_ingest(
     embeddings: DataFrame,
     centroids: list[list[float]],
     path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> None:
     """Persist embeddings PARTITIONED BY their assigned centroid — the
     at-ingest IVF shape for the 100-TB table: assignment is computed once
@@ -391,7 +384,7 @@ def ivf_ingest(
     ``ivf_cell`` becomes the Hive partition column of the parquet table;
     on Iceberg the same layout is ``PARTITIONED BY (ivf_cell)``.
     """
-    vec = F.col(vec_col).cast("array<double>")
+    vec = F.col("embedding").cast("array<double>")
     (
         embeddings.withColumn("ivf_cell", _nearest_centroid_expr(vec, centroids))
         .write.partitionBy("ivf_cell")
@@ -407,8 +400,6 @@ def ivf_topk_bucketed(
     centroids: list[list[float]],
     k: int = 10,
     nprobe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF top-k over an :func:`ivf_ingest` table: the probe-cell filter
     lands on the PARTITION column, so the scan reads ``nprobe`` of
@@ -420,10 +411,10 @@ def ivf_topk_bucketed(
     probe = _probe_cells(query_vec, centroids, nprobe)
     df = spark.read.parquet(path)
     q = _query_lit(query_vec)
-    sim = cosine_expr(F.col(vec_col).cast("array<double>"), q)
+    sim = cosine_expr(F.col("embedding").cast("array<double>"), q)
     return (
         df.where(F.col("ivf_cell").isin(*probe))
-        .select(F.col(id_col), F.round(sim, 6).alias("cosine"))
-        .orderBy(F.col("cosine").desc(), F.col(id_col).asc())
+        .select(F.col("vec_id"), F.round(sim, 6).alias("cosine"))
+        .orderBy(F.col("cosine").desc(), F.col("vec_id").asc())
         .limit(k)
     )

@@ -51,12 +51,14 @@ from warcit_spark.operators.robots import apply_robots
 from warcit_spark.plans.politeness import politeness_prerank, politeness_rank
 from warcit_spark.plans.state import CrawlState
 
+# child priority = parent priority * LINK_DECAY
+LINK_DECAY = 0.8
+
 
 @dataclass
 class CrawlConfig:
     host_budget: int = 50          # per-host per-round budget before delay scaling
     max_rounds: int = 20
-    link_decay: float = 0.8        # child priority = parent priority * decay
     n_salt: int = 16               # politeness pre-rank salt slots
     n_lineage_partitions: int = 32
     index_files: tuple[str, ...] = DEFAULT_INDEX_FILES
@@ -331,7 +333,7 @@ def crawl_round(
     candidates = (
         raw_grouped.select(
             canonicalize_with_host_expr(F.col("link")).alias("_cu"),
-            (F.col("priority") * cfg.link_decay).alias("priority"),
+            (F.col("priority") * LINK_DECAY).alias("priority"),
             "_n",
         )
         .select("_cu.url", "_cu.host", "priority", "_n")

@@ -51,10 +51,6 @@ def politeness_prerank(
     frontier: DataFrame,
     host_budget: int,
     n_salt: int = 16,
-    priority_col: str = "priority",
-    url_col: str = "url",
-    host_col: str = "host",
-    delay_col: str = "crawl_delay",
     allowed_col: str | None = None,
 ) -> DataFrame:
     """Stage 1: add ``_pre_ok`` (survives the salted pre-ranking).
@@ -62,12 +58,12 @@ def politeness_prerank(
     Robots-denied rows (``allowed_col`` false) are never ``_pre_ok`` and
     never consume a slot (ordered last within each salt slot).
     """
-    budget = host_round_budget_expr(host_budget, F.col(delay_col))
-    order = [F.col(priority_col).desc(), F.col(url_col).asc()]
+    budget = host_round_budget_expr(host_budget, F.col("crawl_delay"))
+    order = [F.col("priority").desc(), F.col("url").asc()]
     if allowed_col is not None:
         order = [F.col(allowed_col).desc(), *order]
     w_salt = Window.partitionBy(
-        salted_host_expr(F.col(host_col), F.col(url_col), n_salt)
+        salted_host_expr(F.col("host"), F.col("url"), n_salt)
     ).orderBy(*order)
     pre_ok = F.row_number().over(w_salt) <= budget
     if allowed_col is not None:
@@ -78,16 +74,12 @@ def politeness_prerank(
 def politeness_rank(
     survivors: DataFrame,
     host_budget: int,
-    priority_col: str = "priority",
-    url_col: str = "url",
-    host_col: str = "host",
-    delay_col: str = "crawl_delay",
 ) -> DataFrame:
     """Stage 2: exact per-host rank + ``selected`` flag on the bounded
     survivor set (callers pass ``pre.where('_pre_ok')``)."""
-    budget = host_round_budget_expr(host_budget, F.col(delay_col))
-    w_host = Window.partitionBy(host_col).orderBy(
-        F.col(priority_col).desc(), F.col(url_col).asc()
+    budget = host_round_budget_expr(host_budget, F.col("crawl_delay"))
+    w_host = Window.partitionBy("host").orderBy(
+        F.col("priority").desc(), F.col("url").asc()
     )
     ranked = survivors.withColumn("_rk", F.row_number().over(w_host))
     selected = F.col("_rk") <= budget

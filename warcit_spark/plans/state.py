@@ -105,11 +105,17 @@ class CrawlState:
     def _ensure_seen_table(self, spark: SparkSession) -> str:
         """Register the bucketed seen table in this session's catalog
         (idempotent; re-registers over existing files after a restart —
-        the catalog tracks partitions, so they are recovered from disk)."""
+        the catalog tracks partitions, so they are recovered from disk).
+
+        A registration whose files are gone (an earlier state at this root,
+        deleted) is dropped: the first append re-creates the table with
+        this state's bucket count."""
         name = self._seen_table_name()
-        if not spark.catalog.tableExists(name) and os.path.isdir(
-            self._seen_location()
-        ):
+        registered = spark.catalog.tableExists(name)
+        located = os.path.isdir(self._seen_location())
+        if registered and not located:
+            spark.sql(f"DROP TABLE {name}")
+        elif not registered and located:
             spark.sql(
                 f"CREATE TABLE {name} "
                 "(url STRING, host STRING, reason STRING, round_seen INT) "
@@ -233,3 +239,8 @@ class CrawlState:
                 r = int(name.split("=", 1)[1])
                 if r > keep_upto:
                     shutil.rmtree(os.path.join(base, name), ignore_errors=True)
+
+    def drop(self, spark: SparkSession) -> None:
+        """Delete the state: its seen table's catalog entry and the root."""
+        spark.sql(f"DROP TABLE IF EXISTS {self._seen_table_name()}")
+        shutil.rmtree(self.root, ignore_errors=True)

@@ -30,30 +30,29 @@ def write_bucketed_table(
     df: DataFrame,
     name: str,
     path: str,
-    bucket_col: str = "url",
     buckets: int = 64,
     mode: str = "overwrite",
     partition_col: str | None = None,
     compression: str | None = None,
 ) -> DataFrame:
-    """Write ``df`` as a Hive-bucketed, bucket-sorted parquet table at
+    """Write ``df`` as a parquet table bucketed and sorted by ``url`` at
     ``path`` registered as ``name``; returns the registered table.
 
-    The ``repartition(buckets, col)`` before the write aligns tasks to
+    The ``repartition(buckets, "url")`` before the write aligns tasks to
     buckets (same murmur3 both places): one file per bucket instead of
     tasks × buckets small files.  ``partition_col`` adds a directory
     partition above the buckets (the crawl's seen table partitions by
     round, plans/state.py); ``compression`` overrides the session codec.
     """
     spark = df.sparkSession
-    writer = df.repartition(buckets, bucket_col).write.format("parquet")
+    writer = df.repartition(buckets, "url").write.format("parquet")
     if partition_col is not None:
         writer = writer.partitionBy(partition_col)
     if compression is not None:
         writer = writer.option("compression", compression)
     (
-        writer.bucketBy(buckets, bucket_col)
-        .sortBy(bucket_col)
+        writer.bucketBy(buckets, "url")
+        .sortBy("url")
         .option("path", path)
         .mode(mode)
         .saveAsTable(name)
@@ -86,24 +85,22 @@ def compact_deltas_to_bucketed(
     deltas: DataFrame,
     name: str,
     path: str,
-    key_col: str = "url",
-    version_col: str = "round",
     buckets: int = 64,
 ) -> DataFrame:
     """Compact append-only per-round deltas into one deduplicated
-    bucketed table: latest row per key wins, then one bucketed write.
+    bucketed table: latest row per url (max ``round``) wins, then one
+    bucketed write.
 
     Exactly two shuffles end to end (the max_by groupBy and the
-    bucket-aligning repartition, both keyed on ``key_col`` — AQE
+    bucket-aligning repartition, both keyed on ``url`` — AQE
     typically reuses the first exchange for the second), after which
     every future join against the corpus pays zero corpus-side exchange
     forever.  This is the maintenance step a 100-TB deployment runs per
     crawl epoch (Iceberg's rewrite_data_files analog).
     """
     return write_bucketed_table(
-        latest_by_key(deltas, key_col, version_col),
+        latest_by_key(deltas, "url", "round"),
         name,
         path,
-        bucket_col=key_col,
         buckets=buckets,
     )

@@ -50,11 +50,6 @@ def write_cdxj(
     records: DataFrame,
     out_dir: str,
     n_shards: int = 1,
-    url_col: str = "url",
-    ts_col: str = "ts",
-    digest_col: str = "payload_digest",
-    mime_col: str = "content_type",
-    file_col: str = "warc_file",
 ) -> None:
     """Write a globally-sorted CDXJ index for ``records``.
 
@@ -62,14 +57,14 @@ def write_cdxj(
     entry exists only for replayable captures.
     """
     keyed = records.select(
-        surt_expr(F.col(url_col)).alias("_surt"),
-        ts14_expr(F.col(ts_col)).alias("_ts"),
+        surt_expr(F.col("url")).alias("_surt"),
+        ts14_expr(F.col("ts")).alias("_ts"),
         cdxj_line_expr(
-            F.col(url_col),
-            F.col(ts_col),
-            F.col(digest_col),
-            F.col(mime_col),
-            F.col(file_col),
+            F.col("url"),
+            F.col("ts"),
+            F.col("payload_digest"),
+            F.col("content_type"),
+            F.col("warc_file"),
         ).alias("value"),
     ).where(F.col("_surt").isNotNull())
     (

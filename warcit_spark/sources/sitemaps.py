@@ -62,14 +62,12 @@ def seeds_from_sitemaps(
     corpus: DataFrame,
     root_sitemaps: DataFrame,
     max_depth: int = 3,
-    url_col: str = "url",
-    xml_col: str = "xml",
 ) -> DataFrame:
     """Resolve sitemap indexes against a fetched corpus and return the
     page seeds: (url, sitemap_url) — one row per <loc> in every reached
     ``<urlset>``, tagged with the sitemap that listed it.
 
-    ``corpus``: fetched sitemap documents (url_col, xml_col).
+    ``corpus``: fetched sitemap documents (url, xml).
     ``root_sitemaps``: urls to start from (column ``sitemap_url``) — in a
     real deployment, the robots.txt ``Sitemap:`` lines.
 
@@ -80,9 +78,9 @@ def seeds_from_sitemaps(
     loop and raises).
     """
     docs = corpus.select(
-        F.col(url_col).alias("sitemap_url"),
-        sitemap_locs_expr(F.col(xml_col)).alias("_locs"),
-        is_sitemap_index_expr(F.col(xml_col)).alias("_is_index"),
+        F.col("url").alias("sitemap_url"),
+        sitemap_locs_expr(F.col("xml")).alias("_locs"),
+        is_sitemap_index_expr(F.col("xml")).alias("_is_index"),
     )
     pending = root_sitemaps.select("sitemap_url").distinct()
     seeds = None

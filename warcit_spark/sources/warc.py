@@ -64,17 +64,16 @@ def _records_of_file(path: str, blob: bytes) -> list[dict]:
     return out
 
 
-def scan_warc(
-    spark: SparkSession, path: str, glob: str = "*.warc*"
-) -> DataFrame:
-    """Scan a directory (recursively) or a single WARC file into one row
-    per record.  ``payload`` holds raw record bytes; header fields ride
-    as typed columns so filters prune record-level before payload use.
+def scan_warc(spark: SparkSession, path: str) -> DataFrame:
+    """Scan a directory (recursively; its ``*.warc*`` files) or a single
+    WARC file into one row per record.  ``payload`` holds raw record
+    bytes; header fields ride as typed columns so filters prune
+    record-level before payload use.
     """
     raw = (
         spark.read.format("binaryFile")
         .option("recursiveFileLookup", "true")
-        .option("pathGlobFilter", glob)
+        .option("pathGlobFilter", "*.warc*")
         .load(path)
         .select("path", "content")
     )

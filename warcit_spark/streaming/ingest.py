@@ -4,9 +4,9 @@ The reference is single-pass batch and the crawl loop is iterative batch;
 streaming enters when pages arrive continuously (a live fetcher writing
 parquet).  This module gives that path: a file-source stream over the
 pages directory, watermarked event-time windowed per-host counts (the
-streaming analog of the lineage counters), written with exactly-once file
-sinks + checkpoints — the Structured-Streaming mirror of the engine's
-atomic round commits.
+streaming analog of the lineage counters) and watermarked dedup stages.
+A caller writes them with an exactly-once file sink + checkpoint — the
+Structured-Streaming mirror of the engine's atomic round commits.
 """
 
 from __future__ import annotations
@@ -19,14 +19,14 @@ from warcit_spark.functions.urls import host_expr
 PAGES_SCHEMA = (
     "url string, warc_ts timestamp, html binary, text string, lang string"
 )
+# event-time horizon of the dedup stages' state
+DEDUP_WATERMARK = "1 hour"
 
 
-def read_pages_stream(
-    spark: SparkSession, path: str, max_files_per_trigger: int = 4
-) -> DataFrame:
+def read_pages_stream(spark: SparkSession, path: str) -> DataFrame:
     return (
         spark.readStream.schema(PAGES_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", 4)
         .parquet(path)
     )
 
@@ -53,9 +53,7 @@ def host_window_counts(
     )
 
 
-def streaming_frontier_dedup(
-    urls: DataFrame, watermark: str = "1 hour"
-) -> DataFrame:
+def streaming_frontier_dedup(urls: DataFrame) -> DataFrame:
     """Streaming URL-seen filter: canonicalize, then state-store-backed
     ``dropDuplicatesWithinWatermark`` on the canonical url (the
     Structured-Streaming analog of the batch seen-set anti-join J5).
@@ -71,14 +69,13 @@ def streaming_frontier_dedup(
         canonicalize_url_expr(F.col("url")).alias("url"),
         F.col("warc_ts"),
     )
-    return canon.withWatermark("warc_ts", watermark).dropDuplicatesWithinWatermark(
-        ["url"]
-    )
+    return canon.withWatermark(
+        "warc_ts", DEDUP_WATERMARK
+    ).dropDuplicatesWithinWatermark(["url"])
 
 
 def streaming_wet_preprocess(
     pages: DataFrame,
-    watermark: str = "1 hour",
     min_words: int = 5,
     min_stopword_hits: int = 0,
 ) -> DataFrame:
@@ -125,28 +122,9 @@ def streaming_wet_preprocess(
     # once the watermark passes its event time — dedup is exact within
     # the horizon, which is this operator's contract (global historical
     # dedup is the batch sweep's job).
-    return kept.withWatermark("warc_ts", watermark).dropDuplicatesWithinWatermark(
-        ["digest"]
-    )
-
-
-def start_ingest(
-    spark: SparkSession,
-    src_path: str,
-    out_path: str,
-    checkpoint_path: str,
-    window: str = "1 hour",
-):
-    """Start the windowed ingest query (append mode, exactly-once sink)."""
-    stream = read_pages_stream(spark, src_path)
-    counts = host_window_counts(stream, window=window)
-    return (
-        counts.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint_path)
-        .start()
-    )
+    return kept.withWatermark(
+        "warc_ts", DEDUP_WATERMARK
+    ).dropDuplicatesWithinWatermark(["digest"])
 
 
 def streaming_politeness_admit(
