@@ -891,18 +891,24 @@ def t13_repeated_ngrams(spark, sf_dir):
     instances that are duplicates, and the trigram top-fraction
     (functions/text.py:top_ngram_frac_expr/dup_ngram_frac_expr).
     Row-local array exprs — zero shuffle; the explode shape documented in
-    text.py takes over for book-length docs."""
+    text.py takes over for book-length docs.  The gram arrays are bound in
+    their own projection first, so the counting lambdas read columns."""
     from warcit_spark.functions.text import (
         dup_ngram_frac_expr,
         top_ngram_frac_expr,
+        word_ngrams_expr,
     )
 
-    d = _t(spark, sf_dir, "documents")
+    d = _t(spark, sf_dir, "documents").select(
+        "doc_id",
+        word_ngrams_expr(F.col("text"), 2).alias("bigrams"),
+        word_ngrams_expr(F.col("text"), 3).alias("trigrams"),
+    )
     return d.select(
         "doc_id",
-        top_ngram_frac_expr(F.col("text"), 2).alias("top_bigram_frac"),
-        dup_ngram_frac_expr(F.col("text"), 2).alias("dup_bigram_frac"),
-        top_ngram_frac_expr(F.col("text"), 3).alias("top_trigram_frac"),
+        top_ngram_frac_expr(F.col("bigrams")).alias("top_bigram_frac"),
+        dup_ngram_frac_expr(F.col("bigrams")).alias("dup_bigram_frac"),
+        top_ngram_frac_expr(F.col("trigrams")).alias("top_trigram_frac"),
     ).orderBy("doc_id")
 
 

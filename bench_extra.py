@@ -11,7 +11,8 @@ Usage:
   python bench_extra.py --crawl {light,cc,both}
 
 With ``--plans before`` it writes plans/r06/<query>_before.txt for each
-selected query (no timing) and prints a ``SMELL:`` line for each plan
+selected query (no timing), with session-global ids masked so two runs
+compare with ``diff -r``, and prints a ``SMELL:`` line for each plan
 holding a cartesian product or a row-at-a-time Python UDF.  It also writes
 plans/r06/warcit_run_before.txt, the write plan of a default multi-part
 ``warcit_run`` over a small seeded site, and flags it when more than one
@@ -40,12 +41,30 @@ SMELLS = [
     ("BatchEvalPython", "row-at-a-time Python UDF"),
 ]
 
+# Session-global counters in plan text: expression ids (``doc_id#123``),
+# lambda variables (``x_19``), RDD ids and call sites
+# (``MapPartitionsRDD[45] at localCheckpoint at <unknown>:0``) and physical
+# plan ids (``[plan_id=7]``).  Masked before a dump is written, so an
+# unchanged query's dump does not depend on what was planned before.
+PLAN_COUNTERS = [
+    (re.compile(r"#\d+"), "#N"),
+    (re.compile(r"\b([xyz])_\d+\b"), r"\1_N"),
+    (re.compile(r"RDD\[\d+\] at (\w+) at [^,]+"), r"RDD[N] at \1"),
+    (re.compile(r"plan_id=\d+"), "plan_id=N"),
+]
+
 
 def explain(df) -> str:
     jvm = df.sparkSession._jvm
     return df._jdf.queryExecution().explainString(
         jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     )
+
+
+def mask_counters(plan: str) -> str:
+    for pattern, repl in PLAN_COUNTERS:
+        plan = pattern.sub(repl, plan)
+    return plan
 
 
 def warcit_run_plan(spark) -> str:
@@ -59,9 +78,11 @@ def warcit_run_plan(spark) -> str:
         site = os.path.join(tmp, "site")
         make_site(site, 1, 40, 1024)
         records = files_to_warc_records(spark, site, "http://example.com/")
-        return explain(write_warc_files(
+        plan = explain(write_warc_files(
             order_records(spark, records), os.path.join(tmp, "out")
         ))
+        # the temporary directory, plain and as a regex literal
+        return plan.replace(re.escape(tmp), "<tmp>").replace(tmp, "<tmp>")
 
 
 def content_scans(plan: str) -> int:
@@ -118,7 +139,7 @@ def main() -> None:
         def dump(name: str, plan: str) -> None:
             path = os.path.join(outdir, f"{name}_{args.plans}.txt")
             with open(path, "w") as f:
-                f.write(plan)
+                f.write(mask_counters(plan))
             print(f"wrote {path}")
             for marker, desc in SMELLS:
                 if marker in plan:

@@ -8,7 +8,8 @@ import datetime as dt
 import pytest
 from pyspark.sql import functions as F
 
-from warcit_spark.operators.asof import asof_join, asof_join_pandas, range_join
+from tests.oracle import asof_join_pandas
+from warcit_spark.operators.asof import asof_join, range_join
 
 
 def ts(s):

@@ -491,91 +491,18 @@ def test_politeness_two_stage_matches_single_window_twin(spark):
     assert got == _pol_single_window(twin_rows, 5)
 
 
-def test_parse_robots_txt_grammar(spark):
-    from warcit_spark.operators.robots import apply_robots, parse_robots_txt
-
-    body = "\r\n".join(
-        [
-            "# global group",
-            "User-agent: gobbler",
-            "User-Agent: *",          # consecutive UA lines -> one group
-            "Disallow: /private/",
-            "Allow: /private/ok",
-            "Crawl-Delay: 2.5",
-            "Disallow:",              # empty value = allow all -> no rule
-            "",
-            "User-agent: other-bot",  # new group, does not apply to us
-            "Disallow: /",
-            "Crawl-delay: 99",
-            "",
-            "User-agent: *",
-            "Disallow: /tmp/*/x",     # interior wildcard -> prefix cut at '*'
-            "Disallow: /exact$",      # '$'-anchored -> dropped (documented)
-            "Sitemap: http://h.test/sm.xml",  # unknown key ends UA run only
-        ]
-    )
-    df = spark.createDataFrame([("h.test", body)], "host string, body string")
-    rules = parse_robots_txt(df)
-    got = {
-        (r.path_prefix, r.allow, r.crawl_delay) for r in rules.collect()
-    }
-    assert got == {
-        ("/private/", False, 2.5),
-        ("/private/ok", True, 2.5),
-        ("/tmp/", False, 2.5),
-        ("", True, 2.5),          # delay-carrying default-allow row
-    }
-
-    # end-to-end: parsed rules drive apply_robots longest-prefix verdicts
-    frontier = spark.createDataFrame(
-        [
-            ("http://h.test/private/doc", "h.test"),
-            ("http://h.test/private/ok/doc", "h.test"),
-            ("http://h.test/free", "h.test"),
-            ("http://h.test/tmp/a/x", "h.test"),
-            ("http://nohost.test/x", "nohost.test"),  # no rules -> default
-        ],
-        "url string, host string",
-    )
-    out = {r.url: (r.allowed, r.crawl_delay) for r in apply_robots(frontier, rules).collect()}
-    assert out["http://h.test/private/doc"] == (False, 2.5)
-    assert out["http://h.test/private/ok/doc"] == (True, 2.5)
-    assert out["http://h.test/free"] == (True, 2.5)
-    assert out["http://h.test/tmp/a/x"] == (False, 2.5)
-    assert out["http://nohost.test/x"] == (True, 1.0)
-
-
-def test_parse_robots_txt_delay_only_and_agent_match(spark):
-    from warcit_spark.operators.robots import parse_robots_txt
-
-    df = spark.createDataFrame(
-        [
-            ("a.test", "User-agent: warcit-spark\nCrawl-delay: 7"),
-            ("b.test", "User-agent: nope\nDisallow: /"),
-        ],
-        "host string, body string",
-    )
-    rules = parse_robots_txt(df, agent="WARCit-Spark")
-    got = {(r.host, r.path_prefix, r.allow, r.crawl_delay) for r in rules.collect()}
-    # a: delay survives with zero path rules; b: group doesn't apply
-    assert got == {
-        ("a.test", "", True, 7.0),
-        ("b.test", "", True, 1.0),
-    }
-
-
 def test_pagerank_scores_drive_crawl_order(spark, fixture_dfs, tmp_path_factory):
     """Composition the north-star describes: authority scores computed on
     the engine's own link graph feed the frontier as seed priorities, and
     the round-0 per-host fetch order follows them exactly."""
     from warcit_spark.operators.graph import pagerank
-    from warcit_spark.operators.links import extract_links
+    from warcit_spark.operators.links import hrefs_expr, resolve_hrefs
     from warcit_spark.plans.crawl import CrawlConfig, run_crawl
     from warcit_spark.plans.state import CrawlState
 
     pages, _seeds, robots = fixture_dfs
-    edges = extract_links(
-        pages.withColumn("priority", F.lit(0.0)), carry=()
+    edges = resolve_hrefs(
+        pages.select("url", hrefs_expr(F.col("html")).alias("_hrefs")), carry=()
     ).select(F.col("url").alias("src"), F.col("link").alias("dst"))
     pr = pagerank(edges, iters=3)
 

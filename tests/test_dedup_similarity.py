@@ -13,7 +13,6 @@ from warcit_spark.operators.dedup import (
     minhash_lsh_dedup,
     ngram_jaccard_pairs,
     simhash,
-    simhash_near_dups,
     word_shingles_expr,
 )
 from warcit_spark.operators.similarity import cosine_topk, lsh_bucket_ann
@@ -71,15 +70,6 @@ def test_simhash_properties(spark, docs):
     ham02 = bin((out[0] ^ out[2]) & ((1 << 64) - 1)).count("1")
     ham03 = bin((out[0] ^ out[3]) & ((1 << 64) - 1)).count("1")
     assert ham02 < ham03  # near-dup closer than unrelated
-
-
-def test_simhash_near_dups_blocked_join(spark, docs):
-    pairs = {
-        (r.doc_id_a, r.doc_id_b)
-        for r in simhash_near_dups(docs, max_hamming=8).collect()
-    }
-    assert (0, 1) in pairs
-    assert not any(3 in p for p in pairs)
 
 
 def test_ngram_jaccard_pairs(spark, docs):
@@ -221,46 +211,6 @@ def test_xxhash64_py_matches_spark(spark):
         assert xxhash64_py(w.encode("utf-8")) == spark_hashes[w], w
 
 
-def test_ivf_ingest_partition_pruned_probe(spark, sf_dir, tmp_path_factory):
-    """The documented 100-TB IVF shape, demonstrated: ivf_ingest persists
-    embeddings PARTITIONED BY assigned centroid, and the probe query
-    prunes to nprobe partition DIRECTORIES (PartitionFilters on the scan,
-    zero DataFilters) instead of scanning the corpus — with results equal
-    to the in-query ivf_topk on the same centroids."""
-    import os
-    import re
-
-    from warcit_spark.operators.similarity import (
-        ivf_ingest,
-        ivf_topk,
-        ivf_topk_bucketed,
-        kmeans_centroids,
-    )
-
-    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
-    cents = kmeans_centroids(emb, k=4, iters=2)
-    path = str(tmp_path_factory.mktemp("ivf_table") / "ivf")
-    ivf_ingest(emb, cents, path)
-    # at-ingest layout: one Hive partition directory per centroid cell
-    cells = {d for d in os.listdir(path) if d.startswith("ivf_cell=")}
-    assert cells == {f"ivf_cell={i}" for i in range(4)}
-
-    q = list(emb.where(F.col("vec_id") == 0).first().embedding)
-    out = ivf_topk_bucketed(spark, path, q, cents, k=5, nprobe=2)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    scan = next(l for l in plan.splitlines() if "FileScan parquet" in l)
-    # the probe filter is DIRECTORY pruning, not a row filter
-    assert re.search(r"PartitionFilters: \[ivf_cell#\d+ IN \(\d+,\d+\)\]", scan)
-    assert "DataFilters: []" in scan
-
-    got = [(r.vec_id, r.cosine) for r in out.collect()]
-    want = [
-        (r.vec_id, r.cosine)
-        for r in ivf_topk(emb, q, cents, k=5, nprobe=2).collect()
-    ]
-    assert got == want and len(got) == 5
-
-
 def test_kmeans_kdim_guard(spark):
     """The driver-side coarse-quantizer loop is bounded: k*dim beyond
     KMEANS_MAX_KDIM raises before any per-iteration collect runs."""
@@ -396,10 +346,8 @@ def test_kmeans_centroids_py_twin_bit_for_bit(spark, sf_dir):
     allclose): decimal-exact sums make the distributed result independent
     of shuffle order, which is what lets the x7 DuckDB oracle replay the
     quantizer in SQL."""
-    from warcit_spark.operators.similarity import (
-        kmeans_centroids,
-        kmeans_centroids_py,
-    )
+    from tests.oracle import kmeans_centroids_py
+    from warcit_spark.operators.similarity import kmeans_centroids
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").where(
         F.col("vec_id") < 128

@@ -1,4 +1,8 @@
-"""Guard: every defaulted parameter of the package's public API is set somewhere.
+"""Guards on the package's public API: every public name has a product
+caller, and every defaulted parameter is set somewhere.
+
+A public function or method that only tests call is not part of the
+product; :func:`no_product_caller` states that rule.
 
 A defaulted parameter that no caller passes is a setting with one value in
 use; it belongs in the code as a constant, not in the signature. The rule:
@@ -18,7 +22,7 @@ Calls are matched by the callee's last name (``f(...)``, ``x.f(...)``), so a
 name shared by two definitions is in use if either is called with it; a
 ``*args`` or ``**kwargs`` spread counts as passing everything it could reach.
 
-Run as a script to print the inventory: ``python tests/test_params_in_use.py``.
+Run as a script to print both inventories: ``python tests/test_params_in_use.py``.
 """
 
 from __future__ import annotations
@@ -33,11 +37,15 @@ PACKAGE = ROOT / "warcit_spark"
 FUNCS = (ast.FunctionDef, ast.AsyncFunctionDef)
 
 
-def _caller_files() -> list[Path]:
+def _product_files() -> list[Path]:
     files = sorted(PACKAGE.rglob("*.py")) + [ROOT / "__spark_entry__.py"]
-    for d in ("tests", "tools", "jobs", "perfbench"):
+    for d in ("tools", "jobs", "perfbench"):
         files += sorted((ROOT / d).rglob("*.py"))
     return files + sorted(ROOT.glob("bench*.py"))
+
+
+def _caller_files() -> list[Path]:
+    return _product_files() + sorted((ROOT / "tests").rglob("*.py"))
 
 
 @functools.lru_cache(maxsize=None)
@@ -140,6 +148,72 @@ def unused_params() -> list[str]:
         removed = now
 
 
+# Public names kept with no product caller -> why.
+_CONVERTER = "the reference's warcit-converter: conversion dispatch and its YAML"
+_DFCAP = "reads the df_max cap metric the hot-key caps build on"
+NO_PRODUCT_CALLER_OK = {
+    "warcit_spark/operators/convert.py:run_conversions": _CONVERTER,
+    "warcit_spark/operators/convert.py:dispatch_conversions": _CONVERTER,
+    "warcit_spark/sources/sidecars.py:write_conversions_yaml": _CONVERTER,
+    "warcit_spark/sources/sidecars.py:default_conversion_rules": _CONVERTER,
+    "warcit_spark/sources/warc.py:scan_warc":
+        "the WARC-path tests read the sink's output back through it",
+    "warcit_spark/operators/dedup.py:ngram_dfcap_excluded": _DFCAP,
+    "warcit_spark/observe.py:observation_ready": _DFCAP,
+    "warcit_spark/observe.py:observation_metrics": _DFCAP,
+}
+
+
+def _names(node, skip: set) -> set[str]:
+    """Every name a subtree refers to (``f``, ``x.f``), outside the nodes
+    whose ids are in ``skip``."""
+    out, todo = set(), [node]
+    while todo:
+        n = todo.pop()
+        if isinstance(n, ast.Name):
+            out.add(n.id)
+        elif isinstance(n, ast.Attribute):
+            out.add(n.attr)
+        todo.extend(c for c in ast.iter_child_nodes(n) if id(c) not in skip)
+    return out
+
+
+def no_product_caller() -> list[str]:
+    """Every public function or method under ``warcit_spark/`` (a class
+    through its ``__init__``) that no product code refers to.
+
+    Product code is ``warcit_spark/``, ``__spark_entry__.py``, ``tools/``,
+    ``jobs/``, ``perfbench/`` and ``bench*.py``; ``tests/`` is not. A name
+    is in use when code outside the public definitions, or a public
+    definition in use, refers to it; package ``__init__`` imports do not
+    count, nor a definition's references to itself. Names match by their
+    last part, as calls do above.
+    """
+    defs = list(_defs())
+    inside = {id(fn) for _, _, fn, _ in defs}
+    refs: dict[str, set] = {}
+    for _, name, fn, _ in defs:
+        refs.setdefault(name, set()).update(_names(fn, inside) - {name})
+    live = set().union(*(_names(_parse(p), inside) for p in _product_files()))
+    todo = list(live)
+    while todo:
+        for n in refs.get(todo.pop(), set()) - live:
+            live.add(n)
+            todo.append(n)
+    return [where for where, name, _, _ in defs if name not in live]
+
+
+def test_every_public_name_has_a_product_caller():
+    found = no_product_caller()
+    unused = [where for where in found if where not in NO_PRODUCT_CALLER_OK]
+    assert not unused, (
+        f"{len(unused)} public name(s) that only tests refer to; delete "
+        "each (and its tests), or move a test oracle under tests/:\n  "
+        + "\n  ".join(unused))
+    stale = sorted(set(NO_PRODUCT_CALLER_OK) - set(found))
+    assert not stale, f"allowlisted but has a product caller or is gone: {stale}"
+
+
 def test_every_defaulted_parameter_is_set_by_some_caller():
     unused = unused_params()
     assert not unused, (
@@ -148,6 +222,7 @@ def test_every_defaulted_parameter_is_set_by_some_caller():
 
 
 if __name__ == "__main__":
+    print("\n".join(no_product_caller()))
     found = unused_params()
     print("\n".join(found))
     print(f"{len(found)} unused in {len({f.split('(')[0] for f in found})} "

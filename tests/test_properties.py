@@ -14,7 +14,7 @@ import pandas as pd
 from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
-from warcit_spark.functions.urls import canonicalize_urls_pandas
+from tests.oracle import canonicalize_urls_pandas
 from warcit_spark.operators.dedup import _simhash_batch
 
 # URL-ish generator: scheme/host/port/path/query fragments with the messy
@@ -186,7 +186,7 @@ def test_politeness_two_stage_equals_single_window(data):
 
 # SURT twin properties (surt_expr parity with surt_py is pinned on a
 # combinatorial corpus in tests/test_urls.py)
-from warcit_spark.functions.urls import surt_py
+from tests.oracle import surt_py
 
 
 @settings(max_examples=300, deadline=None)

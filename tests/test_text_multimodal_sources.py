@@ -1,8 +1,7 @@
-"""Text-analysis functions, multimodal plumbing, and file/zip sources."""
+"""Text-analysis functions, file/zip sources, sampling and tf-idf."""
 
 from __future__ import annotations
 
-import os
 import zipfile
 
 import pytest
@@ -15,11 +14,6 @@ from warcit_spark.functions.text import (
     quality_score_expr,
     stopword_ratio_expr,
     token_count_expr,
-)
-from warcit_spark.operators.multimodal import (
-    attach_media_meta,
-    extract_media_features,
-    generate_media_fixture,
 )
 from warcit_spark.sources.binary_files import scan_files, scan_zip, union_scans
 from warcit_spark.sources.mapfile import MapfileValidationError, read_mapfile
@@ -66,34 +60,6 @@ def test_fingerprint_whitespace_invariant(spark):
     )
     got = [r.f for r in df.select(fingerprint_expr(F.col("text")).alias("f")).collect()]
     assert got[0] == got[1] and got[0] != got[2]
-
-
-# ----------------------------------------------------------------- multimodal
-def test_media_meta_sniffing(spark):
-    media = generate_media_fixture(spark, 10)
-    out = attach_media_meta(media)
-    sniffed = {r.media_id: r.sniffed_mime for r in out.collect()}
-    assert sniffed[0] == "image/png"
-    assert sniffed[1] == "image/jpeg"
-    assert sniffed[2] == "image/gif"
-    assert sniffed[3] == "audio/wav"
-    assert sniffed[4] == "video/x-flv"
-
-
-def test_media_decode_stub_raises_without_fake(spark):
-    media = generate_media_fixture(spark, 5)
-    with pytest.raises(Exception):  # NotImplementedError inside the task
-        extract_media_features(media, deterministic_fake=False).collect()
-
-
-def test_media_feature_plumbing_with_fake(spark):
-    media = generate_media_fixture(spark, 10)
-    out = extract_media_features(media, deterministic_fake=True).collect()
-    assert len(out) == 10
-    assert all(r.feat_dim == 8 for r in out)
-    by_id = {r.media_id: list(r.feature) for r in out}
-    out2 = extract_media_features(media, deterministic_fake=True).collect()
-    assert {r.media_id: list(r.feature) for r in out2} == by_id  # deterministic
 
 
 # -------------------------------------------------------------------- sources
@@ -201,129 +167,6 @@ def test_zip_path_auto_resolution(spark, tmp_path_factory):
         scan_input(spark, "/nonexistent/nowhere", "http://z.test/")
 
 
-# -------------------------------------------------- real PNG/WAV codec kernels
-def test_png_roundtrip_all_filters():
-    """encode_png (filter 0) -> decode_png recovers pixels exactly; decode
-    also inverts Sub/Up/Average/Paeth filtered scanlines (spec §9)."""
-    import struct
-    import zlib
-
-    from warcit_spark.operators.media_codecs import (
-        PNG_MAGIC, decode_png, encode_png, parse_png_header,
-    )
-
-    px = bytes(((x * 13 + y * 7 + c * 3) % 256)
-               for y in range(5) for x in range(4) for c in range(3))
-    blob = encode_png(4, 5, 3, px)
-    hdr = parse_png_header(blob)
-    assert (hdr["width"], hdr["height"], hdr["channels"]) == (4, 5, 3)
-    w, h, ch, out = decode_png(blob)
-    assert (w, h, ch) == (4, 5, 3)
-    assert bytes(out) == px
-
-    # hand-build a PNG using every filter type once; pin the expected
-    # reconstruction against a straightforward reference computation
-    stride = 4 * 3
-    raw_rows = [bytes((y * 17 + i) % 256 for i in range(stride)) for y in range(5)]
-
-    def chunk(ctype, payload):
-        body = ctype + payload
-        return struct.pack(">I", len(payload)) + body + struct.pack(
-            ">I", zlib.crc32(body) & 0xFFFFFFFF)
-
-    # encode rows with filters [0,1,2,3,4] applied against the RECONSTRUCTED
-    # previous row (i.e. produce valid filtered data for known pixels)
-    recon = []
-    enc = bytearray()
-    for y, (f, want) in enumerate(zip([0, 1, 2, 3, 4], raw_rows)):
-        prev = recon[y - 1] if y else bytes(stride)
-        line = bytearray(want)
-        if f == 1:
-            for x in range(stride - 1, 2, -1):
-                line[x] = (line[x] - want[x - 3]) & 0xFF
-        elif f == 2:
-            for x in range(stride):
-                line[x] = (line[x] - prev[x]) & 0xFF
-        elif f == 3:
-            for x in range(stride):
-                left = want[x - 3] if x >= 3 else 0
-                line[x] = (line[x] - ((left + prev[x]) >> 1)) & 0xFF
-        elif f == 4:
-            from warcit_spark.operators.media_codecs import _paeth
-            for x in range(stride):
-                left = want[x - 3] if x >= 3 else 0
-                ul = prev[x - 3] if x >= 3 else 0
-                line[x] = (line[x] - _paeth(left, prev[x], ul)) & 0xFF
-        enc += bytes([f]) + bytes(line)
-        recon.append(want)
-    ihdr = struct.pack(">IIBBBBB", 4, 5, 8, 2, 0, 0, 0)
-    blob2 = (PNG_MAGIC + chunk(b"IHDR", ihdr)
-             + chunk(b"IDAT", zlib.compress(bytes(enc)))
-             + chunk(b"IEND", b""))
-    w, h, ch, out2 = decode_png(blob2)
-    assert bytes(out2) == b"".join(raw_rows)
-
-
-def test_wav_roundtrip_and_header():
-    from warcit_spark.operators.media_codecs import (
-        decode_wav, encode_wav, parse_wav_header,
-    )
-
-    samples = [((j % 16) - 8) / 8.0 for j in range(80)]
-    blob = encode_wav(samples, sample_rate=16000, channels=1)
-    hdr = parse_wav_header(blob)
-    assert hdr["channels"] == 1
-    assert hdr["sample_rate"] == 16000
-    assert hdr["bits_per_sample"] == 16
-    assert hdr["n_frames"] == 80
-    assert abs(hdr["duration_s"] - 80 / 16000) < 1e-9
-    h2, got = decode_wav(blob)
-    assert len(got) == 80
-    assert max(abs(a - b) for a, b in zip(got, samples)) < 1e-3
-
-
-def test_wav_header_matches_stdlib_wave():
-    """Pin our RIFF walk against the stdlib wave module on the same bytes."""
-    import io
-    import wave
-
-    from warcit_spark.operators.media_codecs import encode_wav, parse_wav_header
-
-    blob = encode_wav([0.1] * 123, sample_rate=22050, channels=2)
-    with wave.open(io.BytesIO(blob)) as wf:
-        assert wf.getnchannels() == 2
-        assert wf.getframerate() == 22050
-        assert wf.getsampwidth() == 2
-        hdr = parse_wav_header(blob)
-        assert hdr["channels"] == wf.getnchannels()
-        assert hdr["sample_rate"] == wf.getframerate()
-        assert hdr["n_frames"] == wf.getnframes()
-
-
-def test_media_features_real_png_wav(spark):
-    """PNG/WAV fixture rows decode for real — no fake flag needed — and the
-    features carry genuine dimensions/duration."""
-    from warcit_spark.operators.multimodal import extract_media_meta
-
-    media = generate_media_fixture(spark, 10)
-    real = media.where("media_id % 5 in (0, 3)")
-    out = {r.media_id: list(r.feature)
-           for r in extract_media_features(real, deterministic_fake=False).collect()}
-    assert len(out) == 4  # ids 0,3,5,8
-    # PNG rows: [w, h, ch, means..., bitdepth-flag]
-    assert out[0][:3] == [4.0, 3.0, 3.0]
-    assert out[5][:3] == [4.0, 3.0, 3.0]
-    # WAV rows: duration 40/8000 s, rate/1e5
-    assert abs(out[3][0] - 40 / 8000) < 1e-6
-    assert abs(out[3][1] - 8000 / 1e5) < 1e-6  # float32 feature column
-
-    # meta struct fill via real header parse
-    metas = {r.media_id: r.meta for r in extract_media_meta(media).collect()}
-    assert metas[0].mime == "image/png" and metas[0].width == 4 and metas[0].height == 3
-    assert metas[3].mime == "audio/wav" and abs(metas[3].duration_s - 0.005) < 1e-9
-    assert metas[1] is None  # jpeg filler: no real parse
-
-
 # -------------------------------------------------- sampling + tf-idf
 def test_rate_threshold_hex_exact():
     from warcit_spark.operators.sampling import rate_threshold_hex
@@ -334,31 +177,6 @@ def test_rate_threshold_hex_exact():
     assert int(rate_threshold_hex(0.25), 16) == 1 << 126
     with __import__("pytest").raises(ValueError):
         rate_threshold_hex(1.5)
-
-
-def test_deterministic_sample_matches_hashlib(spark):
-    """Spark md5-threshold membership == hashlib.md5 recomputation, and the
-    rate is honored within binomial noise."""
-    import hashlib
-
-    from warcit_spark.operators.sampling import (
-        deterministic_sample,
-        rate_threshold_hex,
-    )
-
-    df = spark.createDataFrame(
-        [(f"http://h/{i}",) for i in range(2000)], "url string"
-    )
-    rate = 0.3
-    got = {r.url for r in deterministic_sample(df, "url", rate).collect()}
-    thresh = rate_threshold_hex(rate)
-    want = {
-        f"http://h/{i}"
-        for i in range(2000)
-        if hashlib.md5(f"http://h/{i}".encode()).hexdigest() < thresh
-    }
-    assert got == want
-    assert 0.25 < len(got) / 2000 < 0.35
 
 
 def test_stratified_sample_rates_and_determinism(spark):
@@ -402,26 +220,3 @@ def test_tfidf_topk_terms_golden(spark):
     assert out[(0, 2)] == ("common", 1.0)
     assert out[(1, 1)] == ("duck", 6.0)
     assert out[(2, 1)] == ("unique", 3.0)
-
-
-def test_media_corrupt_png_falls_back_to_fake(spark):
-    """Valid PNG magic + garbage IDAT must not kill the batch when the
-    deterministic fake is on (zlib errors normalize to ValueError)."""
-    from warcit_spark.operators.media_codecs import PNG_MAGIC
-    import struct
-
-    bad = (PNG_MAGIC
-           + struct.pack(">I4s", 13, b"IHDR")
-           + struct.pack(">IIBBBBB", 4, 3, 8, 2, 0, 0, 0) + b"\x00" * 4
-           + struct.pack(">I4s", 8, b"IDAT") + b"garbage!" + b"\x00" * 4
-           + struct.pack(">I4s", 0, b"IEND") + b"\x00" * 4)
-    media = spark.createDataFrame(
-        [(0, "image", bad, None)],
-        "media_id long, kind string, payload binary, "
-        "meta struct<mime:string, width:int, height:int, duration_s:double>",
-    )
-    out = extract_media_features(media, deterministic_fake=True).collect()
-    assert len(out) == 1 and out[0].feat_dim == 8
-    import pytest as _pytest
-    with _pytest.raises(Exception):  # without the fake: NotImplementedError
-        extract_media_features(media, deterministic_fake=False).collect()

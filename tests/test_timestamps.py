@@ -11,7 +11,6 @@ from warcit_spark.functions.timestamps import (
     iso8601z_expr,
     normalize_ts14_expr,
     pad14_down_expr,
-    ts14_expr,
 )
 
 CASES = [
@@ -69,8 +68,5 @@ def test_iso_roundtrip(spark):
     df = spark.createDataFrame([("2015-06-07 08:09:10",)], ["s"]).select(
         F.to_timestamp("s").alias("ts")
     )
-    row = df.select(
-        iso8601z_expr(F.col("ts")).alias("iso"), ts14_expr(F.col("ts")).alias("t14")
-    ).first()
+    row = df.select(iso8601z_expr(F.col("ts")).alias("iso")).first()
     assert row.iso == "2015-06-07T08:09:10Z"
-    assert row.t14 == "20150607080910"

@@ -11,10 +11,10 @@ Layout
 - ``functions/``  scalar/column function surface (urls, mime, timestamps, text)
 - ``sources/``    scans: binary files, mapfile CSV/TSV, YAML sidecars, fixtures
 - ``operators/``  relational operators: filters, joins, record derivation,
-                  dedup, similarity, text analysis, multimodal plumbing
+                  dedup, similarity, text analysis
 - ``plans/``      multi-operator pipelines: the crawl round/loop, politeness,
-                  state catalog
-- ``streaming/``  Structured Streaming ingest variants
+                  state catalog, files to WARC
+- ``sinks/``      WARC export and bucketed tables
 """
 
 from warcit_spark.session import get_spark

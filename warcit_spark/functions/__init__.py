@@ -8,24 +8,20 @@ the semantics, and are vectorized over Arrow batches — never per-row Python.
 
 from warcit_spark.functions.urls import (
     canonicalize_url_expr,
-    canonicalize_urls_pandas,
     encode_relpath_expr,
     host_expr,
     salted_host_expr,
     synth_url_expr,
-    url_hash64_expr,
 )
 from warcit_spark.functions.timestamps import normalize_ts14_expr, iso8601z_expr
 from warcit_spark.functions.mime import guess_mime_expr
 
 __all__ = [
     "canonicalize_url_expr",
-    "canonicalize_urls_pandas",
     "encode_relpath_expr",
     "host_expr",
     "salted_host_expr",
     "synth_url_expr",
-    "url_hash64_expr",
     "normalize_ts14_expr",
     "iso8601z_expr",
     "guess_mime_expr",

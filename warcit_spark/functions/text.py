@@ -336,6 +336,11 @@ def gopher_keep_expr(
 # fraction of n-gram instances that are duplicates).  Row-local array
 # expressions — no shuffle at all; each doc's grams never leave its row.
 #
+# The fraction helpers take the gram array as an already-bound column:
+# a higher-order lambda that names a computed array re-evaluates it per
+# element (no common-subexpression elimination reaches inside the lambda),
+# so callers select word_ngrams_expr(...) first and count over the column.
+#
 # Scale note: the row-local distinct×filter count is O(g·d) per doc
 # (g grams, d distinct grams) — right for web pages (10^2-10^3 words).
 # For book-length docs flip to the explode shape: explode grams, groupBy
@@ -358,9 +363,9 @@ def word_ngrams_expr(text: Column, n: int = 2) -> Column:
     )
 
 
-def top_ngram_frac_expr(text: Column, n: int = 2) -> Column:
-    """Occurrences of the most frequent word n-gram / total n-grams."""
-    grams = word_ngrams_expr(text, n)
+def top_ngram_frac_expr(grams: Column) -> Column:
+    """Occurrences of the most frequent n-gram / total n-grams, over a
+    bound :func:`word_ngrams_expr` column."""
     total = F.size(grams)
     top = F.array_max(
         F.transform(
@@ -373,10 +378,10 @@ def top_ngram_frac_expr(text: Column, n: int = 2) -> Column:
     )
 
 
-def dup_ngram_frac_expr(text: Column, n: int = 2) -> Column:
+def dup_ngram_frac_expr(grams: Column) -> Column:
     """Fraction of n-gram INSTANCES whose gram occurs more than once
-    (= 1 - singletons/total)."""
-    grams = word_ngrams_expr(text, n)
+    (= 1 - singletons/total), over a bound :func:`word_ngrams_expr`
+    column."""
     total = F.size(grams)
     singles = F.size(
         F.filter(

@@ -77,8 +77,3 @@ def iso8601z_expr(ts: Column) -> Column:
     """Timestamp column -> ISO-8601 Z string (warcio ``datetime_to_iso_date``
     analog, used for WARC-Date from mtimes, warcit/warcit.py:501)."""
     return F.date_format(ts, "yyyy-MM-dd'T'HH:mm:ss'Z'")
-
-
-def ts14_expr(ts: Column) -> Column:
-    """Timestamp column -> 14-digit string (warcio ``TIMESTAMP_14``)."""
-    return F.date_format(ts, "yyyyMMddHHmmss")

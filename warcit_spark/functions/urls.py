@@ -10,17 +10,17 @@ Semantics parity targets (reference, read-only at /root/reference):
   scheme+host, strip fragment, strip default port (http:80 / https:443),
   sort query parameters, normalize empty path to '/'.
 
-Everything below the pandas variant is pure ``pyspark.sql.functions`` —
-JVM-side, whole-stage-codegen'd, no Python in the hot path.  The pandas UDF
-variant exists as an independently-implemented cross-check used by tests
-(two implementations agreeing on random inputs is the correctness argument).
+Everything here is pure ``pyspark.sql.functions`` — JVM-side,
+whole-stage-codegen'd, no Python in the hot path.  The urllib twin
+(``tests/oracle.canonicalize_urls_pandas``) is an independently-implemented
+cross-check (two implementations agreeing on random inputs is the
+correctness argument).
 """
 
 from __future__ import annotations
 
 import re
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -202,58 +202,9 @@ def canonicalize_with_host_expr(url: Column) -> Column:
     )
 
 
-def canonicalize_urls_pandas(urls: pd.Series) -> pd.Series:
-    """Independent vectorized implementation (urllib-based) for cross-checks.
-
-    Wrapped by tests in ``pandas_udf(StringType())``; the engine's hot path
-    uses :func:`canonicalize_url_expr` (JVM).  Agreement between the two on
-    adversarial inputs is asserted in tests/test_urls.py.
-    """
-    from urllib.parse import urlsplit
-
-    def one(u: str) -> str:
-        if u is None:
-            return None
-        u = u.strip()
-        u = u.split("#", 1)[0]
-        u = u.replace(" ", "%20")
-        try:
-            parts = urlsplit(u)
-        except ValueError:
-            return u
-        if not parts.scheme or not parts.netloc:
-            return u
-        scheme = parts.scheme.lower()
-        netloc = parts.netloc
-        # strip only a trailing ':<digits>' default port (same rule as the
-        # JVM expression: IPv6 brackets and userinfo colons never match)
-        m = re.search(r":(\d+)$", netloc)
-        if m and m.group(1) == DEFAULT_PORTS.get(scheme, ""):
-            netloc = netloc[: m.start()]
-        netloc = netloc.lower()
-        path = parts.path or "/"
-        query = ""
-        if parts.query:
-            query = "?" + "&".join(sorted(parts.query.split("&")))
-        return f"{scheme}://{netloc}{path}{query}"
-
-    return urls.map(one)
-
-
 def host_expr(url: Column) -> Column:
     """Lowercased host of a URL (politeness/partitioning key)."""
     return F.lower(F.try_parse_url(url, F.lit("HOST")))
-
-
-def url_hash64_expr(url: Column) -> Column:
-    """64-bit dedup/prefilter hash (xxhash64).
-
-    The exact seen-set keys on the full canonical URL string — at 10^10 URLs
-    even a 64-bit hash sees birthday collisions (~3/1000 per 10^9), and a
-    32-bit murmur3 is guaranteed to collide, so hashes here are *partitioning
-    and prefilter* keys only, never identity (SURVEY.md §7.3 hard part #1).
-    """
-    return F.xxhash64(url)
 
 
 def salted_host_expr(host: Column, url: Column, n_salt: int = 16) -> Column:
@@ -375,30 +326,3 @@ def surt_expr(url: Column) -> Column:
         host != "",
         F.concat(rev_host, port_part, F.lit(")"), path, query_part),
     ).otherwise(F.lit(None).cast("string"))
-
-
-def surt_py(url: str) -> str | None:
-    """Pure-Python twin of :func:`surt_expr` (independent reimplementation
-    for tests/property pins — the canonicalize_urls_pandas convention).
-    Mirrors the expression semantics exactly: Java-regex-compatible
-    patterns on the lowered string, space-only trim."""
-    u = url.strip(" ").lower()
-    u = u.split("#", 1)[0]
-    m = re.match(r"^([a-z][a-z0-9+.\-]*)://", u)
-    scheme = m.group(1) if m else ""
-    m = re.match(r"^[a-z][a-z0-9+.\-]*://([^/?#]+)", u)
-    auth = (m.group(1) if m else "").split("@")[-1]
-    m = re.search(r":(\d+)$", auth)
-    port = m.group(1) if m else ""
-    host = re.sub(r":\d+$", "", auth)
-    host = re.sub(r"^www\d*\.", "", host)
-    if not host:
-        return None
-    dp = DEFAULT_PORTS.get(scheme, "")
-    port_part = ":" + port if port and port != dp else ""
-    m = re.match(r"^[a-z][a-z0-9+.\-]*://[^/?#]*([^?#]*)", u)
-    path = (m.group(1) if m else "") or "/"
-    m = re.search(r"\?(.*)", u)
-    query = m.group(1) if m else ""
-    q_part = "?" + "&".join(sorted(query.split("&"))) if query else ""
-    return ",".join(reversed(host.split("."))) + port_part + ")" + path + q_part

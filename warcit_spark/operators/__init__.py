@@ -1,2 +1,2 @@
 """Relational operators: filters, joins, record derivation, dedup,
-similarity, text analysis, multimodal plumbing."""
+similarity, text analysis."""

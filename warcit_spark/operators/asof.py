@@ -10,9 +10,9 @@ Two implementations, one semantics:
   ``last(right_payload, ignorenulls=True)`` over a window ordered by
   (time, right-first tiebreak).  One shuffle on (key), no row explosion,
   scales to arbitrarily many right rows per key.
-- :func:`asof_join_pandas`: grouped ``applyInPandas`` with
-  ``pandas.merge_asof`` per key group — the Arrow-vectorized twin of the
-  same backward semantics.
+- ``tests/oracle.asof_join_pandas``: grouped ``applyInPandas`` with
+  ``pandas.merge_asof`` per key group — the test twin of the same
+  backward semantics.
 
 Range join: :func:`range_join` buckets the range key so the theta join
 becomes an equi-join on (key, bucket) + a residual filter — the standard
@@ -72,52 +72,6 @@ def asof_join(
         *[F.col("_rlast")[c].alias(c) for c in right_cols],
     )
     return out
-
-
-def asof_join_pandas(
-    left: DataFrame,
-    right: DataFrame,
-    on: str,
-    by: str,
-    right_cols: list[str] | None = None,
-) -> DataFrame:
-    """merge_asof per key group via applyInPandas (Arrow batches)."""
-    import pandas as pd
-
-    right_cols = right_cols or [c for c in right.columns if c not in (on, by)]
-    l_cols = list(left.columns)
-    out_fields = [
-        f"`{c}` {left.schema[c].dataType.simpleString()}" for c in l_cols
-    ] + [f"`{c}` {right.schema[c].dataType.simpleString()}" for c in right_cols]
-    out_schema = ", ".join(out_fields)
-
-    l_tag = left.withColumn("_side", F.lit("l"))
-    r_tag = right.select(
-        by, on, *right_cols
-    ).withColumn("_side", F.lit("r"))
-    cols = set(l_tag.columns) | set(r_tag.columns)
-    l_full = l_tag.select(
-        *[F.col(c) if c in l_tag.columns else F.lit(None).alias(c) for c in cols]
-    )
-    r_full = r_tag.select(
-        *[F.col(c) if c in r_tag.columns else F.lit(None).alias(c) for c in cols]
-    )
-
-    def merge(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        lpdf = pdf[pdf["_side"] == "l"][l_cols].sort_values(on)
-        rpdf = pdf[pdf["_side"] == "r"][[by, on, *right_cols]].sort_values(on)
-        if lpdf.empty:
-            return pd.DataFrame(columns=l_cols + right_cols)
-        merged = pd.merge_asof(
-            lpdf,
-            rpdf.drop(columns=[by]),
-            on=on,
-            direction="backward",
-            suffixes=("", "_r"),
-        )
-        return merged[l_cols + right_cols]
-
-    return l_full.unionByName(r_full).groupBy(by).applyInPandas(merge, out_schema)
 
 
 def range_join(

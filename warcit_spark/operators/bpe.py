@@ -139,109 +139,3 @@ def bpe_train_merges(
     for m in merges[1:]:
         out = out.unionByName(m)
     return out
-
-
-def bpe_train_merges_py(texts, n_merges: int = 8):
-    """Pure-Python twin (test pin): same tokenization, same greedy
-    leftmost fusion, same (count desc, pair asc) tie-break."""
-    import re
-    from collections import Counter
-
-    vocab = Counter()
-    for t in texts:
-        for w in re.split(r"[^a-z]+", t.lower()):
-            if w:
-                vocab[w] += 1
-    syms = {w: [*w, END_OF_WORD] for w in vocab}
-    merges = []
-    for step in range(1, n_merges + 1):
-        pc = Counter()
-        for w, s in syms.items():
-            for i in range(len(s) - 1):
-                pc[(s[i], s[i + 1])] += vocab[w]
-        if not pc:
-            break
-        (a, b), c = min(pc.items(), key=lambda kv: (-kv[1], kv[0]))
-        merges.append((step, a, b, c))
-        for w, s in syms.items():
-            out, i = [], 0
-            for tok in s:
-                if out and out[-1] == a and tok == b:
-                    out[-1] = a + b
-                else:
-                    out.append(tok)
-            syms[w] = out
-    return merges
-
-
-def _encode_word(word: str, ranks: dict) -> list:
-    """Encode one word with ranked merges: repeatedly fuse the
-    lowest-rank adjacent pair (the standard BPE apply loop)."""
-    syms = [*word, END_OF_WORD]
-    while len(syms) > 1:
-        best_i, best_r = -1, None
-        for i in range(len(syms) - 1):
-            r = ranks.get((syms[i], syms[i + 1]))
-            if r is not None and (best_r is None or r < best_r):
-                best_i, best_r = i, r
-        if best_r is None:
-            break
-        syms[best_i : best_i + 2] = [syms[best_i] + syms[best_i + 1]]
-    return syms
-
-
-def bpe_encode(
-    docs: DataFrame,
-    merges: DataFrame,
-    text_col: str = "text",
-) -> DataFrame:
-    """Apply learned merges (the ``bpe_train_merges`` output) to encode
-    each document into BPE tokens — train AND apply, the full tokenizer
-    loop.  Adds ``bpe_tokens: array<string>``; grain preserved.
-
-    Scale shape: the merge table is a TOKENIZER ARTIFACT (10^4-10^5
-    rows), collected once onto the driver and shipped inside the
-    ``mapInPandas`` closure (broadcast-by-closure — the map-literal
-    codebook pattern of lm_quality, with the same rationale: the model
-    is config-sized, the corpus is not).  Encoding itself is the
-    classic rank-greedy loop per word — inherently sequential per word,
-    so it runs as a vectorized-batch custom op (pandas batches, a
-    per-word memo dict amortizing Zipf-repeated words), never per-row
-    UDF dispatch.
-    """
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    rank_rows = merges.select("step", "sym_left", "sym_right").collect()
-    ranks = {(r.sym_left, r.sym_right): r.step for r in rank_rows}
-    if len(ranks) > 200_000:
-        raise ValueError(
-            f"merge table has {len(ranks)} rows; >200k is not a tokenizer "
-            "artifact — shard the encode or prune the merges"
-        )
-    import re as _re
-
-    fields = docs.schema.fieldNames()
-    out_schema = docs.schema.simpleString()[7:-1] + ",bpe_tokens:array<string>"
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        memo: dict = {}
-
-        def enc(text):
-            toks = []
-            for w in _re.split(r"[^a-z]+", (text or "").lower()):
-                if not w:
-                    continue
-                got = memo.get(w)
-                if got is None:
-                    got = memo[w] = _encode_word(w, ranks)
-                toks.extend(got)
-            return toks
-
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf["bpe_tokens"] = pdf[text_col].map(enc)
-            yield pdf
-
-    return docs.mapInPandas(fn, out_schema)

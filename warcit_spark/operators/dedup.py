@@ -240,57 +240,6 @@ def simhash(df: DataFrame) -> DataFrame:
     return hashed.mapInPandas(fn, "id long, simhash long")
 
 
-def simhash_near_dups(
-    df: DataFrame,
-    max_hamming: int = 3,
-) -> DataFrame:
-    """Near-dup pairs by SimHash Hamming distance <= max_hamming.
-
-    Scale path: block on 4 x 16-bit sub-bands (pigeonhole: any pair within
-    Hamming<=3 of 64 bits shares at least one exact 16-bit quarter), join
-    per block, verify with popcount — never O(n^2).
-    """
-    sh = simhash(df)
-    quarters = sh.select(
-        "id",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(q).alias("q"),
-                        F.shiftrightunsigned(F.col("simhash"), q * 16)
-                        .bitwiseAND(F.lit(0xFFFF))
-                        .alias("qh"),
-                    )
-                    for q in range(4)
-                ]
-            )
-        ).alias("b"),
-    ).select("id", "simhash", "b.q", "b.qh")
-
-    l, r = quarters.alias("l"), quarters.alias("r")
-    cand = (
-        l.join(
-            r,
-            (F.col("l.q") == F.col("r.q"))
-            & (F.col("l.qh") == F.col("r.qh"))
-            & (F.col("l.id") < F.col("r.id")),
-        )
-        .select(
-            F.col("l.id").alias("doc_id_a"),
-            F.col("r.id").alias("doc_id_b"),
-            F.col("l.simhash").alias("sa"),
-            F.col("r.simhash").alias("sb"),
-        )
-        .dropDuplicates(["doc_id_a", "doc_id_b"])
-    )
-    hamming = F.bit_count(F.col("sa").bitwiseXOR(F.col("sb")))
-    return cand.withColumn("hamming", hamming).where(
-        F.col("hamming") <= max_hamming
-    ).select("doc_id_a", "doc_id_b", "hamming")
-
-
 # ------------------------------------------------------------- ngram jaccard
 def ngram_jaccard_pairs(
     df: DataFrame,

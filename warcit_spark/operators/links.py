@@ -3,8 +3,8 @@
 The reference never extracts links (its inputs are enumerated files); the
 frontier engine discovers URLs from fetched HTML with
 ``regexp_extract_all`` on the JVM (whole-stage codegen, zero Python)
-followed by ``explode``: :func:`extract_links` for outlinks,
-:func:`anchor_text_agg` for per-target anchor text.
+followed by ``explode``: :func:`hrefs_expr` then :func:`resolve_hrefs`
+for outlinks, :func:`anchor_text_agg` for per-target anchor text.
 
 Both resolve through one private pair: :func:`_parent_parts` parses the
 parent URL once per page, before the explode, and :func:`_resolve_href`
@@ -82,19 +82,6 @@ def resolve_hrefs(
     return exploded.select(
         "url", *carry, _resolve_href(F.col("_href")).alias("link")
     ).where(F.col("link").isNotNull())
-
-
-def extract_links(
-    pages: DataFrame,
-    carry: tuple[str, ...] = ("priority",),
-) -> DataFrame:
-    """(url, *carry, link) — one row per resolved outlink.  Pure JVM."""
-    with_hrefs = pages.select(
-        "url",
-        *[F.col(c) for c in carry],
-        hrefs_expr(F.col("html")).alias("_hrefs"),
-    )
-    return resolve_hrefs(with_hrefs, carry=carry)
 
 
 # ------------------------------------------------------------- anchor text

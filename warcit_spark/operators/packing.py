@@ -124,16 +124,3 @@ def greedy_pack(
         return pdf[["doc_id", "bucket", "tokens", "bin", "offset"]]
 
     return base.groupBy("bucket").applyInPandas(_pack, PACK_SCHEMA)
-
-
-def pack_stats(packed: DataFrame, capacity: int) -> DataFrame:
-    """Per-(bucket, bin) fill summary for a greedy_pack result: docs per
-    window, tokens used, waste.  One map-side-combined aggregation."""
-    return (
-        packed.groupBy("bucket", "bin")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.sum("tokens").cast("long").alias("fill"),
-        )
-        .withColumn("waste", F.greatest(F.lit(capacity) - F.col("fill"), F.lit(0)).cast("long"))
-    )

@@ -244,71 +244,3 @@ def transclusion_metadata_records(
         F.col("media_url"),
         F.col("seq").cast("int").alias("seq"),
     )
-
-
-def wet_records(
-    pages: DataFrame,
-) -> DataFrame:
-    """Common-Crawl-style WET sidecar derivation: one ``conversion``
-    record per fetched HTML page whose payload is the page's extracted
-    visible text (functions/html.py) as UTF-8, ``text/plain``, with
-    refer-back target headers to the original response — the published
-    WET convention (CC's WET files are WARC conversion records over the
-    crawl's responses).
-
-    The whole derivation is a row-local JVM projection (extraction
-    chain + encode + sha1); it streams straight into the sink's
-    per-partition writer with zero shuffles — the WET sweep over a
-    100-TB crawl is exactly one pass over the pages table.
-    """
-    from warcit_spark.functions.html import html_text_expr
-    from warcit_spark.functions.timestamps import iso8601z_expr
-
-    html_str = F.decode(F.col("html"), "UTF-8")
-    payload = F.encode(html_text_expr(html_str), "UTF-8")
-    warc_date = iso8601z_expr(F.col("warc_ts"))
-    return pages.select(
-        "url",
-        F.lit("conversion").alias("record_type"),
-        warc_date.alias("warc_date"),
-        F.lit("text/plain").alias("content_type"),
-        payload.alias("payload"),
-        F.sha1(payload).alias("payload_digest"),
-        F.col("url").alias("refers_to_target_uri"),
-        warc_date.alias("refers_to_target_date"),
-    )
-
-
-def wat_records(
-    pages: DataFrame,
-) -> DataFrame:
-    """Common-Crawl-style WAT sidecar derivation: one ``metadata``
-    record per page whose JSON payload carries the page's envelope
-    metadata (title, extracted-text length, outlink count).  JSON is
-    built with ``to_json`` in the JVM (stable key order from the struct
-    field order) — unlike the A2 reverse-index (whose byte format the
-    reference pins to Python ``json.dumps``), WAT payloads are ours to
-    define, so the fast path is fine.  Zero shuffles, one pass.
-    """
-    from warcit_spark.functions.html import html_text_expr, html_title_expr
-    from warcit_spark.functions.timestamps import iso8601z_expr
-    from warcit_spark.operators.links import hrefs_expr
-
-    html_str = F.decode(F.col("html"), "UTF-8")
-    meta = F.struct(
-        html_title_expr(html_str).alias("title"),
-        F.length(html_text_expr(html_str)).alias("text_chars"),
-        F.size(hrefs_expr(F.col("html"))).alias("n_links"),
-    )
-    payload = F.encode(F.to_json(meta), "UTF-8")
-    warc_date = iso8601z_expr(F.col("warc_ts"))
-    return pages.select(
-        "url",
-        F.lit("metadata").alias("record_type"),
-        warc_date.alias("warc_date"),
-        F.lit("application/json").alias("content_type"),
-        payload.alias("payload"),
-        F.sha1(payload).alias("payload_digest"),
-        F.col("url").alias("refers_to_target_uri"),
-        warc_date.alias("refers_to_target_date"),
-    )

@@ -68,128 +68,3 @@ def apply_robots(frontier: DataFrame, robots: DataFrame) -> DataFrame:
             ),
         )
     )
-
-# ------------------------------------------------------------------ parser
-_ACC_TYPE = (
-    "struct<in_ua:boolean,active:boolean,"
-    "rules:array<struct<path_prefix:string,allow:boolean>>,delay:double>"
-)
-
-
-def parse_robots_txt(
-    robots_bodies: DataFrame,
-    agent: str = "*",
-) -> DataFrame:
-    """Parse raw robots.txt bodies into the rules table ``apply_robots``
-    consumes — closes the fetch->parse->rules gap in the crawl story
-    (previously the rules table was assumed pre-parsed).
-
-    Grammar (RFC 9309): a group is a run of consecutive ``User-agent``
-    lines followed by directives; the group applies when any of its
-    agent lines is ``*`` or equals ``agent`` (case-insensitive);
-    ``#`` starts a comment; blank lines are insignificant; directive
-    keys are case-insensitive; an empty ``Disallow:`` value allows all
-    (no rule).  ``Crawl-delay`` (de-facto extension) is host-level: the
-    max over applicable groups, ``DEFAULT_CRAWL_DELAY`` otherwise.
-
-    Pattern support matches the engine's politeness model (prefix-only,
-    ``apply_robots`` above): a trailing ``*`` is stripped (identical
-    under prefix semantics); a rule with an interior wildcard is
-    truncated at its first ``*`` (the conservative prefix superset —
-    Google's documented longest-prefix fallback); a ``$``-anchored rule
-    cannot be represented as a prefix and is dropped — both policies are
-    pinned by test, not silent code paths.
-
-    Scale shape: each robots.txt is one row (RFC caps bodies at 500 KiB)
-    and the whole parse is ONE row-local fold (``F.aggregate``) over the
-    split lines — JVM higher-order exprs, zero Python, zero shuffle; the
-    output explodes to one row per rule plus an always-present
-    empty-prefix allow row so a host with only a Crawl-delay still
-    carries it (longest-prefix matching means the '' rule only wins when
-    nothing else matches = the default-allow the engine already applies).
-    """
-    agent_lc = agent.lower()
-
-    def step(acc, raw):
-        clean = F.trim(F.substring_index(raw, "#", 1))
-        ci = F.instr(clean, ":")
-        key = F.lower(F.trim(F.substring(clean, F.lit(1), ci - 1)))
-        val = F.trim(clean.substr(ci + 1, F.length(clean)))
-        is_blank = clean == ""
-        is_ua = (ci > 0) & (key == "user-agent")
-        ua_match = is_ua & ((F.lower(val) == "*") | (F.lower(val) == agent_lc))
-
-        active = F.when(
-            is_ua,
-            F.when(acc["in_ua"], acc["active"] | ua_match).otherwise(ua_match),
-        ).otherwise(acc["active"])
-
-        # prefix-only normalization: cut at the first '*', drop '$' rules
-        prefix = F.substring_index(val, "*", 1)
-        rule_ok = (
-            (ci > 0)
-            & acc["active"]
-            & ((key == "disallow") | (key == "allow"))
-            & (val != "")
-            & ~prefix.contains("$")
-        )
-        rules = F.when(
-            rule_ok,
-            F.array_append(
-                acc["rules"],
-                F.struct(
-                    prefix.alias("path_prefix"),
-                    (key == "allow").alias("allow"),
-                ),
-            ),
-        ).otherwise(acc["rules"])
-
-        delay_val = val.try_cast("double")
-        delay = F.when(
-            (ci > 0)
-            & acc["active"]
-            & (key == "crawl-delay")
-            & delay_val.isNotNull(),
-            F.greatest(acc["delay"], delay_val),
-        ).otherwise(acc["delay"])
-
-        return F.when(is_blank, acc).otherwise(
-            F.struct(
-                is_ua.alias("in_ua"),
-                active.alias("active"),
-                rules.alias("rules"),
-                delay.alias("delay"),
-            ).cast(_ACC_TYPE)
-        )
-
-    lines = F.split(F.col("body"), r"\r?\n")
-    init = F.named_struct(
-        F.lit("in_ua"), F.lit(False),
-        F.lit("active"), F.lit(False),
-        F.lit("rules"), F.array().cast(
-            "array<struct<path_prefix:string,allow:boolean>>"
-        ),
-        F.lit("delay"), F.lit(DEFAULT_CRAWL_DELAY),
-    ).cast(_ACC_TYPE)
-    acc = F.aggregate(lines, init, step)
-    # '' allow rule: carries the host delay even with zero path rules and
-    # only wins longest-prefix when nothing else matches (= default allow)
-    all_rules = F.array_append(
-        acc["rules"],
-        F.named_struct(
-            F.lit("path_prefix"), F.lit(""), F.lit("allow"), F.lit(True)
-        ).cast("struct<path_prefix:string,allow:boolean>"),
-    )
-    return (
-        robots_bodies.select(
-            "host",
-            acc["delay"].alias("crawl_delay"),
-            F.explode(all_rules).alias("_r"),
-        )
-        .select(
-            "host",
-            F.col("_r")["path_prefix"].alias("path_prefix"),
-            F.col("_r")["allow"].alias("allow"),
-            "crawl_delay",
-        )
-    )

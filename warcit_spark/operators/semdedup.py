@@ -10,8 +10,7 @@ dedup and the IVF ANN family.
 
 Scale shape at 100 TB:
 - assignment is the same in-row argmin expression the IVF family uses
-  (one dot product per centroid, no shuffle) and at ingest time becomes
-  the partition key (cf. :func:`warcit_spark.operators.similarity.ivf_ingest`);
+  (one dot product per centroid, no shuffle);
 - the within-cluster self-join shuffles both sides on the cluster id once;
   k grows with the corpus so clusters stay ~constant size, and AQE
   skew-join splits any hot cluster;

@@ -208,7 +208,7 @@ def kmeans_centroids(
     quantized at cast, integer-exact addition — order-independent, so
     shuffle fetch order cannot drift the result the way double sums
     would), and the mean is one float division of the exact sum.  The
-    pure-Python twin :func:`kmeans_centroids_py` reproduces the centroids
+    pure-Python twin ``tests/oracle.kmeans_centroids_py`` reproduces the centroids
     bit-for-bit (pinned by test), which is what lets a DuckDB oracle
     replay the quantizer.
 
@@ -261,54 +261,6 @@ def kmeans_centroids(
         for r in sums:
             n = r["_n"] or 1
             new[r["_c"]] = [float(r[f"_s{d}"]) / n for d in range(dim)]
-        cents = new
-    return cents
-
-
-def kmeans_centroids_py(
-    rows: list[tuple[int, list[float]]], k: int = 8, iters: int = 5
-) -> list[list[float]]:
-    """Pure-Python twin of :func:`kmeans_centroids` — bit-for-bit equal
-    centroids (pinned by test), so DuckDB oracles can replay the quantizer
-    without a SparkSession.
-
-    Mirrors each Spark step exactly: double→DECIMAL(30,12) quantization is
-    HALF_UP on the shortest-repr decimal (Spark's Decimal(double) path),
-    sums are exact integers, the mean is float(exact decimal) / n, and the
-    assignment argmin folds ``c2 - 2.0*dot`` left-to-right with a
-    lowest-index tie-break, like ``_nearest_centroid_expr``.
-    """
-    import decimal
-
-    q = decimal.Decimal("1e-12")
-
-    def quant(v: float) -> decimal.Decimal:
-        return decimal.Decimal(repr(v)).quantize(q, rounding=decimal.ROUND_HALF_UP)
-
-    rows = sorted(rows)
-    cents = [[float(x) for x in vec] for _, vec in rows[:k]]
-    vecs = [[float(x) for x in vec] for _, vec in rows]
-    qvecs = [[quant(x) for x in vec] for vec in vecs]
-    dim = len(cents[0])
-    for _ in range(iters):
-        c2s = [sum(x * x for x in c) for c in cents]
-        sums = {}
-        for v, qv in zip(vecs, qvecs):
-            best_i, best_s = None, None
-            for i, c in enumerate(cents):
-                dot = 0.0
-                for a, b in zip(v, c):
-                    dot = dot + a * b
-                s = c2s[i] - 2.0 * dot
-                if best_s is None or s < best_s:
-                    best_i, best_s = i, s
-            n, acc = sums.setdefault(best_i, [0, [decimal.Decimal(0)] * dim])
-            sums[best_i][0] = n + 1
-            for d in range(dim):
-                acc[d] += qv[d]
-        new = list(cents)
-        for i, (n, acc) in sums.items():
-            new[i] = [float(acc[d]) / n for d in range(dim)]
         cents = new
     return cents
 
@@ -369,52 +321,3 @@ def _probe_cells(
         for c in centroids
     ]
     return sorted(range(len(centroids)), key=lambda i: (q2[i], i))[:nprobe]
-
-
-def ivf_ingest(
-    embeddings: DataFrame,
-    centroids: list[list[float]],
-    path: str,
-) -> None:
-    """Persist embeddings PARTITIONED BY their assigned centroid — the
-    at-ingest IVF shape for the 100-TB table: assignment is computed once
-    here (in-row argmin, no shuffle beyond the write), and every probe
-    query afterwards prunes to ``nprobe`` partition directories instead
-    of scanning the corpus (:func:`ivf_topk_bucketed` asserts that plan).
-    ``ivf_cell`` becomes the Hive partition column of the parquet table;
-    on Iceberg the same layout is ``PARTITIONED BY (ivf_cell)``.
-    """
-    vec = F.col("embedding").cast("array<double>")
-    (
-        embeddings.withColumn("ivf_cell", _nearest_centroid_expr(vec, centroids))
-        .write.partitionBy("ivf_cell")
-        .mode("overwrite")
-        .parquet(path)
-    )
-
-
-def ivf_topk_bucketed(
-    spark,
-    path: str,
-    query_vec: list[float],
-    centroids: list[list[float]],
-    k: int = 10,
-    nprobe: int = 2,
-) -> DataFrame:
-    """IVF top-k over an :func:`ivf_ingest` table: the probe-cell filter
-    lands on the PARTITION column, so the scan reads ``nprobe`` of
-    ``len(centroids)`` directories (PartitionFilters — directory-level
-    pruning, not a row filter) and never touches the rest of the corpus.
-    Same result set as :func:`ivf_topk` with the same centroids/nprobe;
-    ``nprobe == len(centroids)`` degrades gracefully to exact brute force.
-    """
-    probe = _probe_cells(query_vec, centroids, nprobe)
-    df = spark.read.parquet(path)
-    q = _query_lit(query_vec)
-    sim = cosine_expr(F.col("embedding").cast("array<double>"), q)
-    return (
-        df.where(F.col("ivf_cell").isin(*probe))
-        .select(F.col("vec_id"), F.round(sim, 6).alias("cosine"))
-        .orderBy(F.col("cosine").desc(), F.col("vec_id").asc())
-        .limit(k)
-    )

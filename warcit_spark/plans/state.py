@@ -87,10 +87,6 @@ class CrawlState:
             json.dump(payload, fh, sort_keys=True)
         os.replace(tmp, self._marker_path(round_id))
 
-    def round_summary(self, round_id: int) -> dict:
-        with open(self._marker_path(round_id)) as fh:
-            return json.load(fh)
-
     # ----------------------------------------------------------------- tables
     def delta_path(self, table: str, round_id: int) -> str:
         return os.path.join(self.root, table, f"round={round_id}")
