@@ -768,7 +768,7 @@ def pp1_preprocess_pipeline(spark, sf_dir):
         token_count_expr,
     )
     from warcit_spark.operators.dedup import exact_dedup
-    from warcit_spark.operators.sampling import sample_predicate
+    from warcit_spark.operators.sampling import deterministic_sample
 
     d = _t(spark, sf_dir, "documents")
     gated = d.where(
@@ -778,7 +778,7 @@ def pp1_preprocess_pipeline(spark, sf_dir):
     )
     deduped = exact_dedup(gated)
     return (
-        deduped.where(sample_predicate(F.col("doc_id"), 0.5))
+        deterministic_sample(deduped, "doc_id", 0.5)
         .select("doc_id", "dup_count")
         .orderBy("doc_id")
     )

@@ -1,8 +1,12 @@
-"""Bucketed corpus tables (sinks/bucketed.py)."""
+"""Bucketed corpus tables + delta compaction (sinks/bucketed.py)."""
 
 from pyspark.sql import functions as F
 
-from warcit_spark.sinks.bucketed import write_bucketed_table
+from warcit_spark.sinks.bucketed import (
+    compact_deltas_to_bucketed,
+    latest_by_key,
+    write_bucketed_table,
+)
 
 
 def _deltas(spark):
@@ -18,11 +22,35 @@ def _deltas(spark):
     return spark.createDataFrame(rows, "url string, round int, html string")
 
 
+def test_latest_by_key(spark):
+    got = {
+        r["url"]: (r["round"], r["html"])
+        for r in latest_by_key(_deltas(spark), "url", "round").collect()
+    }
+    assert got == {
+        "http://h.test/a": (1, "v1-a"),
+        "http://h.test/b": (1, "v1-b"),
+        "http://h.test/c": (0, "v0-c"),
+        "http://h.test/d": (1, "v1-d"),
+    }
+
+
+def test_latest_by_key_version_ties_are_deterministic(spark):
+    # same url twice in the SAME round: struct ordering breaks the tie
+    # by the remaining columns -> max html string wins, every run
+    dup = spark.createDataFrame(
+        [("u", 1, "aaa"), ("u", 1, "zzz"), ("u", 0, "old")],
+        "url string, round int, html string",
+    )
+    got = latest_by_key(dup, "url", "round").collect()
+    assert [(r["url"], r["round"], r["html"]) for r in got] == [("u", 1, "zzz")]
+
+
 def test_compact_and_join_plan_is_exchange_free(spark, tmp_path):
     name = "pages_compact_test"
-    # the deltas compacted to each url's latest round
-    latest = _deltas(spark).where("round = 1 OR url = 'http://h.test/c'")
-    tbl = write_bucketed_table(latest, name, str(tmp_path / "pages"), buckets=8)
+    tbl = compact_deltas_to_bucketed(
+        _deltas(spark), name, str(tmp_path / "pages"), buckets=8
+    )
     try:
         assert tbl.count() == 4
 

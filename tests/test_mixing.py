@@ -3,7 +3,9 @@
 import hashlib
 import math
 
-from warcit_spark.operators.mixing import token_budget_mix
+from pyspark.sql import functions as F
+
+from warcit_spark.operators.mixing import source_allocations, token_budget_mix
 
 
 def _docs(spark):
@@ -16,15 +18,29 @@ def _docs(spark):
     return spark.createDataFrame(rows, "doc_id long, source string, text string")
 
 
+def test_allocations_sqrt_temperature(spark):
+    got = {
+        r["source"]: r
+        for r in source_allocations(_docs(spark), budget=90, alpha=0.5).collect()
+    }
+    z = math.sqrt(100) + math.sqrt(20)
+    assert got["A"]["tokens_s"] == 100 and got["B"]["tokens_s"] == 20
+    assert got["A"]["weight"] == round(math.sqrt(100) / z, 6)
+    # sqrt temperature gives B far more than its 1/6 proportional share
+    assert got["B"]["weight"] > 20 / 120
+    assert got["A"]["alloc_tokens"] == math.floor(90 * round(math.sqrt(100) / z, 6))
+
+
 def test_mix_respects_budget_and_md5_order(spark):
     kept = token_budget_mix(_docs(spark), budget=90, alpha=0.5).collect()
     by_src = {}
     for r in kept:
         by_src.setdefault(r["source"], []).append(r)
     # every source stays within its allocation
-    z = math.sqrt(100) + math.sqrt(20)
-    alloc = {s: math.floor(90 * round(math.sqrt(t) / z, 6))
-             for s, t in (("A", 100), ("B", 20))}
+    alloc = {
+        r["source"]: r["alloc_tokens"]
+        for r in source_allocations(_docs(spark), budget=90, alpha=0.5).collect()
+    }
     for s, rows in by_src.items():
         assert max(r["cum_tokens"] for r in rows) <= alloc[s]
     # kept docs per source are the md5-smallest prefix, not doc_id order
@@ -42,3 +58,9 @@ def test_mix_respects_budget_and_md5_order(spark):
     assert len(a_ids) == expect_n
 
 
+def test_alpha_one_is_proportional(spark):
+    got = {
+        r["source"]: r["weight"]
+        for r in source_allocations(_docs(spark), budget=120, alpha=1.0).collect()
+    }
+    assert got["A"] == round(100 / 120, 6) and got["B"] == round(20 / 120, 6)

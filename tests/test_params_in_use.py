@@ -151,6 +151,7 @@ def unused_params() -> list[str]:
 # Public names kept with no product caller -> why.
 _CONVERTER = "the reference's warcit-converter: conversion dispatch and its YAML"
 _DFCAP = "reads the df_max cap metric the hot-key caps build on"
+_COMPACT = "the delta compaction of the bucketed corpus and its latest-row reducer"
 NO_PRODUCT_CALLER_OK = {
     "warcit_spark/operators/convert.py:run_conversions": _CONVERTER,
     "warcit_spark/operators/convert.py:dispatch_conversions": _CONVERTER,
@@ -161,6 +162,10 @@ NO_PRODUCT_CALLER_OK = {
     "warcit_spark/operators/dedup.py:ngram_dfcap_excluded": _DFCAP,
     "warcit_spark/observe.py:observation_ready": _DFCAP,
     "warcit_spark/observe.py:observation_metrics": _DFCAP,
+    "warcit_spark/operators/mixing.py:source_allocations":
+        "the per-source allocation table token_budget_mix applies, tested apart",
+    "warcit_spark/sinks/bucketed.py:latest_by_key": _COMPACT,
+    "warcit_spark/sinks/bucketed.py:compact_deltas_to_bucketed": _COMPACT,
 }
 
 

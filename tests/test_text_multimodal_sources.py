@@ -179,6 +179,31 @@ def test_rate_threshold_hex_exact():
         rate_threshold_hex(1.5)
 
 
+def test_deterministic_sample_matches_hashlib(spark):
+    """Spark md5-threshold membership == hashlib.md5 recomputation, and the
+    rate is honored within binomial noise."""
+    import hashlib
+
+    from warcit_spark.operators.sampling import (
+        deterministic_sample,
+        rate_threshold_hex,
+    )
+
+    df = spark.createDataFrame(
+        [(f"http://h/{i}",) for i in range(2000)], "url string"
+    )
+    rate = 0.3
+    got = {r.url for r in deterministic_sample(df, "url", rate).collect()}
+    thresh = rate_threshold_hex(rate)
+    want = {
+        f"http://h/{i}"
+        for i in range(2000)
+        if hashlib.md5(f"http://h/{i}".encode()).hexdigest() < thresh
+    }
+    assert got == want
+    assert 0.25 < len(got) / 2000 < 0.35
+
+
 def test_stratified_sample_rates_and_determinism(spark):
     from warcit_spark.operators.sampling import stratified_sample
 

@@ -50,6 +50,14 @@ def sample_predicate(key: Column, rate: float) -> Column:
     )
 
 
+def deterministic_sample(
+    df: DataFrame, key_col: str, rate: float
+) -> DataFrame:
+    """Uniform deterministic sample: keep rows whose md5(key) falls below
+    the rate threshold.  A pure filter — pushes to the scan, no shuffle."""
+    return df.where(sample_predicate(F.col(key_col), rate))
+
+
 def stratified_sample(
     df: DataFrame,
     key_col: str,

@@ -8,7 +8,9 @@ Iceberg ``bucket(N, key)`` table).  Joins against it read co-partitioned
 sort-merge join), and per-round corpus reads are parquet decode (CPU,
 scales with cores) instead of heap-cache copy traffic.  The crawl's seen
 table already uses this layout (plans/state.py); this module exposes the
-same machinery for ANY corpus — pages, documents, embeddings.
+same machinery for ANY corpus — pages, documents, embeddings — plus the
+delta-compaction step that turns append-only fetch deltas into one
+deduplicated bucketed table.
 
 The compressed-stats hazard found in the same measurement applies to any
 caller: parquet file-source stats report COMPRESSED bytes, so a
@@ -20,7 +22,8 @@ as plans/crawl.py does for the fetch join).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 
 def write_bucketed_table(
@@ -55,3 +58,49 @@ def write_bucketed_table(
         .saveAsTable(name)
     )
     return spark.table(name)
+
+
+def latest_by_key(
+    df: DataFrame, key_col: str, version_col: str
+) -> DataFrame:
+    """One row per key: the row with the maximum ``version_col``.
+
+    Implemented as ``max`` over a struct with the version as its FIRST
+    field — struct ordering compares version first, then the remaining
+    fields — so version ties break deterministically by the other
+    columns' values (``max_by`` would compare only the version and pick
+    whichever row a partial aggregate met first, giving rerun-dependent
+    output when one key appears twice with the same version).  A single
+    map-side-combined aggregation — no window, no global sort."""
+    rest = [c for c in df.columns if c not in (key_col, version_col)]
+    packed = F.struct(F.col(version_col), *[F.col(c) for c in rest])
+    agg = df.groupBy(key_col).agg(F.max(packed).alias("_r"))
+    cols = [F.col(key_col)] + [
+        F.col(f"_r.{c}").alias(c) for c in [version_col] + rest
+    ]
+    return agg.select(*cols)
+
+
+def compact_deltas_to_bucketed(
+    deltas: DataFrame,
+    name: str,
+    path: str,
+    buckets: int = 64,
+) -> DataFrame:
+    """Compact append-only per-round deltas into one deduplicated
+    bucketed table: latest row per url (max ``round``) wins, then one
+    bucketed write.
+
+    Exactly two shuffles end to end (the max_by groupBy and the
+    bucket-aligning repartition, both keyed on ``url`` — AQE
+    typically reuses the first exchange for the second), after which
+    every future join against the corpus pays zero corpus-side exchange
+    forever.  This is the maintenance step a 100-TB deployment runs per
+    crawl epoch (Iceberg's rewrite_data_files analog).
+    """
+    return write_bucketed_table(
+        latest_by_key(deltas, "url", "round"),
+        name,
+        path,
+        buckets=buckets,
+    )
