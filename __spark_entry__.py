@@ -891,18 +891,22 @@ def t13_repeated_ngrams(spark, sf_dir):
     instances that are duplicates, and the trigram top-fraction
     (functions/text.py:top_ngram_frac_expr/dup_ngram_frac_expr).
     Row-local array exprs — zero shuffle; the explode shape documented in
-    text.py takes over for book-length docs.  The gram arrays are bound in
-    their own projection first, so the counting lambdas read columns."""
+    text.py takes over for book-length docs.  The word array and then the
+    gram arrays are bound in their own projections first, so the text is
+    tokenized once and the lambdas read columns."""
     from warcit_spark.functions.text import (
         dup_ngram_frac_expr,
         top_ngram_frac_expr,
         word_ngrams_expr,
+        words_expr,
     )
 
     d = _t(spark, sf_dir, "documents").select(
+        "doc_id", words_expr(F.col("text")).alias("words")
+    ).select(
         "doc_id",
-        word_ngrams_expr(F.col("text"), 2).alias("bigrams"),
-        word_ngrams_expr(F.col("text"), 3).alias("trigrams"),
+        word_ngrams_expr(F.col("words"), 2).alias("bigrams"),
+        word_ngrams_expr(F.col("words"), 3).alias("trigrams"),
     )
     return d.select(
         "doc_id",
@@ -958,11 +962,7 @@ def t14_bpe_token_count(spark, sf_dir):
     whitespace count (t1) and a chars-per-token ratio.  Pure JVM
     regexp_extract_all; punctuation is synthesized into the fixture texts
     with deterministic replaces so the mark/digit branches carry data."""
-    from warcit_spark.functions.text import (
-        BPE_ISH_PATTERN,  # noqa: F401  (documented pattern, shared w/ oracle)
-        bpe_token_count_expr,
-        token_count_expr,
-    )
+    from warcit_spark.functions.text import bpe_token_count_expr, token_count_expr
 
     d = _t(spark, sf_dir, "documents")
     text2 = F.replace(

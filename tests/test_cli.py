@@ -120,6 +120,21 @@ def test_cli_mapfile_duplicate_match_exits_one(spark, site, in_tmp_cwd, tmp_path
     assert "matched multiple files" in caplog.text
 
 
+@pytest.mark.parametrize("flag", ["-a", "-o"])
+def test_failed_mapfile_run_writes_nothing(spark, site, in_tmp_cwd, tmp_path, flag):
+    """A duplicate-mapfile run fails before the sink runs, so neither an
+    append nor an overwrite touches the existing output file."""
+    name = os.path.basename(site) + ".warc.gz"
+    assert main(["-q", "http://cli.test/", site]) == 0
+    with open(name, "rb") as fh:
+        before = fh.read()
+    mf = tmp_path / "map.csv"
+    mf.write_text("file,URL\nindex.html,http://cli.test/dup\n")
+    assert main([flag, "-q", "--mapfile", str(mf), "http://cli.test/", site]) == 1
+    with open(name, "rb") as fh:
+        assert fh.read() == before
+
+
 def test_cli_log_csv(spark, site, in_tmp_cwd, tmp_path):
     import pandas as pd
 

@@ -115,31 +115,8 @@ def test_warc_mode_semantics(spark, tmp_path):
     out = str(tmp_path / "warcs_mode")
     df = _records_df(spark).coalesce(1)
     write_warc_files(df, out).collect()
-    with pytest.raises(FileExistsError):  # xb default (warcit.py:143-148)
+    with pytest.raises(FileExistsError):  # xb (warcit.py:143-148)
         write_warc_files(df, out).collect()
-    write_warc_files(df, out, mode="ab").collect()
-    assert len(os.listdir(out)) == 2
-    write_warc_files(df, out, mode="wb").collect()
-    assert len(os.listdir(out)) == 1
-
-
-def test_warc_append_generation_tags_never_collide(spark, tmp_path):
-    """Append tag = max existing generation + 1 (parsed from filenames), so
-    a re-run after a partially-failed append cannot silently overwrite a
-    prior generation the way a plain part-count could."""
-    out = str(tmp_path / "warcs_gen")
-    df = _records_df(spark).coalesce(1)
-    write_warc_files(df, out).collect()                      # part-00000
-    write_warc_files(df, out, mode="ab").collect()           # part-g0001-...
-    names1 = sorted(os.listdir(out))
-    assert any(n.startswith("part-g0001-") for n in names1)
-    # simulate a partial failure: an extra stray file of a LATER generation
-    with open(os.path.join(out, "part-g0007-99999.warc.gz"), "wb"):
-        pass
-    write_warc_files(df, out, mode="ab").collect()           # must pick g0008
-    names2 = set(os.listdir(out))
-    assert any(n.startswith("part-g0008-") for n in names2)
-    assert names2 >= set(names1)  # nothing overwritten/removed
 
 
 def test_warc_no_warcinfo_toggle(spark, tmp_path):

@@ -3,9 +3,9 @@
 import hashlib
 import math
 
-from pyspark.sql import functions as F
+from warcit_spark.operators.mixing import token_budget_mix
 
-from warcit_spark.operators.mixing import source_allocations, token_budget_mix
+TOKENS = {"A": 100, "B": 20}  # per-source totals of _docs
 
 
 def _docs(spark):
@@ -18,17 +18,29 @@ def _docs(spark):
     return spark.createDataFrame(rows, "doc_id long, source string, text string")
 
 
+def _allocations(budget, alpha):
+    """The per-source token allocation token_budget_mix applies: weights
+    temperature-scaled by ``alpha`` and rounded to 6 decimals before the
+    budget multiply."""
+    z = sum(t**alpha for t in TOKENS.values())
+    return {s: math.floor(budget * round(t**alpha / z, 6)) for s, t in TOKENS.items()}
+
+
+def _kept_tokens(spark, budget, alpha):
+    kept = {}
+    for r in token_budget_mix(_docs(spark), budget=budget, alpha=alpha).collect():
+        kept[r["source"]] = kept.get(r["source"], 0) + r["n_tokens"]
+    return kept
+
+
 def test_allocations_sqrt_temperature(spark):
-    got = {
-        r["source"]: r
-        for r in source_allocations(_docs(spark), budget=90, alpha=0.5).collect()
-    }
-    z = math.sqrt(100) + math.sqrt(20)
-    assert got["A"]["tokens_s"] == 100 and got["B"]["tokens_s"] == 20
-    assert got["A"]["weight"] == round(math.sqrt(100) / z, 6)
-    # sqrt temperature gives B far more than its 1/6 proportional share
-    assert got["B"]["weight"] > 20 / 120
-    assert got["A"]["alloc_tokens"] == math.floor(90 * round(math.sqrt(100) / z, 6))
+    alloc = _allocations(90, 0.5)
+    assert alloc == {"A": 62, "B": 27}
+    # uniform 10-token docs: each source keeps whole docs up to its allocation
+    kept = _kept_tokens(spark, 90, 0.5)
+    assert kept == {"A": 60, "B": 20}
+    # sqrt temperature gives B more than its 1/6 proportional share (15)
+    assert kept["B"] > 90 * TOKENS["B"] / sum(TOKENS.values())
 
 
 def test_mix_respects_budget_and_md5_order(spark):
@@ -37,10 +49,7 @@ def test_mix_respects_budget_and_md5_order(spark):
     for r in kept:
         by_src.setdefault(r["source"], []).append(r)
     # every source stays within its allocation
-    alloc = {
-        r["source"]: r["alloc_tokens"]
-        for r in source_allocations(_docs(spark), budget=90, alpha=0.5).collect()
-    }
+    alloc = _allocations(90, 0.5)
     for s, rows in by_src.items():
         assert max(r["cum_tokens"] for r in rows) <= alloc[s]
     # kept docs per source are the md5-smallest prefix, not doc_id order
@@ -59,8 +68,11 @@ def test_mix_respects_budget_and_md5_order(spark):
 
 
 def test_alpha_one_is_proportional(spark):
-    got = {
-        r["source"]: r["weight"]
-        for r in source_allocations(_docs(spark), budget=120, alpha=1.0).collect()
-    }
-    assert got["A"] == round(100 / 120, 6) and got["B"] == round(20 / 120, 6)
+    # alpha = 1: each allocation is the source's proportional share of the
+    # budget (here its whole token count), up to the 6-decimal weight rounding
+    alloc = _allocations(120, 1.0)
+    assert all(abs(alloc[s] - t) <= 1 for s, t in TOKENS.items())
+    kept = _kept_tokens(spark, 120, 1.0)
+    assert kept == {s: 10 * (a // 10) for s, a in alloc.items()}
+    # the large source keeps more than under sqrt temperature
+    assert kept["A"] > _kept_tokens(spark, 120, 0.5)["A"]

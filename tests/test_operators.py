@@ -7,7 +7,7 @@ import json
 import pytest
 from pyspark.sql import functions as F
 
-from warcit_spark.operators.filters import apply_include_exclude, include_exclude_expr
+from warcit_spark.operators.filters import apply_include_exclude
 from warcit_spark.operators.joins import MapfileUniquenessError, mapfile_suffix_join
 from warcit_spark.operators.records import transclusion_metadata_records
 from warcit_spark.functions.mime import (
@@ -143,6 +143,15 @@ def test_mapfile_empty_returns_null_columns(spark):
 
 
 # --------------------------------------------------------- D3 + A2 golden JSON
+def _embeds(tr, conv):
+    """D3 records for transclusions whose media resource has no resolved
+    Content-Type and no sort key."""
+    tr = tr.withColumn("_orig_ct", F.lit(None).cast("string")).withColumn(
+        "_media_sort", F.lit(None).cast("string")
+    )
+    return transclusion_metadata_records(tr, conv, orig_mime_col="_orig_ct")
+
+
 def _reference_metadata_json(contain_url, contain_ts, selector, media_url,
                              conv_formats, orig_mime=None):
     """Independent re-run of converter.py:250-276 + warcit.py:589."""
@@ -182,7 +191,7 @@ def test_transclusion_metadata_byte_identical(spark):
     }
     conv = conversions_from_dict(spark, conv_doc)
     tr = transclusions_from_dict(spark, tr_doc)
-    out = transclusion_metadata_records(tr, conv).collect()
+    out = _embeds(tr, conv).collect()
     assert len(out) == 1  # the url-less entry was skipped
     rec = out[0]
     assert rec.url == "urn:embeds:http://page/embed.html"
@@ -312,7 +321,7 @@ def test_transclusion_formats_order_deterministic(spark):
     conv = conversions_from_dict(spark, conv_doc).repartition(8)
     tr = transclusions_from_dict(spark, tr_doc)
     payloads = {
-        transclusion_metadata_records(tr, conv).first().payload_json
+        _embeds(tr, conv).first().payload_json
         for _ in range(3)
     }
     assert len(payloads) == 1  # stable across repeated shuffled runs

@@ -20,6 +20,7 @@ from warcit_spark.functions.text import (
     required_stopword_hits_expr,
     top_ngram_frac_expr,
     word_ngrams_expr,
+    words_expr,
     ws_tokens_expr,
 )
 from warcit_spark.operators.packing import chunk_pack, greedy_pack
@@ -157,15 +158,17 @@ def test_gopher_keep_conjunction(spark):
 
 
 def test_word_ngrams_and_fracs(spark):
+    def grams(n):
+        return word_ngrams_expr(words_expr(F.col("text")), n)
+
     t = "a b a b c"
-    grams = _one(spark, t, word_ngrams_expr(F.col("text"), 2))
-    assert grams == ["a b", "b a", "a b", "b c"]
-    assert _one(spark, t, top_ngram_frac_expr(word_ngrams_expr(F.col("text"), 2))) == 0.5
-    assert _one(spark, t, dup_ngram_frac_expr(word_ngrams_expr(F.col("text"), 2))) == 0.5
+    assert _one(spark, t, grams(2)) == ["a b", "b a", "a b", "b c"]
+    assert _one(spark, t, top_ngram_frac_expr(grams(2))) == 0.5
+    assert _one(spark, t, dup_ngram_frac_expr(grams(2))) == 0.5
     # fewer words than n -> empty grams, 0.0 fractions (no descending
     # sequence() blowup)
-    assert _one(spark, "solo", word_ngrams_expr(F.col("text"), 2)) == []
-    assert _one(spark, "", top_ngram_frac_expr(word_ngrams_expr(F.col("text"), 3))) == 0.0
+    assert _one(spark, "solo", grams(2)) == []
+    assert _one(spark, "", top_ngram_frac_expr(grams(3))) == 0.0
 
 
 def test_bpe_token_count(spark):

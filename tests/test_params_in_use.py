@@ -1,18 +1,20 @@
 """Guards on the package's public API: every public name has a product
-caller, and every defaulted parameter is set somewhere.
+caller, every defaulted parameter is set by product code, and every import
+and module-level private name is referred to.
 
 A public function or method that only tests call is not part of the
 product; :func:`no_product_caller` states that rule.
 
-A defaulted parameter that no caller passes is a setting with one value in
-use; it belongs in the code as a constant, not in the signature. The rule:
+A defaulted parameter that only tests pass, or that nothing passes, is a
+setting with one value in use; it belongs in the code as a constant, not
+in the signature. The rule:
 
 - in scope: a defaulted parameter of a public function or method under
   ``warcit_spark/`` (a module-level function, or a method of a module-level
   class; neither name starts with ``_``; ``__init__`` is called as the class);
-- it is in use when some call in the repository (``warcit_spark/``,
-  ``__spark_entry__.py``, ``tests/``, ``tools/``, ``jobs/``, ``bench*.py``,
-  ``perfbench/``) passes it, by keyword or by position;
+- it is in use when some call in product code (``warcit_spark/``,
+  ``__spark_entry__.py``, ``tools/``, ``jobs/``, ``bench*.py``,
+  ``perfbench/``; not ``tests/``) passes it, by keyword or by position;
 - a call that only forwards an unused parameter of its own enclosing
   function does not count; the pass repeats until nothing changes;
 - out of scope: functions passed as values (pandas-UDF and ``mapInPandas``
@@ -22,7 +24,11 @@ Calls are matched by the callee's last name (``f(...)``, ``x.f(...)``), so a
 name shared by two definitions is in use if either is called with it; a
 ``*args`` or ``**kwargs`` spread counts as passing everything it could reach.
 
-Run as a script to print both inventories: ``python tests/test_params_in_use.py``.
+:func:`unreferenced_names` states the third rule, over product code and
+``tests/``.
+
+Run as a script to print all three inventories (names, parameters,
+unreferenced): ``python tests/test_params_in_use.py``.
 """
 
 from __future__ import annotations
@@ -42,10 +48,6 @@ def _product_files() -> list[Path]:
     for d in ("tools", "jobs", "perfbench"):
         files += sorted((ROOT / d).rglob("*.py"))
     return files + sorted(ROOT.glob("bench*.py"))
-
-
-def _caller_files() -> list[Path]:
-    return _product_files() + sorted((ROOT / "tests").rglob("*.py"))
 
 
 @functools.lru_cache(maxsize=None)
@@ -102,13 +104,13 @@ def _calls():
         for child in ast.iter_child_nodes(node):
             visit(child, enclosing)
 
-    for path in _caller_files():
+    for path in _product_files():
         visit(_parse(path), None)
     return calls, values
 
 
 def unused_params() -> list[str]:
-    """Every in-scope defaulted parameter that no call passes, as
+    """Every in-scope defaulted parameter that no product call passes, as
     ``file:function(param)``, once the forwarding passes settle."""
     calls, values = _calls()
     # Functions used as values are called by the engine, not the repository.
@@ -151,7 +153,6 @@ def unused_params() -> list[str]:
 # Public names kept with no product caller -> why.
 _CONVERTER = "the reference's warcit-converter: conversion dispatch and its YAML"
 _DFCAP = "reads the df_max cap metric the hot-key caps build on"
-_COMPACT = "the delta compaction of the bucketed corpus and its latest-row reducer"
 NO_PRODUCT_CALLER_OK = {
     "warcit_spark/operators/convert.py:run_conversions": _CONVERTER,
     "warcit_spark/operators/convert.py:dispatch_conversions": _CONVERTER,
@@ -162,10 +163,27 @@ NO_PRODUCT_CALLER_OK = {
     "warcit_spark/operators/dedup.py:ngram_dfcap_excluded": _DFCAP,
     "warcit_spark/observe.py:observation_ready": _DFCAP,
     "warcit_spark/observe.py:observation_metrics": _DFCAP,
-    "warcit_spark/operators/mixing.py:source_allocations":
-        "the per-source allocation table token_budget_mix applies, tested apart",
-    "warcit_spark/sinks/bucketed.py:latest_by_key": _COMPACT,
-    "warcit_spark/sinks/bucketed.py:compact_deltas_to_bucketed": _COMPACT,
+}
+
+# Defaulted parameters kept with no product caller -> why.
+_SEAM = "a test seam: tests pass it to drive the product code path"
+UNUSED_PARAM_OK = {
+    "warcit_spark/operators/convert.py:dispatch_conversions(root_dir)": _CONVERTER,
+    "warcit_spark/operators/convert.py:run_conversions(dry_run)": _CONVERTER,
+    "warcit_spark/operators/convert.py:run_conversions(capture_output)": _CONVERTER,
+    "warcit_spark/operators/dedup.py:ngram_jaccard_pairs(df_max)":
+        "the hot-key cap a default df_max cap will build on",
+    "warcit_spark/cli.py:main(argv)": _SEAM + " (argv instead of sys.argv)",
+    "warcit_spark/plans/warcit_pipeline.py:warcit_run(num_parts)":
+        _SEAM + " (several parts from a small site)",
+    "warcit_spark/plans/warcit_pipeline.py:order_records(num_parts)":
+        _SEAM + " (several parts from a small site)",
+}
+
+# Unreferenced imports kept -> why.
+UNREFERENCED_OK = {
+    "perfbench/run.py:warcit_spark":
+        "imported only to report a program that fails to import before a run",
 }
 
 
@@ -220,16 +238,74 @@ def test_every_public_name_has_a_product_caller():
 
 
 def test_every_defaulted_parameter_is_set_by_some_caller():
-    unused = unused_params()
+    found = unused_params()
+    unused = [p for p in found if p not in UNUSED_PARAM_OK]
     assert not unused, (
-        f"{len(unused)} defaulted parameter(s) that no call passes; make "
-        "each a constant at its default:\n  " + "\n  ".join(unused))
+        f"{len(unused)} defaulted parameter(s) that no product call passes; "
+        "make each a constant at its default:\n  " + "\n  ".join(unused))
+    stale = sorted(set(UNUSED_PARAM_OK) - set(found))
+    assert not stale, f"allowlisted but passed by product code or gone: {stale}"
+
+
+def _bound_names(tree: ast.Module):
+    """(node, name) for every import anywhere in a module (not ``from
+    __future__``) and every module-level definition of a ``_name``."""
+    for node in ast.walk(tree):
+        if isinstance(node, ast.ImportFrom) and node.module == "__future__":
+            continue
+        if isinstance(node, (ast.Import, ast.ImportFrom)):
+            for a in node.names:
+                yield node, (a.asname or a.name).split(".")[0]
+    for node in tree.body:
+        if isinstance(node, FUNCS + (ast.ClassDef,)):
+            names = [node.name]
+        elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+            targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+            names = [n.id for t in targets for n in ast.walk(t)
+                     if isinstance(n, ast.Name)]
+        else:
+            continue
+        for name in names:
+            if name.startswith("_") and not name.endswith("__"):
+                yield node, name
+
+
+def unreferenced_names() -> dict[str, int]:
+    """Every import, and every module-level ``_name``, that its own file
+    never reads, as ``file:name`` -> line, over product code and
+    ``tests/``.  Package ``__init__`` modules are skipped: their imports
+    are the package's re-exports."""
+    out = {}
+    for path in _product_files() + sorted((ROOT / "tests").rglob("*.py")):
+        if path.name == "__init__.py":
+            continue
+        tree = _parse(path)
+        read = {n.id for n in ast.walk(tree)
+                if isinstance(n, ast.Name) and not isinstance(n.ctx, ast.Store)}
+        for node, name in _bound_names(tree):
+            if name not in read:
+                out[f"{path.relative_to(ROOT)}:{name}"] = node.lineno
+    return out
+
+
+def test_every_import_and_private_name_is_referenced():
+    found = unreferenced_names()
+    unread = [f"{k} (line {n})" for k, n in found.items() if k not in UNREFERENCED_OK]
+    assert not unread, (
+        f"{len(unread)} import(s) or private name(s) that their file never "
+        "refers to; delete each:\n  " + "\n  ".join(unread))
+    stale = sorted(set(UNREFERENCED_OK) - set(found))
+    assert not stale, f"allowlisted but referenced or gone: {stale}"
 
 
 if __name__ == "__main__":
+    print("# public names with no product caller")
     print("\n".join(no_product_caller()))
     found = unused_params()
+    print("# defaulted parameters no product call passes")
     print("\n".join(found))
     print(f"{len(found)} unused in {len({f.split('(')[0] for f in found})} "
           f"functions, {len({f.split(':')[0] for f in found})} files",
           file=sys.stderr)
+    print("# imports and private names their file never refers to")
+    print("\n".join(f"{k} (line {n})" for k, n in unreferenced_names().items()))

@@ -84,11 +84,6 @@ def test_scan_files_binaryfile_shape(spark, site_dir):
     assert r.warc_ts is not None
 
 
-def test_scan_files_glob_filter(spark, site_dir):
-    df = scan_files(spark, site_dir, "http://s.test/", glob="*.css")
-    assert [r.url for r in df.collect()] == ["http://s.test/style.css"]
-
-
 def test_scan_zip_members_and_prefix(spark, site_dir, tmp_path_factory):
     zdir = tmp_path_factory.mktemp("zips")
     zpath = str(zdir / "site.zip")

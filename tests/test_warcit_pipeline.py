@@ -12,7 +12,6 @@ from __future__ import annotations
 import base64
 import hashlib
 import json
-from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -134,31 +133,6 @@ def test_full_run_multipart_dup_mapfile_still_fails(spark, site, tmp_path):
         warcit_run(
             spark, site, PREFIX, out, charset=None, num_parts=4, mapfile=mapfile
         )
-
-
-@pytest.mark.parametrize("mode", ["ab", "wb"])
-def test_failed_mapfile_run_writes_nothing(spark, site, tmp_path, mode):
-    """A duplicate-mapfile run fails before the sink runs, so neither an
-    append nor an overwrite touches the previous good output."""
-    from warcit_spark.operators.joins import MapfileUniquenessError
-
-    out = str(tmp_path / f"warc_{mode}")
-    warcit_run(spark, site, PREFIX, out, charset=None, num_parts=2)
-
-    def snapshot():
-        return {p.name: p.read_bytes() for p in sorted(Path(out).iterdir())}
-
-    before = snapshot()
-    mapfile = spark.createDataFrame(
-        [("index.html", "http://mapped.test/i", "2011", "text/html")],
-        ["file", "URL", "timestamp", "Content-Type"],
-    )
-    with pytest.raises(MapfileUniquenessError, match="index.html"):
-        warcit_run(
-            spark, site, PREFIX, out, mode=mode, charset=None, num_parts=2,
-            mapfile=mapfile,
-        )
-    assert snapshot() == before
 
 
 def test_full_run_to_warc_file(spark, site, tmp_path):

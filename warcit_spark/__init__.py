@@ -14,7 +14,7 @@ Layout
                   dedup, similarity, text analysis
 - ``plans/``      multi-operator pipelines: the crawl round/loop, politeness,
                   state catalog, files to WARC
-- ``sinks/``      WARC export and bucketed tables
+- ``sinks/``      WARC export
 """
 
 from warcit_spark.session import get_spark

@@ -156,13 +156,12 @@ def main(argv: list[str] | None = None) -> int:
         level = logging.INFO
     logging.basicConfig(level=level, format="%(message)s")
 
-    mode = "ab" if r.append else ("wb" if r.overwrite else "xb")
     gzip_records = not r.no_gzip
     name = make_name(r.name, r.inputs, gzip_records)
 
-    # file-level EEXIST handling with the reference's hint text
-    # (warcit/warcit.py:409-419)
-    if mode == "xb" and os.path.exists(name):
+    # the output file's xb/ab/wb mode: EEXIST unless -a or -o, with the
+    # reference's hint text (warcit/warcit.py:409-419)
+    if not (r.append or r.overwrite) and os.path.exists(name):
         logger.error(f"[Errno 17] File exists: '{name}'")
         logger.error("* Use -a/--append to append to an existing WARC file")
         logger.error("* Use -o/--overwrite to overwrite existing WARC file")
@@ -261,20 +260,21 @@ def main(argv: list[str] | None = None) -> int:
                     records = records.persist()
                 manifest = warcit_run(
                     spark, valid_inputs, r.url_prefix, os.path.join(tmp, "out"),
-                    mode="xb", gzip_records=gzip_records, one_file=True,
+                    gzip_records=gzip_records, one_file=True,
                     warcinfo=not r.no_warcinfo, cmdline=cmdline,
                     records=records, warcinfo_filename=name,
                 ).collect()
             except MapfileUniquenessError as e:
                 logger.error(str(e))
                 return 1
-            parts = [m.path for m in manifest]
+            # one_file: at most one part; none when every file is filtered out
+            part = manifest[0].path if manifest else None
             count = sum(m.n_records for m in manifest)
             if r.log:
                 _write_cli_log(records, r.log)
                 records.unpersist()
         else:
-            parts = []
+            part = None
             if r.log:
                 import pandas as pd
 
@@ -283,30 +283,24 @@ def main(argv: list[str] | None = None) -> int:
                              "Content-Type", "mime", "charset"]
                 ).to_csv(r.log, index=False)
 
-        if not parts and not r.no_warcinfo:
+        if part is None and not r.no_warcinfo:
             # zero records: the reference still writes the warcinfo-only
             # file ("Wrote 0 resources", test_warcit.py:160-166)
             from warcit_spark.sinks.warc import write_warcinfo_only
 
-            parts = [write_warcinfo_only(
+            part = write_warcinfo_only(
                 os.path.join(tmp, "empty" + (".warc.gz" if gzip_records else ".warc")),
                 name, cmdline, gzip_records=gzip_records,
-            )]
+            )
 
-        if mode == "ab" and os.path.exists(name):
-            with open(name, "ab") as target:
-                for p in parts:
-                    with open(p, "rb") as src:
-                        shutil.copyfileobj(src, target)
-        else:
-            if parts:
-                shutil.move(parts[0], name)
-                with open(name, "ab") as target:
-                    for p in parts[1:]:
-                        with open(p, "rb") as src:
-                            shutil.copyfileobj(src, target)
-            else:  # --no-warcinfo with zero records: empty file
-                open(name, "wb").close()
+        if r.append and os.path.exists(name):
+            if part is not None:
+                with open(name, "ab") as target, open(part, "rb") as src:
+                    shutil.copyfileobj(src, target)
+        elif part is not None:
+            shutil.move(part, name)
+        else:  # --no-warcinfo with zero records: empty file
+            open(name, "wb").close()
 
     logger.info(f"Wrote {count} resources to {name}")
     return 0

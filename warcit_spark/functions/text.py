@@ -202,7 +202,7 @@ def tfidf_topk_terms(
     is vocabulary-sized, not corpus-sized), and a per-doc window over at
     most |terms-in-doc| rows.  No all-pairs anything.
     """
-    from pyspark.sql import DataFrame, Window  # local: keep module import-light
+    from pyspark.sql import Window  # local: keep module import-light
 
     terms = docs.select(
         F.col("doc_id"), F.explode(words_expr(F.col("text"))).alias("term")
@@ -339,7 +339,8 @@ def gopher_keep_expr(
 # The fraction helpers take the gram array as an already-bound column:
 # a higher-order lambda that names a computed array re-evaluates it per
 # element (no common-subexpression elimination reaches inside the lambda),
-# so callers select word_ngrams_expr(...) first and count over the column.
+# so callers select words_expr(...) first, build the gram arrays from that
+# column with word_ngrams_expr, and count over the gram columns.
 #
 # Scale note: the row-local distinct×filter count is O(g·d) per doc
 # (g grams, d distinct grams) — right for web pages (10^2-10^3 words).
@@ -349,10 +350,10 @@ def gopher_keep_expr(
 # -------------------------------------------------------------------------
 
 
-def word_ngrams_expr(text: Column, n: int = 2) -> Column:
-    """Space-joined word n-grams over words_expr; [] when the doc has
-    fewer than n words (guards F.sequence's descending-range pitfall)."""
-    ws = words_expr(text)
+def word_ngrams_expr(ws: Column, n: int = 2) -> Column:
+    """Space-joined word n-grams over a bound :func:`words_expr` column;
+    [] when the doc has fewer than n words (guards F.sequence's
+    descending-range pitfall)."""
     sz = F.size(ws)
     grams = F.transform(
         F.sequence(F.lit(1), sz - (n - 1)),

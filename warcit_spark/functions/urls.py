@@ -19,8 +19,6 @@ correctness argument).
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -74,8 +72,6 @@ def _sorted_query_expr(query: Column) -> Column:
 # url with a trailing '\n' would fast-path as "already canonical" with a
 # non-null host while the slow path's trim+URI gate handles it differently
 _FAST_CANON_RE = r"^https?://[a-z0-9._\-]+/[-a-zA-Z0-9._~!$&'()*+,;=:@/]*\z"
-# host of a fast-path URL: first-match (a path may itself contain '://')
-_FAST_HOST_RE = r"^https?://([^/]+)"
 
 # scheme grammar per RFC 3986 == java.net.URI's: ALPHA *(ALPHA/DIGIT/+/-/.)
 _SCHEME_RE = r"^([A-Za-z][A-Za-z0-9+.\-]*)://"
@@ -179,10 +175,11 @@ def canonicalize_with_host_expr(url: Column) -> Column:
     fused_host = F.substring_index(p["host"], "@", -1)
     fused_host = F.when(fused_host == "", F.lit(None)).otherwise(fused_host)
     # fast-path host: chars before the 3rd '/' minus the 'scheme://' prefix
-    # — two byte scans instead of a regex Matcher per link; identical to
-    # regexp_extract(_FAST_HOST_RE) for every fast-path URL (the fast regex
-    # guarantees 'https?://<host>/...' with a ':'-free host, so the first
-    # three '/' delimit exactly scheme and host)
+    # — two byte scans instead of a regex Matcher per link.  Every url
+    # _FAST_CANON_RE matches is 'https?://<host>/...' with a host of
+    # [a-z0-9._-] only (no '/' or ':'), so the first three '/' delimit
+    # exactly scheme and host, and the last '://' in that prefix is the
+    # scheme's
     fast_host = F.substring_index(
         F.substring_index(url, "/", 3), "://", -1
     )

@@ -4,9 +4,10 @@ weight every raw document by how much more likely its features are under
 a trusted target distribution than under the raw-corpus distribution,
 then sample proportionally to the weights.
 
-Features here are unigram words (the paper uses hashed n-grams; see
-``n_buckets``).  Both feature LMs are Laplace-smoothed over the shared
-vocabulary, and a document's weight is its LENGTH-NORMALIZED log-ratio
+Features here are exact unigram words (the paper uses hashed n-grams;
+SQL engines can replay words, not Spark's xxhash64).  Both feature LMs
+are Laplace-smoothed over the shared vocabulary, and a document's weight
+is its LENGTH-NORMALIZED log-ratio
 
     w(d) = mean over words of  log2 p_target(w) - log2 p_raw(w)
 
@@ -14,20 +15,15 @@ so long documents don't dominate purely by word count.
 
 Scale shape:
 
-- **Feature counts**: one map-side-combined shuffle keyed by word (or
-  hashed bucket) producing <= |vocab| rows with both corpus counts as
-  conditional sums — a single pass over target and raw together.
+- **Feature counts**: one map-side-combined shuffle keyed by word,
+  producing <= |vocab| rows with both corpus counts as conditional
+  sums — a single pass over target and raw together.
 - **Totals**: a 1-row aggregate of the count table, broadcast back.
 - **Scoring**: explode words -> broadcast-hash-join against the model
   (model rows <= |vocab|, always the build side) -> partial-aggregated
   groupBy(doc).  No driver-side model transport at all — unlike the LM
   codebook (lm_quality.py) the vocabulary is unbounded, so the model
   stays a DataFrame end to end.
-- **n_buckets**: at web scale the vocabulary is not bounded; pass
-  ``n_buckets`` to hash words into ``pmod(xxhash64(w), n_buckets)``
-  buckets (the paper's hashed features), capping model size at a
-  constant independent of corpus width.  ``None`` keeps exact words
-  (oracle-friendly: SQL engines can replay words, not Spark's xxhash64).
 """
 
 from __future__ import annotations
@@ -37,11 +33,7 @@ from pyspark.sql import Column, DataFrame, functions as F
 from warcit_spark.functions.text import words_expr
 
 
-def dsir_weights(
-    docs: DataFrame,
-    is_target: Column,
-    n_buckets: int | None = None,
-) -> DataFrame:
+def dsir_weights(docs: DataFrame, is_target: Column) -> DataFrame:
     """Per-document DSIR importance log-ratios.
 
     Returns every document of ``docs`` (target docs score themselves
@@ -51,10 +43,6 @@ def dsir_weights(
     """
     feat = F.explode(words_expr(F.col("text"))).alias("w")
     rows = docs.select(F.col("doc_id"), is_target.alias("_t"), feat)
-    if n_buckets is not None:
-        rows = rows.withColumn(
-            "w", F.pmod(F.xxhash64("w"), F.lit(n_buckets)).cast("string")
-        )
 
     counts = rows.groupBy("w").agg(
         F.sum(F.when(F.col("_t"), 1).otherwise(0)).alias("ct"),

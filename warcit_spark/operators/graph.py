@@ -196,7 +196,12 @@ def pagerank(
         .localCheckpoint(eager=True)
     )
     n1 = v.agg(F.count(F.lit(1)).cast("double").alias("_n"))
-    deg = e.groupBy("src").agg(F.count(F.lit(1)).cast("double").alias("_deg"))
+    # out-degrees once per call: both joins of every iteration read them
+    deg = (
+        e.groupBy("src")
+        .agg(F.count(F.lit(1)).cast("double").alias("_deg"))
+        .localCheckpoint(eager=True)
+    )
 
     rank = v.crossJoin(F.broadcast(n1)).select(
         "node", (F.lit(1.0) / F.col("_n")).alias("rank")

@@ -31,44 +31,6 @@ from pyspark.sql import DataFrame, Window, functions as F
 from warcit_spark.functions.text import token_count_expr
 
 
-def _allocations_from_totals(
-    per_source: DataFrame, budget: int, alpha: float
-) -> DataFrame:
-    """(source, tokens_s, weight, alloc_tokens) from per-source token
-    totals — the n_sources-row tail of the allocation, shared by
-    source_allocations and token_budget_mix so the corpus is tokenized
-    exactly once whichever entry point runs."""
-    z = per_source.agg(
-        F.sum(F.pow(F.col("tokens_s").cast("double"), F.lit(alpha))).alias("_z")
-    )
-    return per_source.crossJoin(F.broadcast(z)).select(
-        "source",
-        F.col("tokens_s").cast("bigint").alias("tokens_s"),
-        F.round(
-            F.pow(F.col("tokens_s").cast("double"), F.lit(alpha)) / F.col("_z"), 6
-        ).alias("weight"),
-    ).select(
-        "source",
-        "tokens_s",
-        "weight",
-        F.floor(F.lit(float(budget)) * F.col("weight"))
-        .cast("bigint")
-        .alias("alloc_tokens"),
-    )
-
-
-def source_allocations(
-    docs: DataFrame,
-    budget: int,
-    alpha: float = 0.5,
-) -> DataFrame:
-    """Per-source (tokens_s, weight, alloc_tokens) under the budget."""
-    per_source = docs.groupBy("source").agg(
-        F.sum(token_count_expr(F.col("text"))).alias("tokens_s")
-    )
-    return _allocations_from_totals(per_source, budget, alpha)
-
-
 def token_budget_mix(
     docs: DataFrame,
     budget: int,
@@ -96,13 +58,20 @@ def token_budget_mix(
     )
     cum = ranked.withColumn("cum_tokens", F.sum("n_tokens").over(w))
     # allocations derive from the SAME ranked projection (sum of its
-    # n_tokens), not a second source_allocations(docs) subtree — the
-    # corpus is scanned and regex-tokenized exactly once end to end
+    # n_tokens), not a second scan of docs — the corpus is scanned and
+    # regex-tokenized exactly once end to end
     per_source = ranked.groupBy("source").agg(
         F.sum("n_tokens").alias("tokens_s")
     )
-    alloc = _allocations_from_totals(per_source, budget, alpha).select(
-        "source", "alloc_tokens"
+    z = per_source.agg(
+        F.sum(F.pow(F.col("tokens_s").cast("double"), F.lit(alpha))).alias("_z")
+    )
+    weight = F.round(
+        F.pow(F.col("tokens_s").cast("double"), F.lit(alpha)) / F.col("_z"), 6
+    )
+    alloc = per_source.crossJoin(F.broadcast(z)).select(
+        "source",
+        F.floor(F.lit(float(budget)) * weight).cast("bigint").alias("alloc_tokens"),
     )
     return (
         cum.join(F.broadcast(alloc), on="source")

@@ -172,15 +172,17 @@ def _formats_json_batch(
 
 def transclusion_metadata_records(
     transclusions: DataFrame,
-    conversions: DataFrame | None = None,
-    orig_mime_col: str | None = None,
+    conversions: DataFrame | None,
+    orig_mime_col: str,
 ) -> DataFrame:
     """D3+A2: one ``metadata`` record per transclusion entry.
 
     ``transclusions``: TRANSCLUSIONS_SCHEMA rows (media_url, contain_url,
-    contain_ts, selector, seq, metadata_file) [+ optionally a resolved
-    ``orig_mime`` column].  ``conversions`` feeds the
-    formats list (A3 grouping, converter.py:257-267).
+    contain_ts, selector, seq, metadata_file) joined to their media
+    resource: its resolved Content-Type in ``orig_mime_col`` and its sort
+    key in ``_media_sort``, which the records carry through.
+    ``conversions`` feeds the formats list (A3 grouping,
+    converter.py:257-267).
     """
     tr = transclusions.where(F.col("contain_url").isNotNull())
 
@@ -217,9 +219,6 @@ def transclusion_metadata_records(
             ),
         )
 
-    orig_mime = (
-        F.col(orig_mime_col) if orig_mime_col else F.lit(None).cast("string")
-    )
     # pandas_udf is built lazily (needs an active session at wrap time)
     _formats_json_udf = pandas_udf(_formats_json_batch, "string")
     payload = _formats_json_udf(
@@ -227,7 +226,7 @@ def transclusion_metadata_records(
         F.col("contain_ts"),
         F.col("selector"),
         F.col("media_url"),
-        orig_mime,
+        F.col(orig_mime_col),
         F.col("_formats"),
         F.col("metadata_file"),
     )
@@ -243,4 +242,5 @@ def transclusion_metadata_records(
         F.col("media_url").alias("refers_to_target_uri"),
         F.col("media_url"),
         F.col("seq").cast("int").alias("seq"),
+        F.col("_media_sort"),
     )

@@ -40,8 +40,6 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from warcit_spark.sinks.bucketed import write_bucketed_table
-
 TABLES = ("frontier", "seen", "fetched", "lineage")
 
 SEEN_COLS = ("url", "host", "reason", "round_seen")
@@ -135,14 +133,19 @@ class CrawlState:
         """
         spark = df.sparkSession
         name = self._ensure_seen_table(spark)
-        write_bucketed_table(
-            df.select(*SEEN_COLS),
-            name,
-            self._seen_location(),
-            buckets=self.seen_buckets,
-            mode="append",
-            partition_col="round_seen",
-            compression=STATE_CODEC,
+        # repartitioning by the bucket key first aligns tasks to buckets
+        # (same murmur3 both places): one file per bucket and round
+        (
+            df.select(*SEEN_COLS)
+            .repartition(self.seen_buckets, "url")
+            .write.format("parquet")
+            .partitionBy("round_seen")
+            .option("compression", STATE_CODEC)
+            .bucketBy(self.seen_buckets, "url")
+            .sortBy("url")
+            .option("path", self._seen_location())
+            .mode("append")
+            .saveAsTable(name)
         )
         spark.catalog.refreshTable(name)
 

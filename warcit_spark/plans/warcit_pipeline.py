@@ -330,11 +330,6 @@ def files_to_warc_records(
         emb = transclusion_metadata_records(
             trj, conversions, orig_mime_col="_orig_ct"
         )
-        emb = emb.join(
-            F.broadcast(media.select("media_url", "_media_sort")),
-            on="media_url",
-            how="inner",
-        )
         emb_payload = F.encode(F.col("payload_json"), "UTF-8")
         emb_records = emb.select(
             "url",
@@ -365,7 +360,6 @@ def warcit_run(
     input_dir: str,
     url_prefix: str,
     out_dir: str,
-    mode: str = "xb",
     gzip_records: bool = True,
     one_file: bool = False,
     num_parts: int | None = None,
@@ -400,7 +394,7 @@ def warcit_run(
     if cmdline is None:
         cmdline = f"warcit-spark {url_prefix} {input_dir}"
     manifest = write_warc_files(
-        ordered, out_dir, gzip_records=gzip_records, mode=mode, cmdline=cmdline,
+        ordered, out_dir, gzip_records=gzip_records, cmdline=cmdline,
         warcinfo=warcinfo, warcinfo_filename=warcinfo_filename,
     )
     return spark.createDataFrame(manifest.toPandas(), manifest.schema)

@@ -5,7 +5,7 @@ framing (each record is its own gzip member — the standard .warc.gz
 layout) and a leading ``warcinfo`` manifest record.  warcio is not in this
 container, so the writer below emits WARC/1.0 records directly — the
 format is line-oriented headers + payload and is covered by a golden
-round-trip test (tests/test_warc_sink.py parses the output back).
+round-trip test (tests/test_convert_warc.py parses the output back).
 
 Distributed shape: ``df.mapInPandas`` writes one ``part-<pid>.warc.gz``
 per partition (the Spark analog of K1's single sequential file), each with
@@ -15,8 +15,9 @@ callers order records with ``sortWithinPartitions`` first; file names come
 from the task partition id.  The returned DataFrame is the write manifest
 (path, n_records, bytes) — the sink's audit record, K3-style.
 
-Modes mirror warcit.py:143-148: 'xb' fail-if-exists (default), 'wb'
-overwrite, 'ab' append (new part files alongside old ones).
+The sink refuses a non-empty ``out_dir`` (the reference's 'xb',
+warcit.py:143-148).  Appending to or overwriting an existing WARC file is
+the CLI's, on its single output file (cli.py).
 """
 
 from __future__ import annotations
@@ -24,7 +25,6 @@ from __future__ import annotations
 import base64
 import gzip
 import os
-import re
 import uuid
 from collections.abc import Iterator
 
@@ -103,7 +103,6 @@ def write_warc_files(
     records: DataFrame,
     out_dir: str,
     gzip_records: bool = True,
-    mode: str = "xb",
     cmdline: str | None = None,
     warcinfo: bool = True,
     warcinfo_filename: str | None = None,
@@ -123,45 +122,20 @@ def write_warc_files(
     and no engine partition field), not the temp part; the CLI passes the
     target .warc.gz name here so replay/indexing tools keying on
     WARC-Filename see the real name.
+
+    A non-empty ``out_dir`` raises FileExistsError before anything runs.
     """
-    if mode not in ("xb", "wb", "ab"):
-        raise ValueError(f"mode must be xb/wb/ab, got {mode!r}")
     if os.path.isdir(out_dir) and os.listdir(out_dir):
-        if mode == "xb":
-            raise FileExistsError(
-                f"{out_dir} exists; use mode='ab' to append or 'wb' to overwrite"
-            )
-        if mode == "wb":
-            for name in os.listdir(out_dir):
-                if name.startswith("part-"):
-                    os.unlink(os.path.join(out_dir, name))
+        raise FileExistsError(f"{out_dir} exists and is not empty")
     os.makedirs(out_dir, exist_ok=True)
 
     suffix = ".warc.gz" if gzip_records else ".warc"
-    # append runs get a deterministic generation tag derived from the
-    # directory state (not a random uuid — reproducible re-runs).  The tag
-    # is max(existing generation)+1 parsed from filenames, so a re-run after
-    # a partially-failed append never reuses (and silently overwrites) a
-    # prior generation the way a plain part-count would.  Concurrent appends
-    # to one out_dir are unsupported (both writers would compute the same
-    # generation).
-    if mode == "ab":
-        gens = []
-        for n in os.listdir(out_dir):
-            if not n.startswith("part-"):
-                continue
-            m = re.match(r"part-g(\d+)-", n)
-            gens.append(int(m.group(1)) if m else 0)
-        gen = (max(gens) + 1) if gens else 0
-        run_tag = f"g{gen:04d}-"
-    else:
-        run_tag = ""
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from pyspark import TaskContext
 
         pid = TaskContext.get().partitionId()
-        name = f"part-{run_tag}{pid:05d}{suffix}"
+        name = f"part-{pid:05d}{suffix}"
         path = os.path.join(out_dir, name)
         n = 0
         fh = None  # opened on first record: empty partitions write no file

@@ -41,18 +41,13 @@ def _binary_reader(spark: SparkSession):
     )
 
 
-def scan_files(
-    spark: SparkSession, path: str, url_prefix: str, glob: str | None = None
-) -> DataFrame:
+def scan_files(spark: SparkSession, path: str, url_prefix: str) -> DataFrame:
     """S1/S2: recursive binaryFile scan -> (url, warc_ts, content, size).
 
     Filters/projections layered on top push down to the scan
     (PushedFilters on path; content is lazily read per matched file).
     """
-    reader = _binary_reader(spark).option("recursiveFileLookup", "true")
-    if glob:
-        reader = reader.option("pathGlobFilter", glob)
-    df = reader.load(path)
+    df = _binary_reader(spark).option("recursiveFileLookup", "true").load(path)
     # binaryFile reports URI-style paths (file:/...); strip everything up to
     # and including the scanned root, whatever scheme prefix it carries
     import re as _re
