@@ -10,6 +10,7 @@ seen layout (url-bucketed, merge-pinned anti-join) at a small bucket count.
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 from collections import Counter
@@ -19,6 +20,7 @@ from pyspark.sql import functions as F
 
 from tests import oracle as seq
 from warcit_spark.plans.crawl import CrawlConfig, run_crawl
+from warcit_spark.plans.politeness import politeness_prerank
 from warcit_spark.plans.state import SEEN_COLS, CrawlState
 from warcit_spark.sources.fixture import (
     extract_text_expr,
@@ -140,22 +142,58 @@ def test_extracted_text_byte_identical(spark, fixture_dfs):
         assert seq.extract_text(bytes(r.html).decode("utf-8")) == r.text
 
 
+def _marker(state, round_id):
+    with open(state._marker_path(round_id)) as fh:
+        return json.load(fh)
+
+
 def test_lineage_counters_consistent(spark, engine_result, oracle_result):
     state, summaries = engine_result
-    lineage = state.read_table(spark, "lineage")
-    per_round = {
-        r.round: (r.urls_in, r.robots_denied, r.urls_emitted)
-        for r in lineage.groupBy("round")
-        .agg(
-            F.sum("urls_in").alias("urls_in"),
-            F.sum("robots_denied").alias("robots_denied"),
-            F.sum("urls_emitted").alias("urls_emitted"),
+    per_round = {}
+    for r in range(len(summaries)):
+        rows = _marker(state, r)["lineage"]
+        per_round[r] = tuple(
+            sum(row[c] for row in rows)
+            for c in ("urls_in", "robots_denied", "urls_emitted")
         )
-        .collect()
-    }
     for s in oracle_result.summaries:
         got = per_round[s["round"]]
         assert got == (s["urls_in"], s["robots_denied"], s["urls_emitted"])
+
+
+def test_commit_marker_carries_round_lineage(engine_result):
+    """Each round's commit marker is its only lineage record: the rows,
+    sorted by partition, hold the six counters, satisfy both conservation
+    laws and sum to the round's summary; no lineage table is written."""
+    state, summaries = engine_result
+    assert len(summaries) >= 2
+    counters = ("urls_in", "robots_denied", "urls_emitted", "deferred",
+                "links_found", "new_urls")
+    for r, summary in enumerate(summaries):
+        marker = _marker(state, r)
+        assert marker["round"] == r
+        rows = marker["lineage"]
+        assert [row["partition_id"] for row in rows] == sorted(
+            {row["partition_id"] for row in rows}
+        )
+        for row in rows:
+            assert set(row) == {"partition_id", *counters}
+            assert row["urls_in"] == (
+                row["robots_denied"] + row["urls_emitted"] + row["deferred"]
+            )
+            assert row["new_urls"] <= row["links_found"]
+        total = {c: sum(row[c] for row in rows) for c in counters}
+        assert {k: marker[k] for k in summary} == summary
+        assert summary == {
+            "urls_in": total["urls_in"],
+            "robots_denied": total["robots_denied"],
+            "urls_emitted": total["urls_emitted"],
+            "links_found": total["links_found"],
+            "new_urls": total["new_urls"],
+            "dupes_dropped": total["links_found"] - total["new_urls"],
+            "frontier_next": total["deferred"] + total["new_urls"],
+        }
+    assert not os.path.exists(os.path.join(state.root, "lineage"))
 
 
 def test_robots_denied_host_never_fetched(spark, engine_result):
@@ -295,8 +333,7 @@ def test_lineage_law_violation_writes_nothing(
         run_crawl(spark, state, pages, seeds, robots, CFG)
     assert state.committed_round() == -1
     assert not os.path.exists(state._marker_path(0))
-    for table in ("fetched", "lineage"):
-        assert not os.path.exists(state.delta_path(table, 0))
+    assert not os.path.exists(state.delta_path("fetched", 0))
     assert not os.path.exists(state.delta_path("frontier", 1))
     assert not os.path.exists(
         os.path.join(state._seen_location(), "round_seen=0")
@@ -463,7 +500,7 @@ def test_politeness_two_stage_matches_single_window_twin(spark):
     crawl_round chains them, == the pure-Python single-window spec twin
     (tests/test_properties.py proves twin == two-stage for arbitrary salts;
     this parity transfers those properties to the Spark operators)."""
-    from warcit_spark.plans.politeness import politeness_prerank, politeness_rank
+    from warcit_spark.plans.politeness import politeness_rank
     from tests.test_properties import _pol_single_window
 
     rows = []
@@ -489,6 +526,11 @@ def test_politeness_two_stage_matches_single_window_twin(spark):
         for (h, u, p, d, a) in rows
     ]
     assert got == _pol_single_window(twin_rows, 5)
+
+
+def test_politeness_prerank_rejects_other_allowed_col(spark):
+    with pytest.raises(ValueError, match="allowed_col='ok'"):
+        politeness_prerank(spark.range(1), 5, allowed_col="ok")
 
 
 def test_pagerank_scores_drive_crawl_order(spark, fixture_dfs, tmp_path_factory):

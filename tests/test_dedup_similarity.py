@@ -7,6 +7,7 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
+from warcit_spark.functions.text import alnum_words_expr
 from warcit_spark.operators.dedup import (
     exact_dedup,
     jaccard_expr,
@@ -45,8 +46,10 @@ def test_exact_dedup(spark, docs):
 
 
 def test_shingles_and_jaccard(spark, docs):
-    pair = docs.where(F.col("doc_id").isin(0, 2)).agg(
-        F.collect_list(word_shingles_expr(F.col("text"), 3)).alias("s")
+    pair = (
+        docs.where(F.col("doc_id").isin(0, 2))
+        .select(alnum_words_expr(F.col("text")).alias("w"))
+        .agg(F.collect_list(word_shingles_expr(F.col("w"), 3)).alias("s"))
     )
     a_b = pair.select(
         jaccard_expr(F.col("s")[0], F.col("s")[1]).alias("j")

@@ -114,9 +114,11 @@ def test_mapfile_strict_verify_runs_own_action_if_needed(spark):
         [("1/page.html", "http://x/1", "2017", "text/html")],
         ["file", "URL", "timestamp", "Content-Type"],
     )
-    jobs_before = len(tracker.getJobIdsForGroup() or [])
+    # job ids only grow, and the status store evicts its oldest jobs in
+    # batches (spark.ui.retainedJobs), so compare the newest id, not a count
+    last_before = max(tracker.getJobIdsForGroup() or [-1])
     joined = mapfile_suffix_join(files, clean)
-    assert len(tracker.getJobIdsForGroup() or []) > jobs_before
+    assert max(tracker.getJobIdsForGroup() or [-1]) > last_before
     assert {r.filename: r.map_url for r in joined.collect()} == {
         "/d/1/page.html": "http://x/1",
         "/d/2/page.html": None,

@@ -21,8 +21,10 @@ in the signature. The rule:
   bodies, callbacks), which the engine calls, not the repository.
 
 Calls are matched by the callee's last name (``f(...)``, ``x.f(...)``), so a
-name shared by two definitions is in use if either is called with it; a
-``*args`` or ``**kwargs`` spread counts as passing everything it could reach.
+name shared by two definitions is in use if either is called with it. A
+``**`` spread passes only the keys it can be shown to hold (see
+:func:`_spread_keys`); a ``*args`` spread, or a ``**`` spread of anything
+else, counts as passing everything it could reach.
 
 :func:`unreferenced_names` states the third rule, over product code and
 ``tests/``.
@@ -109,6 +111,45 @@ def _calls():
     return calls, values
 
 
+def _spread_keys(value, enclosing, calls) -> set[str] | None:
+    """The keywords a ``**value`` spread inside ``enclosing`` passes, or
+    None when they cannot be told (the spread then passes everything).
+
+    - a name bound in the same function to a dict display with string keys,
+      or to ``dict(k=...)``: those keys;
+    - the function's own ``**`` parameter: the keywords that product calls
+      of the function pass beyond its named parameters.
+    """
+    if not (isinstance(value, ast.Name) and isinstance(enclosing, FUNCS)):
+        return None
+    a = enclosing.args
+    if a.kwarg is not None and a.kwarg.arg == value.id:
+        named = {p.arg for p in a.posonlyargs + a.args + a.kwonlyargs}
+        keys = set()
+        for name, call, _ in calls:
+            if name != enclosing.name:
+                continue
+            if any(kw.arg is None for kw in call.keywords):
+                return None
+            keys.update(kw.arg for kw in call.keywords if kw.arg not in named)
+        return keys
+    bound = [n.value for n in ast.walk(enclosing) if isinstance(n, ast.Assign)
+             and any(isinstance(t, ast.Name) and t.id == value.id
+                     for t in n.targets)]
+    if len(bound) != 1:
+        return None
+    d = bound[0]
+    if isinstance(d, ast.Dict) and all(
+            isinstance(k, ast.Constant) and isinstance(k.value, str)
+            for k in d.keys):
+        return {k.value for k in d.keys}
+    if (isinstance(d, ast.Call) and isinstance(d.func, ast.Name)
+            and d.func.id == "dict" and not d.args
+            and all(kw.arg is not None for kw in d.keywords)):
+        return {kw.arg for kw in d.keywords}
+    return None
+
+
 def unused_params() -> list[str]:
     """Every in-scope defaulted parameter that no product call passes, as
     ``file:function(param)``, once the forwarding passes settle."""
@@ -139,7 +180,9 @@ def unused_params() -> list[str]:
                         passed.add((id(fn), params[i]))
                 for kw in call.keywords:
                     if kw.arg is None:
-                        passed.update((id(fn), p) for p in _defaulted(fn))
+                        keys = _spread_keys(kw.value, enclosing, calls)
+                        passed.update((id(fn), p) for p in _defaulted(fn)
+                                      if keys is None or p in keys)
                     elif counts(kw.value):
                         passed.add((id(fn), kw.arg))
         unused = [(where, fn, p) for where, _, fn, _ in defs
@@ -173,6 +216,9 @@ UNUSED_PARAM_OK = {
     "warcit_spark/operators/convert.py:run_conversions(capture_output)": _CONVERTER,
     "warcit_spark/operators/dedup.py:ngram_jaccard_pairs(df_max)":
         "the hot-key cap a default df_max cap will build on",
+    "warcit_spark/plans/warcit_pipeline.py:files_to_warc_records(tika_results)":
+        "the reference's --use-magic tika / --charset tika slot; the CLI "
+        "refuses tika, as the reference does without a tika install",
     "warcit_spark/cli.py:main(argv)": _SEAM + " (argv instead of sys.argv)",
     "warcit_spark/plans/warcit_pipeline.py:warcit_run(num_parts)":
         _SEAM + " (several parts from a small site)",

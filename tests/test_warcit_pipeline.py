@@ -12,12 +12,13 @@ from __future__ import annotations
 import base64
 import hashlib
 import json
+import zlib
 
 import pytest
 from pyspark.sql import functions as F
 
 from warcit_spark.plans.warcit_pipeline import files_to_warc_records, warcit_run
-from warcit_spark.sinks.warc import read_warc_records
+from warcit_spark.sinks.warc import read_warc_records, write_warcinfo_only
 
 SITE_FILES = {
     "index.html": "<html><body>root <a href=\"sub/page.html\">p</a></body></html>",
@@ -158,6 +159,36 @@ def test_full_run_to_warc_file(spark, site, tmp_path):
         r for r in recs if r["headers"].get("WARC-Target-URI", "").endswith("sub/page.html")
     )
     assert page["payload"].decode() == SITE_FILES["sub/page.html"]
+
+
+def _gzip_member_mtimes(path):
+    """The MTIME header field (bytes 4-7) of every gzip member of a file."""
+    with open(path, "rb") as fh:
+        data = fh.read()
+    mtimes = []
+    while data:
+        assert data[:2] == b"\x1f\x8b"
+        mtimes.append(data[4:8])
+        member = zlib.decompressobj(wbits=31)
+        member.decompress(data)
+        data = member.unused_data
+    return mtimes
+
+
+def test_gzip_members_carry_no_timestamp(spark, site, tmp_path):
+    """Every gzip member of a .warc.gz (one per record, warcinfo included)
+    has MTIME 0, so re-runs are byte-identical, not only their decompressed
+    streams."""
+    (part,) = warcit_run(
+        spark, site, PREFIX, str(tmp_path / "out"), charset=None, one_file=True
+    ).collect()
+    empty = write_warcinfo_only(
+        str(tmp_path / "empty.warc.gz"), "empty.warc.gz", None
+    )
+    mtimes = _gzip_member_mtimes(part.path)
+    assert len(mtimes) == part.n_records + 1
+    assert set(mtimes) == {bytes(4)}
+    assert _gzip_member_mtimes(empty) == [bytes(4)]
 
 
 def test_colon_in_file_name(spark, tmp_path):

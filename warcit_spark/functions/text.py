@@ -29,6 +29,13 @@ def words_expr(text: Column) -> Column:
     )
 
 
+def alnum_words_expr(text: Column) -> Column:
+    """Lowercased alphanumeric word array (empty strings filtered)."""
+    return F.filter(
+        F.split(F.lower(text), "[^a-z0-9]+"), lambda w: w != F.lit("")
+    )
+
+
 def token_count_expr(text: Column) -> Column:
     """Whitespace token count; '' -> 0."""
     t = F.trim(text)
@@ -174,7 +181,7 @@ def repetition_ratio_expr(text: Column) -> Column:
     occurrences that are repeats of an earlier word, i.e.
     ``1 - distinct_words / words`` (0 for empty/all-unique docs).  Pure
     array expressions — split, distinct, sizes."""
-    ws = F.filter(F.split(F.lower(text), r"[^a-z0-9]+"), lambda w: w != F.lit(""))
+    ws = alnum_words_expr(text)
     n = F.size(ws)
     d = F.size(F.array_distinct(ws))
     return F.when(n > 0, F.round(1.0 - d.cast("double") / n, 6)).otherwise(

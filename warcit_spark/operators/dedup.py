@@ -25,7 +25,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
-from warcit_spark.functions.text import fingerprint_expr
+from warcit_spark.functions.text import alnum_words_expr, fingerprint_expr
 
 # banded MinHash LSH: 32 murmur3 seeds over word 3-shingles, 16 bands of 2
 MINHASH_N_HASHES = 32
@@ -51,13 +51,21 @@ def exact_dedup(
 
 
 # ------------------------------------------------------------------- shingles
-def word_shingles_expr(text: Column, k: int = 3) -> Column:
-    """Distinct k-word shingles (space-joined) of lowercased alpha words."""
-    words = F.filter(F.split(F.lower(text), "[^a-z0-9]+"), lambda w: w != F.lit(""))
+def word_shingles_expr(words: Column, k: int = 3) -> Column:
+    """Distinct k-word shingles (space-joined) over a bound
+    :func:`alnum_words_expr` column: a lambda naming a computed array
+    re-evaluates it per element, so callers select the words first."""
     n = F.size(words)
     idx = F.sequence(F.lit(1), F.greatest(n - (k - 1), F.lit(1)))
     shingles = F.transform(idx, lambda i: F.array_join(F.slice(words, i, k), " "))
     return F.array_distinct(shingles)
+
+
+def _id_shingles(df: DataFrame, k: int) -> DataFrame:
+    """(id, shingles) of a documents frame, the words bound first."""
+    return df.select(
+        F.col("doc_id").alias("id"), alnum_words_expr(F.col("text")).alias("_w")
+    ).select("id", word_shingles_expr(F.col("_w"), k).alias("shingles"))
 
 
 def jaccard_expr(a: Column, b: Column) -> Column:
@@ -113,10 +121,7 @@ def minhash_lsh_dedup(
     bands = MINHASH_BANDS
     rows_per_band = MINHASH_N_HASHES // bands
 
-    docs_raw = df.select(
-        F.col("doc_id").alias("id"),
-        word_shingles_expr(F.col("text"), MINHASH_SHINGLE_K).alias("shingles"),
-    )
+    docs_raw = _id_shingles(df, MINHASH_SHINGLE_K)
     # ``size(shingles) > 0`` is exactly ``text IS NOT NULL``: null text
     # propagates to a null array (filtered), and any non-null text yields
     # >= 1 shingle (zero words still produce the [''] shingle).  Filtering
@@ -125,10 +130,7 @@ def minhash_lsh_dedup(
     # predicate.  The verify sides join on candidate ids — all of which
     # passed this filter on the band side — so they read docs_raw and need
     # no filter at all.
-    docs = df.where(F.col("text").isNotNull()).select(
-        F.col("doc_id").alias("id"),
-        word_shingles_expr(F.col("text"), MINHASH_SHINGLE_K).alias("shingles"),
-    )
+    docs = _id_shingles(df.where(F.col("text").isNotNull()), MINHASH_SHINGLE_K)
     sigs = docs.withColumn("sig", minhash_signature_expr(F.col("shingles")))
 
     # Band entries carry ONLY (id, band_idx, band_hash): the candidate
@@ -223,10 +225,9 @@ def _simhash_batch(hash_arrays: pd.Series, nbits: int = 64) -> pd.Series:
 def simhash(df: DataFrame) -> DataFrame:
     """(id, simhash) — token hashing on the JVM (xxhash64 inside a
     higher-order transform), bit-voting vectorized in numpy per batch."""
-    words = F.filter(
-        F.split(F.lower(F.col("text")), "[^a-z0-9]+"), lambda w: w != F.lit("")
+    token_hashes = F.transform(
+        alnum_words_expr(F.col("text")), lambda w: F.xxhash64(w)
     )
-    token_hashes = F.transform(words, lambda w: F.xxhash64(w))
     hashed = df.select(
         F.col("doc_id").alias("id"), token_hashes.alias("_th")
     )
@@ -277,10 +278,7 @@ def ngram_jaccard_pairs(
     ids back to every input row, so a duplicate id whose text is NULL
     attaches a NULL shingle array and its pair drops silently.
     """
-    docs_raw = df.select(
-        F.col("doc_id").alias("id"),
-        word_shingles_expr(F.col("text"), k).alias("shingles"),
-    )
+    docs_raw = _id_shingles(df, k)
     # explode drops empty arrays on its own; the verify sides of the
     # df_max path join on candidate ids, so neither needs the emptiness
     # filter (whose pushed-down predicate re-evaluates the shingle
@@ -444,13 +442,13 @@ def decontaminate(
     both sides so blank documents can never contaminate.
     """
     t_sh = train.select(
-        F.col("doc_id"),
-        F.explode(word_shingles_expr(F.col("text"), n)).alias("_sh"),
+        "doc_id", alnum_words_expr(F.col("text")).alias("_w")
+    ).select(
+        "doc_id", F.explode(word_shingles_expr(F.col("_w"), n)).alias("_sh")
     ).where(F.col("_sh") != "")
     b_sh = (
-        benchmark.select(
-            F.explode(word_shingles_expr(F.col("text"), n)).alias("_sh")
-        )
+        benchmark.select(alnum_words_expr(F.col("text")).alias("_w"))
+        .select(F.explode(word_shingles_expr(F.col("_w"), n)).alias("_sh"))
         .where(F.col("_sh") != "")
         .distinct()
     )
@@ -561,9 +559,9 @@ def exact_substring_spans(
     (doc id in the partition key — skew-free).  No suffix array, no
     driver state.
     """
-    ws = F.filter(
-        F.split(F.lower(F.col("text")), "[^a-z0-9]+"), lambda w: w != F.lit("")
-    )
+    # words bound first: the lambda below slices them once per shingle
+    words = docs.select("doc_id", alnum_words_expr(F.col("text")).alias("_w"))
+    ws = F.col("_w")
     n = F.size(ws)
     sh = F.when(
         n >= k,
@@ -574,7 +572,7 @@ def exact_substring_spans(
             ),
         ),
     ).otherwise(F.array().cast("array<struct<pos:int,s:string>>"))
-    rows = docs.select(F.col("doc_id"), F.explode(sh).alias("_a")).select(
+    rows = words.select("doc_id", F.explode(sh).alias("_a")).select(
         "doc_id", F.col("_a.pos").alias("pos"), F.col("_a.s").alias("s")
     )
     dup = (

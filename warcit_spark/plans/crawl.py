@@ -17,8 +17,8 @@ One round r (SURVEY.md §3.1 restated for the new engine):
                -> frontier_{r+1} = deferred UNION new
     lineage: one action, its conservation laws checked before any write;
     writes, in order on the caller's thread: fetched delta, frontier_{r+1},
-    lineage, seen delta; then the atomic round-commit marker
-    (plans/state.py).
+    seen delta; then the atomic round-commit marker, which carries the
+    round's lineage rows (plans/state.py).
 
 Crawl-order contract (SURVEY.md §7.3 #1): the engine *defines* the total
 order as (round, host ASC, rank_in_host) with rank ordered by (priority
@@ -105,7 +105,6 @@ def derive_fetch_records(
       row, from the same pass (operators/records.with_index_revisits).
     """
     resources = with_extension_mime(fetched, F.col("url"), mime_dim).select(
-        "round",
         "url",
         "host",
         "priority",
@@ -140,7 +139,6 @@ def _lineage_single_pass(
     ranked: DataFrame,
     candidates: DataFrame,
     new_urls: DataFrame,
-    round_id: int,
     n_parts: int,
 ) -> DataFrame:
     """All six lineage counters in ONE aggregation: tag minimal (host,
@@ -182,8 +180,6 @@ def _lineage_single_pass(
     pid = F.pmod(F.xxhash64("host"), F.lit(n_parts)).cast("int")
     return unioned.groupBy(pid.alias("partition_id")).agg(
         *[F.sum(c).alias(c) for c in _LINEAGE_COUNTERS]
-    ).select(
-        F.lit(round_id).alias("round"), "partition_id", *_LINEAGE_COUNTERS
     )
 
 
@@ -223,10 +219,10 @@ def crawl_round(
     frontier = state.read_round_delta(spark, "frontier", round_id)
     if frontier is None:
         raise RuntimeError(f"no frontier delta for round {round_id}")
-    frontier = frontier.select("url", "host", "priority", "round_added")
     # no count() probe: emptiness falls out of the lineage action below
-    # (urls_in == 0) — one fewer driver action per round
-    frontier = frontier.persist()
+    # (urls_in == 0) — one fewer driver action per round.  Not cached: its
+    # one reader is the persisted pre-rank frame.
+    frontier = frontier.select("url", "host", "priority", "round_added")
 
     # ---- robots + politeness: two flagged frames, no anti-join -------------
     # robots is a broadcast join with in-row rule resolution (no shuffle on
@@ -236,9 +232,7 @@ def crawl_round(
     # whole backlog.  denied/selected/deferred are narrow filters and a
     # union of these two persisted frames.
     with_rules = apply_robots(frontier, robots)
-    pre = politeness_prerank(
-        with_rules, cfg.host_budget, n_salt=cfg.n_salt, allowed_col="allowed"
-    ).persist()
+    pre = politeness_prerank(with_rules, cfg.host_budget, n_salt=cfg.n_salt).persist()
     ranked = politeness_rank(
         pre.where(F.col("_pre_ok")), cfg.host_budget
     ).persist()
@@ -287,7 +281,6 @@ def crawl_round(
         pages_r.join(selected, F.col("_purl") == selected["url"], "right_outer")
         .drop("_purl")
         .select(
-            F.lit(round_id).alias("round"),
             "url",
             "host",
             "priority",
@@ -386,17 +379,18 @@ def crawl_round(
     )
     next_frontier = deferred.select(
         "url", "host", "priority", "round_added"
-    ).unionByName(new_urls).withColumn("round", F.lit(round_id + 1))
+    ).unionByName(new_urls)
 
     # ---- lineage (content-defined partitions, stable across cluster sizes) -
     # all six counters in one tagged-union aggregation: one exchange of
     # <= n_parts rows per input task instead of four groupBys + three joins
     lineage = _lineage_single_pass(
-        pre, ranked, candidates, new_urls, round_id, cfg.n_lineage_partitions
+        pre, ranked, candidates, new_urls, cfg.n_lineage_partitions
     )
 
     # ---- lineage action, law check, then writes in order (marker last) ---
-    lin_rows = lineage.collect()
+    # collect order is not deterministic; the marker lists partitions sorted
+    lin_rows = sorted(lineage.collect(), key=lambda r: r["partition_id"])
     _check_lineage_laws(lin_rows)
 
     def _sum(col: str) -> int:
@@ -412,17 +406,15 @@ def crawl_round(
         "dupes_dropped": n_links - n_new,
         "frontier_next": _sum("deferred") + n_new,
     }
-    lineage_out = spark.createDataFrame(lin_rows, lineage.schema).withColumn(
-        "dupes_dropped", F.lit(n_links - n_new).cast("long")
-    )
     state.write_delta(records, "fetched", round_id)
     state.write_delta(next_frontier, "frontier", round_id + 1)
-    state.write_delta(lineage_out, "lineage", round_id)
     # seen last: its catalog refresh drops new_urls' cache (its plan scans seen)
     state.write_delta(seen_delta, "seen", round_id)
-    state.commit_round(round_id, summary)
+    state.commit_round(
+        round_id, {**summary, "lineage": [r.asDict() for r in lin_rows]}
+    )
 
-    for df in (frontier, pre, ranked, fetched, candidates, new_urls):
+    for df in (pre, ranked, fetched, candidates, new_urls):
         df.unpersist()
     return summary
 

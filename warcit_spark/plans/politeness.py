@@ -51,23 +51,23 @@ def politeness_prerank(
     frontier: DataFrame,
     host_budget: int,
     n_salt: int = 16,
-    allowed_col: str | None = None,
+    allowed_col: str = "allowed",
 ) -> DataFrame:
     """Stage 1: add ``_pre_ok`` (survives the salted pre-ranking).
 
-    Robots-denied rows (``allowed_col`` false) are never ``_pre_ok`` and
-    never consume a slot (ordered last within each salt slot).
+    Robots-denied rows (``allowed`` false) are never ``_pre_ok`` and never
+    consume a slot (ordered last within each salt slot).  ``allowed_col``
+    is kept only because existing callers pass ``allowed_col="allowed"``,
+    so any other value is rejected.
     """
+    if allowed_col != "allowed":
+        raise ValueError(f"allowed_col={allowed_col!r} is not supported")
     budget = host_round_budget_expr(host_budget, F.col("crawl_delay"))
-    order = [F.col("priority").desc(), F.col("url").asc()]
-    if allowed_col is not None:
-        order = [F.col(allowed_col).desc(), *order]
+    allowed = F.col("allowed")
     w_salt = Window.partitionBy(
         salted_host_expr(F.col("host"), F.col("url"), n_salt)
-    ).orderBy(*order)
-    pre_ok = F.row_number().over(w_salt) <= budget
-    if allowed_col is not None:
-        pre_ok = pre_ok & F.col(allowed_col)
+    ).orderBy(allowed.desc(), F.col("priority").desc(), F.col("url").asc())
+    pre_ok = (F.row_number().over(w_salt) <= budget) & allowed
     return frontier.withColumn("_pre_ok", pre_ok)
 
 

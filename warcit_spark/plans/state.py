@@ -1,7 +1,7 @@
 """Crawl-state catalog: parquet snapshot tables with atomic round commits.
 
-The design target is Iceberg (`frontier`/`seen`/`fetched`/`lineage` as
-Iceberg tables, one transaction per crawl round, resume = read the latest
+The design target is Iceberg (`frontier`/`seen`/`fetched` as Iceberg
+tables, one transaction per crawl round, resume = read the latest
 snapshot — SURVEY.md §7.0).  The sandbox has no Iceberg runtime jar, so this
 module implements the same contract on plain parquet + an atomic commit
 marker, preserving every semantic the engine relies on:
@@ -19,8 +19,10 @@ marker, preserving every semantic the engine relies on:
   analog of ``bucket(N, url)``) and partitioned by ``round_seen``, so the
   per-round anti-join scans it co-partitioned (zero seen-side exchange)
   and crash debris is one partition directory, dropped like any other.
-- **lineage**: per-(round, partition) counters are a table like any other;
-  the lineage delta doubles as the round's audit record.
+- **lineage**: the commit marker is the round's audit record.  It holds the
+  round summary and the per-partition lineage counters (the analog of
+  Iceberg snapshot summary metadata), so they publish with the round or not
+  at all.
 
 On a real cluster, swap ``write_delta``/``read_table`` for
 ``df.writeTo(...).append()`` / ``spark.read.table(...)`` — call sites do not
@@ -40,7 +42,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-TABLES = ("frontier", "seen", "fetched", "lineage")
+TABLES = ("frontier", "seen", "fetched")
 
 SEEN_COLS = ("url", "host", "reason", "round_seen")
 
@@ -155,21 +157,18 @@ class CrawlState:
         """Write one round's delta for a table.  ``overwrite`` keeps replay
         idempotent: a crashed, uncommitted round is silently rewritten.
 
-        The ``round`` column, if present, is carried by the partition
-        directory name (``round=<k>``) and re-inferred at read time, so it
-        is stripped from the physical files.  Seen rows carry their own
-        ``round_seen``, and the seen append always refreshes the catalog
-        (see :meth:`_write_seen_bucketed`).  ``refresh`` is kept only
-        because existing callers pass ``refresh=True``, so False is
-        rejected.
+        A delta's round is its partition directory name (``round=<k>``),
+        inferred again at read time; the frames carry no ``round`` column.
+        Seen rows carry their own ``round_seen``, and the seen append
+        always refreshes the catalog (see :meth:`_write_seen_bucketed`).
+        ``refresh`` is kept only because existing callers pass
+        ``refresh=True``, so False is rejected.
         """
         if not refresh:
             raise ValueError("refresh=False is not supported")
         if table == "seen":
             self._write_seen_bucketed(df)
             return
-        if "round" in df.columns:
-            df = df.drop("round")
         df.write.mode("overwrite").option("compression", STATE_CODEC).parquet(
             self.delta_path(table, round_id)
         )

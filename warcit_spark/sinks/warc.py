@@ -142,7 +142,7 @@ def write_warc_files(
         try:
 
             def emit(raw: bytes) -> None:
-                fh.write(gzip.compress(raw, 6) if gzip_records else raw)
+                fh.write(gzip.compress(raw, 6, mtime=0) if gzip_records else raw)
 
             for pdf in batches:
                 for r in pdf.itertuples(index=False):
@@ -207,7 +207,7 @@ def write_warcinfo_only(
     distribute."""
     raw = _warcinfo_bytes(warc_name, None, cmdline)
     with open(path, "wb") as fh:
-        fh.write(gzip.compress(raw, 6) if gzip_records else raw)
+        fh.write(gzip.compress(raw, 6, mtime=0) if gzip_records else raw)
     return path
 
 
