@@ -164,7 +164,8 @@ def test_lineage_counters_consistent(spark, engine_result, oracle_result):
 def test_commit_marker_carries_round_lineage(engine_result):
     """Each round's commit marker is its only lineage record: the rows,
     sorted by partition, hold the six counters, satisfy both conservation
-    laws and sum to the round's summary; no lineage table is written."""
+    laws and sum to the round's summary; no lineage table is written.  The
+    marker also carries the driver seconds of each phase before it."""
     state, summaries = engine_result
     assert len(summaries) >= 2
     counters = ("urls_in", "robots_denied", "urls_emitted", "deferred",
@@ -184,6 +185,12 @@ def test_commit_marker_carries_round_lineage(engine_result):
             assert row["new_urls"] <= row["links_found"]
         total = {c: sum(row[c] for row in rows) for c in counters}
         assert {k: marker[k] for k in summary} == summary
+        phase_s = marker["phase_s"]
+        assert set(phase_s) == {
+            "read", "pre", "ranked", "fetched", "candidates", "new_urls",
+            "lineage", "write-fetched", "write-frontier", "write-seen",
+        }
+        assert all(s >= 0 for s in phase_s.values()), phase_s
         assert summary == {
             "urls_in": total["urls_in"],
             "robots_denied": total["robots_denied"],
@@ -376,6 +383,23 @@ def test_crawl_round_runs_on_callers_thread(
     assert set(tracker.getJobIdsForGroup(None)) - ungrouped == set()
 
 
+def test_crawl_releases_round_checkpoints(spark, fixture_dfs, tmp_path_factory):
+    """A round frees its checkpoints' blocks once it commits: after a
+    two-round crawl the context holds as many persistent RDDs as before."""
+    pages, seeds, robots = fixture_dfs
+    state = CrawlState(
+        str(tmp_path_factory.mktemp("crawl_release")), seen_buckets=SEEN_BUCKETS
+    )
+    persistent = spark.sparkContext._jsc.sc().getPersistentRDDs
+    before = persistent().size()
+    run_crawl(
+        spark, state, pages, seeds, robots,
+        CrawlConfig(**{**CFG.__dict__, "max_rounds": 2}),
+    )
+    assert state.committed_round() == 1
+    assert persistent().size() == before
+
+
 def test_bucketed_seen_parity_and_plan(spark, engine_result):
     """The per-round anti-join scans the url-bucketed seen table (the
     Iceberg bucket(N,url) analog) co-partitioned: Bucketed: true, no
@@ -445,8 +469,8 @@ def test_round_records_scan_cached_fetched_once(
     spark, fixture_dfs, tmp_path_factory, monkeypatch
 ):
     """A round's ``fetched`` write derives resources and index revisits
-    from one scan of the cached fetch frame (one explode), not a union of
-    two scans of it."""
+    from one scan of the checkpointed fetch frame (one explode), not a
+    union of two scans of it."""
     plans = {}
     write = CrawlState.write_delta
 
@@ -457,12 +481,13 @@ def test_round_records_scan_cached_fetched_once(
     monkeypatch.setattr(CrawlState, "write_delta", capture)
     _, fetched = _one_round(spark, fixture_dfs, tmp_path_factory, "one_scan")
     assert fetched.where(F.col("record_type") == "revisit").count() > 0
-    # the cached fetch frame is the only cached frame with a digest column
+    # the fetch checkpoint is the only checkpoint with a digest column
     scans = [
         ln for ln in plans["fetched"].splitlines()
-        if "InMemoryTableScan" in ln and "payload_digest" in ln
+        if "Scan ExistingRDD" in ln and "payload_digest" in ln
     ]
     assert len(scans) == 1, scans
+    assert plans["fetched"].count("Generate explode") == 1
 
 
 def test_entry_runs_one_committed_round(spark, monkeypatch):

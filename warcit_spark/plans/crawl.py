@@ -18,7 +18,15 @@ One round r (SURVEY.md §3.1 restated for the new engine):
     lineage: one action, its conservation laws checked before any write;
     writes, in order on the caller's thread: fetched delta, frontier_{r+1},
     seen delta; then the atomic round-commit marker, which carries the
-    round's lineage rows (plans/state.py).
+    round's lineage rows and per-phase seconds (plans/state.py).
+
+Lineage cutting: every frame the round reads more than once (pre-rank,
+rank, fetch, candidates, new urls) is an eager ``localCheckpoint``, so each
+later plan, AQE re-optimization and task binary starts from a leaf scan of
+its blocks instead of the round's whole upstream.  The blocks are released
+when the round ends, committed or not, so a long crawl holds at most one
+round of them.  A lost block fails the round loudly; ``run_crawl``'s resume
+re-runs it (the trade ``operators/graph.py`` makes per iteration).
 
 Crawl-order contract (SURVEY.md §7.3 #1): the engine *defines* the total
 order as (round, host ASC, rank_in_host) with rank ordered by (priority
@@ -33,6 +41,8 @@ comparable lineage for the scaling-efficiency evidence.
 
 from __future__ import annotations
 
+import time
+from contextlib import contextmanager
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -197,6 +207,44 @@ def _check_lineage_laws(rows: list) -> None:
         raise RuntimeError(f"lineage law violated: {bad}")
 
 
+class _RoundPhases:
+    """One round's phase seconds, Spark job labels and checkpointed frames."""
+
+    def __init__(self, spark: SparkSession, round_id: int) -> None:
+        self.sc = spark.sparkContext
+        self.round_id = round_id
+        self.seconds: dict[str, float] = {}
+        self.frames: list[DataFrame] = []
+
+    @contextmanager
+    def phase(self, name: str):
+        """Time a block into ``seconds[name]``; its jobs are described
+        ``round<r>:<name>`` and the caller's description is restored (the
+        caller's job group is left alone)."""
+        prev = self.sc.getLocalProperty("spark.job.description")
+        self.sc.setJobDescription(f"round{self.round_id}:{name}")
+        start = time.perf_counter()
+        try:
+            yield
+        finally:
+            self.seconds[name] = time.perf_counter() - start
+            self.sc.setJobDescription(prev)
+
+    def checkpoint(self, df: DataFrame, name: str) -> DataFrame:
+        """Materialize ``df`` now and return it rooted at its blocks."""
+        with self.phase(name):
+            df = df.localCheckpoint(eager=True)
+        self.frames.append(df)
+        return df
+
+    def release(self) -> None:
+        """Free every checkpoint's blocks; a later read of one of these
+        frames fails with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND."""
+        for df in self.frames:
+            df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+        self.frames.clear()
+
+
 def crawl_round(
     spark: SparkSession,
     state: CrawlState,
@@ -210,18 +258,44 @@ def crawl_round(
 
     ``mime_dim``: pass a persisted dim from run_crawl so the ~1000-row
     extension table is not re-shipped from the driver every round.
+
+    The commit marker also carries ``phase_s``, the driver seconds of each
+    phase up to the marker (the checkpoints, the lineage action, each
+    write).  The round's checkpoints are released after the marker, or on
+    the way out of a failed round.
     """
+    phases = _RoundPhases(spark, round_id)
+    try:
+        return _crawl_round(
+            spark, state, pages, robots, round_id, cfg, mime_dim, phases
+        )
+    finally:
+        phases.release()
+
+
+def _crawl_round(
+    spark: SparkSession,
+    state: CrawlState,
+    pages: DataFrame,
+    robots: DataFrame,
+    round_id: int,
+    cfg: CrawlConfig,
+    mime_dim: DataFrame | None,
+    phases: _RoundPhases,
+) -> dict:
     if mime_dim is None:
         mime_dim = _mime_dim(spark)
     # single-delta read: the round's frontier is one partition directory;
     # unioning history and filtering would grow the analyzed plan (and the
     # driver's serial planning time) linearly with crawl length
-    frontier = state.read_round_delta(spark, "frontier", round_id)
+    with phases.phase("read"):
+        frontier = state.read_round_delta(spark, "frontier", round_id)
+        seen_prev = state.read_table(spark, "seen", upto_round=round_id - 1)
     if frontier is None:
         raise RuntimeError(f"no frontier delta for round {round_id}")
     # no count() probe: emptiness falls out of the lineage action below
-    # (urls_in == 0) — one fewer driver action per round.  Not cached: its
-    # one reader is the persisted pre-rank frame.
+    # (urls_in == 0) — one fewer driver action per round.  Not
+    # checkpointed: its one reader is the pre-rank checkpoint.
     frontier = frontier.select("url", "host", "priority", "round_added")
 
     # ---- robots + politeness: two flagged frames, no anti-join -------------
@@ -230,12 +304,14 @@ def crawl_round(
     # full frontier (hot host fans out across n_salt tasks); stage 2 ranks
     # only the bounded survivor set, so no task ever sorts a hot host's
     # whole backlog.  denied/selected/deferred are narrow filters and a
-    # union of these two persisted frames.
+    # union of these two checkpointed frames.
     with_rules = apply_robots(frontier, robots)
-    pre = politeness_prerank(with_rules, cfg.host_budget, n_salt=cfg.n_salt).persist()
-    ranked = politeness_rank(
-        pre.where(F.col("_pre_ok")), cfg.host_budget
-    ).persist()
+    pre = phases.checkpoint(
+        politeness_prerank(with_rules, cfg.host_budget, n_salt=cfg.n_salt), "pre"
+    )
+    ranked = phases.checkpoint(
+        politeness_rank(pre.where(F.col("_pre_ok")), cfg.host_budget), "ranked"
+    )
     denied = pre.where(~F.col("allowed"))
     selected = ranked.where(F.col("selected"))
     base_cols = ["url", "host", "priority", "round_added"]
@@ -249,7 +325,7 @@ def crawl_round(
     # left-join semantics (every selected URL yields a row): pages RIGHT
     # OUTER selected.  Column-prune the pages side to what the round
     # consumes (url for the join, warc_ts for dates, html for digests/
-    # links): text/lang would ride the join, the persist, and every
+    # links): text/lang would ride the join, the checkpoint, and every
     # downstream scan for nothing — at 4M+ cached pages that is gigabytes
     # of memory bandwidth per round.
     #
@@ -269,15 +345,16 @@ def crawl_round(
     )
     # digest + size + raw hrefs are fused into THIS projection so the 8 KiB
     # html body is consumed exactly once, streaming out of the join, and is
-    # never persisted: the cached round frame carries the 20-byte digest and
-    # the ~1 KiB href array instead of the body.  At CC weight that cuts
-    # ~3 full-corpus body copies per round (cache write + two consumer
-    # reads) — memory-copy bandwidth is the measured scaling ceiling.
+    # never materialized: the checkpointed round frame carries the 20-byte
+    # digest and the ~1 KiB href array instead of the body.  At CC weight
+    # that cuts ~3 full-corpus body copies per round (block write + two
+    # consumer reads) — memory-copy bandwidth is the measured scaling
+    # ceiling.
     is_fetched = F.col("warc_ts").isNotNull()
     is_linkable = F.col("url").endswith(".html") | ~F.col("url").rlike(
         r"\.[A-Za-z0-9]+$"
     )
-    fetched = (
+    fetched = phases.checkpoint(
         pages_r.join(selected, F.col("_purl") == selected["url"], "right_outer")
         .drop("_purl")
         .select(
@@ -297,8 +374,8 @@ def crawl_round(
             F.when(is_fetched, F.lit("fetched"))
             .otherwise(F.lit("missing"))
             .alias("reason"),
-        )
-        .persist()
+        ),
+        "fetched",
     )
 
     records = derive_fetch_records(
@@ -311,7 +388,7 @@ def crawl_round(
     )
     # Collapse duplicate RAW links first (map-side combined groupBy), then
     # canonicalize only the distinct links: at CC weight ~6x fewer
-    # canonicalize evaluations, a ~6x smaller persisted candidates frame,
+    # canonicalize evaluations, a ~6x smaller checkpointed candidates frame,
     # and the lineage branch reads distinct rows weighted by ``_n`` (the
     # occurrence count) so every per-host counter is unchanged — all
     # occurrences of one raw link share its host, and max(priority) per
@@ -323,15 +400,15 @@ def crawl_round(
         F.max("priority").alias("priority"),
         F.count(F.lit(1)).alias("_n"),
     )
-    candidates = (
+    candidates = phases.checkpoint(
         raw_grouped.select(
             canonicalize_with_host_expr(F.col("link")).alias("_cu"),
             (F.col("priority") * LINK_DECAY).alias("priority"),
             "_n",
         )
         .select("_cu.url", "_cu.host", "priority", "_n")
-        .where(F.col("host").isNotNull())
-        .persist()
+        .where(F.col("host").isNotNull()),
+        "candidates",
     )
 
     # within-round dedup: deterministic max-priority per url
@@ -340,7 +417,6 @@ def crawl_round(
     )
 
     # ---- seen-set update + anti-joins (J5) ---------------------------------
-    seen_prev = state.read_table(spark, "seen", upto_round=round_id - 1)
     seen_delta = (
         selected.select("url", "host")
         .withColumn("reason", F.lit("scheduled"))
@@ -370,12 +446,11 @@ def crawl_round(
         survivors = survivors.join(
             seen_prev.select("url").hint("merge"), on="url", how="left_anti"
         )
-    new_urls = (
-        survivors
-        .select(
+    new_urls = phases.checkpoint(
+        survivors.select(
             "url", "host", "priority", F.lit(round_id + 1).alias("round_added")
-        )
-        .persist()
+        ),
+        "new_urls",
     )
     next_frontier = deferred.select(
         "url", "host", "priority", "round_added"
@@ -390,7 +465,8 @@ def crawl_round(
 
     # ---- lineage action, law check, then writes in order (marker last) ---
     # collect order is not deterministic; the marker lists partitions sorted
-    lin_rows = sorted(lineage.collect(), key=lambda r: r["partition_id"])
+    with phases.phase("lineage"):
+        lin_rows = sorted(lineage.collect(), key=lambda r: r["partition_id"])
     _check_lineage_laws(lin_rows)
 
     def _sum(col: str) -> int:
@@ -406,16 +482,20 @@ def crawl_round(
         "dupes_dropped": n_links - n_new,
         "frontier_next": _sum("deferred") + n_new,
     }
-    state.write_delta(records, "fetched", round_id)
-    state.write_delta(next_frontier, "frontier", round_id + 1)
-    # seen last: its catalog refresh drops new_urls' cache (its plan scans seen)
-    state.write_delta(seen_delta, "seen", round_id)
+    with phases.phase("write-fetched"):
+        state.write_delta(records, "fetched", round_id)
+    with phases.phase("write-frontier"):
+        state.write_delta(next_frontier, "frontier", round_id + 1)
+    with phases.phase("write-seen"):
+        state.write_delta(seen_delta, "seen", round_id)
     state.commit_round(
-        round_id, {**summary, "lineage": [r.asDict() for r in lin_rows]}
+        round_id,
+        {
+            **summary,
+            "lineage": [r.asDict() for r in lin_rows],
+            "phase_s": phases.seconds,
+        },
     )
-
-    for df in (pre, ranked, fetched, candidates, new_urls):
-        df.unpersist()
     return summary
 
 

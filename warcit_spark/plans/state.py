@@ -130,8 +130,9 @@ class CrawlState:
         Reads filter ``round_seen <= committed`` and :meth:`drop_uncommitted`
         deletes partitions newer than the marker, so a crashed append is
         invisible before the replay and gone after it.  The refresh
-        invalidates every cached plan that scans the table, so a round
-        appends seen after its other writes have consumed those caches.
+        invalidates every cached plan that scans the table; the crawl
+        round's frames are checkpoints rooted at their own blocks, so it
+        drops none of them.
         """
         spark = df.sparkSession
         name = self._ensure_seen_table(spark)

@@ -48,13 +48,16 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # let AQE coalesce CACHED plans too: the crawl round persists its
-        # intermediate frames, and without this every cached frame keeps
-        # all shuffle partitions — at low data-per-core the round's serial
-        # floor is dominated by launching hundreds of near-empty cache-read
-        # tasks (union stages run |frames| x shuffle_partitions tasks).
-        # Verified: the pre-bucketed pages side of the fetch SMJ still
-        # scans in place with zero added Exchange (BENCH/PLANS.md).
+        # let AQE coalesce CACHED plans too: without this every cached
+        # frame keeps all shuffle partitions, and at low data-per-core a
+        # plan over cached frames launches hundreds of near-empty
+        # cache-read tasks (a union over them runs |frames| x
+        # shuffle_partitions tasks).  The cached frames are the callers'
+        # inputs (the crawl's pages corpus and MIME dimension, the
+        # operators' persisted frames); the crawl round's own reused
+        # frames are checkpoints.  Verified: the pre-bucketed pages side
+        # of the fetch SMJ still scans in place with zero added Exchange
+        # (BENCH/PLANS.md).
         .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         # the default 100-entry generated-class cache is smaller than one
         # pass of the engine's query surface, so interleaved workloads
